@@ -383,7 +383,10 @@ def decode_png(payload: bytes) -> np.ndarray:
     ch = _CHANNELS[color_type]
     bits_pp = bit_depth * ch
     bpp = max(1, bits_pp // 8)
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:  # CRC-valid chunks can still carry a bad stream
+        raise ValueError(f"corrupt PNG IDAT stream: {e}") from None
 
     # tRNS transparency (spec §11.3.2): a single transparent sample
     # value for gray/RGB, per-entry alphas for palette; composited over

@@ -11,8 +11,10 @@ detection rows.
 
 Scale notes:
   - runs inside ``mapInArrow`` (Arrow batches, never per-row Python UDF);
-  - the component labeling is run-length based (vectorized row-run
-    extraction + union-find over runs), not per-pixel Python;
+  - the component labeling is run-length based and whole-array:
+    row runs, the overlap edges between adjacent rows, root hooking
+    with pointer jumping, and per-component sums all run as NumPy
+    operations, with no per-run or per-pixel Python;
   - output is yielded in bounded chunks so a multi-region "map image"
     document cannot materialize unbounded rows in one Python list
     (SURVEY.md §7.4 hard part 3);
@@ -53,92 +55,125 @@ OUTPUT_CHUNK_ROWS = 4096
 def _row_runs(mask: np.ndarray):
     """All horizontal runs of True: arrays (row, x_start, x_end_excl)."""
     h, w = mask.shape
-    padded = np.zeros((h, w + 2), dtype=np.int8)
+    padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = mask
-    d = np.diff(padded, axis=1)
-    sy, sx = np.nonzero(d == 1)
-    ey, ex = np.nonzero(d == -1)
-    # starts and ends come out in identical (row, x) order
-    return sy, sx, ex
+    # every padded row starts and ends False, so its transitions pair up
+    # as (start, end) and the flat positions alternate start, end
+    t = np.flatnonzero(padded[:, 1:] != padded[:, :-1])
+    row, col = np.divmod(t, w + 1)
+    return row[0::2], col[0::2], col[1::2]
 
 
-class _UnionFind:
-    __slots__ = ("parent",)
+class Components:
+    """4-connected components of a mask, as row runs grouped per component.
 
-    def __init__(self, n: int):
-        self.parent = list(range(n))
+    Component k owns runs ``start[k]:start[k] + count[k]`` of the run
+    arrays (y, x0, x1; x1 exclusive), in raster order. Components are
+    ordered by their first run in raster order, so a stable sort on any
+    key breaks ties the way a raster scan would. ymin/ymax/xmin/xmax/
+    area are per-component arrays (xmax exclusive, area == pixel count).
+    """
 
-    def find(self, a: int) -> int:
-        p = self.parent
-        while p[a] != a:
-            p[a] = p[p[a]]
-            a = p[a]
-        return a
+    __slots__ = ("shape", "y", "x0", "x1", "start", "count",
+                 "ymin", "ymax", "xmin", "xmax", "area")
 
-    def union(self, a: int, b: int) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.parent[max(ra, rb)] = min(ra, rb)
+    def __init__(self, shape, y, x0, x1, count):
+        self.shape = shape
+        self.y, self.x0, self.x1, self.count = y, x0, x1, count
+        self.start = np.cumsum(count) - count
+        self.ymin, self.ymax = y[self.start], y[self.start + count - 1]
+        self.xmin = np.minimum.reduceat(x0, self.start)
+        self.xmax = np.maximum.reduceat(x1, self.start)
+        self.area = np.add.reduceat(x1 - x0, self.start)
+
+    def __len__(self) -> int:
+        return len(self.count)
+
+    def runs(self, k: int) -> list[tuple[int, int, int]]:
+        """Component k's runs as (y, x0, x1) Python ints, raster order."""
+        s = slice(int(self.start[k]), int(self.start[k] + self.count[k]))
+        return list(zip(self.y[s].tolist(), self.x0[s].tolist(), self.x1[s].tolist()))
+
+    def crop(self, k: int) -> np.ndarray:
+        """Component k's own pixels as a bool mask over its bbox."""
+        y0, x0 = int(self.ymin[k]), int(self.xmin[k])
+        mask = np.zeros((int(self.ymax[k]) - y0 + 1, int(self.xmax[k]) - x0), dtype=bool)
+        for y, a, b in self.runs(k):
+            mask[y - y0, a - x0 : b - x0] = True
+        return mask
 
 
-def _components(grid: np.ndarray, mask: np.ndarray | None = None) -> list[dict]:
-    """Binarize -> 4-connected components via run-length union-find.
+def _label_runs(y: np.ndarray, x0: np.ndarray, x1: np.ndarray, w: int) -> np.ndarray:
+    """Per-run label: the smallest run index in its 4-connected component.
+
+    Runs on adjacent rows are joined iff their columns overlap. The
+    overlapping runs of the previous row form one index range per run,
+    found by two binary searches over raster keys row*(w+2)+x. Roots
+    are merged by hooking the larger root under the smaller, then
+    pointer-jumping to a fixpoint. Hooking roots converges in a few
+    rounds even on combs and spirals, where propagating minimum labels
+    along edges needs as many rounds as the longest path has runs."""
+    n = len(y)
+    stride = w + 2
+    key = y * stride
+    lo = np.searchsorted(key + x1, key - stride + x0, side="right")
+    hi = np.searchsorted(key + x0, key - stride + x1, side="left")
+    deg = np.maximum(hi - lo, 0)
+    b = np.repeat(np.arange(n), deg)
+    a = np.repeat(lo - np.cumsum(deg) + deg, deg) + np.arange(len(b))
+    parent = np.arange(n)
+    while len(a):
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            break
+        a, b, ra, rb = a[split], b[split], ra[split], rb[split]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return parent
+
+
+def _components(grid: np.ndarray, mask: np.ndarray | None = None) -> Components:
+    """Binarize -> 4-connected components over row runs (whole-array).
 
     Returns raw components (bbox, area, runs) with no filtering — the
-    shared segmentation primitive behind token regions (extract_regions)
-    and line segments (extract_line_segments). An explicit mask (e.g.
-    morph-opened) overrides the default binarization.
+    shared segmentation primitive behind token regions (extract_regions),
+    deskew, line segments (extract_line_segments) and template
+    candidates (templatematch). An explicit mask (e.g. morph-opened)
+    overrides the default binarization.
     """
     if mask is None:
         mask = grid > BIN_THRESHOLD
-    sy, sx, ex = _row_runs(mask)
-    n = len(sy)
-    if n == 0:
-        return []
-    uf = _UnionFind(n)
-    # union runs on adjacent rows with column overlap (two-pointer scan;
-    # runs are sorted by (row, x))
-    row_starts: dict[int, tuple[int, int]] = {}
-    i = 0
-    while i < n:
-        j = i
-        while j < n and sy[j] == sy[i]:
-            j += 1
-        row_starts[int(sy[i])] = (i, j)
-        i = j
-    for row, (i0, i1) in row_starts.items():
-        prev = row_starts.get(row - 1)
-        if not prev:
-            continue
-        p0, p1 = prev
-        a, b = i0, p0
-        while a < i1 and b < p1:
-            # overlap iff start < other_end and other_start < end
-            if sx[a] < ex[b] and sx[b] < ex[a]:
-                uf.union(a, b)
-            if ex[a] < ex[b]:
-                a += 1
-            else:
-                b += 1
+    y, x0, x1 = _row_runs(mask)
+    label = _label_runs(y, x0, x1, mask.shape[1])
+    is_root = label == np.arange(len(label))
+    comp = (np.cumsum(is_root) - 1)[label]
+    order = np.argsort(comp, kind="stable")
+    count = np.bincount(comp, minlength=int(is_root.sum()))
+    return Components(mask.shape, y[order], x0[order], x1[order], count)
 
-    comps: dict[int, dict] = {}
-    for r in range(n):
-        root = uf.find(r)
-        y, x0, x1 = int(sy[r]), int(sx[r]), int(ex[r])
-        c = comps.get(root)
-        if c is None:
-            comps[root] = {
-                "ymin": y, "ymax": y, "xmin": x0, "xmax": x1,
-                "area": x1 - x0, "runs": [(y, x0, x1)],
-            }
-        else:
-            c["ymin"] = min(c["ymin"], y)
-            c["ymax"] = max(c["ymax"], y)
-            c["xmin"] = min(c["xmin"], x0)
-            c["xmax"] = max(c["xmax"], x1)
-            c["area"] += x1 - x0
-            c["runs"].append((y, x0, x1))
-    return list(comps.values())
+
+def _moments(comps: Components) -> tuple[np.ndarray, ...]:
+    """Per-component exact pixel moments (n, sx, sy, sxx, syy, sxy) as
+    int64 sums over runs: the closed-form run sums are integers, so
+    nothing rounds. Raises on grids whose sums could pass 2**63 (int64
+    would wrap where Python ints grow)."""
+    h, w = comps.shape
+    if 2 * h * w * max(h, w) ** 2 >= 2**63:
+        raise ValueError(f"grid {h}x{w} too large for exact int64 moments")
+    y, x0, x1 = comps.y, comps.x0, comps.x1
+    m = x1 - x0
+    rsx = m * (x0 + x1 - 1) // 2  # sum of x over the run
+
+    def s2(k):  # sum of j^2 for j in [0, k]
+        return k * (k + 1) * (2 * k + 1) // 6
+
+    per_run = (m, rsx, y * m, s2(x1 - 1) - s2(x0 - 1), y * y * m, y * rsx)
+    return tuple(np.add.reduceat(v, comps.start) for v in per_run)
 
 
 MIN_LINE_LEN = 15  # min Hough-analogue segment length, px
@@ -150,28 +185,11 @@ DESKEW_MIN_ANGLE = 0.5
 DESKEW_MIN_ELONGATION = 1.5
 
 
-def _component_angle(c: dict) -> tuple[float, float] | None:
-    """Principal-axis angle (deg) of one component from its run-length
-    representation, via closed-form second moments (no pixel
-    materialization). Returns (angle_deg, elongation) or None."""
-    if c["area"] < MIN_AREA:  # area == pixel count: skip the moment
-        return None           # loop for speckles before it starts
-    n = sx = sy = sxx = syy = sxy = 0.0
-    for y, x0, x1 in c["runs"]:
-        m = x1 - x0
-        rsx = m * (x0 + x1 - 1) / 2.0
-        # sum of k^2 for k in [x0, x1): S2(x1-1) - S2(x0-1)
-        def s2(k):
-            return k * (k + 1) * (2 * k + 1) / 6.0
-        rsxx = s2(x1 - 1) - s2(x0 - 1)
-        n += m
-        sx += rsx
-        sy += y * m
-        sxx += rsxx
-        syy += y * y * m
-        sxy += y * rsx
-    if n < MIN_AREA:
-        return None
+def _component_angle(n, sx, sy, sxx, syy, sxy) -> tuple[float, float] | None:
+    """Principal-axis angle (deg) of one component from its pixel
+    moments (float sums, exact integers), via closed-form second
+    moments (no pixel materialization). Returns (angle_deg, elongation)
+    or None."""
     mx, my = sx / n, sy / n
     cxx = sxx / n - mx * mx
     cyy = syy / n - my * my
@@ -192,12 +210,14 @@ def _component_angle(c: dict) -> tuple[float, float] | None:
     return angle, l1 / max(l2, 1e-9)
 
 
-def _median_angle(comps: list[dict]) -> float:
+def _median_angle(comps: Components) -> float:
     """Median principal-axis angle over elongated components (the
     reference takes the median over text-box angles)."""
     angles = []
-    for c in comps:
-        a = _component_angle(c)
+    big = comps.area >= MIN_AREA  # speckles never reach the math step
+    sums = [v[big].astype(np.float64).tolist() for v in _moments(comps)]
+    for mom in zip(*sums):
+        a = _component_angle(*mom)
         if a is not None:
             angles.append(a[0])
     if not angles:
@@ -241,28 +261,42 @@ def deskew_grid(grid: np.ndarray) -> np.ndarray:
     return rotate_grid(grid, -angle)
 
 
-def _regions_from_comps(comps: list[dict], tok_grid: np.ndarray) -> list[dict]:
+def _regions_from_comps(comps: Components, tok_grid: np.ndarray) -> list[dict]:
     """Min-area filter + token decode over labeled components: the
     shared tail of extract_regions (also reused by the deskew path so
     the estimate's labeling pass is not repeated)."""
+    keep = comps.area >= MIN_AREA  # min-area noise filter (symbol_detector.py:148,207)
+    if not keep.any():
+        return []
+    run_keep = np.repeat(keep, comps.count)
+    y, x0 = comps.y[run_keep], comps.x0[run_keep]
+    length = comps.x1[run_keep] - x0
+    # one gather of every kept pixel, component by component, each in
+    # raster order: pixel i of a run sits at its first flat index + i
+    first = y * tok_grid.shape[1] + x0 - (np.cumsum(length) - length)
+    flat = np.repeat(first, length)
+    flat += np.arange(len(flat))
+    vals = np.ravel(tok_grid)[flat]
+    glyph = (vals != FILL) & (vals >= 33) & (vals <= 126)
+    area = comps.area[keep]
+    n_glyph = np.add.reduceat(glyph, np.cumsum(area) - area, dtype=np.int64)
+    text = vals[glyph].tobytes().decode("ascii")
+    ends = np.cumsum(n_glyph).tolist()
     regions = []
-    for c in comps:
-        if c["area"] < MIN_AREA:
-            continue  # min-area noise filter (symbol_detector.py:148,207)
-        token_bytes = []
-        for y, x0, x1 in sorted(c["runs"]):
-            vals = tok_grid[y, x0:x1]
-            token_bytes.extend(int(v) for v in vals[vals != FILL])
-        token = "".join(chr(v) for v in token_bytes if 33 <= v <= 126)
-        h = c["ymax"] - c["ymin"] + 1
-        w = c["xmax"] - c["xmin"]
+    for ymin, ymax, xmin, xmax, area, end, n in zip(
+        comps.ymin[keep].tolist(), comps.ymax[keep].tolist(),
+        comps.xmin[keep].tolist(), comps.xmax[keep].tolist(),
+        area.tolist(), ends, n_glyph.tolist(),
+    ):
+        h = ymax - ymin + 1
+        w = xmax - xmin
         regions.append(
             {
-                "ymin": c["ymin"], "xmin": c["xmin"], "h": h, "w": w,
-                "area": c["area"],
-                "cx": c["xmin"] + w / 2.0,
-                "cy": c["ymin"] + h / 2.0,
-                "token": token,
+                "ymin": ymin, "xmin": xmin, "h": h, "w": w,
+                "area": area,
+                "cx": xmin + w / 2.0,
+                "cy": ymin + h / 2.0,
+                "token": text[end - n : end],
             }
         )
     regions.sort(key=lambda r: (r["ymin"], r["xmin"]))
@@ -462,13 +496,18 @@ def extract_regions_tiled(
 MAX_LINE_THICKNESS = 2.5  # max extent perpendicular to the principal axis
 
 
-def _line_geometry(c: dict) -> dict | None:
+def _line_geometry(
+    runs: list[tuple[int, int, int]], n: int, sx: int, sy: int,
+    sxx: int, syy: int, sxy: int,
+) -> dict | None:
     """Arbitrary-angle line geometry of one component from its runs
-    (E2, the Hough-pass analogue generalized beyond 0/90 degrees):
-    principal axis via exact integer second moments, then project run
-    endpoints onto the axis — a component is a line iff its extent
-    perpendicular to the axis is <= MAX_LINE_THICKNESS px and its
-    extent along the axis is >= MIN_LINE_LEN px.
+    and exact integer pixel moments (E2, the Hough-pass analogue
+    generalized beyond 0/90 degrees): principal axis via second
+    moments, then project run endpoints onto the axis — a component is
+    a line iff its extent perpendicular to the axis is <=
+    MAX_LINE_THICKNESS px and its extent along the axis is >=
+    MIN_LINE_LEN px. The moments are Python ints until the final
+    divisions, so oracle and pipeline agree bit-for-bit.
 
     Endpoints are the actual extreme pixels along the axis (ties broken
     by smallest (y, x)), ordered so (y1,x1) <= (y2,x2); angle is
@@ -476,22 +515,6 @@ def _line_geometry(c: dict) -> dict | None:
     line convention (symbol_detector.py:253-254)."""
     import math
 
-    def s2(k: int) -> int:  # sum of j^2 for j in [0, k]
-        return k * (k + 1) * (2 * k + 1) // 6
-
-    n = sx = sy = sxx = syy = sxy = 0
-    for y, x0, x1 in c["runs"]:
-        m = x1 - x0
-        # exact integer sums over the run (moments stay integers until
-        # the final divisions, so oracle and pipeline agree bit-for-bit)
-        rsx = m * (x0 + x1 - 1) // 2
-        rsxx = s2(x1 - 1) - s2(x0 - 1)
-        n += m
-        sx += rsx
-        sy += y * m
-        sxx += rsxx
-        syy += y * y * m
-        sxy += y * rsx
     if n == 0:
         return None
     mx, my = sx / n, sy / n
@@ -504,7 +527,7 @@ def _line_geometry(c: dict) -> dict | None:
     umin = vmin = float("inf")
     umax = vmax = float("-inf")
     pmin = pmax = None
-    for y, x0, x1 in c["runs"]:
+    for y, x0, x1 in runs:
         for x in (x0, x1 - 1):  # u and v are linear in x: extremes at ends
             u = (x - mx) * ct + (y - my) * st
             v = -(x - mx) * st + (y - my) * ct
@@ -536,9 +559,10 @@ def extract_line_segments(grid: np.ndarray) -> list[dict]:
     from .normalize import invert_if_negative
 
     grid = invert_if_negative(grid)
+    comps = _components(grid)
     lines = []
-    for c in _components(grid):
-        g = _line_geometry(c)
+    for k, mom in enumerate(zip(*(v.tolist() for v in _moments(comps)))):
+        g = _line_geometry(comps.runs(k), *mom)
         if g is not None:
             lines.append(g)
     lines.sort(key=lambda r: (r["y1"], r["x1"]))

@@ -86,14 +86,14 @@ def match_components(
     grid = invert_if_negative(grid)
     lo, hi = size_range
     out = []
-    for c in _components(grid):
-        h = c["ymax"] - c["ymin"] + 1
-        w = c["xmax"] - c["xmin"]
-        if c["area"] < min_area or not (lo <= h <= hi and lo <= w <= hi):
-            continue
-        mask = np.zeros((h, w), dtype=bool)
-        for y, x0, x1 in c["runs"]:
-            mask[y - c["ymin"], x0 - c["xmin"] : x1 - c["xmin"]] = True
+    comps = _components(grid)
+    hs = comps.ymax - comps.ymin + 1
+    ws = comps.xmax - comps.xmin
+    cand = (comps.area >= min_area) & (lo <= hs) & (hs <= hi) & (lo <= ws) & (ws <= hi)
+    for k in np.flatnonzero(cand).tolist():
+        mask = comps.crop(k)
+        h, w = mask.shape
+        x, y = int(comps.xmin[k]), int(comps.ymin[k])
         denom = h * w
         for name in sorted(templates):
             t = templates[name]
@@ -106,7 +106,7 @@ def match_components(
                 out.append(
                     {
                         "template": name,
-                        "x": c["xmin"], "y": c["ymin"], "w": w, "h": h,
+                        "x": x, "y": y, "w": w, "h": h,
                         "scale": round(h / t.shape[0], 4),
                         "score": round(score, 6),
                     }
@@ -143,21 +143,15 @@ def slice_template_sheet(
     symbol sheet, find its glyph components (contour analogue), crop
     each to its bbox mask, and assign names in left-to-right reading
     order. Round-trips compose_template_sheet exactly."""
-    comps = [c for c in _components(sheet) if c["area"] >= min_area]
-    comps.sort(key=lambda c: (c["xmin"], c["ymin"]))
-    if len(comps) != len(names):
+    comps = _components(sheet)
+    glyphs = np.flatnonzero(comps.area >= min_area)
+    # stable: equal (xmin, ymin) keep raster order
+    glyphs = glyphs[np.lexsort((comps.ymin[glyphs], comps.xmin[glyphs]))]
+    if len(glyphs) != len(names):
         raise ValueError(
-            f"sheet has {len(comps)} glyphs but {len(names)} names were given"
+            f"sheet has {len(glyphs)} glyphs but {len(names)} names were given"
         )
-    out = {}
-    for name, c in zip(names, comps):
-        h = c["ymax"] - c["ymin"] + 1
-        w = c["xmax"] - c["xmin"]
-        mask = np.zeros((h, w), dtype=bool)
-        for y, x0, x1 in c["runs"]:
-            mask[y - c["ymin"], x0 - c["xmin"] : x1 - c["xmin"]] = True
-        out[name] = mask
-    return out
+    return {name: comps.crop(k) for name, k in zip(names, glyphs.tolist())}
 
 
 def template_match_features(media_spans_df, templates: dict | None = None):

@@ -267,6 +267,26 @@ def test_truncated_chunk_raises_codec_error():
         decode_png(bytes(bad))
 
 
+def test_corrupt_idat_stream_raises_codec_error():
+    """CRC-valid chunks around a bad zlib stream are still a malformed
+    payload: ValueError (the per-item codec-error contract), never a
+    zlib.error that fails the task."""
+    raw = bytes(5)  # one filter-0 row of four gray pixels
+
+    def png_with_idat(idat: bytes) -> bytes:
+        return (
+            PNG_SIGNATURE
+            + _chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 1, 8, 0, 0, 0, 0))
+            + _chunk(b"IDAT", idat)
+            + _chunk(b"IEND", b"")
+        )
+
+    assert decode_png(png_with_idat(zlib.compress(raw))).tolist() == [[0, 0, 0, 0]]
+    for idat in (b"\x78\x9cnot-deflate", zlib.compress(raw)[:-3]):
+        with pytest.raises(ValueError, match="corrupt PNG IDAT"):
+            decode_png(png_with_idat(idat))
+
+
 def _decode_sub_naive(raw_line: np.ndarray, bpp: int) -> np.ndarray:
     cur = np.zeros(len(raw_line), dtype=np.int64)
     for i in range(len(raw_line)):
