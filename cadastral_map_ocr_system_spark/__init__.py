@@ -11,7 +11,7 @@ interleaved text+media documents:
     -> posexplode
     -> text path  : boilerplate strip via built-in column expressions
     -> media path : mapInArrow region-detect + tokenize + classify
-    -> per-doc greedy dedup via applyInPandas
+                    + per-payload greedy dedup
     -> re-zip by (offset, region_idx, token_idx)
     -> extracted(doc_id, spans array<struct<kind,text,media_ref,order>>)
 
@@ -21,8 +21,8 @@ Modules:
   synth       — deterministic seeded corpus + media-payload generator
   oracle      — independent single-process pandas/python reference model
   functions/  — scalar rule layer (regex constants, geometry, similarity)
-  operators/  — dataflow operators (textpath, mediapath, dedup, rezip,
-                corpus dedup, ANN search, text analysis, multimodal)
+  operators/  — dataflow operators (textpath, mediapath, rezip, corpus
+                dedup, ANN search, text analysis, multimodal)
   sources/    — table IO + resumable checkpoint
   plans/      — end-to-end pipeline assembly + spark-submit job
   streaming/  — foreachBatch wrapper around the batch pipeline

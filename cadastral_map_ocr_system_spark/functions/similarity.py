@@ -2,8 +2,9 @@
 
 Jaccard character-set similarity mirrors OCR/src/detect.py:577-599
 (early-exit on equality, set intersection over union). Used by the
-greedy dedup (applyInPandas) — deliberately NOT approximated with
-levenshtein, which would change golden outputs (SURVEY.md §2.8 F6).
+in-batch greedy dedup (mediapath.greedy_dedup_payload) — deliberately
+NOT approximated with levenshtein, which would change golden outputs
+(SURVEY.md §2.8 F6).
 """
 
 from __future__ import annotations

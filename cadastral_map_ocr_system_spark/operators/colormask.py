@@ -15,7 +15,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions.colorroute import (  # noqa: F401  (re-exports: public API)
@@ -46,76 +46,58 @@ def color_coverage(img: np.ndarray) -> dict[str, float]:
     }
 
 
-COLOR_ROUTE_SCHEMA = (
-    "doc_id string, offset int, region_idx int, color string, "
-    "category string, token string, accepted boolean"
+COLOR_ROUTE_ARROW = pa.schema(
+    [
+        pa.field("doc_id", pa.string()),
+        pa.field("offset", pa.int32()),
+        pa.field("region_idx", pa.int32()),
+        pa.field("color", pa.string()),
+        pa.field("category", pa.string()),
+        pa.field("token", pa.string()),
+        pa.field("accepted", pa.bool_()),
+    ]
 )
 
 
-def color_route_features(media_spans_df: DataFrame) -> DataFrame:
-    """mapInArrow stage: RGB media spans -> one row per token region
-    with its dominant ink color, the routed field category
-    (red->number, black->name, blue->water; OCR/src/detect.py:226-330),
-    and whether the category's validator accepted the cleaned token.
-    Non-RGB payloads contribute no rows (no color information)."""
-    import pyarrow as pa
-
+def color_route_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
+    """One payload's routing rows: per token region, its dominant ink
+    color, the routed field category (red->number, black->name,
+    blue->water; OCR/src/detect.py:226-330), and whether the category's
+    validator accepted the cleaned token. Non-RGB payloads give no rows
+    (no color information)."""
     from ..functions.text import py_clean_token
     from ..synth import decode_payload_any
+    from .mediapath import _resolve_payload, classify_token, extract_regions
 
-    schema_arrow = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("offset", pa.int32()),
-            pa.field("region_idx", pa.int32()),
-            pa.field("color", pa.string()),
-            pa.field("category", pa.string()),
-            pa.field("token", pa.string()),
-            pa.field("accepted", pa.bool_()),
-        ]
-    )
+    gray, img = decode_payload_any(_resolve_payload(media_ref))
+    if img is None:
+        return []
+    rows = []
+    for i, reg in enumerate(extract_regions(gray, open_mask=True)):
+        if not reg["token"]:
+            continue
+        color = dominant_color(img, (reg["xmin"], reg["ymin"], reg["w"], reg["h"]))
+        category = COLOR_ROUTING[color] if color else None
+        clean = py_clean_token(reg["token"])
+        rows.append(
+            {
+                "doc_id": doc_id,
+                "offset": offset,
+                "region_idx": i,
+                "color": color,
+                "category": category,
+                "token": clean,
+                "accepted": classify_token(clean, category) is not None,
+            }
+        )
+    return rows
 
-    def gen(batches):
-        from .mediapath import _resolve_payload, classify_token, extract_regions
 
-        buf = []
-        for batch in batches:
-            for doc_id, offset, ref in zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("offset").to_pylist(),
-                batch.column("media_ref").to_pylist(),
-            ):
-                gray, img = decode_payload_any(_resolve_payload(ref))
-                if img is None:
-                    continue
-                for i, reg in enumerate(extract_regions(gray, open_mask=True)):
-                    if not reg["token"]:
-                        continue
-                    color = dominant_color(
-                        img, (reg["xmin"], reg["ymin"], reg["w"], reg["h"])
-                    )
-                    category = COLOR_ROUTING[color] if color else None
-                    clean = py_clean_token(reg["token"])
-                    buf.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": offset,
-                            "region_idx": i,
-                            "color": color,
-                            "category": category,
-                            "token": clean,
-                            "accepted": classify_token(clean, category) is not None,
-                        }
-                    )
-            if len(buf) >= 4096:
-                yield pa.RecordBatch.from_pylist(buf, schema=schema_arrow)
-                buf = []
-        if buf:
-            yield pa.RecordBatch.from_pylist(buf, schema=schema_arrow)
+def color_route_features(media_spans_df: DataFrame) -> DataFrame:
+    """mapInArrow stage: RGB media spans -> color_route_rows per payload."""
+    from .mediapath import map_payloads
 
-    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
-        gen, schema=COLOR_ROUTE_SCHEMA
-    )
+    return map_payloads(media_spans_df, color_route_rows, COLOR_ROUTE_ARROW)
 
 
 def color_coverage_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:

@@ -1,8 +1,8 @@
 """Corpus-scale deduplication operators.
 
-Generalizes the reference's within-document greedy dedup
-(OCR/src/detect.py:384-417, 504-575 — see operators/dedup.py) to
-across-document dedup over billions of rows:
+Generalizes the reference's within-payload greedy dedup
+(OCR/src/detect.py:384-417, 504-575 — see mediapath.greedy_dedup_payload)
+to across-document dedup over billions of rows:
 
   exact          hash-groupBy on a normalized-content fingerprint
   n-gram Jaccard shingle self-join + set arithmetic (exact, quadratic

@@ -94,16 +94,18 @@ def pack_shards(
     starts a new shard when the running total BEFORE it has consumed
     the budget: shard_seq = floor(exclusive_cumsum(n_tokens)/budget).
     A shard therefore overshoots the budget by at most one document —
-    the standard greedy packing a sequential writer produces — and
-    every (writer, shard_seq) group is reproducible byte-for-byte.
+    the standard greedy packing a sequential writer produces — and,
+    for a fixed n_writers, every (writer, shard_seq) group is
+    reproducible byte-for-byte.
 
     Sizing n_writers: each writer's exclusive-cumsum window holds
     ~corpus/W narrow rows (doc_id, n_tokens) in ONE task, so pick
     W ≈ the executor/core count (or higher until per-writer rows fit
-    task memory comfortably) — W is a parallelism/memory knob, never a
-    correctness one. 10x evidence (BENCH/sf1.md): W=2 vs W=8 wall
-    0.97 s vs 0.73 s min-of-3 — the window term is small and bounded,
-    no spill at either setting.
+    task memory comfortably). Any W gives a valid packing, but changing
+    W reassigns documents to other writers and shards: pin W wherever
+    shard contents must match across runs. 10x evidence
+    (BENCH/sf1.md): W=2 vs W=8 wall 0.97 s vs 0.73 s min-of-3 — the
+    window term is small and bounded, no spill at either setting.
 
     Returns (doc_id, n_tokens, writer, shard_seq).
     """

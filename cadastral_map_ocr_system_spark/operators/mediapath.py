@@ -15,9 +15,10 @@ Scale notes:
     row runs, the overlap edges between adjacent rows, root hooking
     with pointer jumping, and per-component sums all run as NumPy
     operations, with no per-run or per-pixel Python;
-  - output is yielded in bounded chunks so a multi-region "map image"
-    document cannot materialize unbounded rows in one Python list
-    (SURVEY.md §7.4 hard part 3);
+  - every per-payload stage runs one loop (payload_batches) that yields
+    output in chunks of at most OUTPUT_CHUNK_ROWS rows, so a
+    multi-region "map image" document cannot materialize unbounded rows
+    in one Python list or one RecordBatch (SURVEY.md §7.4 hard part 3);
   - payload resolution is a pure function of media_ref here (synthetic
     corpus, FIXTURES.md §1); a real deployment swaps `_resolve_payload`
     for a blob-store fetch — the surrounding plan is unchanged.
@@ -26,10 +27,11 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.text import (
     MIN_CONF,
@@ -626,66 +628,98 @@ def merge_line_segments(
     return merged
 
 
-LINE_SCHEMA = (
-    "doc_id string, offset int, line_idx int, media_ref string, "
-    "x1 int, y1 int, x2 int, y2 int, length double, angle double, "
-    "n_merged int"
+# ------------------------------------------------ per-payload Arrow stages
+class RowChunks:
+    """Row buffer of a mapInArrow body: rows go in as dicts and come out
+    as RecordBatches of `schema` holding at most OUTPUT_CHUNK_ROWS rows,
+    buffered across input batches."""
+
+    def __init__(self, schema: pa.Schema):
+        self.schema = schema
+        self.rows: list[dict] = []
+
+    def add(self, rows: list[dict]) -> list[pa.RecordBatch]:
+        """Buffer rows; return every chunk that is now full."""
+        self.rows.extend(rows)
+        full = []
+        while len(self.rows) >= OUTPUT_CHUNK_ROWS:
+            chunk = self.rows[:OUTPUT_CHUNK_ROWS]
+            del self.rows[:OUTPUT_CHUNK_ROWS]
+            full.append(pa.RecordBatch.from_pylist(chunk, schema=self.schema))
+        return full
+
+    def flush(self) -> list[pa.RecordBatch]:
+        """Return the partial last chunk, if any, and empty the buffer."""
+        rest, self.rows = self.rows, []
+        return [pa.RecordBatch.from_pylist(rest, schema=self.schema)] if rest else []
+
+
+def _payload_keys(batch: pa.RecordBatch):
+    return zip(
+        batch.column("doc_id").to_pylist(),
+        batch.column("offset").to_pylist(),
+        batch.column("media_ref").to_pylist(),
+    )
+
+
+def payload_batches(
+    batches: Iterator[pa.RecordBatch],
+    fn: Callable[[str, int, str], list[dict]],
+    schema: pa.Schema,
+) -> Iterator[pa.RecordBatch]:
+    """The per-payload mapInArrow loop: fn(doc_id, offset, media_ref)
+    returns one payload's output rows, emitted as `schema` batches of at
+    most OUTPUT_CHUNK_ROWS rows."""
+    out = RowChunks(schema)
+    for batch in batches:
+        for doc_id, offset, ref in _payload_keys(batch):
+            yield from out.add(fn(doc_id, offset, ref))
+    yield from out.flush()
+
+
+def map_payloads(
+    media_spans_df, fn: Callable[[str, int, str], list[dict]], schema: pa.Schema
+):
+    """DataFrame stage: exploded media spans -> fn's rows per payload
+    (1->N mapInArrow through payload_batches). The Spark schema is
+    derived from the Arrow one, so each output is declared once."""
+    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
+        lambda batches: payload_batches(batches, fn, schema),
+        schema=from_arrow_schema(schema),
+    )
+
+
+LINE_ARROW = pa.schema(
+    [
+        pa.field("doc_id", pa.string()),
+        pa.field("offset", pa.int32()),
+        pa.field("line_idx", pa.int32()),
+        pa.field("media_ref", pa.string()),
+        pa.field("x1", pa.int32()),
+        pa.field("y1", pa.int32()),
+        pa.field("x2", pa.int32()),
+        pa.field("y2", pa.int32()),
+        pa.field("length", pa.float64()),
+        pa.field("angle", pa.float64()),
+        pa.field("n_merged", pa.int32()),
+    ]
 )
 
 
-def line_features(media_spans_df, merge: bool = True):
+def line_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
+    """One payload's line-segment rows, W5 group/merge applied within
+    the payload (n_merged counts members)."""
+    grid, _img = decode_payload_any(_resolve_payload(media_ref))
+    return [
+        {"doc_id": doc_id, "offset": offset, "line_idx": i, "media_ref": media_ref, **ln}
+        for i, ln in enumerate(merge_line_segments(extract_line_segments(grid)))
+    ]
+
+
+def line_features(media_spans_df):
     """DataFrame stage: exploded media spans -> line-segment rows
-    (1->N mapInArrow, same shape as the token path). merge=True applies
-    the W5 group/merge within each payload (n_merged counts members);
-    merge=False emits raw segments with n_merged=1."""
-    import pyarrow as _pa
-
-    schema_arrow = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("offset", pa.int32()),
-            pa.field("line_idx", pa.int32()),
-            pa.field("media_ref", pa.string()),
-            pa.field("x1", pa.int32()),
-            pa.field("y1", pa.int32()),
-            pa.field("x2", pa.int32()),
-            pa.field("y2", pa.int32()),
-            pa.field("length", pa.float64()),
-            pa.field("angle", pa.float64()),
-            pa.field("n_merged", pa.int32()),
-        ]
-    )
-
-    def gen(batches):
-        buf = []
-        for batch in batches:
-            for doc_id, offset, ref in zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("offset").to_pylist(),
-                batch.column("media_ref").to_pylist(),
-            ):
-                grid, _img = decode_payload_any(_resolve_payload(ref))
-                segs = extract_line_segments(grid)
-                if merge:
-                    segs = merge_line_segments(segs)
-                else:
-                    segs = [{**ln, "n_merged": 1} for ln in segs]
-                for i, ln in enumerate(segs):
-                    buf.append(
-                        {"doc_id": doc_id, "offset": offset, "line_idx": i,
-                         "media_ref": ref, **ln}
-                    )
-                while len(buf) >= OUTPUT_CHUNK_ROWS:
-                    yield _pa.RecordBatch.from_pylist(
-                        buf[:OUTPUT_CHUNK_ROWS], schema=schema_arrow
-                    )
-                    buf = buf[OUTPUT_CHUNK_ROWS:]
-        if buf:
-            yield _pa.RecordBatch.from_pylist(buf, schema=schema_arrow)
-
-    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
-        gen, schema=LINE_SCHEMA
-    )
+    (1->N mapInArrow, same shape as the token path)."""
+    return map_payloads(media_spans_df, line_rows, LINE_ARROW)
 
 
 # ----------------------------------------------------- record emission
@@ -711,9 +745,8 @@ def greedy_dedup_payload(records: list[dict]) -> list[dict]:
     Runs inside the Arrow batch before rows leave the UDF (SURVEY.md
     §2.6 W4) — the dedup rule only compares detections of the same
     payload, so doing it here removes a corpus-wide shuffle + grouped
-    Python stage from the pipeline. operators/dedup.py exposes the same
-    semantics as a grouped-map for cross-span use; applying it after
-    this is a no-op.
+    Python stage from the pipeline. This is the engine's only
+    implementation of the rule; oracle.py mirrors it independently.
     """
     from ..functions.geometry import (
         DEDUP_MAX_DIST,
@@ -794,7 +827,6 @@ def extract_media_records(
     offset: int,
     media_ref: str,
     dedup: bool = True,
-    deskew: bool = True,
     stats: dict | None = None,
 ) -> list[dict]:
     """One media span -> N classified detection records.
@@ -827,7 +859,7 @@ def extract_media_records(
         img = resize_cap(img)
     seg, tok = normalize_payload(gray)
 
-    if img is None and deskew and max(seg.shape) <= MAX_UNTILED:
+    if img is None and max(seg.shape) <= MAX_UNTILED:
         mask = morph_open(seg > BIN_THRESHOLD)
         comps = _components(seg, mask)
         angle = _median_angle(comps)
@@ -880,24 +912,6 @@ def extract_media_records(
             }
         )
     return greedy_dedup_payload(out) if dedup else out
-
-
-def media_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body: (doc_id, offset, media_ref) -> DETECTIONS rows."""
-    buf: list[dict] = []
-    for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        offsets = batch.column("offset").to_pylist()
-        refs = batch.column("media_ref").to_pylist()
-        for doc_id, offset, ref in zip(doc_ids, offsets, refs):
-            buf.extend(extract_media_records(doc_id, offset, ref))
-            while len(buf) >= OUTPUT_CHUNK_ROWS:
-                yield pa.RecordBatch.from_pylist(
-                    buf[:OUTPUT_CHUNK_ROWS], schema=DETECTIONS_ARROW
-                )
-                buf = buf[OUTPUT_CHUNK_ROWS:]
-    if buf:
-        yield pa.RecordBatch.from_pylist(buf, schema=DETECTIONS_ARROW)
 
 
 def write_tile_metrics(tile_metrics_dir: str, stats: dict) -> None:
@@ -959,12 +973,10 @@ def read_tile_metrics(tile_metrics_dir: str) -> dict:
 
 
 def span_batches(
-    batches: Iterator[pa.RecordBatch],
-    tile_skip_acc=None,
-    tile_acc=None,
-    tile_metrics_dir: str | None = None,
+    batches: Iterator[pa.RecordBatch], tile_metrics_dir: str | None = None
 ) -> Iterator[pa.RecordBatch]:
-    """Single-pass mapInArrow body over ALL spans.
+    """Single-pass mapInArrow body over ALL spans, and the only code
+    that emits detection rows.
 
     One scan of the docs table feeds one exchange and one Python stage
     (two branched plans would double-read the spans column — parquet
@@ -972,28 +984,34 @@ def span_batches(
     plan costs 2x IO at corpus scale):
 
       - media spans  -> extracted detection rows (the 1->N OCR path);
+        a media span whose regions are all rejected emits one null-kind
+        sentinel row instead;
       - text spans   -> COLUMNAR passthrough (pyarrow filter + column
         reuse, no per-row Python; boilerplate cleanup happens after
         this stage in whole-stage codegen);
       - null-kind sentinels (posexplode_outer of empty docs) ->
         passthrough, so empty documents survive to the re-zip without
         a corpus-wide join.
+
+    Every yielded batch holds at most OUTPUT_CHUNK_ROWS rows. Tiling
+    counts go to tile_metrics_dir, if given, as one retry-exact file per
+    task attempt (write_tile_metrics).
     """
     import pyarrow.compute as pc
 
     tile_stats: dict = {}
-    buf: list[dict] = []
+    out = RowChunks(DETECTIONS_ARROW)
     for batch in batches:
         kind = batch.column("kind")
         is_media = pc.equal(kind, "media")
         media_mask = pc.fill_null(is_media, False)
         # ---- non-media rows (text + sentinels): columnar passthrough
         passthrough = batch.filter(pc.invert(media_mask))
-        if passthrough.num_rows:
-            n = passthrough.num_rows
+        n = passthrough.num_rows
+        if n:
             pkind = passthrough.column("kind")
             is_text = pc.fill_null(pc.equal(pkind, "text"), False)
-            yield pa.RecordBatch.from_arrays(
+            rows = pa.RecordBatch.from_arrays(
                 [
                     passthrough.column("doc_id"),
                     pc.fill_null(passthrough.column("offset"), -1).cast(pa.int32()),
@@ -1009,13 +1027,10 @@ def span_batches(
                 ],
                 schema=DETECTIONS_ARROW,
             )
+            for start in range(0, n, OUTPUT_CHUNK_ROWS):
+                yield rows.slice(start, OUTPUT_CHUNK_ROWS)
         # ---- media rows: per-payload extraction
-        media = batch.filter(media_mask)
-        for doc_id, offset, ref in zip(
-            media.column("doc_id").to_pylist(),
-            media.column("offset").to_pylist(),
-            media.column("media_ref").to_pylist(),
-        ):
+        for doc_id, offset, ref in _payload_keys(batch.filter(media_mask)):
             recs = extract_media_records(doc_id, offset, ref, stats=tile_stats)
             if not recs:
                 # a media span whose regions are all rejected must still
@@ -1031,58 +1046,33 @@ def span_batches(
                         "is_number": False,
                     }
                 ]
-            buf.extend(recs)
-            while len(buf) >= OUTPUT_CHUNK_ROWS:
-                yield pa.RecordBatch.from_pylist(
-                    buf[:OUTPUT_CHUNK_ROWS], schema=DETECTIONS_ARROW
-                )
-                buf = buf[OUTPUT_CHUNK_ROWS:]
-    if buf:
-        yield pa.RecordBatch.from_pylist(buf, schema=DETECTIONS_ARROW)
-    # per-partition tiling metrics flow back through accumulators
-    # (task-completion channel — no extra rows in the data path)
-    if tile_acc is not None:
-        tile_acc.add(tile_stats.get("n_tiles", 0))
-    if tile_skip_acc is not None:
-        tile_skip_acc.add(tile_stats.get("n_tiles_skipped", 0))
+            yield from out.add(recs)
+    yield from out.flush()
     if tile_metrics_dir is not None:
         write_tile_metrics(tile_metrics_dir, tile_stats)
 
 
-def span_detections(
-    spans_df, tile_skip_acc=None, tile_acc=None, tile_metrics_dir=None
-):
+def span_detections(spans_df, tile_metrics_dir: str | None = None):
     """DataFrame stage: ALL exploded spans -> detection rows in one
     Python stage (see span_batches). Tiling counts for lineage flow out
-    either through optional Spark accumulators (approximate: retries
-    over-count) or through tile_metrics_dir per-attempt metric files
-    (retry-exact; see write_tile_metrics)."""
-    schema = (
-        "doc_id string, offset int, region_idx int, token_idx int, "
-        "kind string, text string, media_ref string, conf double, "
-        "cx double, cy double, is_number boolean"
-    )
-
-    def body(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from span_batches(batches, tile_skip_acc, tile_acc, tile_metrics_dir)
-
+    through tile_metrics_dir per-attempt metric files (retry-exact; see
+    write_tile_metrics)."""
     return spans_df.select(
         "doc_id", "kind", "text", "media_ref", "offset"
-    ).mapInArrow(body, schema=schema)
+    ).mapInArrow(
+        lambda batches: span_batches(batches, tile_metrics_dir),
+        schema=from_arrow_schema(DETECTIONS_ARROW),
+    )
 
 
 def media_detections(media_spans_df):
-    """DataFrame stage: exploded media spans -> detection rows.
+    """DataFrame stage: exploded media spans -> their detection rows.
 
-    Input columns: doc_id, offset, media_ref. The caller is expected to
-    have repartitioned per-span (not per-doc) so a huge document's
-    spans spread across tasks (SURVEY.md §4.3 skew handling).
+    Input: explode_spans rows (doc_id, kind, text, media_ref, offset)
+    filtered to media. The rows are span_detections' media rows, with
+    the null-kind sentinels of all-rejected payloads dropped. The
+    caller is expected to have repartitioned per-span (not per-doc) so
+    a huge document's spans spread across tasks (SURVEY.md §4.3 skew
+    handling).
     """
-    schema = (
-        "doc_id string, offset int, region_idx int, token_idx int, "
-        "kind string, text string, media_ref string, conf double, "
-        "cx double, cy double, is_number boolean"
-    )
-    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
-        media_batches, schema=schema
-    )
+    return span_detections(media_spans_df).filter("kind = 'media'")

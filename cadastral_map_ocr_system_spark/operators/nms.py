@@ -7,7 +7,7 @@ In the main pipeline this is structurally unnecessary (connected
 components are pixel-disjoint), so it ships as a standalone grouped
 operator for overlapping detector outputs (e.g. multi-scale template
 matching, SURVEY.md §2.4 J1). Greedy + order-dependent => grouped-map
-applyInPandas per image/payload, like the dedup family.
+applyInPandas per image/payload.
 """
 
 from __future__ import annotations

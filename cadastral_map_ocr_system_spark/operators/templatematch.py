@@ -27,25 +27,17 @@ comprehensive_detector.py:233-265) — Spark-first:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 
 from ..synth import decode_payload_any
 from ..templates import MATCH_THRESHOLD, TEMPLATES, nn_resize
-from .mediapath import OUTPUT_CHUNK_ROWS, _components, _resolve_payload
+from .mediapath import _components, _resolve_payload, map_payloads
 
 MATCH_MIN_AREA = 30       # contourArea > ~100*scale^2 gate, symbol_detector.py:72
 MATCH_SIZE_RANGE = (6, 20)  # candidate bbox edge bounds, px
 
-TEMPLATE_MATCH_SCHEMA = (
-    "doc_id string, offset int, match_idx int, media_ref string, "
-    "template string, x int, y int, w int, h int, scale double, "
-    "score double"
-)
-
-_ARROW = pa.schema(
+TEMPLATE_MATCH_ARROW = pa.schema(
     [
         pa.field("doc_id", pa.string()),
         pa.field("offset", pa.int32()),
@@ -154,6 +146,19 @@ def slice_template_sheet(
     return {name: comps.crop(k) for name, k in zip(names, glyphs.tolist())}
 
 
+def template_match_rows(
+    doc_id: str, offset: int, media_ref: str, templates: dict, resize_cache: dict
+) -> list[dict]:
+    """One payload's template-match rows (see match_components)."""
+    grid, _img = decode_payload_any(_resolve_payload(media_ref))
+    return [
+        {"doc_id": doc_id, "offset": offset, "match_idx": i, "media_ref": media_ref, **m}
+        for i, m in enumerate(
+            match_components(grid, templates, resize_cache=resize_cache)
+        )
+    ]
+
+
 def template_match_features(media_spans_df, templates: dict | None = None):
     """DataFrame stage: exploded media spans -> template-match rows.
 
@@ -161,36 +166,12 @@ def template_match_features(media_spans_df, templates: dict | None = None):
     inside the Arrow closure — the J1 broadcast join, media side.
     """
     spark = media_spans_df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {k: v for k, v in (templates or TEMPLATES).items()}
-    )
+    bc = spark.sparkContext.broadcast(dict(templates or TEMPLATES))
+    # nn_resize memo: the closure is unpickled once per task, so each
+    # task gets its own dict
+    resize_cache: dict = {}
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tset = bc.value
-        resize_cache: dict = {}  # task-lifetime nn_resize memo
-        buf: list[dict] = []
-        for batch in batches:
-            for doc_id, offset, ref in zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("offset").to_pylist(),
-                batch.column("media_ref").to_pylist(),
-            ):
-                grid, _img = decode_payload_any(_resolve_payload(ref))
-                for i, m in enumerate(
-                    match_components(grid, tset, resize_cache=resize_cache)
-                ):
-                    buf.append(
-                        {"doc_id": doc_id, "offset": offset, "match_idx": i,
-                         "media_ref": ref, **m}
-                    )
-                while len(buf) >= OUTPUT_CHUNK_ROWS:
-                    yield pa.RecordBatch.from_pylist(
-                        buf[:OUTPUT_CHUNK_ROWS], schema=_ARROW
-                    )
-                    buf = buf[OUTPUT_CHUNK_ROWS:]
-        if buf:
-            yield pa.RecordBatch.from_pylist(buf, schema=_ARROW)
+    def rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
+        return template_match_rows(doc_id, offset, media_ref, bc.value, resize_cache)
 
-    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
-        gen, schema=TEMPLATE_MATCH_SCHEMA
-    )
+    return map_payloads(media_spans_df, rows, TEMPLATE_MATCH_ARROW)

@@ -50,51 +50,35 @@ def explode_spans(docs: DataFrame, keep_empty_docs: bool = False) -> DataFrame:
     )
 
 
-def extract(
-    docs: DataFrame,
-    spread_spans: bool = True,
-    tile_skip_acc=None,
-    tile_acc=None,
-    tile_metrics_dir: str | None = None,
-) -> DataFrame:
+def extract(docs: DataFrame, tile_metrics_dir: str | None = None) -> DataFrame:
     """Full pipeline: docs -> extracted(doc_id, spans).
 
-    spread_spans: repartition exploded spans on (doc_id, offset) before
-    the per-span work. This is the skew/salting stage (SURVEY.md §4.3):
-    it spreads a 10k-span document across tasks instead of pinning one,
+    Exploded spans are repartitioned on (doc_id, offset) before the
+    per-span work. This is the skew/salting stage (SURVEY.md §4.3): it
+    spreads a 10k-span document across tasks instead of pinning one,
     and it decouples processing parallelism from input-split count.
-    Disable only when the scan itself is already well-partitioned and
-    skew-free.
 
-    tile_skip_acc / tile_acc: optional Spark accumulators that receive
-    the E3 tiling counts (tiles processed / skipped) for lineage.
-    tile_metrics_dir: optional directory for the retry-exact per-attempt
-    metric files (mediapath.write_tile_metrics).
+    tile_metrics_dir: optional directory for the E3 tiling counts
+    (tiles processed / skipped), written as retry-exact per-attempt
+    metric files (mediapath.write_tile_metrics) and read back with
+    mediapath.read_tile_metrics.
     """
-    spans = explode_spans(docs, keep_empty_docs=True)
-    if spread_spans:
-        spark = docs.sparkSession
-        # ONE task wave for the Python-dense Arrow stage: partition
-        # count = cluster parallelism, not the 2x shuffle-partition
-        # default. Python workers pay per-task spin-up/IPC that JVM
-        # tasks don't, and per-span spreading already bounds skew, so
-        # a second wave only adds stragglers — measured ~20% faster at
-        # 12k docs on local[32] (min-of-trials 3.9s vs 5.0s).
-        #
-        # defaultParallelism is evaluated at PLAN time and can be tiny
-        # under dynamic allocation (e.g. 2 before executors register),
-        # which would collapse the extraction stage to a few tasks on a
-        # real cluster — so an explicit conf always wins when set.
-        conf_n = spark.conf.get("spark_graft.extract.partitions", None)
-        n = int(conf_n) if conf_n else spark.sparkContext.defaultParallelism
-        spans = spans.repartition(n, "doc_id", "offset")
-
-    rows = span_detections(
-        spans,
-        tile_skip_acc=tile_skip_acc,
-        tile_acc=tile_acc,
-        tile_metrics_dir=tile_metrics_dir,
-    )
+    spark = docs.sparkSession
+    # ONE task wave for the Python-dense Arrow stage: partition count =
+    # cluster parallelism, not the 2x shuffle-partition default. Python
+    # workers pay per-task spin-up/IPC that JVM tasks don't, and
+    # per-span spreading already bounds skew, so a second wave only
+    # adds stragglers — measured ~20% faster at 12k docs on local[32]
+    # (min-of-trials 3.9s vs 5.0s).
+    #
+    # defaultParallelism is evaluated at PLAN time and can be tiny under
+    # dynamic allocation (e.g. 2 before executors register), which
+    # would collapse the extraction stage to a few tasks on a real
+    # cluster — so an explicit conf always wins when set.
+    conf_n = spark.conf.get("spark_graft.extract.partitions", None)
+    n = int(conf_n) if conf_n else spark.sparkContext.defaultParallelism
+    spans = explode_spans(docs, keep_empty_docs=True).repartition(n, "doc_id", "offset")
+    rows = span_detections(spans, tile_metrics_dir=tile_metrics_dir)
     cleaned = rows.withColumn(
         "text",
         F.when(F.col("kind") == "text", strip_boilerplate(F.col("text"))).otherwise(

@@ -1636,7 +1636,6 @@ def q_greedy_dedup(spark: SparkSession, sf: str) -> DataFrame:
     import pyarrow as _pa
 
     from .. import oracle, synth
-    from ..operators.dedup import dedup_detections
     from ..operators.mediapath import media_detections
     from .pipeline import explode_spans
 
@@ -1667,7 +1666,7 @@ def q_greedy_dedup(spark: SparkSession, sf: str) -> DataFrame:
     docs = synth.synth_docs_df(spark, _EXTRACT_N_DOCS, seed=_EXTRACT_SEED,
                                skew_frac=_EXTRACT_SKEW)
     media = explode_spans(docs).filter(F.col("kind") == "media")
-    return dedup_detections(media_detections(media)).select(
+    return media_detections(media).select(
         "doc_id", "offset", "region_idx", "text", "conf"
     )
 

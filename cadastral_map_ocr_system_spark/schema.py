@@ -1,8 +1,9 @@
 """Explicit schemas for every table the engine reads or writes.
 
 The reference has no schema system (row dicts everywhere, e.g. the
-detection record at OCR/src/detect.py:374-380); here every shape is a
-declared StructType — schema-on-write, no inference.
+detection record at OCR/src/detect.py:374-380); here every shape is
+declared — a StructType, or an Arrow schema for the output of an Arrow
+stage — schema-on-write, no inference.
 """
 
 from __future__ import annotations
@@ -24,27 +25,6 @@ DOCS = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_IN)),
-    ]
-)
-
-# ------------------------------------------------------ detection rows
-# One row per extracted unit (cleaned text span, or one token from one
-# media region). Mirrors the reference detection record
-# {text, bbox, center, confidence, source} (OCR/src/detect.py:374-380)
-# generalized with (offset, region_idx, token_idx) ordering keys.
-DETECTIONS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("region_idx", T.IntegerType(), False),
-        T.StructField("token_idx", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("conf", T.DoubleType()),
-        T.StructField("cx", T.DoubleType()),    # region center, payload px
-        T.StructField("cy", T.DoubleType()),
-        T.StructField("is_number", T.BooleanType()),
     ]
 )
 
@@ -77,9 +57,9 @@ CHECKPOINT = T.StructType(
         T.StructField("n_spans", T.LongType()),
         T.StructField("n_regions", T.LongType()),
         T.StructField("n_output_rows", T.LongType()),
-        # E3 tiling metrics, accrued over the commit group this bucket
-        # was extracted in (accumulator granularity is the commit, so
-        # every bucket row of a group carries the group totals)
+        # E3 tiling metrics of the commit group this bucket was
+        # extracted in, from the retry-exact per-attempt metric files;
+        # stored on the group's first bucket row only (others carry 0)
         T.StructField("n_tiles", T.LongType()),
         T.StructField("n_tiles_skipped", T.LongType()),
         T.StructField("wall_ms", T.LongType()),
@@ -88,7 +68,14 @@ CHECKPOINT = T.StructType(
     ]
 )
 
-# Arrow-level schema of the media-path UDF output (must match DETECTIONS)
+# ------------------------------------------------------ detection rows
+# One row per extracted unit (cleaned text span, or one token from one
+# media region) — the span stage's output, declared once in Arrow; the
+# Spark schema is derived from it. Mirrors the reference detection
+# record {text, bbox, center, confidence, source}
+# (OCR/src/detect.py:374-380) generalized with (offset, region_idx,
+# token_idx) ordering keys. kind is NULL on sentinel rows (empty docs,
+# all-rejected media spans) that keep a document alive to the re-zip.
 import pyarrow as pa  # noqa: E402
 
 DETECTIONS_ARROW = pa.schema(

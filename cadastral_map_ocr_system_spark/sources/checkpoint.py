@@ -100,8 +100,8 @@ def run_extraction(
         t0 = time.perf_counter()
         # E3 tiling lineage: RETRY-EXACT per-attempt metric files (one
         # dir per commit group), MAX-deduped per (stage, partition) at
-        # read — replaces the accumulator channel, which over-counts on
-        # task retries/speculation
+        # read (Spark accumulators would over-count on task
+        # retries/speculation)
         tile_metrics_dir = f"{checkpoint_path}_tiles/{run_id}/g{group[0]}"
         # crash-resume correctness for the metrics channel: a prior
         # attempt of this UNCOMMITTED group may have left metric files

@@ -1,6 +1,6 @@
 """Skew test (SURVEY.md §5 step 6): giant-span documents with
-multi-region media still match the oracle, and the greedy dedup
-semantics hold under the per-span spread."""
+multi-region media still match the oracle, and media_detections keeps
+the kernel's per-payload records exactly."""
 
 from __future__ import annotations
 
@@ -25,22 +25,37 @@ def test_skewed_corpus_matches_oracle(spark):
     assert got == golden
 
 
-def test_grouped_dedup_operator_matches_oracle_semantics(spark):
-    """The standalone grouped-map dedup (operators/dedup.py) applied on
-    top of the in-batch dedup is a no-op — same survivors."""
+def test_media_detections_are_kernel_records_without_sentinels(spark):
+    """media_detections is span_detections' media rows: per span,
+    exactly extract_media_records' (deduped) rows, and the null-kind
+    sentinel that keeps an all-rejected media span's document alive
+    never leaks out."""
     from pyspark.sql import functions as F
 
-    from cadastral_map_ocr_system_spark.operators.dedup import dedup_detections
-    from cadastral_map_ocr_system_spark.operators.mediapath import media_detections
+    from cadastral_map_ocr_system_spark.operators.mediapath import (
+        extract_media_records,
+        media_detections,
+    )
     from cadastral_map_ocr_system_spark.plans.pipeline import explode_spans
 
     docs_py = synth.synth_docs_pylist(60, seed=5)
+    want, n_all_rejected = [], 0
+    for doc in docs_py:
+        for span in doc["spans"]:
+            if span["kind"] == "media":
+                recs = extract_media_records(
+                    doc["doc_id"], span["offset"], span["media_ref"]
+                )
+                n_all_rejected += not recs
+                want.extend(recs)
+    assert n_all_rejected > 0, "fixture should contain an all-rejected media span"
+
     docs = spark.createDataFrame(docs_py, schema=DOCS)
-    media = explode_spans(docs).filter(F.col("kind") == "media")
-    det = media_detections(media)
-    key_cols = ["doc_id", "offset", "region_idx", "token_idx", "text"]
-    before = sorted(tuple(r) for r in det.select(*key_cols).collect())
-    after = sorted(
-        tuple(r) for r in dedup_detections(det).select(*key_cols).collect()
-    )
-    assert before == after
+    det = media_detections(explode_spans(docs).filter(F.col("kind") == "media"))
+    got = [r.asDict() for r in det.collect()]
+    assert all(r["kind"] == "media" for r in got)
+
+    def key(r):
+        return (r["doc_id"], r["offset"], r["region_idx"], r["token_idx"])
+
+    assert sorted(got, key=key) == sorted(want, key=key)
