@@ -22,7 +22,10 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIXTURE_VERSION = 5  # keep in sync with synth.FIXTURE_VERSION
+sys.path.insert(0, REPO)
+
+from cadastral_map_ocr_system_spark.synth import FIXTURE_VERSION  # noqa: E402
+
 CORPUS = f"/tmp/scaling_docs_parquet_v{FIXTURE_VERSION}"
 N_CORES = int(os.environ.get("SPARK_GRAFT_SCALING_N", "4"))
 
@@ -66,7 +69,6 @@ def main() -> None:
         write_report(None)
         return
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 24000
-    sys.path.insert(0, REPO)
     marker = os.path.join(CORPUS, f"_N_{n_docs}")
     if not (os.path.exists(os.path.join(CORPUS, "_SUCCESS")) and os.path.exists(marker)):
         from cadastral_map_ocr_system_spark.session import get_spark

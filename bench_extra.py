@@ -17,6 +17,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def min_noop_seconds(make_df, trials: int) -> float:
+    """Best wall time, over `trials` runs, of building make_df() and
+    writing it to the noop sink."""
+    best = float("inf")
+    for _ in range(trials):
+        t0 = time.perf_counter()
+        make_df().write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def main() -> None:
     from cadastral_map_ocr_system_spark.plans.queries import REGISTRY
     from cadastral_map_ocr_system_spark.session import get_spark
@@ -35,12 +46,7 @@ def main() -> None:
     for name in names:
         fn, _sql = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        best = float("inf")
-        for _ in range(trials):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        out[name] = round(min_noop_seconds(lambda: fn(spark, sf_dir), trials), 3)
     spark.stop()
     print(json.dumps({"sf_dir": sf_dir, "queries_min": out}))
 

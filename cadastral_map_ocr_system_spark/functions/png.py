@@ -15,9 +15,9 @@ container), covering the full static-image spec (ISO/IEC 15948):
           ancillary chunks (gAMA, ...) are CRC-checked and skipped.
   encode: 8-bit grayscale / RGB, filter 0, non-interlaced
 
-This replaces the image-codec stub in operators/multimodal.py for PNG
-payloads: `media_metadata` / `frame_sample_features` / texture stats
-run on real image bytes end to end (the reference loads scans via
+operators/multimodal.py decodes PNG payloads with it, so the
+`media_metadata` / `frame_sample_features` / `texture_features` Arrow
+stages run on real image bytes end to end (the reference loads scans via
 cv2.imread which accepts these subformats silently,
 OCR/src/detect.py:122-128).
 """

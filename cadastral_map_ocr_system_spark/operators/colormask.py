@@ -11,10 +11,7 @@ decoded by functions/png.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
@@ -25,18 +22,15 @@ from ..functions.colorroute import (  # noqa: F401  (re-exports: public API)
     dominant_color,
     route_category,
 )
+from ..functions.png import decode_png
+from .mediapath import _resolve_payload, classify_token, extract_regions, map_payloads
 from .normalize import morph_close, morph_open
 
-COLOR_COVERAGE_SCHEMA = "ref string, color string, coverage double, n_pixels long"
 
-
-def color_mask(img: np.ndarray, color: str, cleanup: bool = True) -> np.ndarray:
+def color_mask(img: np.ndarray, color: str) -> np.ndarray:
     """Boolean mask of pixels inside the color's RGB band, with 3x3
     open+close noise cleanup (preprocess.py:58-62). img: (h, w, 3)."""
-    mask = band_mask(img, color)
-    if cleanup:
-        mask = morph_close(morph_open(mask))
-    return mask
+    return morph_close(morph_open(band_mask(img, color)))
 
 
 def color_coverage(img: np.ndarray) -> dict[str, float]:
@@ -67,7 +61,6 @@ def color_route_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
     (no color information)."""
     from ..functions.text import py_clean_token
     from ..synth import decode_payload_any
-    from .mediapath import _resolve_payload, classify_token, extract_regions
 
     gray, img = decode_payload_any(_resolve_payload(media_ref))
     if img is None:
@@ -95,33 +88,43 @@ def color_route_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
 
 def color_route_features(media_spans_df: DataFrame) -> DataFrame:
     """mapInArrow stage: RGB media spans -> color_route_rows per payload."""
-    from .mediapath import map_payloads
+    return map_payloads(
+        media_spans_df.select("doc_id", "offset", "media_ref"),
+        color_route_rows,
+        COLOR_ROUTE_ARROW,
+    )
 
-    return map_payloads(media_spans_df, color_route_rows, COLOR_ROUTE_ARROW)
+
+COLOR_COVERAGE_ARROW = pa.schema(
+    [
+        pa.field("ref", pa.string()),
+        pa.field("color", pa.string()),
+        pa.field("coverage", pa.float64()),
+        pa.field("n_pixels", pa.int64()),
+    ]
+)
 
 
-def color_coverage_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def color_coverage_rows(ref: str, payload: bytes) -> list[dict]:
+    """One PNG payload's rows, one per color family, with the
+    cleaned-mask coverage ratio. A payload the PNG codec rejects gives
+    no rows."""
+    try:
+        img = decode_png(payload)
+    except ValueError:
+        return []
+    if img.ndim == 2:  # grayscale: treat as stacked gray RGB
+        img = np.stack([img] * 3, axis=2)
+    masks = {color: color_mask(img, color) for color in sorted(COLOR_THRESHOLDS)}
+    return [
+        {"ref": ref, "color": c, "coverage": float(m.mean()), "n_pixels": int(m.sum())}
+        for c, m in masks.items()
+    ]
+
+
+def color_coverage_features(df: DataFrame) -> DataFrame:
     """DataFrame stage: (ref, payload[PNG-RGB]) -> one row per (ref,
-    color family) with the cleaned-mask coverage ratio."""
-    from ..functions.png import decode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["ref"], pdf[payload_col]):
-                img = decode_png(bytes(payload))
-                if img.ndim == 2:  # grayscale: treat as stacked gray RGB
-                    img = np.stack([img] * 3, axis=2)
-                for color in sorted(COLOR_THRESHOLDS):
-                    m = color_mask(img, color)
-                    rows.append(
-                        {
-                            "ref": ref,
-                            "color": color,
-                            "coverage": float(m.mean()),
-                            "n_pixels": int(m.sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(gen, schema=COLOR_COVERAGE_SCHEMA)
+    color family), see color_coverage_rows."""
+    return map_payloads(
+        df.select("ref", "payload"), color_coverage_rows, COLOR_COVERAGE_ARROW
+    )

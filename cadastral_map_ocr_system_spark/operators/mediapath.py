@@ -15,7 +15,7 @@ Scale notes:
     row runs, the overlap edges between adjacent rows, root hooking
     with pointer jumping, and per-component sums all run as NumPy
     operations, with no per-run or per-pixel Python;
-  - every per-payload stage runs one loop (payload_batches) that yields
+  - every per-item stage runs one loop (payload_batches) that yields
     output in chunks of at most OUTPUT_CHUNK_ROWS rows, so a
     multi-region "map image" document cannot materialize unbounded rows
     in one Python list or one RecordBatch (SURVEY.md §7.4 hard part 3);
@@ -664,26 +664,25 @@ def _payload_keys(batch: pa.RecordBatch):
 
 def payload_batches(
     batches: Iterator[pa.RecordBatch],
-    fn: Callable[[str, int, str], list[dict]],
+    fn: Callable[..., list[dict]],
     schema: pa.Schema,
 ) -> Iterator[pa.RecordBatch]:
-    """The per-payload mapInArrow loop: fn(doc_id, offset, media_ref)
-    returns one payload's output rows, emitted as `schema` batches of at
-    most OUTPUT_CHUNK_ROWS rows."""
+    """The per-item mapInArrow loop: fn(*row) over the batch's columns,
+    in order, returns one item's output rows, emitted as `schema`
+    batches of at most OUTPUT_CHUNK_ROWS rows."""
     out = RowChunks(schema)
     for batch in batches:
-        for doc_id, offset, ref in _payload_keys(batch):
-            yield from out.add(fn(doc_id, offset, ref))
+        for row in zip(*(col.to_pylist() for col in batch.columns)):
+            yield from out.add(fn(*row))
     yield from out.flush()
 
 
-def map_payloads(
-    media_spans_df, fn: Callable[[str, int, str], list[dict]], schema: pa.Schema
-):
-    """DataFrame stage: exploded media spans -> fn's rows per payload
-    (1->N mapInArrow through payload_batches). The Spark schema is
-    derived from the Arrow one, so each output is declared once."""
-    return media_spans_df.select("doc_id", "offset", "media_ref").mapInArrow(
+def map_payloads(df, fn: Callable[..., list[dict]], schema: pa.Schema):
+    """DataFrame stage: fn's rows per input row, over the columns the
+    caller selected (1->N mapInArrow through payload_batches). The
+    Spark schema is derived from the Arrow one, so each output is
+    declared once."""
+    return df.mapInArrow(
         lambda batches: payload_batches(batches, fn, schema),
         schema=from_arrow_schema(schema),
     )
@@ -719,7 +718,9 @@ def line_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
 def line_features(media_spans_df):
     """DataFrame stage: exploded media spans -> line-segment rows
     (1->N mapInArrow, same shape as the token path)."""
-    return map_payloads(media_spans_df, line_rows, LINE_ARROW)
+    return map_payloads(
+        media_spans_df.select("doc_id", "offset", "media_ref"), line_rows, LINE_ARROW
+    )
 
 
 # ----------------------------------------------------- record emission
@@ -916,11 +917,11 @@ def extract_media_records(
 
 def write_tile_metrics(tile_metrics_dir: str, stats: dict) -> None:
     """Retry-exact lineage channel: one metric file per TASK ATTEMPT,
-    keyed (stage, partition, attempt) via TaskContext, written
-    atomically (tmp + rename). The reader MAX-dedups per (stage,
-    partition), so task retries and speculative duplicates can never
-    over-count — unlike accumulators, which Spark re-applies on
-    re-execution. Local-FS here; a cluster deployment points this at
+    holding every counter of stats, keyed (stage, partition, attempt)
+    via TaskContext, written atomically (tmp + rename). The reader
+    MAX-dedups per (stage, partition), so task retries and speculative
+    duplicates can never over-count — unlike accumulators, which Spark
+    re-applies on re-execution. Local-FS here; a cluster deployment points this at
     shared storage (the same contract object stores give)."""
     import json
     import os as _os
@@ -936,11 +937,10 @@ def write_tile_metrics(tile_metrics_dir: str, stats: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(
             {
+                **stats,
                 "stage_id": tc.stageId(),
                 "partition_id": tc.partitionId(),
                 "attempt": tc.attemptNumber(),
-                "n_tiles": stats.get("n_tiles", 0),
-                "n_tiles_skipped": stats.get("n_tiles_skipped", 0),
             },
             f,
         )
@@ -948,28 +948,31 @@ def write_tile_metrics(tile_metrics_dir: str, stats: dict) -> None:
 
 
 def read_tile_metrics(tile_metrics_dir: str) -> dict:
-    """Aggregate task metric files, keeping ONE row per (stage,
-    partition) — the highest attempt; identical work per attempt makes
-    any surviving attempt's counts the partition's exact counts."""
+    """Sum every counter of the task metric files, keeping ONE file per
+    (stage, partition) — the highest attempt; identical work per attempt
+    makes any surviving attempt's counts the partition's exact counts.
+    n_tiles and n_tiles_skipped are always present (0 if no file has
+    them), plus max_attempt."""
     import json
     import os as _os
 
     best: dict[tuple, dict] = {}
-    if not _os.path.isdir(tile_metrics_dir):
-        return {"n_tiles": 0, "n_tiles_skipped": 0, "max_attempt": 0}
-    for name in _os.listdir(tile_metrics_dir):
+    names = _os.listdir(tile_metrics_dir) if _os.path.isdir(tile_metrics_dir) else []
+    for name in names:
         if name.startswith(".") or not name.endswith(".json"):
             continue
         with open(_os.path.join(tile_metrics_dir, name)) as f:
             row = json.load(f)
-        key = (row["stage_id"], row["partition_id"])
+        key = (row.pop("stage_id"), row.pop("partition_id"))
         if key not in best or row["attempt"] > best[key]["attempt"]:
             best[key] = row
-    return {
-        "n_tiles": sum(r["n_tiles"] for r in best.values()),
-        "n_tiles_skipped": sum(r["n_tiles_skipped"] for r in best.values()),
-        "max_attempt": max((r["attempt"] for r in best.values()), default=0),
-    }
+    totals = {"n_tiles": 0, "n_tiles_skipped": 0}
+    for row in best.values():
+        for name, n in row.items():
+            if name != "attempt":
+                totals[name] = totals.get(name, 0) + n
+    totals["max_attempt"] = max((r["attempt"] for r in best.values()), default=0)
+    return totals
 
 
 def span_batches(

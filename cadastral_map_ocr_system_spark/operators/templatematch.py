@@ -174,4 +174,6 @@ def template_match_features(media_spans_df, templates: dict | None = None):
     def rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
         return template_match_rows(doc_id, offset, media_ref, bc.value, resize_cache)
 
-    return map_payloads(media_spans_df, rows, TEMPLATE_MATCH_ARROW)
+    return map_payloads(
+        media_spans_df.select("doc_id", "offset", "media_ref"), rows, TEMPLATE_MATCH_ARROW
+    )

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as _pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -714,8 +715,6 @@ _CAP_FIXTURE = f"{_MATERIALIZE_DIR}/cap_fixture.parquet"
 
 
 def _write_cap_fixture() -> None:
-    import pyarrow as _pa
-
     common = " ".join(f"tok{i:02d}" for i in range(60))
     rows = [
         {"doc_id": f"dup-{i:04d}", "text": f"{common} tail{i:04d}"}
@@ -1483,18 +1482,42 @@ _EXTRACT_N_DOCS, _EXTRACT_SEED, _EXTRACT_SKEW = 300, 42, 0.02
 
 
 def _write_oracle_parquet(rows: list[dict], arrow_schema, path: str) -> None:
-    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
     _os.makedirs(_os.path.dirname(path), exist_ok=True)
     _pq.write_table(_pa.Table.from_pylist(rows, schema=arrow_schema), path)
 
 
+# flat extracted spans, one row per span, on both sides of the pipeline
+# queries: the oracle's golden sequences and the exploded Spark output
+_FLAT_SPANS_ARROW = _pa.schema(
+    [("doc_id", _pa.string()), ("order", _pa.int32()), ("kind", _pa.string()),
+     ("text", _pa.string()), ("media_ref", _pa.string())]
+)
+
+
+def _write_flat_golden(golden: dict, path: str) -> None:
+    rows = [
+        {"doc_id": d, "order": t[3], "kind": t[0], "text": t[1], "media_ref": t[2]}
+        for d, seq in golden.items()
+        for t in seq
+    ]
+    _write_oracle_parquet(rows, _FLAT_SPANS_ARROW, path)
+
+
+def _flat_spans(extracted: DataFrame) -> DataFrame:
+    return extracted.select("doc_id", F.explode("spans").alias("span")).select(
+        "doc_id",
+        F.col("span.order").alias("order"),
+        F.col("span.kind").alias("kind"),
+        F.col("span.text").alias("text"),
+        F.col("span.media_ref").alias("media_ref"),
+    )
+
+
 def q_extract_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """Flagship extraction pipeline vs the independent Python oracle,
     both as flat (doc_id, order, kind, text, media_ref) rows."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
     from .pipeline import extract
 
@@ -1502,28 +1525,11 @@ def q_extract_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         synth.synth_docs_pylist(_EXTRACT_N_DOCS, seed=_EXTRACT_SEED,
                                 skew_frac=_EXTRACT_SKEW)
     )
-    rows = [
-        {"doc_id": d, "order": t[3], "kind": t[0], "text": t[1], "media_ref": t[2]}
-        for d, seq in golden.items()
-        for t in seq
-    ]
-    schema = _pa.schema(
-        [("doc_id", _pa.string()), ("order", _pa.int32()), ("kind", _pa.string()),
-         ("text", _pa.string()), ("media_ref", _pa.string())]
-    )
-    _write_oracle_parquet(rows, schema, f"{_MATERIALIZE_DIR}/extract_oracle.parquet")
+    _write_flat_golden(golden, f"{_MATERIALIZE_DIR}/extract_oracle.parquet")
 
     docs = synth.synth_docs_df(spark, _EXTRACT_N_DOCS, seed=_EXTRACT_SEED,
                                skew_frac=_EXTRACT_SKEW)
-    return extract(docs).select(
-        "doc_id", F.explode("spans").alias("span")
-    ).select(
-        "doc_id",
-        F.col("span.order").alias("order"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-    )
+    return _flat_spans(extract(docs))
 
 
 SQL_EXTRACT_PIPELINE = f"""
@@ -1541,8 +1547,6 @@ def q_wire_formats(spark: SparkSession, sf: str) -> DataFrame:
     (functions/png.py) feeds the golden path byte-identically — the
     reference accepts these subformats through cv2.imread silently
     (OCR/src/detect.py:122-128); this engine proves it."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
     from ..schema import DOCS
     from .pipeline import extract
@@ -1553,27 +1557,10 @@ def q_wire_formats(spark: SparkSession, sf: str) -> DataFrame:
             if s["media_ref"]:
                 s["media_ref"] = "media://i7/" + s["media_ref"][len("media://"):]
     golden = oracle.extract_corpus(docs_py)
-    rows = [
-        {"doc_id": d, "order": t[3], "kind": t[0], "text": t[1], "media_ref": t[2]}
-        for d, seq in golden.items()
-        for t in seq
-    ]
-    schema = _pa.schema(
-        [("doc_id", _pa.string()), ("order", _pa.int32()), ("kind", _pa.string()),
-         ("text", _pa.string()), ("media_ref", _pa.string())]
-    )
-    _write_oracle_parquet(rows, schema, f"{_MATERIALIZE_DIR}/i7_oracle.parquet")
+    _write_flat_golden(golden, f"{_MATERIALIZE_DIR}/i7_oracle.parquet")
 
     docs = spark.createDataFrame(docs_py, schema=DOCS)
-    return extract(docs).select(
-        "doc_id", F.explode("spans").alias("span")
-    ).select(
-        "doc_id",
-        F.col("span.order").alias("order"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-    )
+    return _flat_spans(extract(docs))
 
 
 SQL_WIRE_FORMATS = f"""
@@ -1590,8 +1577,6 @@ def q_corpus_source(spark: SparkSession, sf: str) -> DataFrame:
     driver-side generator row for row (the source layer must be a pure
     re-partitioning of the corpus function, reference batch walk at
     OCR/src/batch.py)."""
-    import pyarrow as _pa
-
     from .. import synth
     from ..sources.corpus_source import MediaCorpusDataSource
 
@@ -1633,8 +1618,6 @@ def q_greedy_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """W1-W3 greedy dedup of media detections vs the oracle's
     independent greedy loop (value-hash verified via the materialized
     oracle rows; the loop itself stays non-SQL)."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
     from ..operators.mediapath import media_detections
     from .pipeline import explode_spans
@@ -1851,8 +1834,6 @@ def q_color_route(spark: SparkSession, sf: str) -> DataFrame:
     per-pixel band counting + rule mirrors, oracle.color_route_rows) —
     a genuine cross-implementation check of the routing stage, not a
     self-materialized one (ADVICE r3)."""
-    import pyarrow as _pa
-
     from ..operators.colormask import color_route_features
     from .pipeline import explode_spans
 
@@ -1920,22 +1901,17 @@ def q_color_coverage(spark: SparkSession, sf: str) -> DataFrame:
     (per-pixel band loops + set-based morphology,
     oracle.color_coverage_rows). Per-row coverages are rounded to 6 dp
     and summed in DECIMAL so the mean is exact and order-independent."""
-    import pyarrow as _pa
-
     from .. import synth
-    from ..operators.colormask import color_coverage_features
+    from ..operators.colormask import COLOR_COVERAGE_ARROW, color_coverage_features
+    from ..operators.mediapath import map_payloads
     from .pipeline import explode_spans
 
     rows = []
     for _, _, ref in _rgb_spans():
         if ref.startswith("media://rgb/"):
             rows.extend(_color_coverage_rows_cached(ref))
-    schema = _pa.schema(
-        [("ref", _pa.string()), ("color", _pa.string()),
-         ("coverage", _pa.float64()), ("n_pixels", _pa.int64())]
-    )
     _write_oracle_parquet(
-        rows, schema, f"{_MATERIALIZE_DIR}/color_coverage_oracle.parquet"
+        rows, COLOR_COVERAGE_ARROW, f"{_MATERIALIZE_DIR}/color_coverage_oracle.parquet"
     )
 
     docs = synth.synth_docs_df(spark, 300, seed=_EXTRACT_SEED,
@@ -1945,16 +1921,11 @@ def q_color_coverage(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("media_ref").startswith("media://rgb/"))
         .select(F.col("media_ref").alias("ref"))
     )
-
-    def attach_payload(batches):
-        from ..synth import media_payload
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [media_payload(r) for r in pdf["ref"]]
-            yield pdf
-
-    payloads = refs.mapInPandas(attach_payload, "ref string, payload binary")
+    payloads = map_payloads(
+        refs,
+        lambda ref: [{"ref": ref, "payload": synth.media_payload(ref)}],
+        _pa.schema([("ref", _pa.string()), ("payload", _pa.binary())]),
+    )
     cc = color_coverage_features(payloads)
     cov6 = F.round("coverage", 6).cast("decimal(12,6)")
     return cc.groupBy("color").agg(
@@ -2050,8 +2021,6 @@ def _eval_fixture(spark: SparkSession):
 
 
 def _write_oracle_matches(oracle_matches: list[dict]) -> None:
-    import pyarrow as _pa
-
     schema = _pa.schema(
         [("doc_id", _pa.string()), ("offset", _pa.int32()),
          ("category", _pa.string()), ("outcome", _pa.string()),
@@ -2074,8 +2043,6 @@ def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
     flat) verify against the INDEPENDENT oracle's golden span sequences
     for the same corpus — upgrading streaming from unit-only to the
     full value-hash gate."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
     from ..streaming.stream import stream_extract
 
@@ -2083,16 +2050,7 @@ def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
         synth.synth_docs_pylist(_STREAM_N_DOCS, seed=_STREAM_SEED,
                                 skew_frac=_EXTRACT_SKEW)
     )
-    rows = [
-        {"doc_id": d, "order": t[3], "kind": t[0], "text": t[1], "media_ref": t[2]}
-        for d, seq in golden.items()
-        for t in seq
-    ]
-    schema = _pa.schema(
-        [("doc_id", _pa.string()), ("order", _pa.int32()), ("kind", _pa.string()),
-         ("text", _pa.string()), ("media_ref", _pa.string())]
-    )
-    _write_oracle_parquet(rows, schema, f"{_MATERIALIZE_DIR}/stream_oracle.parquet")
+    _write_flat_golden(golden, f"{_MATERIALIZE_DIR}/stream_oracle.parquet")
 
     in_path = f"{_MATERIALIZE_DIR}/stream_in_parquet"
     out_path = f"{_MATERIALIZE_DIR}/stream_out_parquet"
@@ -2105,17 +2063,7 @@ def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
     ).parquet(in_path)
     q = stream_extract(spark, in_path, out_path, ck_path, trigger_once=True)
     q.awaitTermination()
-    return (
-        spark.read.parquet(out_path)
-        .select("doc_id", F.explode("spans").alias("span"))
-        .select(
-            "doc_id",
-            F.col("span.order").alias("order"),
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-        )
-    )
+    return _flat_spans(spark.read.parquet(out_path))
 
 
 SQL_STREAM_EXTRACT = f"""
@@ -2355,13 +2303,7 @@ def q_json_sink(spark: SparkSession, sf: str) -> DataFrame:
     # leaves behind, so no coalesce is needed (or wanted — a
     # single-task write is not the pattern to exemplify)
     write_detailed_json(ex, f"{_MATERIALIZE_DIR}/detailed_json")
-    return ex.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id",
-        F.col("span.order").alias("order"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-    )
+    return _flat_spans(ex)
 
 
 SQL_JSON_SINK = f"""
@@ -2382,8 +2324,6 @@ def q_stats_block(spark: SparkSession, sf: str) -> DataFrame:
     path + its own per-payload dedup + text/sentinel bookkeeping) and
     DuckDB aggregates those. Cross-verifies per-doc name/number/text
     counts and the rounded mean confidence, empty docs included."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
     from ..operators.mediapath import span_detections
     from ..operators.sinks import statistics_block
@@ -2441,8 +2381,6 @@ def q_nms_suppress(spark: SparkSession, sf: str) -> DataFrame:
     loop (oracle.nms_rows)."""
     import hashlib
 
-    import pyarrow as _pa
-
     from .. import oracle
     from ..operators.nms import nms_boxes
 
@@ -2489,24 +2427,16 @@ _AUDIO_REFS = [f"media://wav/{i:04d}" for i in range(48)]
 
 
 def q_audio_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal audio family: mapInPandas audio_features (numpy over
-    real pure-Python WAV decode) LIVE on the Spark side vs the oracle's
+    """Multimodal audio family: the audio_features Arrow stage (numpy
+    over real pure-Python WAV decode) LIVE on the Spark side vs the oracle's
     plain-Python loop mirror (oracle.audio_feature_rows) — bitwise
     comparable without rounding because every aggregate is a sum of
     integer-valued floats (see the mirror's docstring)."""
-    import pyarrow as _pa
-
     from .. import oracle, synth
-    from ..operators.multimodal import audio_features
+    from ..operators.multimodal import AUDIO_FEATURES_ARROW, audio_features
 
-    schema = _pa.schema(
-        [("ref", _pa.string()), ("n_frames", _pa.int32()),
-         ("sample_rate", _pa.int32()), ("rms", _pa.float64()),
-         ("mean_amplitude", _pa.float64()),
-         ("zero_crossing_rate", _pa.float64())]
-    )
     _write_oracle_parquet(
-        oracle.audio_feature_rows(_AUDIO_REFS), schema,
+        oracle.audio_feature_rows(_AUDIO_REFS), AUDIO_FEATURES_ARROW,
         f"{_MATERIALIZE_DIR}/audio_oracle.parquet",
     )
     df = spark.createDataFrame(

@@ -29,8 +29,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.pipeline import extract
+from ..schema import CHECKPOINT
+
+# the lineage row a commit writes: every CHECKPOINT column except the
+# last, committed_at, which Spark stamps at write time
+LINEAGE = T.StructType(CHECKPOINT.fields[:-1])
 
 
 class SimulatedFailure(RuntimeError):
@@ -169,19 +175,9 @@ def run_extraction(
             }
             for b in group
         ]
-        from ..schema import CHECKPOINT
-
-        lineage_df = (
-            spark.createDataFrame(
-                lineage,
-                schema="run_id string, partition_id int, doc_id_min string, "
-                "doc_id_max string, n_docs long, n_spans long, n_regions long, "
-                "n_output_rows long, n_tiles long, n_tiles_skipped long, "
-                "wall_ms long, attempt int",
-            )
-            .withColumn("committed_at", F.current_timestamp())
-            .select([f.name for f in CHECKPOINT.fields])
-        )
+        lineage_df = spark.createDataFrame(
+            lineage, schema=LINEAGE
+        ).withColumn("committed_at", F.current_timestamp())
         lineage_df.write.mode("append").parquet(checkpoint_path)
         committed_ids.update(group)
         commits_done += 1

@@ -1,4 +1,4 @@
-"""Bounded output chunks (SURVEY.md §7.4 hard part 3): every per-payload
+"""Bounded output chunks (SURVEY.md §7.4 hard part 3): every per-item
 Arrow stage yields batches of at most mediapath.OUTPUT_CHUNK_ROWS rows,
 buffered across input batches, and chunking never changes the rows.
 
@@ -14,8 +14,14 @@ import pytest
 from cadastral_map_ocr_system_spark import synth
 from cadastral_map_ocr_system_spark.operators import mediapath as mp
 from cadastral_map_ocr_system_spark.operators.colormask import (
+    COLOR_COVERAGE_ARROW,
     COLOR_ROUTE_ARROW,
+    color_coverage_rows,
     color_route_rows,
+)
+from cadastral_map_ocr_system_spark.operators.multimodal import (
+    FRAME_FEATURES_ARROW,
+    frame_sample_rows,
 )
 from cadastral_map_ocr_system_spark.operators.templatematch import (
     TEMPLATE_MATCH_ARROW,
@@ -53,9 +59,15 @@ def _batches(rows: list[dict], schema: pa.Schema) -> list[pa.RecordBatch]:
     )
 
 
-def _key_batches() -> list[pa.RecordBatch]:
-    keys = [{"doc_id": d, "offset": o, "media_ref": r} for d, o, r in MEDIA_KEYS]
-    return _batches(keys, pa.schema([SPANS_ARROW.field(c) for c in keys[0]]))
+# per-item stage inputs: (rows, schema) whose columns are fn's arguments
+KEYS = (
+    [{"doc_id": d, "offset": o, "media_ref": r} for d, o, r in MEDIA_KEYS],
+    pa.schema([SPANS_ARROW.field(c) for c in ("doc_id", "offset", "media_ref")]),
+)
+PAYLOADS = (
+    [{"ref": r, "payload": synth.media_payload(r)} for _, _, r in MEDIA_KEYS],
+    pa.schema([("ref", pa.string()), ("payload", pa.binary())]),
+)
 
 
 def _n_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
@@ -68,13 +80,16 @@ def _n_rows(doc_id: str, offset: int, media_ref: str) -> list[dict]:
 
 
 STAGES = {
-    "helper": (_n_rows, pa.schema([mp.LINE_ARROW.field(i) for i in range(4)])),
-    "line": (mp.line_rows, mp.LINE_ARROW),
-    "color_route": (color_route_rows, COLOR_ROUTE_ARROW),
+    "helper": (_n_rows, pa.schema([mp.LINE_ARROW.field(i) for i in range(4)]), KEYS),
+    "line": (mp.line_rows, mp.LINE_ARROW, KEYS),
+    "color_route": (color_route_rows, COLOR_ROUTE_ARROW, KEYS),
     "template_match": (
         lambda d, o, r: template_match_rows(d, o, r, TEMPLATES, {}),
         TEMPLATE_MATCH_ARROW,
+        KEYS,
     ),
+    "frame_sample": (frame_sample_rows, FRAME_FEATURES_ARROW, PAYLOADS),
+    "color_coverage": (color_coverage_rows, COLOR_COVERAGE_ARROW, PAYLOADS),
 }
 
 
@@ -87,8 +102,8 @@ def _check_bounded(out: list[pa.RecordBatch], schema: pa.Schema) -> list[dict]:
 
 @pytest.mark.parametrize("stage", sorted(STAGES))
 def test_payload_stage_chunks_are_bounded_and_lossless(stage, monkeypatch):
-    fn, schema = STAGES[stage]
-    per_payload = [fn(*k) for k in MEDIA_KEYS]
+    fn, schema, (items, item_schema) = STAGES[stage]
+    per_payload = [fn(*item.values()) for item in items]
     # the fixture exercises the bound: one payload alone overflows it
     assert max(len(rows) for rows in per_payload) > BOUND
     unchunked = pa.Table.from_pylist(
@@ -96,7 +111,7 @@ def test_payload_stage_chunks_are_bounded_and_lossless(stage, monkeypatch):
     ).to_pylist()
 
     monkeypatch.setattr(mp, "OUTPUT_CHUNK_ROWS", BOUND)
-    out = list(mp.payload_batches(iter(_key_batches()), fn, schema))
+    out = list(mp.payload_batches(iter(_batches(items, item_schema)), fn, schema))
     assert _check_bounded(out, schema) == unchunked
 
 

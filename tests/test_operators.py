@@ -44,6 +44,33 @@ def test_multimodal_metadata_and_frames(spark):
     assert all(f["mean_intensity"] > 0 for f in frames)
 
 
+def test_ported_stage_schemas_match_their_ddl(spark):
+    """Each per-item stage declares its output once, as a pa.Schema; the
+    Spark schema derived from it is the one its DDL string used to give."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from cadastral_map_ocr_system_spark.operators.colormask import (
+        color_coverage_features,
+    )
+
+    df = spark.createDataFrame([], "ref string, media_type string, payload binary")
+    expected = {
+        multimodal.media_metadata: "ref string, media_type string, n_bytes long, "
+        "sha256 string, width int, height int, n_channels int, n_frames int, "
+        "sample_rate int",
+        multimodal.frame_sample_features: "ref string, frame_idx int, "
+        "mean_intensity double, std_intensity double",
+        multimodal.texture_features: "ref string, mean_intensity double, "
+        "std_intensity double, gradient_mean double, entropy double",
+        multimodal.audio_features: "ref string, n_frames int, sample_rate int, "
+        "rms double, mean_amplitude double, zero_crossing_rate double",
+        color_coverage_features: "ref string, color string, coverage double, "
+        "n_pixels long",
+    }
+    for stage, ddl in expected.items():
+        assert stage(df).schema == _parse_datatype_string(ddl), stage.__name__
+
+
 def test_exact_dedup_survivors(spark):
     df = spark.createDataFrame(
         [(1, "same  text"), (2, "same text"), (3, "other words")],

@@ -254,6 +254,47 @@ def test_media_metadata_on_real_png(spark):
     assert tex["gradient_mean"] > 0 and tex["entropy"] > 0
 
 
+def test_corrupt_png_yields_null_row_not_task_failure(spark):
+    """Per-item codec-error contract for images, as for audio in
+    test_wav: a payload with PNG magic and a corrupt IDAT stream gives
+    a null-feature row in the 1:1 stages (media_metadata keeps its
+    byte-level fields) and no rows in the 1->N stages — never a
+    ValueError that fails the whole task."""
+    from cadastral_map_ocr_system_spark.operators.colormask import (
+        color_coverage_features,
+    )
+    from cadastral_map_ocr_system_spark.operators.multimodal import (
+        frame_sample_features,
+        media_metadata,
+        texture_features,
+    )
+
+    good = media_payload("media://rgb/doc-000000000003/0")
+    assert is_png(good)
+    corrupt = (
+        PNG_SIGNATURE
+        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 1, 8, 0, 0, 0, 0))
+        + _chunk(b"IDAT", b"\x78\x9cnot-deflate")
+        + _chunk(b"IEND", b"")
+    )
+    df = spark.createDataFrame(
+        [("good", "image", bytearray(good)), ("bad", "image", bytearray(corrupt))],
+        "ref string, media_type string, payload binary",
+    )
+
+    meta = {r["ref"]: r for r in media_metadata(df).collect()}
+    tex = {r["ref"]: r for r in texture_features(df).collect()}
+    assert set(meta) == set(tex) == {"good", "bad"}  # no row lost to a crash
+    assert meta["good"]["width"] > 0 and tex["good"]["entropy"] > 0
+    assert meta["bad"]["n_bytes"] == len(corrupt)
+    assert meta["bad"]["sha256"] is not None
+    assert meta["bad"]["width"] is None and meta["bad"]["n_channels"] is None
+    assert tex["bad"]["mean_intensity"] is None and tex["bad"]["entropy"] is None
+    for one_to_n in (frame_sample_features, color_coverage_features):
+        refs = {r["ref"] for r in one_to_n(df).collect()}
+        assert refs == {"good"}
+
+
 def test_truncated_chunk_raises_codec_error():
     """A chunk whose declared length runs past the payload end must be a
     ValueError (codec error), never a struct.error from a short slice."""

@@ -215,3 +215,19 @@ def test_tile_metrics_dedup_on_retries(tmp_path):
     assert read_tile_metrics(str(tmp_path / "missing")) == {
         "n_tiles": 0, "n_tiles_skipped": 0, "max_attempt": 0,
     }
+
+
+def test_tile_metrics_carry_every_counter(spark, tmp_path):
+    """Every counter of a task's stats dict leaves the task, including
+    n_oversized_fallback, and reads back exactly."""
+    from cadastral_map_ocr_system_spark.operators.mediapath import (
+        read_tile_metrics,
+        write_tile_metrics,
+    )
+
+    d = str(tmp_path / "tiles")
+    stats = {"n_tiles": 9, "n_tiles_skipped": 4, "n_oversized_fallback": 1}
+    spark.sparkContext.parallelize([0], 1).foreach(
+        lambda _: write_tile_metrics(d, stats)
+    )
+    assert read_tile_metrics(d) == {**stats, "max_attempt": 0}

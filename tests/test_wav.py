@@ -95,7 +95,7 @@ def test_audio_metadata_and_features(spark):
 def test_corrupt_wav_yields_null_row_not_task_failure(spark):
     """Per-item codec-error contract (ADVICE r4): a payload that passes
     is_wav but is truncated/non-PCM must surface as a null-metadata /
-    null-feature ROW — never a ValueError out of the mapInPandas body
+    null-feature ROW — never a ValueError out of the stage body
     that fails the whole task."""
     from cadastral_map_ocr_system_spark.operators.multimodal import (
         audio_features,

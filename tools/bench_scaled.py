@@ -15,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -49,6 +48,7 @@ TRIALS = max(int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3")), 1)
 
 
 def main() -> None:
+    from bench_extra import min_noop_seconds
     from cadastral_map_ocr_system_spark.plans.queries import REGISTRY
     from cadastral_map_ocr_system_spark.session import get_spark
 
@@ -57,19 +57,11 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     spark = get_spark(app_name="bench_scaled", master=f"local[{cpus}]")
 
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
     def run(sf_dir: str) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in SCALED_QUERIES:
             fn, _ = REGISTRY[name]
-            best = float("inf")
-            for _ in range(TRIALS):
-                t0 = time.perf_counter()
-                materialize(fn(spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            out[name] = round(best, 3)
+            out[name] = round(min_noop_seconds(lambda: fn(spark, sf_dir), TRIALS), 3)
         return out
 
     # warmup + the sf0.1 reference in the SAME process/session so the
