@@ -25,6 +25,7 @@ OCR/src/detect.py:122-128).
 from __future__ import annotations
 
 import struct
+import sys
 import zlib
 
 import numpy as np
@@ -81,11 +82,8 @@ def encode_png_adam7(arr: np.ndarray) -> bytes:
     h, w = arr.shape[:2]
     a3 = arr.reshape(h, w, -1)
     raw = bytearray()
-    for xs, ys, xstep, ystep in _ADAM7:
-        sub = a3[ys::ystep, xs::xstep]
-        if sub.shape[0] == 0 or sub.shape[1] == 0:
-            continue
-        for row in sub:
+    for xs, ys, xstep, ystep, _, _ in _adam7_passes(w, h):
+        for row in a3[ys::ystep, xs::xstep]:
             raw += b"\x00" + row.tobytes()
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 1)
     return (
@@ -225,6 +223,16 @@ _ADAM7 = (
 )
 
 
+def _adam7_passes(width: int, height: int):
+    """(x_start, y_start, x_step, y_step, w, h) of every non-empty
+    Adam7 pass; empty passes are wholly absent from the stream."""
+    for xs, ys, xstep, ystep in _ADAM7:
+        pw = (width - xs + xstep - 1) // xstep
+        ph = (height - ys + ystep - 1) // ystep
+        if pw > 0 and ph > 0:
+            yield xs, ys, xstep, ystep, pw, ph
+
+
 def _reconstruct(raw_arr: np.ndarray, stride: int, bpp: int) -> np.ndarray:
     """Undo scanline filtering. raw_arr: (h, stride+1) uint8 with the
     filter byte in column 0; bpp = filter step in BYTES (max(1,
@@ -355,6 +363,8 @@ def decode_png(payload: bytes) -> np.ndarray:
             raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
         pos += 12 + length
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"bad PNG IHDR length {length}")
             width, height, bit_depth, color_type, _, _, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
@@ -383,10 +393,28 @@ def decode_png(payload: bytes) -> np.ndarray:
     ch = _CHANNELS[color_type]
     bits_pp = bit_depth * ch
     bpp = max(1, bits_pp // 8)
+
+    def raw_size(w: int, h: int) -> int:
+        return ((w * bits_pp + 7) // 8 + 1) * h
+
+    if interlace == 0:
+        expected = raw_size(width, height)
+    else:
+        expected = sum(
+            raw_size(pw, ph) for _, _, _, _, pw, ph in _adam7_passes(width, height)
+        )
+    # inflate at most one byte past the size IHDR implies: a small
+    # payload declaring a tiny image must not expand a zlib bomb first
+    # (sys.maxsize: a forged IHDR can imply more than a C ssize_t)
+    inflater = zlib.decompressobj()
     try:
-        raw = zlib.decompress(bytes(idat))
+        raw = inflater.decompress(idat, min(expected + 1, sys.maxsize))
     except zlib.error as e:  # CRC-valid chunks can still carry a bad stream
         raise ValueError(f"corrupt PNG IDAT stream: {e}") from None
+    if len(raw) <= expected and not inflater.eof:
+        raise ValueError("corrupt PNG IDAT stream: truncated")
+    if len(raw) != expected:
+        raise ValueError("PNG IDAT length mismatch")
 
     # tRNS transparency (spec §11.3.2): a single transparent sample
     # value for gray/RGB, per-entry alphas for palette; composited over
@@ -412,8 +440,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     def sub_image(w: int, h: int, offset: int):
         stride = (w * bits_pp + 7) // 8
         end = offset + (stride + 1) * h
-        if end > len(raw):
-            raise ValueError("PNG IDAT length mismatch")
         arr = np.frombuffer(raw, dtype=np.uint8, count=(stride + 1) * h,
                             offset=offset).reshape(h, stride + 1)
         recon = _reconstruct(arr, stride, bpp)
@@ -422,26 +448,18 @@ def decode_png(payload: bytes) -> np.ndarray:
         return sub, m, end
 
     if interlace == 0:
-        samples, mask, end = sub_image(width, height, 0)
-        if end != len(raw):
-            raise ValueError("PNG IDAT length mismatch")
+        samples, mask, _ = sub_image(width, height, 0)
     else:
         # Adam7: seven independently filtered sub-images, scattered back
-        # onto the full sample grid; empty passes are wholly absent
+        # onto the full sample grid
         samples = np.zeros((height, width, ch), dtype=np.uint8)
         mask = np.zeros((height, width), dtype=bool) if tvals else None
         offset = 0
-        for xs, ys, xstep, ystep in _ADAM7:
-            pw = (width - xs + xstep - 1) // xstep
-            ph = (height - ys + ystep - 1) // ystep
-            if pw <= 0 or ph <= 0:
-                continue
+        for xs, ys, xstep, ystep, pw, ph in _adam7_passes(width, height):
             sub, m, offset = sub_image(pw, ph, offset)
             samples[ys::ystep, xs::xstep] = sub
             if m is not None:
                 mask[ys::ystep, xs::xstep] = m
-        if offset != len(raw):
-            raise ValueError("PNG IDAT length mismatch")
 
     if color_type == 0:
         gray = np.ascontiguousarray(samples[:, :, 0])

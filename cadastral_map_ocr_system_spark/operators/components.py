@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .corpus_dedup import DEFAULT_MAX_BUCKET, lsh_jaccard_pairs
+from . import corpus_dedup
 from .textstats import fingerprints
 
 
@@ -164,14 +164,46 @@ def connected_components(
     return members.union(centers).distinct()
 
 
-def dedup_clusters(
-    df: DataFrame,
-    k: int = 3,
-    threshold: float = 0.05,
-    n_hashes: int = 16,
-    bands: int = 4,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
+def _cluster_stages(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(reps, doc_rep, edges): the stages of the duplicate-cluster
+    pipeline that `dedup_clusters` resolves and `build_dedup_index`
+    persists.
+
+      reps     (fingerprint, rep, text) — one row per distinct
+               content, rep = min doc_id of its exact-duplicate group
+      doc_rep  (doc_id, rep) for every input document
+      edges    (doc_a, doc_b, jaccard) — LSH-gated exact Jaccard >=
+               THRESHOLD between reps (capped buckets, star fallback)
+    """
+    reps = corpus_dedup._exact_reps(df)
+    doc_rep = fingerprints(df).join(
+        reps.select("fingerprint", "rep"), "fingerprint"
+    ).select("doc_id", "rep")
+    edges = corpus_dedup.lsh_jaccard_pairs(
+        reps.select(F.col("rep").alias("doc_id"), "text"),
+        k=corpus_dedup.K,
+        threshold=corpus_dedup.THRESHOLD,
+        n_hashes=corpus_dedup.N_HASHES,
+        bands=corpus_dedup.BANDS,
+        max_bucket=corpus_dedup.DEFAULT_MAX_BUCKET,
+        pre_exact_dedup=False,
+    )
+    return reps, doc_rep, edges
+
+
+def _rejoin_clusters(doc_rep: DataFrame, edges: DataFrame) -> DataFrame:
+    """(doc_id, cluster): every doc of `doc_rep` (doc_id, rep) labeled
+    with the component of its rep in the graph of `edges` (doc_a,
+    doc_b rows, no duplicates); a rep in no edge is its own cluster
+    (singletons never appear in the edge graph)."""
+    comp = connected_components(edges, assume_distinct=True)
+    return doc_rep.join(comp, doc_rep.rep == comp.node, "left").select(
+        "doc_id",
+        F.coalesce(F.col("component"), F.col("rep")).alias("cluster"),
+    )
+
+
+def dedup_clusters(df: DataFrame) -> DataFrame:
     """(doc_id, cluster) for EVERY input document: the end-to-end
     duplicate-cluster map, cluster = min doc_id of the full duplicate
     class (exact and near combined).
@@ -191,51 +223,17 @@ def dedup_clusters(
     the cap changes candidate PAIR sets but never the CLUSTERS, which
     is why capping is safe for dedup (module docstring there).
     """
-    # ONE fingerprint aggregation serves both consumers: the survivor
-    # docs (rep, text) for the near-dup detector AND the rep map for
-    # the final join project from the same groupBy(fingerprint)
-    # MIN(struct) — the old shape ran a second corpus-wide
-    # groupBy(fingerprint) just to get (fingerprint, rep), i.e. one
-    # more full exchange of fingerprint rows (guide §2.4). Exchange
-    # reuse shares the aggregation between the two branches; results
-    # identical (exceptAll == 0; oracle parity green).
-    from .corpus_dedup import TOKEN_SPLIT_RE
-
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE, " ")
-    surv_fp = (
-        df.groupBy(F.md5(norm).alias("fingerprint"))
-        .agg(F.min(F.struct("doc_id", "text")).alias("s"))
-        .select(
-            "fingerprint",
-            F.col("s.doc_id").alias("rep"),
-            F.col("s.text").alias("text"),
-        )
-    )
-    survivors = surv_fp.select(F.col("rep").alias("doc_id"), "text")
-    fpd = fingerprints(df)
-    doc_rep = fpd.join(surv_fp.select("fingerprint", "rep"), "fingerprint").select(
-        "doc_id", "rep"
-    )
-    edges = lsh_jaccard_pairs(
-        survivors,
-        k=k,
-        threshold=threshold,
-        n_hashes=n_hashes,
-        bands=bands,
-        max_bucket=max_bucket,
-        pre_exact_dedup=False,
-    )
-    comp = connected_components(edges, assume_distinct=True)
-    return (
-        doc_rep.join(comp, doc_rep.rep == comp.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("rep")).alias("cluster"),
-        )
-    )
+    # one fingerprint aggregation (reps) feeds both the survivor texts
+    # of the edge branch and the rep map of the rejoin, yet it runs
+    # twice per call: the edge branch runs inside connected_components'
+    # lazily checkpointed jobs, so the final job's executed plan holds
+    # no ReusedExchange and aggregates again for the rep map (checked
+    # at sf0.01, local[3])
+    _, doc_rep, edges = _cluster_stages(df)
+    return _rejoin_clusters(doc_rep, edges)
 
 
-def dedup_survivors(df: DataFrame, **kwargs) -> DataFrame:
+def dedup_survivors(df: DataFrame) -> DataFrame:
     """One row per duplicate cluster: the surviving (min doc_id)
     document and the cluster size. Min-doc_id keep-first is this
     engine's own deterministic policy; the reference sorts candidates
@@ -244,7 +242,7 @@ def dedup_survivors(df: DataFrame, **kwargs) -> DataFrame:
     member of each fuzzy-duplicate group, not the first seen — corpus
     documents carry no confidence, so min doc_id is the deterministic
     stand-in (ADVICE r5)."""
-    clusters = dedup_clusters(df, **kwargs)
+    clusters = dedup_clusters(df)
     return clusters.groupBy(F.col("cluster").alias("doc_id")).agg(
         F.count("*").cast("long").alias("n_docs")
     )

@@ -5,13 +5,21 @@ Generalizes the reference's within-payload greedy dedup
 to across-document dedup over billions of rows:
 
   exact          hash-groupBy on a normalized-content fingerprint
-  n-gram Jaccard shingle self-join + set arithmetic (exact, quadratic
-                 in shared-shingle pairs — small/verification scale)
-  MinHash + LSH  shingle -> k minhashes -> b bands -> bucket equi-join
+  MinHash + LSH  shingle -> k minhashes -> b bands -> bucket groupBy
                  (the 100 TB-scale path: candidate pairs only, never
-                 all-pairs)
+                 all-pairs), then exact word k-gram Jaccard over the
+                 candidate pairs
   SimHash        64-bit sign-of-weighted-bit-sums fingerprint with
                  Hamming-radius pairing
+
+Each rule has one implementation here, which the duplicate-cluster
+pipeline (components.dedup_clusters) and the persisted index
+(dedup_index) compose: the exact-rep aggregate (`_exact_reps`), the
+band postings (`lsh_postings`) and their buckets (`lsh_buckets`), the
+capped in-bucket pair expansion (`_bucket_pairs`) and the exact
+Jaccard verify (`_jaccard_over_pair_sets`). The near-dup parameters
+are the module constants K, N_HASHES, BANDS, THRESHOLD and
+DEFAULT_MAX_BUCKET.
 
 All hashing is md5-based so any engine reproduces results bit-for-bit
 (cross-engine oracle checks; at cluster scale xxhash64 is a drop-in
@@ -52,7 +60,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import TOKEN_SPLIT_RE, fingerprints
+from .textstats import TOKEN_SPLIT_RE, fingerprint, fingerprints
 
 
 #: default in-bucket cap for the LSH / SimHash candidate generators.
@@ -60,6 +68,16 @@ from .textstats import TOKEN_SPLIT_RE, fingerprints
 #: at sf0.1) yet small enough that a degenerate boilerplate bucket can
 #: never expand quadratically inside one task.
 DEFAULT_MAX_BUCKET = 64
+
+#: the near-dup rule of the duplicate-cluster pipeline and the dedup
+#: index: word K-gram shingles, N_HASHES minhashes in BANDS bands, exact
+#: Jaccard >= THRESHOLD. One set of values, so an index and every batch
+#: probed against it band alike. components and dedup_index read them
+#: at call time; the defaults of the lsh_* functions bind at import.
+K = 3
+N_HASHES = 16
+BANDS = 4
+THRESHOLD = 0.05
 
 
 def _pairs_expr(ids: str) -> str:
@@ -83,10 +101,6 @@ def _star_expr(ids: str) -> str:
         f"transform(slice({ids}, 2, size({ids})), "
         f"y -> named_struct('a', element_at({ids}, 1), 'b', y))"
     )
-
-
-def _pairs_in_bucket(ids: str) -> Column:
-    return F.expr(_pairs_expr(ids))
 
 
 def _capped_pairs(ids: str, max_bucket: int) -> Column:
@@ -140,10 +154,10 @@ def exact_dedup_survivors(df: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_survivor_docs(df: DataFrame) -> DataFrame:
-    """(doc_id, text) of the min-doc_id representative of every
-    exact-duplicate group — the mandatory stage-0 of the near-dup
-    detectors below.
+def _exact_reps(df: DataFrame) -> DataFrame:
+    """(fingerprint, rep, text): one row per distinct content, with the
+    min-doc_id representative of its exact-duplicate group and that
+    document's text.
 
     Deliberately a groupBy + MIN(struct) rather than the window used by
     `exact_dedup_survivors`: a window has no partial aggregation, so a
@@ -152,12 +166,22 @@ def exact_dedup_survivor_docs(df: DataFrame) -> DataFrame:
     map-side — only one row per (input partition, fingerprint) is ever
     shuffled. Struct MIN orders by leading field, so this is exactly
     min-by-doc_id (doc_id is unique)."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE, " ")
     return (
-        df.groupBy(F.md5(norm).alias("fingerprint"))
+        df.groupBy(fingerprint().alias("fingerprint"))
         .agg(F.min(F.struct("doc_id", "text")).alias("s"))
-        .select(F.col("s.doc_id").alias("doc_id"), F.col("s.text").alias("text"))
+        .select(
+            "fingerprint",
+            F.col("s.doc_id").alias("rep"),
+            F.col("s.text").alias("text"),
+        )
     )
+
+
+def exact_dedup_survivor_docs(df: DataFrame) -> DataFrame:
+    """(doc_id, text) of the min-doc_id representative of every
+    exact-duplicate group — the mandatory stage-0 of the near-dup
+    detectors below."""
+    return _exact_reps(df).select(F.col("rep").alias("doc_id"), "text")
 
 
 # ----------------------------------------------------------- shingles
@@ -205,81 +229,25 @@ def shingle_rows(df: DataFrame, k: int = 3) -> DataFrame:
 
 
 # ------------------------------------------------------ n-gram Jaccard
-def _jaccard_over_pairs(
-    pairs: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for given (doc_a, doc_b) pairs from shingle rows."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        pairs.join(a, F.col("doc_a") == F.col("a.doc_id"))
-        .join(
-            b,
-            (F.col("doc_b") == F.col("b.doc_id"))
-            & (F.col("a.shingle") == F.col("b.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, k: int = 3, threshold: float = 0.05
-) -> DataFrame:
-    """Exact Jaccard over word k-gram shingle sets for every pair that
-    shares at least one shingle.
-
-    CONTRACT: quadratic in co-shingled pairs — verification scale ONLY
-    (cross-checking a sample against the LSH path). The corpus-scale
-    entry point is lsh_jaccard_pairs, which computes the same exact
-    Jaccard but only over LSH candidate pairs."""
-    sh = shingle_rows(df, k)
-    pairs = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(_pairs_in_bucket("ids")).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .distinct()
-    )
-    return _jaccard_over_pairs(pairs, sh, threshold)
-
-
 def _jaccard_over_pair_sets(
     pairs: DataFrame, docs: DataFrame, k: int, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard for given (doc_a, doc_b) pairs over per-document
-    shingle SETS (array form): the candidate pair list is tiny by
-    construction (LSH-gated + capped), so the doc table is first cut
-    to candidate members with a broadcast semi-join — shingle arrays
-    are only ever BUILT for docs that appear in a pair — and the pair
-    list is then broadcast against that small set table twice. The
+    """(doc_a, doc_b, jaccard): exact word k-gram Jaccard >= threshold
+    for given (doc_a, doc_b) pairs over per-document shingle SETS
+    (array form) of `docs`. The one Jaccard verify: the LSH path and
+    the incremental index both call it, and both hand it a candidate
+    pair list that is small by construction (LSH-gated + capped), so
+    the pair list is broadcast against the set table twice. The
     corpus-sized text is never shuffled and never self-joined on
     shingle text, and the intersection is one row-local
-    array_intersect instead of a (pair x shingle) explode + groupBy +
-    two size joins. n_common = |intersect| because the sets are
-    distinct per document; pairs with no overlap produce jaccard 0 and
-    are dropped by the n_common >= 1 filter exactly as the old inner
-    equi-join dropped them. (A candidate-members semi-join that builds
+    array_intersect. n_common = |intersect| because the sets are
+    distinct per document; pairs with no overlap are dropped by the
+    n_common >= 1 filter. (A candidate-members semi-join that builds
     shingle arrays only for paired docs was measured SLOWER — the
     members broadcast re-evaluates the whole candidate subtree, which
     AQE's exchange reuse does not fully dedup — so the set table is
-    built over all docs, where the construction is one narrow pass.)"""
+    built over all of `docs`, where the construction is one narrow
+    pass.)"""
     sets_ = shingle_sets(docs, k)
     a = sets_.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
@@ -308,10 +276,10 @@ def _jaccard_over_pair_sets(
 
 def lsh_jaccard_pairs(
     df: DataFrame,
-    k: int = 3,
-    threshold: float = 0.05,
-    n_hashes: int = 16,
-    bands: int = 4,
+    k: int = K,
+    threshold: float = THRESHOLD,
+    n_hashes: int = N_HASHES,
+    bands: int = BANDS,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     pre_exact_dedup: bool = True,
 ) -> DataFrame:
@@ -336,24 +304,8 @@ def lsh_jaccard_pairs(
 
 
 # -------------------------------------------------------- MinHash + LSH
-def minhash_signatures(df: DataFrame, n_hashes: int = 16, k: int = 3) -> DataFrame:
-    """(doc_id, seed, minhash): lexicographic min of md5(seed|shingle)."""
-    sh = shingle_rows(df, k)
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed")
-    return (
-        sh.select("doc_id", "shingle", seeds)
-        .select(
-            "doc_id",
-            "seed",
-            F.md5(F.concat_ws("|", F.col("seed"), F.col("shingle"))).alias("h"),
-        )
-        .groupBy("doc_id", "seed")
-        .agg(F.min("h").alias("minhash"))
-    )
-
-
 def minhash_sig_cols(
-    df: DataFrame, n_hashes: int = 16, k: int = 3
+    df: DataFrame, n_hashes: int = N_HASHES, k: int = K
 ) -> DataFrame:
     """(doc_id, h0..h{n-1}): the fused minhash signature — one
     groupBy(doc_id) with n_hashes MIN aggregates over exploded shingle
@@ -390,8 +342,8 @@ def minhash_sig_cols(
 
 def band_hash_structs(n_hashes: int, bands: int):
     """array<struct<band, band_hash>> over signature columns h0..hN —
-    row-local banding shared by the bucket and posting forms. Built as
-    one SQL string (see minhash_sig_cols on construction cost)."""
+    row-local banding. Built as one SQL string (see minhash_sig_cols on
+    construction cost)."""
     rpb = n_hashes // bands
     entries = ", ".join(
         "named_struct('band', {b}, 'band_hash', md5(concat_ws(',', {cols})))".format(
@@ -402,27 +354,43 @@ def band_hash_structs(n_hashes: int, bands: int):
     return F.expr(f"array({entries})")
 
 
-def lsh_buckets(
-    df: DataFrame, n_hashes: int = 16, bands: int = 4, k: int = 3
+def lsh_postings(
+    df: DataFrame, n_hashes: int = N_HASHES, bands: int = BANDS, k: int = K
 ) -> DataFrame:
-    """(band, band_hash, ids): the banded-LSH bucket frame shared by
-    the candidate generator and the cap report."""
+    """(doc_id, band, band_hash): one banded-LSH posting row per
+    document and band — the form the dedup index stores and probes."""
     sig = minhash_sig_cols(df, n_hashes=n_hashes, k=k)
-    banded = sig.select(
+    return sig.select(
         "doc_id", F.explode(band_hash_structs(n_hashes, bands)).alias("bb")
     ).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
     )
-    return banded.groupBy("band", "band_hash").agg(
+
+
+def lsh_buckets(postings: DataFrame) -> DataFrame:
+    """(band, band_hash, ids): posting rows grouped into buckets, ids
+    sorted — the frame the candidate generators and cap reports read."""
+    return postings.groupBy("band", "band_hash").agg(
         F.array_sort(F.collect_set("doc_id")).alias("ids")
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, max_bucket: int) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b: every in-bucket pair,
+    star pairs for buckets over `max_bucket`."""
+    return (
+        buckets.filter(F.size("ids") >= 2)
+        .select(F.explode(_capped_pairs("ids", max_bucket)).alias("p"))
+        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        .distinct()
     )
 
 
 def lsh_candidate_pairs(
     df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
+    n_hashes: int = N_HASHES,
+    bands: int = BANDS,
+    k: int = K,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     pre_exact_dedup: bool = True,
 ) -> DataFrame:
@@ -447,24 +415,17 @@ def lsh_candidate_pairs(
     instead of the quadratic expansion — audit over-cap buckets with
     `lsh_capped_buckets`, which is empty unless the cap engaged.
 
-    Values are identical to minhash_signatures' (same md5(seed|shingle)
-    minima, same band-hash concatenation), which the DuckDB oracle
-    reproduces independently."""
+    Values are the md5(seed|shingle) minima and band-hash
+    concatenation that the DuckDB oracle reproduces independently."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    buckets = lsh_buckets(docs, n_hashes=n_hashes, bands=bands, k=k)
-    return (
-        buckets.filter(F.size("ids") >= 2)
-        .select(F.explode(_capped_pairs("ids", max_bucket)).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(lsh_buckets(lsh_postings(docs, n_hashes, bands, k)), max_bucket)
 
 
 def lsh_capped_buckets(
     df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
+    n_hashes: int = N_HASHES,
+    bands: int = BANDS,
+    k: int = K,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     pre_exact_dedup: bool = True,
 ) -> DataFrame:
@@ -473,7 +434,7 @@ def lsh_capped_buckets(
     scale so the cap is never silent."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
     return _cap_report(
-        lsh_buckets(docs, n_hashes=n_hashes, bands=bands, k=k), "ids", max_bucket
+        lsh_buckets(lsh_postings(docs, n_hashes, bands, k)), "ids", max_bucket
     )
 
 

@@ -7,10 +7,17 @@ document, OCR/src/detect.py:504-575; a corpus-scale engine cannot).
 The index persists four small-relative-to-corpus tables:
 
   fp_index    (fingerprint, rep)      one row per distinct content
-  band_index  (band, band_hash, doc_id) `bands` rows per survivor —
+  band_index  (doc_id, band, band_hash) BANDS rows per survivor —
               the LSH postings the next batch probes
   edges       (doc_a, doc_b)          Jaccard-verified near-dup edges
   clusters    (doc_id, cluster)       current assignment, every doc
+
+The build persists the frames components.dedup_clusters computes, and
+an increment runs the same corpus_dedup stages on the batch: the
+exact-rep aggregate (probed against fp_index), the band postings and
+their capped bucket pairs, the Jaccard verify and the cluster rejoin,
+all with corpus_dedup's constants (K, N_HASHES, BANDS, THRESHOLD,
+DEFAULT_MAX_BUCKET) — so a batch always bands like its index.
 
 Per increment the engine scans ONLY the new batch (plus a selective
 semi-join fetch of the few old candidate docs' texts for the Jaccard
@@ -21,8 +28,8 @@ of magnitude smaller than the corpus).
 
 Maintenance at scale: increments APPEND to fp_index / band_index /
 edges, so after many batches those directories accumulate small part
-files (never duplicate rows — the anti-join and monotone ingest see
-to that). `compact_dedup_index` is the vacuum: read -> repartition to
+files (never duplicate rows — the fp_index probe and monotone ingest
+see to that). `compact_dedup_index` is the vacuum: read -> repartition to
 right-sized files -> crash-safe directory swap (OPTIMIZE under a real
 Iceberg catalog). Correctness never depends on running it — it only
 bounds the file-listing and task-granularity cost of the next probe.
@@ -49,79 +56,56 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .components import connected_components
+from . import corpus_dedup
+from .components import _cluster_stages, _rejoin_clusters
 from .corpus_dedup import (
-    DEFAULT_MAX_BUCKET,
+    _bucket_pairs,
     _cap_report,
-    _capped_pairs,
-    _jaccard_over_pairs,
-    lsh_jaccard_pairs,
-    shingle_rows,
+    _exact_reps,
+    _jaccard_over_pair_sets,
+    lsh_buckets,
+    lsh_postings,
 )
 from .textstats import fingerprints
 
-_BANDS = 4
-_N_HASHES = 16
-_K = 3
-_THRESHOLD = 0.05
+
+def _postings(docs: DataFrame) -> DataFrame:
+    return lsh_postings(docs, corpus_dedup.N_HASHES, corpus_dedup.BANDS, corpus_dedup.K)
 
 
-def _band_rows(docs: DataFrame, n_hashes: int, bands: int, k: int) -> DataFrame:
-    """(doc_id, band, band_hash): the banded-LSH posting rows for each
-    document — the row-per-band form corpus_dedup.lsh_buckets groups,
-    kept ungrouped here because the index stores postings, not
-    buckets."""
-    from .corpus_dedup import band_hash_structs, minhash_sig_cols
-
-    sig = minhash_sig_cols(docs, n_hashes=n_hashes, k=k)
-    band_structs = band_hash_structs(n_hashes, bands)
-    return sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
+def _probe(spark: SparkSession, index_path: str, new_docs: DataFrame) -> DataFrame:
+    """(fingerprint, rep, text, old_rep): the batch's exact-rep
+    aggregate probed against fp_index. A known fingerprint carries its
+    stored rep as old_rep; where old_rep is null the content is new
+    and its batch rep is a new survivor."""
+    fp_index = spark.read.parquet(f"{index_path}/fp_index")
+    return _exact_reps(new_docs).join(
+        fp_index.select("fingerprint", F.col("rep").alias("old_rep")),
+        "fingerprint",
+        "left",
     )
 
 
-def _doc_reps(docs: DataFrame) -> DataFrame:
-    """(doc_id, fingerprint, rep): every doc joined to its exact-group
-    min-doc_id representative."""
-    fpd = fingerprints(docs)
-    reps = fpd.groupBy("fingerprint").agg(F.min("doc_id").alias("rep"))
-    return fpd.join(reps, "fingerprint").select("doc_id", "fingerprint", "rep")
+def _new_survivors(probed: DataFrame) -> DataFrame:
+    return probed.filter(F.col("old_rep").isNull()).select(
+        F.col("rep").alias("doc_id"), "text"
+    )
 
 
-def build_dedup_index(
-    docs: DataFrame,
-    index_path: str,
-    n_hashes: int = _N_HASHES,
-    bands: int = _BANDS,
-    k: int = _K,
-    threshold: float = _THRESHOLD,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> None:
+def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     """Full build: dedup the corpus from scratch and persist the four
-    index tables. This is the bootstrap (and the re-canonicalization
-    path if the cap caveat in the module docstring is ever hit)."""
-    doc_reps = _doc_reps(docs)
-    fp_index = doc_reps.select("fingerprint", "rep").distinct()
-    survivors = docs.join(
-        doc_reps.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    ).select("doc_id", "text")
-    edges = lsh_jaccard_pairs(
-        survivors, k=k, threshold=threshold, n_hashes=n_hashes, bands=bands,
-        max_bucket=max_bucket, pre_exact_dedup=False,
-    ).select("doc_a", "doc_b")
-    comp = connected_components(edges)
-    clusters = (
-        doc_reps.join(comp, doc_reps.rep == comp.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("rep")).alias("cluster"),
-        )
-    )
-    band_index = _band_rows(survivors, n_hashes, bands, k)
+    index tables — the frames `components.dedup_clusters` computes.
+    This is the bootstrap (and the re-canonicalization path if the cap
+    caveat in the module docstring is ever hit)."""
+    reps, doc_rep, edges = _cluster_stages(docs)
+    edges = edges.select("doc_a", "doc_b")
+    clusters = _rejoin_clusters(doc_rep, edges)
+    band_index = _postings(reps.select(F.col("rep").alias("doc_id"), "text"))
     # edges/clusters must be computed BEFORE overwriting (lazy plans);
     # a fresh build writes to a fresh dir, so plain writes suffice
-    fp_index.write.mode("overwrite").parquet(f"{index_path}/fp_index")
+    reps.select("fingerprint", "rep").write.mode("overwrite").parquet(
+        f"{index_path}/fp_index"
+    )
     band_index.write.mode("overwrite").parquet(f"{index_path}/band_index")
     edges.write.mode("overwrite").parquet(f"{index_path}/edges")
     clusters.write.mode("overwrite").parquet(f"{index_path}/clusters")
@@ -132,11 +116,6 @@ def incremental_dedup(
     index_path: str,
     new_docs: DataFrame,
     old_docs: DataFrame,
-    n_hashes: int = _N_HASHES,
-    bands: int = _BANDS,
-    k: int = _K,
-    threshold: float = _THRESHOLD,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Assign every document of `new_docs` to a duplicate cluster and
     fold the batch into the index; returns the UPDATED full cluster
@@ -153,7 +132,6 @@ def incremental_dedup(
     indexed doc_id (asserted), so stored reps stay min and stored
     edges stay canonically ordered.
     """
-    fp_index = spark.read.parquet(f"{index_path}/fp_index")
     band_index = spark.read.parquet(f"{index_path}/band_index")
     old_edges = spark.read.parquet(f"{index_path}/edges")
     old_clusters = spark.read.parquet(f"{index_path}/clusters")
@@ -170,31 +148,19 @@ def incremental_dedup(
     # in-batch exact groups first (map-side-collapsible), then probe
     # the fingerprint index: a known fingerprint inherits its stored
     # rep; an unknown one makes its batch-min doc the new survivor
-    batch_reps = _doc_reps(new_docs)
-    probed = batch_reps.join(
-        fp_index.select("fingerprint", F.col("rep").alias("old_rep")),
+    probed = _probe(spark, index_path, new_docs)
+    new_survivors = _new_survivors(probed)
+    new_doc_rep = fingerprints(new_docs).join(
+        probed.select(
+            "fingerprint", F.coalesce(F.col("old_rep"), F.col("rep")).alias("rep")
+        ),
         "fingerprint",
-        "left",
-    )
-    new_doc_reps = probed.select(
-        "doc_id",
-        "fingerprint",
-        F.coalesce(F.col("old_rep"), F.col("rep")).alias("rep"),
-    )
-    new_survivor_ids = (
-        probed.filter(F.col("old_rep").isNull() & (F.col("doc_id") == F.col("rep")))
-        .select("doc_id")
-    )
-    new_survivors = new_docs.join(new_survivor_ids, "doc_id").select(
-        "doc_id", "text"
-    )
+    ).select("doc_id", "rep")
 
     # --- stage 2: LSH candidates (new x old via index, new x new) --
     # materialized once: three consumers (old-probe, new-new buckets,
     # the index append), and the batch side is small by definition
-    new_bands = _band_rows(new_survivors, n_hashes, bands, k).localCheckpoint(
-        eager=True
-    )
+    new_bands = _postings(new_survivors).localCheckpoint(eager=True)
     cand_old = (
         F.broadcast(new_bands.withColumnRenamed("doc_id", "doc_b"))
         .join(
@@ -204,14 +170,7 @@ def incremental_dedup(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    cand_new = (
-        new_bands.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(_capped_pairs("ids", max_bucket)).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .distinct()
-    )
+    cand_new = _bucket_pairs(lsh_buckets(new_bands), corpus_dedup.DEFAULT_MAX_BUCKET)
     candidates = cand_old.union(cand_new).distinct()
 
     # --- stage 3: Jaccard verify over candidate texts only ---------
@@ -220,27 +179,23 @@ def incremental_dedup(
     old_cand_docs = old_docs.join(
         candidates.select(F.col("doc_a").alias("doc_id")).distinct(), "doc_id"
     ).select("doc_id", "text")
-    sh = shingle_rows(old_cand_docs.union(new_survivors), k)
-    new_edges = _jaccard_over_pairs(candidates, sh, threshold).select(
-        "doc_a", "doc_b"
-    )
+    new_edges = _jaccard_over_pair_sets(
+        candidates,
+        old_cand_docs.union(new_survivors),
+        corpus_dedup.K,
+        corpus_dedup.THRESHOLD,
+    ).select("doc_a", "doc_b")
 
     # --- stage 4: components over the verified-edge graph ----------
+    # re-appended edges from a crash retry are legal, hence distinct()
     all_edges = old_edges.union(new_edges).distinct()
-    comp = connected_components(all_edges)
-    all_doc_reps = old_clusters.select(
-        "doc_id", F.col("cluster").alias("rep")
-    ).union(new_doc_reps.select("doc_id", "rep"))
     # old docs' stored cluster is their component's min id, which is a
     # graph NODE (or an untouched singleton rep) — rejoining through
     # it lands on the merged component
-    updated = (
-        all_doc_reps.join(comp, all_doc_reps.rep == comp.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("rep")).alias("cluster"),
-        )
-    )
+    all_doc_rep = old_clusters.select(
+        "doc_id", F.col("cluster").alias("rep")
+    ).union(new_doc_rep)
+    updated = _rejoin_clusters(all_doc_rep, all_edges)
 
     # --- fold the batch into the index ------------------------------
     # every derived frame's plan reads the live index files, so ALL of
@@ -248,9 +203,8 @@ def incremental_dedup(
     # touches the index — otherwise an append lands in a directory a
     # later plan re-lists, silently changing its input mid-update
     new_fp = (
-        new_doc_reps.select("fingerprint", "rep")
-        .distinct()
-        .join(fp_index.select("fingerprint"), "fingerprint", "left_anti")
+        probed.filter(F.col("old_rep").isNull())
+        .select("fingerprint", "rep")
         .localCheckpoint(eager=True)
     )
     new_edges = new_edges.localCheckpoint(eager=True)
@@ -271,13 +225,7 @@ def incremental_dedup(
 
 
 def incremental_capped_buckets(
-    spark: SparkSession,
-    index_path: str,
-    new_docs: DataFrame,
-    n_hashes: int = _N_HASHES,
-    bands: int = _BANDS,
-    k: int = _K,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
+    spark: SparkSession, index_path: str, new_docs: DataFrame
 ) -> DataFrame:
     """No-silent-caps ledger for `incremental_dedup`'s new-new
     candidate buckets (the new-old probe is a join, never a pair
@@ -287,23 +235,10 @@ def incremental_capped_buckets(
     time. A non-empty ledger is also the signal that the exactness
     contract's no-cap-crossing precondition needs checking (module
     docstring)."""
-    fp_index = spark.read.parquet(f"{index_path}/fp_index")
-    batch_reps = _doc_reps(new_docs)
-    probed = batch_reps.join(
-        fp_index.select("fingerprint", F.col("rep").alias("old_rep")),
-        "fingerprint",
-        "left",
+    new_survivors = _new_survivors(_probe(spark, index_path, new_docs))
+    return _cap_report(
+        lsh_buckets(_postings(new_survivors)), "ids", corpus_dedup.DEFAULT_MAX_BUCKET
     )
-    survivor_ids = probed.filter(
-        F.col("old_rep").isNull() & (F.col("doc_id") == F.col("rep"))
-    ).select("doc_id")
-    new_survivors = new_docs.join(survivor_ids, "doc_id").select("doc_id", "text")
-    buckets = (
-        _band_rows(new_survivors, n_hashes, bands, k)
-        .groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
-    )
-    return _cap_report(buckets, "ids", max_bucket)
 
 
 # target parquet file size for compacted index tables; postings rows

@@ -11,7 +11,7 @@ OCR/src/comprehensive_detector.py:127-142) to corpus scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Fixed stopword list for the heuristic scorers (ASCII, lowercase).
@@ -190,8 +190,14 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", cur.alias("clean_text"), *exprs)
 
 
-def fingerprints(df: DataFrame) -> DataFrame:
-    """Stable content fingerprint: md5 of the whitespace-normalized,
-    lowercased text (md5 so any engine reproduces it bit-for-bit)."""
+def fingerprint() -> Column:
+    """Stable content fingerprint of the `text` column: md5 of the
+    whitespace-normalized, lowercased text (md5 so any engine
+    reproduces it bit-for-bit). The one exact-duplicate key."""
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE, " ")
-    return df.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return F.md5(norm)
+
+
+def fingerprints(df: DataFrame) -> DataFrame:
+    """(doc_id, fingerprint) for every document."""
+    return df.select("doc_id", fingerprint().alias("fingerprint"))

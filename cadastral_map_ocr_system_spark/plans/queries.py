@@ -627,9 +627,9 @@ _SH_CTE = _sh_cte("documents")
 
 
 def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact word-3-gram Jaccard, gated to MinHash-LSH candidate pairs
-    (the corpus-scale plan; the ungated quadratic variant stays
-    available as corpus_dedup.ngram_jaccard_pairs for verification)."""
+    """Exact word-3-gram Jaccard, gated to MinHash-LSH candidate pairs:
+    the Spark callable runs corpus_dedup.lsh_jaccard_pairs (the
+    corpus-scale plan); SQL_NGRAM_JACCARD is its independent oracle."""
     # no spread: the heavy shingle+md5 work runs AFTER the survivor
     # groupBy exchange (already parallel); spreading only parallelizes
     # the cheap fingerprint map side and was measured a net cost

@@ -96,7 +96,6 @@ def run_extraction(
     pending_buckets = sorted(
         r["bucket"] for r in pending_docs.select("bucket").distinct().collect()
     )
-    committed_ids = {r["partition_id"] for r in committed.collect()}
 
     from ..operators.mediapath import read_tile_metrics
 
@@ -179,7 +178,6 @@ def run_extraction(
             lineage, schema=LINEAGE
         ).withColumn("committed_at", F.current_timestamp())
         lineage_df.write.mode("append").parquet(checkpoint_path)
-        committed_ids.update(group)
         commits_done += 1
         if fail_after_commits is not None and commits_done >= fail_after_commits:
             raise SimulatedFailure(

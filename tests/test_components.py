@@ -7,6 +7,7 @@ import random
 
 import pytest
 
+from cadastral_map_ocr_system_spark.operators import corpus_dedup
 from cadastral_map_ocr_system_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -123,13 +124,14 @@ def test_dedup_survivors_counts(spark, dup_docs):
     assert got == {0: 5, 100: 4, 200: 4, 1000: 1, 1001: 1, 1002: 1}
 
 
-def test_degenerate_all_near_dups_single_cluster(spark):
+def test_degenerate_all_near_dups_single_cluster(spark, monkeypatch):
     # 1500 docs sharing one body: capped star pairs must still give ONE
     # cluster (the cap preserves connected components by construction)
     body = " ".join(f"w{i}" for i in range(50))
     df = spark.createDataFrame(
         [(i, f"{body} t{i}") for i in range(1500)], "doc_id long, text string"
     )
-    out = dedup_clusters(df, max_bucket=16)
+    monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 16)
+    out = dedup_clusters(df)
     assert out.count() == 1500
     assert out.select("cluster").distinct().collect()[0]["cluster"] == 0

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from cadastral_map_ocr_system_spark.operators import corpus_dedup
 from cadastral_map_ocr_system_spark.operators.components import dedup_clusters
 from cadastral_map_ocr_system_spark.operators.dedup_index import (
     build_dedup_index,
@@ -49,6 +50,14 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
     new = all_docs.filter("doc_id >= 100")
     idx = str(tmp_path / "idx")
     build_dedup_index(old, idx)
+    # the build persists exactly what the one-shot stages compute
+    assert _clusters(spark.read.parquet(f"{idx}/clusters")) == _clusters(
+        dedup_clusters(old)
+    )
+    fp_reps = sorted(r["rep"] for r in spark.read.parquet(f"{idx}/fp_index").collect())
+    assert fp_reps == sorted(
+        r["doc_id"] for r in corpus_dedup.exact_dedup_survivor_docs(old).collect()
+    )
     got = _clusters(incremental_dedup(spark, idx, new, old))
     want = _clusters(dedup_clusters(all_docs))
     assert got == want
@@ -56,23 +65,24 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
     assert _clusters(spark.read.parquet(f"{idx}/clusters")) == want
 
 
-def test_new_doc_merges_two_old_clusters(spark, tmp_path):
+def test_new_doc_merges_two_old_clusters(spark, tmp_path, monkeypatch):
     """The hard case: a new document near-dup to BOTH old families
     must merge their clusters into one — old docs' stored assignments
     get rewritten through the graph, not just the new docs'."""
+    monkeypatch.setattr(corpus_dedup, "BANDS", 8)
     rows = [(i, f"{BODY_A} tail{i}") for i in range(3)]
     rows += [(10 + i, f"{BODY_C} tail{10+i}") for i in range(3)]
     bridge_text = f"{BODY_A} {BODY_C}"
     all_rows = rows + [(100, bridge_text)]
     old = _mk(spark, rows)
     idx = str(tmp_path / "idx")
-    build_dedup_index(old, idx, bands=8)
+    build_dedup_index(old, idx)
     before = _clusters(spark.read.parquet(f"{idx}/clusters"))
     assert before[10] == 10 and before[0] == 0  # two clusters pre-merge
     got = _clusters(
-        incremental_dedup(spark, idx, _mk(spark, [(100, bridge_text)]), old, bands=8)
+        incremental_dedup(spark, idx, _mk(spark, [(100, bridge_text)]), old)
     )
-    want = _clusters(dedup_clusters(_mk(spark, all_rows), bands=8))
+    want = _clusters(dedup_clusters(_mk(spark, all_rows)))
     assert got == want
     assert got[10] == 0 and got[100] == 0  # merged through the bridge
 
@@ -91,7 +101,7 @@ def test_two_sequential_increments(spark, tmp_path):
     assert got == want
 
 
-def test_incremental_cap_ledger(spark, tmp_path):
+def test_incremental_cap_ledger(spark, tmp_path, monkeypatch):
     """No-silent-caps: a degenerate (all-near-dup) ingest batch whose
     in-batch buckets exceed max_bucket must show up in the ledger; a
     normal batch leaves it empty."""
@@ -108,9 +118,8 @@ def test_incremental_cap_ledger(spark, tmp_path):
     degenerate = _mk(
         spark, [(5000 + i, f"{body} t{i}") for i in range(40)]
     )
-    report = incremental_capped_buckets(
-        spark, idx, degenerate, max_bucket=8
-    ).collect()
+    monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 8)
+    report = incremental_capped_buckets(spark, idx, degenerate).collect()
     assert report and all(r["bucket_size"] > 8 for r in report)
     assert all(
         r["pairs_suppressed"]

@@ -328,6 +328,51 @@ def test_corrupt_idat_stream_raises_codec_error():
             decode_png(png_with_idat(idat))
 
 
+def test_bad_ihdr_length_raises_codec_error():
+    """A CRC-valid IHDR shorter or longer than 13 bytes is a malformed
+    payload: ValueError, never a struct.error that fails the task."""
+    ihdr = struct.pack(">IIBBBBB", 4, 1, 8, 0, 0, 0, 0)
+    for body in (ihdr[:-1], ihdr + b"\x00"):
+        p = (
+            PNG_SIGNATURE
+            + _chunk(b"IHDR", body)
+            + _chunk(b"IDAT", zlib.compress(bytes(5)))
+            + _chunk(b"IEND", b"")
+        )
+        with pytest.raises(ValueError, match="IHDR length"):
+            decode_png(p)
+
+
+def test_idat_bomb_rejected_before_inflating():
+    """A 1x1 PNG whose IDAT inflates to ~50 MB is rejected as a length
+    mismatch after inflating at most one byte past the 2 bytes its
+    IHDR implies (plain and Adam7 layouts). A forged IHDR implying a
+    raw size beyond a C ssize_t is a length mismatch too."""
+    import tracemalloc
+
+    bomb = zlib.compress(bytes(50_000_000), 9)
+    for w, h, depth, ctype, interlace, idat in (
+        (1, 1, 8, 0, 0, bomb),
+        (1, 1, 8, 0, 1, bomb),
+        (2**32 - 1, 2**32 - 1, 16, 6, 0, zlib.compress(bytes(5))),
+    ):
+        ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace)
+        p = (
+            PNG_SIGNATURE
+            + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", idat)
+            + _chunk(b"IEND", b"")
+        )
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError, match="IDAT length mismatch"):
+                decode_png(p)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 5_000_000
+
+
 def _decode_sub_naive(raw_line: np.ndarray, bpp: int) -> np.ndarray:
     cur = np.zeros(len(raw_line), dtype=np.int64)
     for i in range(len(raw_line)):
