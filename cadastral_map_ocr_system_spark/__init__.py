@@ -21,8 +21,8 @@ Modules:
   synth       — deterministic seeded corpus + media-payload generator
   oracle      — independent single-process pandas/python reference model
   functions/  — scalar rule layer (regex constants, geometry, similarity)
-  operators/  — dataflow operators (textpath, mediapath, rezip, corpus
-                dedup, ANN search, text analysis, multimodal)
+  operators/  — dataflow operators (mediapath, rezip, corpus dedup,
+                ANN search, text analysis, multimodal)
   sources/    — table IO + resumable checkpoint
   plans/      — end-to-end pipeline assembly + spark-submit job
   streaming/  — foreachBatch wrapper around the batch pipeline

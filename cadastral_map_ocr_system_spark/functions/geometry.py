@@ -1,9 +1,7 @@
-"""Geometry scalar functions as built-in column expressions.
-
-Reference semantics: Euclidean distance (OCR/src/detect.py:601-603),
-line length/angle (OCR/src/symbol_detector.py:253-254, 149-153),
-circularity 4*pi*A/P^2 (symbol_detector.py:149-153), IoU
-(detect.py:1438-1463). All stay JVM-side / codegen'd.
+"""Geometry rules: shape scalars as built-in column expressions, the
+IoU leaf of the NMS/evaluation stages, and the greedy-dedup thresholds
+(the dedup distance is inline in mediapath.greedy_dedup_payload, the
+line angle in mediapath._line_geometry).
 """
 
 from __future__ import annotations
@@ -20,16 +18,6 @@ DEDUP_SIM_THRESHOLD = 0.8
 DEDUP_NUM_DELTA = 1.0
 
 
-def distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """Euclidean distance (detect.py:601-603)."""
-    return F.sqrt(F.pow(x1 - x2, 2) + F.pow(y1 - y2, 2))
-
-
-def line_angle_deg(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """Line angle in degrees (symbol_detector.py:253-254)."""
-    return F.degrees(F.atan2(y2 - y1, x2 - x1))
-
-
 def circularity(area: Column, perimeter: Column) -> Column:
     """4*pi*A/P^2 (symbol_detector.py:149-153)."""
     return F.lit(4.0 * math.pi) * area / F.pow(perimeter, 2)
@@ -39,28 +27,8 @@ def aspect_ratio(w: Column, h: Column) -> Column:
     return w / F.greatest(h, F.lit(1))
 
 
-def iou(
-    ax: Column, ay: Column, aw: Column, ah: Column,
-    bx: Column, by: Column, bw: Column, bh: Column,
-) -> Column:
-    """Intersection-over-union of two xywh boxes (detect.py:1438-1463)."""
-    ix = F.greatest(
-        F.least(ax + aw, bx + bw) - F.greatest(ax, bx), F.lit(0)
-    )
-    iy = F.greatest(
-        F.least(ay + ah, by + bh) - F.greatest(ay, by), F.lit(0)
-    )
-    inter = ix * iy
-    union = aw * ah + bw * bh - inter
-    return inter / F.greatest(union, F.lit(1e-9))
-
-
-# Python mirrors for the oracle / in-UDF use ---------------------------
-def py_distance(x1: float, y1: float, x2: float, y2: float) -> float:
-    return math.hypot(x1 - x2, y1 - y2)
-
-
 def py_iou(a: tuple, b: tuple) -> float:
+    """Intersection-over-union of two xywh boxes (detect.py:1438-1463)."""
     ax, ay, aw, ah = a
     bx, by, bw, bh = b
     ix = max(min(ax + aw, bx + bw) - max(ax, bx), 0)

@@ -13,7 +13,8 @@ Semantics derived from the reference:
       DOM-tag strip + per-line word-count / link-density keep rule.
 
 All patterns are written in the common subset of Java and Python regex
-so the Spark built-in expressions and the Python oracle agree exactly.
+so the Spark expressions (strip_boilerplate, the registry's SQL over
+these constants) and the Python rules (py_*) agree exactly.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F
 
 # ------------------------------------------------------------ constants
 MIN_CONF = 0.3            # detect.py:366-368
-MIN_TOKEN_LEN = 1
 NUMBER_RE = r"^\d{1,4}$"  # detect.py:432-435
 NUMBER_MIN, NUMBER_MAX = 1, 9999
 NAME_HAS_LETTER_RE = r"[A-Za-z]"
@@ -55,38 +55,6 @@ MAX_LINK_DENSITY = 0.5     # ... and <= 50% of its chars are link text
 
 
 # ----------------------------------------------- Spark column expressions
-def clean_token(col: Column) -> Column:
-    """Name-cleanup chain as built-in expressions (detect.py:474-487).
-
-    regexp_replace x3 + initcap; initcap == str.title() on the
-    letters+spaces alphabet the corpus uses.
-    """
-    c = F.regexp_replace(col, CLEAN_STRIP_RE, "")
-    c = F.regexp_replace(c, CLEAN_DOT_RE, "")
-    c = F.regexp_replace(c, CLEAN_WS_RE, " ")
-    c = F.trim(c)
-    return F.initcap(c)
-
-
-def is_noise(col: Column) -> Column:
-    """Noise-pattern predicate (detect.py:489-502)."""
-    return col.rlike(NOISE_RE)
-
-
-def is_valid_number(col: Column) -> Column:
-    """Survey/plot-number predicate (detect.py:432-435)."""
-    return col.rlike(NUMBER_RE) & col.cast("int").between(NUMBER_MIN, NUMBER_MAX)
-
-
-def is_valid_name(col: Column) -> Column:
-    """Name predicate (detect.py:447) minus noise (detect.py:489-502)."""
-    return (
-        col.rlike(NAME_HAS_LETTER_RE)
-        & F.length(col).between(NAME_MIN_LEN, NAME_MAX_LEN)
-        & ~is_noise(col)
-    )
-
-
 def strip_boilerplate(col: Column) -> Column:
     """Main-content extraction for a text span — pure built-in exprs.
 
@@ -128,8 +96,9 @@ def strip_boilerplate(col: Column) -> Column:
     return F.array_join(kept, " ")
 
 
-# -------------------------------------------------- Python oracle mirrors
-# (used by tests and by oracle.py; kept next to the constants they share)
+# ------------------------------------------------------- Python rules
+# (run by the media stages and by oracle.py; kept next to the constants
+# they share)
 import re as _re  # noqa: E402
 
 _noise_re = _re.compile(NOISE_RE)

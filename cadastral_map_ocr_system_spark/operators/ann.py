@@ -18,6 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import corpus_dedup
+
+#: KMeans iteration cap of the IVF quantizer and of every PQ subspace
+KMEANS_MAX_ITER = 10
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -156,7 +161,7 @@ def lsh_bucketed_topk(
 
 
 def ivf_assignments(
-    emb: DataFrame, n_clusters: int = 8, seed: int = 7, max_iter: int = 10
+    emb: DataFrame, n_clusters: int = 8, seed: int = 7
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: distributed KMeans (pyspark.ml) over the
     corpus. Returns (assignments(vec_id, bucket), centroids(bucket,
@@ -170,7 +175,7 @@ def ivf_assignments(
     vecs = emb.select(
         "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_clusters, seed=seed, maxIter=max_iter).fit(vecs)
+    model = KMeans(k=n_clusters, seed=seed, maxIter=KMEANS_MAX_ITER).fit(vecs)
     assigned = model.transform(vecs).select(
         "vec_id", F.col("prediction").alias("bucket")
     )
@@ -235,22 +240,6 @@ def ivf_topk_from_index(
     return _topk_per_query(scored, "cos_sim", k)
 
 
-def ivf_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_clusters: int = 8,
-    n_probe: int = 2,
-    seed: int = 7,
-) -> DataFrame:
-    """Train + search in one call (tests; production materializes the
-    index once via ivf_assignments and reuses it)."""
-    assigned, centroids = ivf_assignments(emb, n_clusters=n_clusters, seed=seed)
-    return ivf_topk_from_index(
-        emb, assigned, centroids, n_queries=n_queries, k=k, n_probe=n_probe
-    )
-
-
 def _sign_buckets(emb: DataFrame, n_dims: int) -> DataFrame:
     """(bucket, members): sign-bucketed vectors with members as the
     sorted array of (vec_id, embedding) structs — shared by the
@@ -266,10 +255,7 @@ def _sign_buckets(emb: DataFrame, n_dims: int) -> DataFrame:
 
 
 def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_dims: int = 8,
-    max_bucket: int = 64,
+    emb: DataFrame, threshold: float = 0.95, n_dims: int = 8
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, bucket-blocked by the
     sign-pattern key.
@@ -280,16 +266,16 @@ def embedding_near_dups(
     bucket (a tight embedding cluster sharing one sign pattern — the
     norm on a real crawl, where boilerplate pages embed near-identically)
     evaluates ~n^2 join rows in one task; measured 37x over linear at
-    10x corpus scale on a 10-cluster mixture. Buckets over max_bucket
-    degrade to star pairs around the min vec_id (linear, connectivity
-    preserved — same guard as corpus_dedup; see its module docstring);
-    audit with `embedding_bucket_caps`, empty unless the cap engaged."""
-    from .corpus_dedup import _capped_pairs
-
+    10x corpus scale on a 10-cluster mixture. Buckets over
+    corpus_dedup.DEFAULT_MAX_BUCKET degrade to star pairs around the
+    min vec_id (linear, connectivity preserved — same guard as
+    corpus_dedup; see its module docstring); audit with
+    `embedding_bucket_caps`, empty unless the cap engaged."""
     buckets = _sign_buckets(emb, n_dims)
+    capped = corpus_dedup._capped_pairs("members", corpus_dedup.DEFAULT_MAX_BUCKET)
     pairs = (
         buckets.filter(F.size("members") >= 2)
-        .select(F.explode(_capped_pairs("members", max_bucket)).alias("p"))
+        .select(F.explode(capped).alias("p"))
         .select(
             F.col("p.a.vec_id").alias("vec_a"),
             F.col("p.b.vec_id").alias("vec_b"),
@@ -301,15 +287,13 @@ def embedding_near_dups(
     return pairs.filter(F.col("cos_sim") >= threshold)
 
 
-def embedding_bucket_caps(
-    emb: DataFrame, n_dims: int = 8, max_bucket: int = 64
-) -> DataFrame:
+def embedding_bucket_caps(emb: DataFrame, n_dims: int = 8) -> DataFrame:
     """No-silent-caps ledger for `embedding_near_dups`: one row per
     sign bucket the star-pair cap touched, with suppressed-pair
     counts."""
-    from .corpus_dedup import _cap_report
-
-    return _cap_report(_sign_buckets(emb, n_dims), "members", max_bucket)
+    return corpus_dedup._cap_report(
+        _sign_buckets(emb, n_dims), "members", corpus_dedup.DEFAULT_MAX_BUCKET
+    )
 
 
 # ------------------------------------------------------ product quantization
@@ -318,7 +302,6 @@ def pq_train(
     m: int = 8,
     n_codes: int = 16,
     seed: int = 7,
-    max_iter: int = 10,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + codes (Jegou, Douze & Schmid,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
@@ -354,7 +337,7 @@ def pq_train(
                 F.slice(F.col("embedding").cast("array<double>"), s * sub + 1, sub)
             ).alias("features"),
         )
-        model = KMeans(k=n_codes, seed=seed + s, maxIter=max_iter).fit(vecs)
+        model = KMeans(k=n_codes, seed=seed + s, maxIter=KMEANS_MAX_ITER).fit(vecs)
         cb_rows += [
             (s, i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())
@@ -467,20 +450,6 @@ def pq_topk_from_index(
         )
     )
     return _topk_per_query(scored, "pq_sim", k)
-
-
-def pq_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 7,
-) -> DataFrame:
-    """Train + search in one call (tests; production materializes the
-    codebooks/codes once via pq_train and reuses them)."""
-    codebooks, codes = pq_train(emb, m=m, n_codes=n_codes, seed=seed)
-    return pq_topk_from_index(emb, codebooks, codes, n_queries=n_queries, k=k)
 
 
 def pq_refined_topk(

@@ -33,13 +33,6 @@ def color_mask(img: np.ndarray, color: str) -> np.ndarray:
     return morph_close(morph_open(band_mask(img, color)))
 
 
-def color_coverage(img: np.ndarray) -> dict[str, float]:
-    """A5 coverage ratio per color family."""
-    return {
-        color: float(color_mask(img, color).mean()) for color in COLOR_THRESHOLDS
-    }
-
-
 COLOR_ROUTE_ARROW = pa.schema(
     [
         pa.field("doc_id", pa.string()),
@@ -107,7 +100,7 @@ COLOR_COVERAGE_ARROW = pa.schema(
 
 def color_coverage_rows(ref: str, payload: bytes) -> list[dict]:
     """One PNG payload's rows, one per color family, with the
-    cleaned-mask coverage ratio. A payload the PNG codec rejects gives
+    cleaned-mask coverage ratio (A5). A payload the PNG codec rejects gives
     no rows."""
     try:
         img = decode_png(payload)

@@ -109,23 +109,25 @@ def _signature(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
+#: diverged-input guard of the large-star/small-star loop: rounds are
+#: O(log^2 n), so a graph that has not converged by then never will
+MAX_CC_ROUNDS = 25
+
+
 def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iters: int = 25,
-    assume_distinct: bool = False,
+    edges: DataFrame, assume_distinct: bool = False
 ) -> DataFrame:
-    """(node, component) for every node appearing in `edges`, where
-    component is the minimum node id reachable from it. Works for any
-    orderable id type (the fixtures use BIGINT doc_ids).
+    """(node, component) for every node appearing in `edges` (doc_a,
+    doc_b rows), where component is the minimum node id reachable from
+    it. Works for any orderable id type (the fixtures use BIGINT
+    doc_ids).
 
     Alternating large-star/small-star until the edge set is a fixed
     point — at which point every edge runs from a component's min node
     to one member, and the component map is a projection. Rounds are
     O(log^2 n) in theory, 3-5 in practice on dedup graphs (near-dup
     clusters are dense, so the first large-star already stars most of
-    them); `max_iters` is a diverged-input guard, not a tuning knob —
+    them); MAX_CC_ROUNDS is a diverged-input guard, not a tuning knob —
     hitting it raises rather than returning a half-contracted graph.
 
     Singleton nodes never appear in `edges` by construction, so they
@@ -144,12 +146,12 @@ def connected_components(
     # candidate pair, doc_a < doc_b) skip the initial canonicalization
     # exchange — the loop's invariants only need the INPUT edge set to
     # be a set, which such callers already guarantee.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     if not assume_distinct:
         e = e.filter(F.col("u") != F.col("v")).distinct()
     e = e.localCheckpoint(eager=False)
     sig = _signature(e)
-    for _ in range(max_iters):
+    for _ in range(MAX_CC_ROUNDS):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         new_sig = _signature(e)
         if new_sig == sig:
@@ -157,7 +159,7 @@ def connected_components(
         sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds"
+            f"connected_components did not converge in {MAX_CC_ROUNDS} rounds"
         )
     members = e.select(F.col("v").alias("node"), F.col("u").alias("component"))
     centers = e.select(F.col("u").alias("node"), F.col("u").alias("component"))

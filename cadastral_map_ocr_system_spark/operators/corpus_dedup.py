@@ -4,13 +4,14 @@ Generalizes the reference's within-payload greedy dedup
 (OCR/src/detect.py:384-417, 504-575 — see mediapath.greedy_dedup_payload)
 to across-document dedup over billions of rows:
 
-  exact          hash-groupBy on a normalized-content fingerprint
+  exact          hash-groupBy on a normalized-content fingerprint; the
+                 min-doc_id survivor of each group is `_exact_reps`
   MinHash + LSH  shingle -> k minhashes -> b bands -> bucket groupBy
                  (the 100 TB-scale path: candidate pairs only, never
                  all-pairs), then exact word k-gram Jaccard over the
                  candidate pairs
-  SimHash        64-bit sign-of-weighted-bit-sums fingerprint with
-                 Hamming-radius pairing
+  SimHash        per-document sign-of-weighted-bit-sums fingerprint
+                 (`simhash`); no near-pair detector is built on it
 
 Each rule has one implementation here, which the duplicate-cluster
 pipeline (components.dedup_clusters) and the persisted index
@@ -50,20 +51,21 @@ both ON by default in the scale entry points:
      rather than the full expansion. The star preserves the bucket's
      connected component exactly (for dedup clustering, transitive
      closure is what matters), bounding per-bucket output to linear.
-     NO SILENT CAPS: `lsh_capped_buckets` / `simhash_capped_buckets`
-     report every bucket the cap touched (size, pairs suppressed) —
-     callers at scale should run and log/persist that report.
+     NO SILENT CAPS: `lsh_capped_buckets` (and ann.embedding_bucket_caps
+     for the embedding path) report every bucket the cap touched
+     (size, pairs suppressed) — callers at scale should run and
+     log/persist that report.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import TOKEN_SPLIT_RE, fingerprint, fingerprints
 
 
-#: default in-bucket cap for the LSH / SimHash candidate generators.
+#: in-bucket cap of the LSH and embedding candidate generators.
 #: Far above any honest near-dup bucket on the fixtures (max observed 4
 #: at sf0.1) yet small enough that a degenerate boilerplate bucket can
 #: never expand quadratically inside one task.
@@ -143,25 +145,14 @@ def exact_dup_groups(df: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_survivors(df: DataFrame) -> DataFrame:
-    """Keep the min-doc_id document of every exact-duplicate group."""
-    fp = fingerprints(df)
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    return (
-        fp.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "fingerprint")
-    )
-
-
 def _exact_reps(df: DataFrame) -> DataFrame:
     """(fingerprint, rep, text): one row per distinct content, with the
     min-doc_id representative of its exact-duplicate group and that
     document's text.
 
-    Deliberately a groupBy + MIN(struct) rather than the window used by
-    `exact_dedup_survivors`: a window has no partial aggregation, so a
-    degenerate fingerprint group (10^6 boilerplate copies on a real
+    Deliberately a groupBy + MIN(struct) rather than a row_number
+    window over the fingerprint: a window has no partial aggregation,
+    so a degenerate fingerprint group (10^6 boilerplate copies on a real
     crawl) would cross the exchange whole; the groupBy MIN collapses it
     map-side — only one row per (input partition, fingerprint) is ever
     shuffled. Struct MIN orders by leading field, so this is exactly
@@ -470,107 +461,18 @@ def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
     )
 
 
-def simhash_chunk_buckets(
-    df: DataFrame, bits: int = 32, max_hamming: int = 3
-) -> DataFrame:
-    """(chunk, chunk_val, members): the pigeonhole-blocked bucket frame
-    shared by `simhash_near_pairs` and its cap report. members is the
-    sorted array of (doc_id, simhash) structs in the bucket."""
-    sig = simhash(df, bits)
-    n_chunks = max_hamming + 1
-    chunk_bits = bits // n_chunks
-    chunks = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("chunk"),
-                    F.shiftright(F.col("simhash"), c * chunk_bits)
-                    .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                    .alias("chunk_val"),
-                )
-                for c in range(n_chunks)
-            ]
-        )
-    ).alias("c")
-    blocked = sig.select("doc_id", "simhash", chunks).select(
-        "doc_id",
-        "simhash",
-        F.col("c.chunk").alias("chunk"),
-        F.col("c.chunk_val").alias("chunk_val"),
-    )
-    return blocked.groupBy("chunk", "chunk_val").agg(
-        F.array_sort(
-            F.collect_set(F.struct(F.col("doc_id"), F.col("simhash")))
-        ).alias("members")
-    )
+#: span_dedup's chunk width (tokens) and the occurrence count from which
+#: a chunk is a repeat
+SPAN_WINDOW_TOKENS = 10
+SPAN_MIN_REPEATS = 2
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    bits: int = 32,
-    max_hamming: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    pre_exact_dedup: bool = True,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.
-
-    Candidate generation by bit-band blocking (split the signature into
-    max_hamming+1 chunks; near pairs agree on >=1 chunk by pigeonhole),
-    then exact Hamming verify — never an all-pairs product.
-
-    Degenerate-bucket guards mirror the LSH path (module docstring):
-    exact dups collapse to representatives first, and over-cap buckets
-    emit star pairs. NOTE the star fallback weakens the pigeonhole
-    guarantee inside a capped bucket (a near pair may both sit in an
-    over-cap bucket without either being its min member); audit with
-    `simhash_capped_buckets` and raise bits / n_chunks if it fires —
-    chunk width, not the cap, is the real recall knob at scale.
-    """
-    docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    buckets = simhash_chunk_buckets(docs, bits=bits, max_hamming=max_hamming)
-    # struct sort order is by doc_id first, so a < b pins doc_a < doc_b
-    cand = (
-        buckets.filter(F.size("members") >= 2)
-        .select(F.explode(_capped_pairs("members", max_bucket)).alias("p"))
-        .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.simhash").alias("sig_a"),
-            F.col("p.b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select(
-        "doc_a", "doc_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_capped_buckets(
-    df: DataFrame,
-    bits: int = 32,
-    max_hamming: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    pre_exact_dedup: bool = True,
-) -> DataFrame:
-    """Every SimHash chunk bucket the star-pair cap touched — the
-    no-silent-caps ledger for `simhash_near_pairs`."""
-    docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    return _cap_report(
-        simhash_chunk_buckets(docs, bits=bits, max_hamming=max_hamming),
-        "members",
-        max_bucket,
-    )
-
-
-def span_dedup(
-    docs: DataFrame, window_tokens: int = 10, min_repeats: int = 2
-) -> DataFrame:
+def span_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-level exact-SPAN dedup (the C4 rule — "discard all but
     one of any three-sentence span occurring more than once",
     Raffel et al. 2020 — re-expressed over unstructured crawl text as
-    fixed `window_tokens`-token chunks): a chunk occurring
-    `min_repeats`+ times corpus-wide survives only at its FIRST
+    fixed SPAN_WINDOW_TOKENS-token chunks): a chunk occurring
+    SPAN_MIN_REPEATS+ times corpus-wide survives only at its FIRST
     occurrence (min (doc_id, position)); every other occurrence is cut
     from its document. Catches shared boilerplate that document-level
     dedup can never see.
@@ -597,7 +499,7 @@ def span_dedup(
     Returns (doc_id, clean_text, n_spans, n_spans_dropped); a document
     whose every span is dropped keeps its row with clean_text = ''.
     """
-    w = window_tokens
+    w = SPAN_WINDOW_TOKENS
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE).alias("tokens")
     )
@@ -615,7 +517,7 @@ def span_dedup(
         "doc_id", F.posexplode("chunks").alias("pos", "chunk")
     )
     # only chunks that can DROP anything matter to the join: keepers is
-    # filtered to n_occ >= min_repeats (a vanishing fraction of chunks
+    # filtered to n_occ >= SPAN_MIN_REPEATS (a vanishing fraction of chunks
     # on a real corpus), so the join-back is against the small repeated
     # set (inner join; AQE turns it into a broadcast at runtime when it
     # fits). An unmatched chunk is unique -> kept, as before.
@@ -625,7 +527,7 @@ def span_dedup(
             F.count("*").alias("n_occ"),
             F.min(F.struct("doc_id", "pos")).alias("first_occ"),
         )
-        .filter(F.col("n_occ") >= min_repeats)
+        .filter(F.col("n_occ") >= SPAN_MIN_REPEATS)
         .select("chunk", "first_occ")
     )
     drops = (

@@ -5,9 +5,9 @@ dedup/quality filtering (the reference's pipeline ends at per-map CSV
 rows, OCR/src/main.py:60-103; a corpus engine must also hand the kept
 documents to a trainer):
 
-  stratified_sample  pick exactly n documents per stratum (language,
-                     source, quality band), reproducibly — the eval
-                     holdout / human-audit draw.
+  stratified_sample  pick exactly n documents per language stratum,
+                     reproducibly — the eval holdout / human-audit
+                     draw.
   pack_shards        assign every document to a training shard such
                      that each shard holds ~budget tokens, with W
                      independent writers — the "write me 2048-doc
@@ -38,7 +38,10 @@ from pyspark.sql import functions as F
 
 from .textstats import token_counts
 
-DEFAULT_SALTS = 16
+STRATUM_COL = "lang"
+#: phase-1 windows per stratum of stratified_sample; bounds window size
+#: only, never the result
+N_SALTS = 16
 
 
 def _md5_key(*cols) -> "F.Column":
@@ -48,24 +51,21 @@ def _md5_key(*cols) -> "F.Column":
     return F.md5(F.concat_ws(":", *cols))
 
 
-def stratified_sample(
-    docs: DataFrame,
-    n_per_stratum: int,
-    stratum_col: str = "lang",
-    n_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """Exactly min(n, |stratum|) documents per stratum, chosen by the
-    md5 total order over (stratum, doc_id) — a reproducible uniform
-    draw that no reordering, repartitioning, or engine swap changes.
+def stratified_sample(docs: DataFrame, n_per_stratum: int) -> DataFrame:
+    """Exactly min(n, |stratum|) documents per STRATUM_COL value,
+    chosen by the md5 total order over (stratum, doc_id) — a
+    reproducible uniform draw that no reordering, repartitioning, or
+    engine swap changes.
 
-    Returns (doc_id, <stratum_col>, sample_rank) with sample_rank in
+    Returns (doc_id, <STRATUM_COL>, sample_rank) with sample_rank in
     [1, n]. The salt is derived from the key itself (crc32), is not in
     the output, and only bounds window size — correctness never
     depends on its distribution, only the two-phase containment.
     """
+    stratum_col = STRATUM_COL
     key = _md5_key(F.col(stratum_col), F.col("doc_id").cast("string"))
     keyed = docs.select(F.col("doc_id"), F.col(stratum_col), key.alias("k"))
-    salted = keyed.withColumn("salt", F.pmod(F.crc32(F.col("k")), F.lit(n_salts)))
+    salted = keyed.withColumn("salt", F.pmod(F.crc32(F.col("k")), F.lit(N_SALTS)))
     w1 = Window.partitionBy(stratum_col, "salt").orderBy("k")
     phase1 = (
         salted.withColumn("r", F.row_number().over(w1))

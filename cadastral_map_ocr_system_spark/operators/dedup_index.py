@@ -268,13 +268,9 @@ def _repair_torn_compact(table_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def compact_dedup_index(
-    spark: SparkSession,
-    index_path: str,
-    rows_per_file: int = _COMPACT_ROWS_PER_FILE,
-) -> dict:
+def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
     """Vacuum the three append-grown index tables (fp_index,
-    band_index, edges): rewrite each as ceil(rows / rows_per_file)
+    band_index, edges): rewrite each as ceil(rows / _COMPACT_ROWS_PER_FILE)
     right-sized parquet files, swapping directories crash-safely
     (write `.compact` -> rename live to `.old` -> promote -> drop
     `.old`; `_repair_torn_compact` recovers every intermediate state,
@@ -296,7 +292,7 @@ def compact_dedup_index(
         files_before = len(glob.glob(os.path.join(live, "*.parquet")))
         df = spark.read.parquet(live)
         n_rows = df.count()
-        n_files = max(1, -(-n_rows // rows_per_file))
+        n_files = max(1, -(-n_rows // _COMPACT_ROWS_PER_FILE))
         if table == "band_index":
             out = df.repartition(n_files, "band", "band_hash")
         else:

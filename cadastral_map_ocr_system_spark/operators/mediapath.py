@@ -362,12 +362,12 @@ TILE_STRIDE = 192
 MAX_UNTILED = 512
 
 
-def tile_origins(n: int, tile: int = TILE_SIZE, stride: int = TILE_STRIDE) -> list[int]:
-    """Tile start offsets covering [0, n): step by stride until a tile
-    reaches the end."""
+def tile_origins(n: int) -> list[int]:
+    """Tile start offsets covering [0, n): step by TILE_STRIDE until a
+    tile reaches the end."""
     starts = [0]
-    while starts[-1] + tile < n:
-        starts.append(starts[-1] + stride)
+    while starts[-1] + TILE_SIZE < n:
+        starts.append(starts[-1] + TILE_STRIDE)
     return starts
 
 
@@ -378,24 +378,20 @@ TILE_EDGE_MARGIN = 2  # keep regions >= this far from non-global tile edges
 
 def extract_regions_tiled(
     grid: np.ndarray,
-    tile: int = TILE_SIZE,
-    stride: int = TILE_STRIDE,
-    min_coverage: float = 0.0,
     stats: dict | None = None,
     open_mask: bool = False,
-    max_untiled: int = MAX_UNTILED,
     tok_grid: np.ndarray | None = None,
 ) -> list[dict]:
     """Token regions via overlapped tiling; equals extract_regions for
     payloads whose components fit the exactness contract above.
 
-    min_coverage: skip tiles whose foreground fraction is <= this
-    (0.0 = skip only all-background tiles, which is lossless; the
-    reference uses 0.10 as a lossy speed heuristic, detect.py:1358).
+    Tiles with no foreground pixel are skipped, which is lossless (the
+    reference also skips tiles under 10% coverage, a lossy speed
+    heuristic, detect.py:1358, that this engine does not copy).
     stats, if given, accrues {'n_tiles', 'n_tiles_skipped',
-    'n_oversized_fallback'}.
-    max_untiled: grids whose max dimension is at or under this take the
-    single-pass path (see module comment); tests pass 0 to force tiling.
+    'n_oversized_fallback'}. Grids whose max dimension is at or under
+    MAX_UNTILED take the single-pass path (see module comment); tests
+    patch it to 0 to force tiling.
 
     Oversized-component guard: a component larger than
     TILE_SIZE - TILE_STRIDE - 2*TILE_EDGE_MARGIN px violates the
@@ -416,7 +412,8 @@ def extract_regions_tiled(
     """
     h, w = grid.shape
     tok = grid if tok_grid is None else tok_grid
-    if h <= max(tile, max_untiled) and w <= max(tile, max_untiled):
+    untiled = max(TILE_SIZE, MAX_UNTILED)
+    if h <= untiled and w <= untiled:
         if stats is not None:  # single pass counts as one processed tile
             stats["n_tiles"] = stats.get("n_tiles", 0) + 1
             stats.setdefault("n_tiles_skipped", 0)
@@ -427,15 +424,16 @@ def extract_regions_tiled(
     spans_tile = False  # a fragment clipped on both opposing edges
     n_tiles = n_skipped = 0
     m = TILE_EDGE_MARGIN
-    for sy in tile_origins(h, tile, stride):
-        for sx in tile_origins(w, tile, stride):
-            sub = grid[sy : sy + tile, sx : sx + tile]
+    t = TILE_SIZE
+    for sy in tile_origins(h):
+        for sx in tile_origins(w):
+            sub = grid[sy : sy + t, sx : sx + t]
             th, tw = sub.shape
             n_tiles += 1
-            if (sub > BIN_THRESHOLD).mean() <= min_coverage:
+            if not (sub > BIN_THRESHOLD).any():
                 n_skipped += 1
                 continue
-            tsub = tok[sy : sy + tile, sx : sx + tile]
+            tsub = tok[sy : sy + t, sx : sx + t]
             for reg in extract_regions(sub, open_mask=open_mask, tok_grid=tsub):
                 y0, x0 = reg["ymin"], reg["xmin"]
                 y1 = y0 + reg["h"] - 1
@@ -571,27 +569,31 @@ def extract_line_segments(grid: np.ndarray) -> list[dict]:
     return lines
 
 
-def merge_line_segments(
-    lines: list[dict], angle_tol: float = 5.0, dist_tol: float = 10.0
-) -> list[dict]:
+LINE_MERGE_ANGLE_TOL = 5.0  # degrees, circular mod 180
+LINE_MERGE_DIST_TOL = 10.0  # px between segment midpoints
+
+
+def merge_line_segments(lines: list[dict]) -> list[dict]:
     """W5 line grouping/merge (comprehensive_detector.py:193-231,
     symbol_detector.py:246-287): greedily group segments whose angle is
-    within angle_tol of the group's FIRST member (circular, mod 180)
-    and whose midpoint is within dist_tol of that member's midpoint;
-    each group collapses to its longest member (first-come wins ties —
-    the reference pops an existing line only when strictly shorter),
-    annotated with n_merged. Input order (sorted by (y1,x1)) makes the
-    greedy pass deterministic.
+    within LINE_MERGE_ANGLE_TOL of the group's FIRST member (circular,
+    mod 180) and whose midpoint is within LINE_MERGE_DIST_TOL of that
+    member's midpoint; each group collapses to its longest member
+    (first-come wins ties — the reference pops an existing line only
+    when strictly shorter), annotated with n_merged. Input order
+    (sorted by (y1,x1)) makes the greedy pass deterministic.
 
     Scale: group heads are indexed in a midpoint grid with cell size
-    dist_tol, so each segment probes only the 3x3 neighbouring cells
-    instead of scanning every head — ~O(n) per payload. (The reference's
-    real maps carry ~71k raw segments each, BASELINE.md; a linear scan
-    over heads would dominate there.) Joining the EARLIEST-created
-    matching head preserves the reference's first-match-in-creation-
-    order semantics exactly; per-cell head counts are bounded because
-    two heads in one cell must differ in angle by >= angle_tol
-    (otherwise the later one would have joined the earlier)."""
+    LINE_MERGE_DIST_TOL, so each segment probes only the 3x3
+    neighbouring cells instead of scanning every head — ~O(n) per
+    payload. (The reference's real maps carry ~71k raw segments each,
+    BASELINE.md; a linear scan over heads would dominate there.)
+    Joining the EARLIEST-created matching head preserves the
+    reference's first-match-in-creation-order semantics exactly;
+    per-cell head counts are bounded because two heads in one cell must
+    differ in angle by >= LINE_MERGE_ANGLE_TOL (otherwise the later one
+    would have joined the earlier)."""
+    angle_tol, dist_tol = LINE_MERGE_ANGLE_TOL, LINE_MERGE_DIST_TOL
     heads: list[tuple[dict, float, float]] = []  # (head seg, mid x, mid y)
     best: list[dict] = []
     counts: list[int] = []

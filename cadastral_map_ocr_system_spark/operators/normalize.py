@@ -64,22 +64,18 @@ GRADIENT_FG_FRAC = 0.5    # payload gate: binarized fg fraction above
 #                           threshold -> the scan is gradient-lit
 
 
-def local_contrast_enhance(
-    grid: np.ndarray,
-    tile: int = LOCAL_EQ_TILE,
-    pct: float = LOCAL_EQ_PCT,
-    min_range: int = LOCAL_EQ_MIN_RANGE,
-) -> np.ndarray:
-    """Per-tile rank stretch: anchor at the tile's pct-percentile value
-    (the background mode in a mostly-paper tile) and scale its max to
-    255; tiles whose value range is under min_range are uniform
-    background and map to 0 (the contrast-limit analogue — tiny ranges
-    are noise, never amplified).
+def local_contrast_enhance(grid: np.ndarray) -> np.ndarray:
+    """Per-tile rank stretch: anchor at the tile's LOCAL_EQ_PCT
+    percentile value (the background mode in a mostly-paper tile) and
+    scale its max to 255; tiles whose value range is under
+    LOCAL_EQ_MIN_RANGE are uniform background and map to 0 (the
+    contrast-limit analogue — tiny ranges are noise, never amplified).
 
     Deterministic and idempotent: after one pass a mixed tile has >=
     10% zeros and a 255 maximum, so the second pass is the identity;
     flat tiles stay 0. (Pinned by tests/test_normalize.py.)"""
     h, w = grid.shape
+    tile, pct, min_range = LOCAL_EQ_TILE, LOCAL_EQ_PCT, LOCAL_EQ_MIN_RANGE
     out = np.zeros((h, w), dtype=np.uint8)
     for ty in range(0, h, tile):
         for tx in range(0, w, tile):
@@ -114,14 +110,14 @@ def decimation_indices(
     return ii, jj
 
 
-def resize_cap(grid: np.ndarray, max_dim: int = RESIZE_CAP) -> np.ndarray:
-    """Cap the longest edge at max_dim, preserving aspect ratio
+def resize_cap(grid: np.ndarray) -> np.ndarray:
+    """Cap the longest edge at RESIZE_CAP, preserving aspect ratio
     (detect.py:95-106), via endpoint-preserving NN decimation. ON the
     golden path (extract_media_records applies it right after decode;
     identity for in-bounds payloads); the media://hires/ family stamps
     its glyphs on the surviving pixel lattice so tokens decode intact
     after the cap. Accepts gray (h, w) or color (h, w, 3) arrays."""
-    idx = decimation_indices(grid.shape[0], grid.shape[1], max_dim)
+    idx = decimation_indices(grid.shape[0], grid.shape[1], RESIZE_CAP)
     if idx is None:
         return grid
     ii, jj = idx

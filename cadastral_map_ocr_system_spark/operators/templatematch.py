@@ -57,31 +57,30 @@ TEMPLATE_MATCH_ARROW = pa.schema(
 def match_components(
     grid: np.ndarray,
     templates: dict[str, np.ndarray] | None = None,
-    threshold: float = MATCH_THRESHOLD,
-    min_area: int = MATCH_MIN_AREA,
-    size_range: tuple[int, int] = MATCH_SIZE_RANGE,
     resize_cache: dict | None = None,
 ) -> list[dict]:
-    """All (component, template) matches with score >= threshold,
-    sorted by (y, x, template). Score is exact agreement fraction, so
-    any engine reproduces it bit-for-bit.
+    """All (component, template) matches with score >= MATCH_THRESHOLD
+    among components of at least MATCH_MIN_AREA pixels whose bbox edges
+    lie within MATCH_SIZE_RANGE, sorted by (y, x, template). Score is
+    exact agreement fraction, so any engine reproduces it bit-for-bit.
 
     resize_cache: optional (template_name, h, w) -> resized-template
     memo. nn_resize is a pure function and candidate bboxes span only
-    size_range^2 distinct shapes, so a task-lifetime cache turns the
-    per-candidate resize (measured ~40% of this kernel's serial time)
+    MATCH_SIZE_RANGE^2 distinct shapes, so a task-lifetime cache turns
+    the per-candidate resize (measured ~40% of this kernel's serial time)
     into a dict hit; pass one dict per task from the Arrow closure."""
     from .normalize import invert_if_negative
 
     templates = TEMPLATES if templates is None else templates
     cache = {} if resize_cache is None else resize_cache
     grid = invert_if_negative(grid)
-    lo, hi = size_range
+    lo, hi = MATCH_SIZE_RANGE
     out = []
     comps = _components(grid)
     hs = comps.ymax - comps.ymin + 1
     ws = comps.xmax - comps.xmin
-    cand = (comps.area >= min_area) & (lo <= hs) & (hs <= hi) & (lo <= ws) & (ws <= hi)
+    in_range = (lo <= hs) & (hs <= hi) & (lo <= ws) & (ws <= hi)
+    cand = (comps.area >= MATCH_MIN_AREA) & in_range
     for k in np.flatnonzero(cand).tolist():
         mask = comps.crop(k)
         h, w = mask.shape
@@ -94,7 +93,7 @@ def match_components(
             if resized is None:
                 resized = cache[key] = nn_resize(t, h, w)
             score = int((resized == mask).sum()) / denom
-            if score >= threshold:
+            if score >= MATCH_THRESHOLD:
                 out.append(
                     {
                         "template": name,
@@ -109,34 +108,31 @@ def match_components(
 
 SHEET_CELL = 24  # glyph cell edge in a composed template sheet, px
 SHEET_MIN_AREA = 20  # contour noise gate (symbol_detector.py:72 analogue)
+SHEET_FILL = 200  # glyph ink value in a composed sheet
 
 
-def compose_template_sheet(
-    templates: dict[str, np.ndarray] | None = None, fill: int = 200
-) -> tuple[np.ndarray, list[str]]:
-    """Build a 'reference symbol sheet' image: one glyph per cell in a
-    single row band, alphabetical order (the fixture equivalent of the
-    reference's datasets/symbols sheet). Returns (sheet, names)."""
-    templates = TEMPLATES if templates is None else templates
-    names = sorted(templates)
+def compose_template_sheet() -> tuple[np.ndarray, list[str]]:
+    """Build a 'reference symbol sheet' image of TEMPLATES: one glyph
+    per cell in a single row band, alphabetical order (the fixture
+    equivalent of the reference's datasets/symbols sheet). Returns
+    (sheet, names)."""
+    names = sorted(TEMPLATES)
     sheet = np.zeros((SHEET_CELL, SHEET_CELL * len(names)), dtype=np.uint8)
     for i, name in enumerate(names):
-        t = templates[name]
+        t = TEMPLATES[name]
         y0 = (SHEET_CELL - t.shape[0]) // 2
         x0 = i * SHEET_CELL + (SHEET_CELL - t.shape[1]) // 2
-        sheet[y0 : y0 + t.shape[0], x0 : x0 + t.shape[1]][t] = fill
+        sheet[y0 : y0 + t.shape[0], x0 : x0 + t.shape[1]][t] = SHEET_FILL
     return sheet, names
 
 
-def slice_template_sheet(
-    sheet: np.ndarray, names: list[str], min_area: int = SHEET_MIN_AREA
-) -> dict[str, np.ndarray]:
+def slice_template_sheet(sheet: np.ndarray, names: list[str]) -> dict[str, np.ndarray]:
     """E5 template slicing (symbol_detector.py:35-84): binarize a
     symbol sheet, find its glyph components (contour analogue), crop
     each to its bbox mask, and assign names in left-to-right reading
     order. Round-trips compose_template_sheet exactly."""
     comps = _components(sheet)
-    glyphs = np.flatnonzero(comps.area >= min_area)
+    glyphs = np.flatnonzero(comps.area >= SHEET_MIN_AREA)
     # stable: equal (xmin, ymin) keep raster order
     glyphs = glyphs[np.lexsort((comps.ymin[glyphs], comps.xmin[glyphs]))]
     if len(glyphs) != len(names):
@@ -159,14 +155,14 @@ def template_match_rows(
     ]
 
 
-def template_match_features(media_spans_df, templates: dict | None = None):
+def template_match_features(media_spans_df):
     """DataFrame stage: exploded media spans -> template-match rows.
 
-    The template dict is broadcast once (sc.broadcast) and resolved
-    inside the Arrow closure — the J1 broadcast join, media side.
+    TEMPLATES is broadcast once (sc.broadcast) and resolved inside the
+    Arrow closure — the J1 broadcast join, media side.
     """
     spark = media_spans_df.sparkSession
-    bc = spark.sparkContext.broadcast(dict(templates or TEMPLATES))
+    bc = spark.sparkContext.broadcast(dict(TEMPLATES))
     # nn_resize memo: the closure is unpickled once per task, so each
     # task gets its own dict
     resize_cache: dict = {}

@@ -20,10 +20,10 @@ STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on"]
 TOKEN_SPLIT_RE = r"\s+"
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds a `tokens` array column (whitespace tokenization)."""
+def with_tokens(df: DataFrame) -> DataFrame:
+    """Adds a `tokens` array column (whitespace tokenization of `text`)."""
     return df.withColumn(
-        "tokens", F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
+        "tokens", F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)
     )
 
 
@@ -77,13 +77,17 @@ def quality_scores(df: DataFrame) -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, threshold: float = 0.05) -> DataFrame:
+#: lang_id predicts 'en' from this stopword ratio up
+LANG_EN_MIN_STOPWORD_RATIO = 0.05
+
+
+def lang_id(df: DataFrame) -> DataFrame:
     """N-gram-free stopword-hit language heuristic: predict 'en' when the
-    stopword ratio clears the threshold."""
+    stopword ratio clears LANG_EN_MIN_STOPWORD_RATIO."""
     q = quality_scores(df)
     return q.select(
         "doc_id",
-        F.when(F.col("stopword_ratio") >= threshold, F.lit("en"))
+        F.when(F.col("stopword_ratio") >= LANG_EN_MIN_STOPWORD_RATIO, F.lit("en"))
         .otherwise(F.lit("other"))
         .alias("lang_pred"),
     )
@@ -168,7 +172,7 @@ PII_PATTERNS = [
 ]
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Scrub crawl text before it can reach a training shard: replace
     emails, phone numbers, and IPv4 literals with typed placeholders
     (<EMAIL>, <PHONE>, <IPV4>) and count what was removed per doc.
@@ -180,7 +184,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Returns (doc_id, clean_text, n_email, n_phone, n_ipv4).
     """
-    cur = F.col(text_col)
+    cur = F.col("text")
     exprs = []
     for name, pat in PII_PATTERNS:
         # regexp_count matches the same non-overlapping occurrences as

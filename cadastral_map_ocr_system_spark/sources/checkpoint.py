@@ -5,9 +5,10 @@ a checkpoint table so the job resumes idempotently mid-run.
 
 Design (SURVEY.md §4.5, FIXTURES.md §3):
   - documents are hash-bucketed on doc_id into n_buckets partitions;
-  - resume = LEFT-ANTI JOIN of docs against the checkpoint table's
-    committed (run_id, partition_id) rows — already-done buckets are
-    never rescanned past the join;
+  - one per-bucket stats aggregate over the docs runs per call; the
+    pending buckets are its buckets minus the checkpoint table's
+    committed (run_id, partition_id) rows, and each commit group reads
+    only its own buckets;
   - output is written partitioned by bucket with dynamic partition
     overwrite, so re-running a half-written bucket REPLACES it (no
     duplicate rows possible);
@@ -74,7 +75,7 @@ def run_extraction(
     """Extract docs -> output_path, resumably.
 
     Safe to re-run with the same run_id after any crash: committed
-    buckets are skipped via anti-join; partially written buckets are
+    buckets are never read again; partially written buckets are
     overwritten whole.
     """
     # resume correctness REQUIRES dynamic partition overwrite: with the
@@ -86,16 +87,24 @@ def run_extraction(
 
     docs_b = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
 
-    committed = committed_partitions(spark, checkpoint_path, run_id)
-    # resume anti-join (north_rule): drop documents of committed buckets
-    pending_docs = docs_b.join(
-        committed.withColumnRenamed("partition_id", "bucket"),
-        "bucket",
-        "left_anti",
-    )
-    pending_buckets = sorted(
-        r["bucket"] for r in pending_docs.select("bucket").distinct().collect()
-    )
+    # one input-stats job per call: every non-empty bucket's lineage
+    # inputs (an empty bucket gets no row)
+    in_stats = {
+        r["bucket"]: r
+        for r in docs_b.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size("spans")).alias("n_spans"),
+            F.min("doc_id").alias("doc_id_min"),
+            F.max("doc_id").alias("doc_id_max"),
+        )
+        .collect()
+    }
+    committed = {
+        r["partition_id"]
+        for r in committed_partitions(spark, checkpoint_path, run_id).collect()
+    }
+    pending_buckets = sorted(set(in_stats) - committed)
 
     from ..operators.mediapath import read_tile_metrics
 
@@ -114,19 +123,7 @@ def run_extraction(
         # the per-(stage, partition) MAX-dedup would then double-count.
         # Each (re-)processing of a group starts from an empty dir.
         shutil.rmtree(tile_metrics_dir, ignore_errors=True)
-        sub = pending_docs.filter(F.col("bucket").isin(group))
-
-        in_stats = {
-            r["bucket"]: r
-            for r in sub.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                F.min("doc_id").alias("doc_id_min"),
-                F.max("doc_id").alias("doc_id_max"),
-            )
-            .collect()
-        }
+        sub = docs_b.filter(F.col("bucket").isin(group))
 
         result = extract(
             sub.drop("bucket"), tile_metrics_dir=tile_metrics_dir
@@ -161,10 +158,10 @@ def run_extraction(
             {
                 "run_id": run_id,
                 "partition_id": int(b),
-                "doc_id_min": in_stats[b]["doc_id_min"] if b in in_stats else None,
-                "doc_id_max": in_stats[b]["doc_id_max"] if b in in_stats else None,
-                "n_docs": int(in_stats[b]["n_docs"]) if b in in_stats else 0,
-                "n_spans": int(in_stats[b]["n_spans"] or 0) if b in in_stats else 0,
+                "doc_id_min": in_stats[b]["doc_id_min"],
+                "doc_id_max": in_stats[b]["doc_id_max"],
+                "n_docs": int(in_stats[b]["n_docs"]),
+                "n_spans": int(in_stats[b]["n_spans"] or 0),
                 "n_regions": int(out_stats[b]["n_regions"] or 0) if b in out_stats else 0,
                 "n_output_rows": int(out_stats[b]["n_output_rows"]) if b in out_stats else 0,
                 "n_tiles": int(n_tiles_group) if b == group[0] else 0,

@@ -108,13 +108,3 @@ def load(
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     return spread_small_scan(df, path) if spread else df
-
-
-def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
-    """Idempotent partition-grain write (resume-safe, SURVEY.md §4.5).
-
-    With spark.sql.sources.partitionOverwriteMode=dynamic (session.py),
-    re-writing a partition replaces exactly that partition — a re-run
-    of a half-written partition cannot duplicate rows.
-    """
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(path)

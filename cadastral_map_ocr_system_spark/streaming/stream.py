@@ -71,14 +71,44 @@ EVENTS_STREAM_SCHEMA = (
     "event_type string, value double, props string"
 )
 
+# event-time rules of the four event streams below: window width,
+# watermark delays, the dedup key, the attribution join's event types
+# and gap, and the session gap
+WINDOW = "1 hour"
+WINDOW_WATERMARK = "30 minutes"
+DEDUP_KEYS = ("event_id",)
+DEDUP_WATERMARK = "1 hour"
+JOIN_LEFT_TYPE = "view"
+JOIN_RIGHT_TYPE = "purchase"
+JOIN_MAX_GAP_MINUTES = 30
+JOIN_WATERMARK = "1 hour"
+SESSION_WATERMARK = "30 minutes"
+SESSION_GAP_MS = 1_800_000  # same 30-min rule as the batch sessionize
+
+
+def _events_source(spark: SparkSession, input_path: str) -> DataFrame:
+    """The streamed events directory, read with its explicit schema."""
+    return spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_path)
+
+
+def _append_sink(df: DataFrame, output_path: str, stream_checkpoint: str):
+    """Start an append-mode parquet sink that drains what is present
+    (availableNow) and stops; returns the StreamingQuery."""
+    return (
+        df.writeStream.outputMode("append")
+        .option("checkpointLocation", stream_checkpoint)
+        .trigger(availableNow=True)
+        .format("parquet")
+        .option("path", output_path)
+        .start()
+    )
+
 
 def stream_windowed_counts(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     stream_checkpoint: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
 ):
     """Event-time tumbling-window aggregation with a watermark over a
     streamed events directory: count + exact decimal sum per
@@ -97,10 +127,10 @@ def stream_windowed_counts(
     shuffled 100 TB stream is not reproducible across partitionings;
     decimal is exact and order-independent.
     """
-    events = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_path)
+    events = _events_source(spark, input_path)
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        events.withWatermark("ts", WINDOW_WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
@@ -114,14 +144,7 @@ def stream_windowed_counts(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", output_path)
-        .start()
-    )
+    return _append_sink(agg, output_path, stream_checkpoint)
 
 
 def stream_dedup(
@@ -129,13 +152,12 @@ def stream_dedup(
     input_path: str,
     output_path: str,
     stream_checkpoint: str,
-    keys: tuple[str, ...] = ("event_id",),
-    watermark: str = "1 hour",
 ):
-    """Streaming exact dedup on ingest: keep the first row per key
-    among arrivals within the watermark delay of each other
-    (dropDuplicatesWithinWatermark) — the streaming counterpart of
-    corpus_dedup.exact_dedup_survivors.
+    """Streaming exact dedup on ingest: keep the first row per
+    DEDUP_KEYS among arrivals within DEDUP_WATERMARK of each other
+    (dropDuplicatesWithinWatermark) — the streaming counterpart of the
+    batch exact-survivor rule (corpus_dedup.exact_dedup_survivor_docs),
+    keyed on event_id instead of a content fingerprint.
 
     The contract that makes this run forever in bounded state: per-key
     state is EVICTED once the watermark passes the key's event time
@@ -150,18 +172,11 @@ def stream_dedup(
     spanning two drains of the same checkpoint still dedup
     (test-pinned in tests/test_operators.py).
     """
-    events = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_path)
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-    return (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", output_path)
-        .start()
-    )
+    events = _events_source(spark, input_path)
+    deduped = events.withWatermark(
+        "ts", DEDUP_WATERMARK
+    ).dropDuplicatesWithinWatermark(list(DEDUP_KEYS))
+    return _append_sink(deduped, output_path, stream_checkpoint)
 
 
 def stream_interval_join(
@@ -169,14 +184,10 @@ def stream_interval_join(
     input_path: str,
     output_path: str,
     stream_checkpoint: str,
-    left_type: str = "view",
-    right_type: str = "purchase",
-    max_gap_minutes: int = 30,
-    watermark: str = "1 hour",
 ):
-    """Stream-stream inner interval join: pair each `right_type` event
-    with the same user's `left_type` events in the preceding
-    `max_gap_minutes` (the view->purchase attribution join).
+    """Stream-stream inner interval join: pair each JOIN_RIGHT_TYPE
+    event with the same user's JOIN_LEFT_TYPE events in the preceding
+    JOIN_MAX_GAP_MINUTES (the view->purchase attribution join).
 
     Both sides carry a watermark and the join predicate carries an
     explicit event-time range — the two things that let Spark bound
@@ -186,24 +197,24 @@ def stream_interval_join(
     would be an unbounded stateful join that OOMs by construction on
     an endless stream — the range is load-bearing, not a filter.
     """
-    events = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_path)
+    events = _events_source(spark, input_path)
     left = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == JOIN_LEFT_TYPE)
         .select(
             F.col("event_id").alias("left_id"),
             F.col("user_id").alias("left_user"),
             F.col("ts").alias("left_ts"),
         )
-        .withWatermark("left_ts", watermark)
+        .withWatermark("left_ts", JOIN_WATERMARK)
     )
     right = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == JOIN_RIGHT_TYPE)
         .select(
             F.col("event_id").alias("right_id"),
             F.col("user_id").alias("right_user"),
             F.col("ts").alias("right_ts"),
         )
-        .withWatermark("right_ts", watermark)
+        .withWatermark("right_ts", JOIN_WATERMARK)
     )
     joined = left.join(
         right,
@@ -211,7 +222,7 @@ def stream_interval_join(
         & (F.col("left_ts") <= F.col("right_ts"))
         & (
             F.col("right_ts")
-            <= F.col("left_ts") + F.expr(f"INTERVAL {max_gap_minutes} MINUTES")
+            <= F.col("left_ts") + F.expr(f"INTERVAL {JOIN_MAX_GAP_MINUTES} MINUTES")
         ),
         "inner",
     ).select(
@@ -221,17 +232,7 @@ def stream_interval_join(
         ((F.col("right_ts").cast("long") - F.col("left_ts").cast("long")))
         .alias("gap_sec"),
     )
-    return (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", output_path)
-        .start()
-    )
-
-
-SESSION_GAP_MS = 1_800_000  # same 30-min rule as the batch sessionize
+    return _append_sink(joined, output_path, stream_checkpoint)
 
 
 def _sessionize_group(key, pdfs, state):
@@ -304,7 +305,6 @@ def stream_sessionize(
     input_path: str,
     output_path: str,
     stream_checkpoint: str,
-    watermark: str = "30 minutes",
 ):
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user sessionization with the batch gap rule, event-time
@@ -313,9 +313,9 @@ def stream_sessionize(
     parquet sink exactly once."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    events = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(input_path)
+    events = _events_source(spark, input_path)
     sessions = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", SESSION_WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             _sessionize_group,
@@ -327,11 +327,4 @@ def stream_sessionize(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return (
-        sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", stream_checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", output_path)
-        .start()
-    )
+    return _append_sink(sessions, output_path, stream_checkpoint)

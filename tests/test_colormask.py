@@ -6,8 +6,8 @@ import numpy as np
 
 from cadastral_map_ocr_system_spark.functions.png import decode_png, encode_png_rgb
 from cadastral_map_ocr_system_spark.operators.colormask import (
-    color_coverage,
     color_coverage_features,
+    color_coverage_rows,
     color_mask,
     dominant_color,
     route_category,
@@ -40,7 +40,10 @@ def test_cleanup_removes_speckles_keeps_blocks():
 
 
 def test_coverage_ratios():
-    cov = color_coverage(_map_img())
+    cov = {
+        r["color"]: r["coverage"]
+        for r in color_coverage_rows("m-1", encode_png_rgb(_map_img()))
+    }
     area = 40 * 60
     assert abs(cov["red"] - 200 / area) < 1e-9
     assert abs(cov["black"] - 200 / area) < 1e-9

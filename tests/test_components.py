@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from cadastral_map_ocr_system_spark.operators import corpus_dedup
+from cadastral_map_ocr_system_spark.operators import components, corpus_dedup
 from cadastral_map_ocr_system_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -15,9 +15,9 @@ from cadastral_map_ocr_system_spark.operators.components import (
 )
 
 
-def _cc(spark, edges, **kwargs):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = connected_components(df, **kwargs)
+    out = connected_components(df)
     return {r["node"]: r["component"] for r in out.collect()}
 
 
@@ -44,12 +44,13 @@ def test_two_components_and_star_shape(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_long_chain_converges_in_log_rounds(spark):
+def test_long_chain_converges_in_log_rounds(spark, monkeypatch):
     # a 200-node path is the adversarial diameter case; the alternating
     # algorithm must contract it in O(log^2 n) rounds, far under the
-    # guard — a linear-propagation bug would blow max_iters
+    # guard — a linear-propagation bug would blow a 12-round cap
+    monkeypatch.setattr(components, "MAX_CC_ROUNDS", 12)
     n = 200
-    got = _cc(spark, [(i, i + 1) for i in range(n)], max_iters=12)
+    got = _cc(spark, [(i, i + 1) for i in range(n)])
     assert got == {i: 0 for i in range(n + 1)}
 
 
@@ -69,11 +70,12 @@ def test_string_node_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_max_iters_guard_raises(spark):
+def test_max_iters_guard_raises(spark, monkeypatch):
+    monkeypatch.setattr(components, "MAX_CC_ROUNDS", 1)
     df = spark.createDataFrame([(i, i + 1) for i in range(200)],
                                "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iters=1)
+        connected_components(df)
 
 
 def test_random_graphs_match_union_find(spark):

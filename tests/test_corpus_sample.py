@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cadastral_map_ocr_system_spark.operators import corpus_sample
 from cadastral_map_ocr_system_spark.operators.corpus_sample import (
     _md5_key,
     pack_shards,
@@ -50,7 +51,7 @@ def test_two_phase_equals_naive_definition(spark):
         assert got == want, n
 
 
-def test_sample_sizes_and_salt_invariance(spark):
+def test_sample_sizes_and_salt_invariance(spark, monkeypatch):
     docs = _docs(spark, _skewed_rows())
     out = stratified_sample(docs, 7).collect()
     by_lang = {}
@@ -62,7 +63,8 @@ def test_sample_sizes_and_salt_invariance(spark):
     assert sorted(by_lang["zh"]) == list(range(1, 4))
     # the salt count must not change the result (containment exactness)
     for s in (1, 3, 64):
-        assert sorted(map(tuple, stratified_sample(docs, 7, n_salts=s).collect())) \
+        monkeypatch.setattr(corpus_sample, "N_SALTS", s)
+        assert sorted(map(tuple, stratified_sample(docs, 7).collect())) \
             == sorted(map(tuple, out))
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 
 from cadastral_map_ocr_system_spark.operators import mediapath as mp
+from cadastral_map_ocr_system_spark.operators import normalize
 from cadastral_map_ocr_system_spark.operators.normalize import (
     contrast_stretch,
     invert_if_negative,
@@ -74,13 +75,15 @@ def test_contrast_stretch_properties():
     assert (contrast_stretch(full) == full).all()
 
 
-def test_resize_cap():
+def test_resize_cap(monkeypatch):
     g = np.zeros((400, 300), dtype=np.uint8)
     g[::4, ::4] = 200
-    r = resize_cap(g, max_dim=100)
+    monkeypatch.setattr(normalize, "RESIZE_CAP", 100)
+    r = resize_cap(g)
     assert max(r.shape) == 100
     assert r.shape == (100, 75)
-    assert resize_cap(g, max_dim=400) is g  # under cap: untouched
+    monkeypatch.setattr(normalize, "RESIZE_CAP", 400)
+    assert resize_cap(g) is g  # under cap: untouched
     assert set(np.unique(r)) <= set(np.unique(g))  # NN: no new values
 
 
@@ -149,7 +152,7 @@ def test_gradient_gate_does_not_fire_on_clean_payloads():
             assert seg is tok, (fam, i)  # passthrough: no remap
 
 
-def test_resize_cap_3d_and_hires_glyph_survival():
+def test_resize_cap_3d_and_hires_glyph_survival(monkeypatch):
     """P1 on the golden path (VERDICT r3 #4): hires payloads exceed
     RESIZE_CAP, decimate, and still yield the oracle's exact records
     through the full pipeline kernel (tokens stamped on the surviving
@@ -162,7 +165,9 @@ def test_resize_cap_3d_and_hires_glyph_survival():
 
     # 3-D (color) arrays decimate rows/cols, keep channels
     rgb = np.zeros((40, 30, 3), dtype=np.uint8)
-    assert resize_cap(rgb, max_dim=20).shape == (20, 15, 3)
+    with monkeypatch.context() as m:
+        m.setattr(normalize, "RESIZE_CAP", 20)
+        assert resize_cap(rgb).shape == (20, 15, 3)
 
     for i in range(3):
         ref = f"media://hires/doc-{i:012d}/0"

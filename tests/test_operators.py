@@ -76,7 +76,9 @@ def test_exact_dedup_survivors(spark):
         [(1, "same  text"), (2, "same text"), (3, "other words")],
         "doc_id long, text string",
     )
-    surv = sorted(r["doc_id"] for r in corpus_dedup.exact_dedup_survivors(df).collect())
+    surv = sorted(
+        r["doc_id"] for r in corpus_dedup.exact_dedup_survivor_docs(df).collect()
+    )
     assert surv == [1, 3]  # whitespace-normalized dup collapses to min id
 
 
@@ -95,32 +97,14 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_simhash_near_pairs(spark):
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
-    near = base.replace("kappa", "kappa", 1) + " lambda"
-    far = "completely different vocabulary with other tokens entirely " * 6
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], "doc_id long, text string"
-    )
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in corpus_dedup.simhash_near_pairs(df, bits=32, max_hamming=6).collect()
-    }
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs
-
-
 def test_exact_dedup_survivor_docs_matches_survivors(spark):
     df = spark.createDataFrame(
         [("a", "same  text"), ("b", "same text"), ("c", "other words"),
          ("d", "same\ttext")],
         "doc_id string, text string",
     )
-    via_window = sorted(
-        r["doc_id"] for r in corpus_dedup.exact_dedup_survivors(df).collect()
-    )
     docs = corpus_dedup.exact_dedup_survivor_docs(df).collect()
-    assert sorted(r["doc_id"] for r in docs) == via_window == ["a", "c"]
+    assert sorted(r["doc_id"] for r in docs) == ["a", "c"]
     texts = {r["doc_id"]: r["text"] for r in docs}
     assert texts["a"] == "same  text"  # representative keeps ITS raw text
 
@@ -199,22 +183,7 @@ def test_lsh_cap_no_recall_loss_on_normal_corpus(spark):
     assert not corpus_dedup.lsh_capped_buckets(df, max_bucket=64).collect()
 
 
-def test_simhash_degenerate_bucket_capped(spark):
-    n = 2000
-    df = _degenerate_near_dup_corpus(spark, n, extra_distinct=5)
-    pairs = corpus_dedup.simhash_near_pairs(
-        df, bits=32, max_hamming=3, max_bucket=64, pre_exact_dedup=False
-    ).collect()
-    # near-identical docs all fall within hamming<=3 of the min member:
-    # the star keeps the cluster connected with linear pairs
-    assert 0 < len(pairs) < 5 * n
-    report = corpus_dedup.simhash_capped_buckets(
-        df, bits=32, max_hamming=3, max_bucket=64, pre_exact_dedup=False
-    ).collect()
-    assert report and max(r["bucket_size"] for r in report) > 1000
-
-
-def test_embedding_near_dups_degenerate_cluster_capped(spark):
+def test_embedding_near_dups_degenerate_cluster_capped(spark, monkeypatch):
     """A tight embedding cluster puts thousands of vectors in ONE sign
     bucket; pair generation must stay linear (star cap), never the n^2
     self-join product — the defect the sf1 bench exposed (37x over
@@ -228,30 +197,33 @@ def test_embedding_near_dups_degenerate_cluster_capped(spark):
     vecs = center + 0.01 * rs.randn(3000, 16)
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(3000)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = ann.embedding_near_dups(df, threshold=0.2, n_dims=8, max_bucket=64).collect()
+    monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 64)
+    pairs = ann.embedding_near_dups(df, threshold=0.2, n_dims=8).collect()
     assert 0 < len(pairs) <= 2999  # star, not ~4.5M full pairs
     assert all(r["vec_a"] == 0 for r in pairs)  # star around min vec_id
-    ledger = ann.embedding_bucket_caps(df, n_dims=8, max_bucket=64).collect()
+    ledger = ann.embedding_bucket_caps(df, n_dims=8).collect()
     assert ledger and ledger[0]["bucket_size"] == 3000
     assert ledger[0]["pairs_suppressed"] == 3000 * 2999 // 2 - 2999
 
 
-def test_embedding_near_dups_cap_no_loss_on_normal_corpus(spark):
+def test_embedding_near_dups_cap_no_loss_on_normal_corpus(spark, monkeypatch):
     """Driver fixture sign buckets are tiny (~2-8 vectors): capped and
     uncapped results are identical."""
     from cadastral_map_ocr_system_spark.operators import ann
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 64)
     capped = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in ann.embedding_near_dups(emb, threshold=0.2, max_bucket=64).collect()
+        for r in ann.embedding_near_dups(emb, threshold=0.2).collect()
     }
+    assert not ann.embedding_bucket_caps(emb).collect()
+    monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 1 << 30)
     uncapped = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in ann.embedding_near_dups(emb, threshold=0.2, max_bucket=1 << 30).collect()
+        for r in ann.embedding_near_dups(emb, threshold=0.2).collect()
     }
     assert capped == uncapped and capped
-    assert not ann.embedding_bucket_caps(emb, max_bucket=64).collect()
 
 
 def test_lang_id_flags_stopword_text(spark):
@@ -307,7 +279,8 @@ def test_ivf_topk_exact_on_separated_clusters(spark):
 
     from cadastral_map_ocr_system_spark.operators.ann import (
         brute_force_topk,
-        ivf_topk,
+        ivf_assignments,
+        ivf_topk_from_index,
     )
 
     rng = random.Random(3)
@@ -317,9 +290,12 @@ def test_ivf_topk_exact_on_separated_clusters(spark):
         c = centers[i % 3]
         rows.append((i, [v + rng.uniform(-0.5, 0.5) for v in c]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    assigned, centroids = ivf_assignments(emb, n_clusters=3)
     got = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk(emb, n_queries=6, k=4, n_clusters=3, n_probe=1).collect()
+        for r in ivf_topk_from_index(
+            emb, assigned, centroids, n_queries=6, k=4, n_probe=1
+        ).collect()
     }
     want = {
         (r["query_id"], r["rank"]): r["vec_id"]
@@ -337,7 +313,8 @@ def test_pq_recall_on_separated_clusters(spark):
 
     from cadastral_map_ocr_system_spark.operators.ann import (
         brute_force_topk,
-        pq_topk,
+        pq_topk_from_index,
+        pq_train,
     )
 
     rng = random.Random(11)
@@ -349,7 +326,8 @@ def test_pq_recall_on_separated_clusters(spark):
         for i in range(120)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = pq_topk(emb, n_queries=6, k=4, m=4, n_codes=8).collect()
+    codebooks, codes = pq_train(emb, m=4, n_codes=8)
+    got = pq_topk_from_index(emb, codebooks, codes, n_queries=6, k=4).collect()
     # quantization collapses intra-cluster distances (every member of a
     # tight cluster shares the same codes, ranking degenerates to the
     # deterministic vec_id tie-break), so exact-neighbour overlap is
@@ -471,7 +449,7 @@ def test_stream_dedup_within_watermark_horizon(spark, tmp_path):
         ).parquet(in_p)
 
     def drain():
-        stream_dedup(spark, in_p, out_p, ck_p, watermark="1 hour").awaitTermination()
+        stream_dedup(spark, in_p, out_p, ck_p).awaitTermination()
 
     def ids():
         return sorted(r["event_id"] for r in spark.read.parquet(out_p).collect())

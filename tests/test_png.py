@@ -231,6 +231,9 @@ def test_illegal_header_combos_rejected():
         decode_png(_png_hdr(2, 2, 8, 5, 0, bytes(10)))
     with pytest.raises(ValueError, match="interlace method 2"):
         decode_png(_png_hdr(2, 2, 8, 0, 2, bytes(10)))
+    # zero width: 5 filter bytes, no samples
+    with pytest.raises(ValueError, match="dimensions 0x5"):
+        decode_png(_png_hdr(0, 5, 8, 0, 0, bytes(5)))
 
 
 def test_media_metadata_on_real_png(spark):
@@ -346,15 +349,21 @@ def test_bad_ihdr_length_raises_codec_error():
 def test_idat_bomb_rejected_before_inflating():
     """A 1x1 PNG whose IDAT inflates to ~50 MB is rejected as a length
     mismatch after inflating at most one byte past the 2 bytes its
-    IHDR implies (plain and Adam7 layouts). A forged IHDR implying a
-    raw size beyond a C ssize_t is a length mismatch too."""
+    IHDR implies (plain and Adam7 layouts). An IHDR declaring more than
+    MAX_PNG_PIXELS is rejected before inflating: a forged 2^32-1 square,
+    and a consistent 10000x10000 gray image whose ~100 MB of raw zeros
+    fit in a ~97 KB IDAT."""
     import tracemalloc
 
     bomb = zlib.compress(bytes(50_000_000), 9)
-    for w, h, depth, ctype, interlace, idat in (
-        (1, 1, 8, 0, 0, bomb),
-        (1, 1, 8, 0, 1, bomb),
-        (2**32 - 1, 2**32 - 1, 16, 6, 0, zlib.compress(bytes(5))),
+    z = zlib.compressobj(9)
+    row_block = bytes(100 * 10_001)  # 100 rows: filter byte + 10000 samples
+    big = b"".join(z.compress(row_block) for _ in range(100)) + z.flush()
+    for w, h, depth, ctype, interlace, idat, err in (
+        (1, 1, 8, 0, 0, bomb, "IDAT length mismatch"),
+        (1, 1, 8, 0, 1, bomb, "IDAT length mismatch"),
+        (2**32 - 1, 2**32 - 1, 16, 6, 0, zlib.compress(bytes(5)), "dimensions"),
+        (10_000, 10_000, 8, 0, 0, big, "dimensions 10000x10000"),
     ):
         ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace)
         p = (
@@ -365,7 +374,7 @@ def test_idat_bomb_rejected_before_inflating():
         )
         tracemalloc.start()
         try:
-            with pytest.raises(ValueError, match="IDAT length mismatch"):
+            with pytest.raises(ValueError, match=err):
                 decode_png(p)
             peak = tracemalloc.get_traced_memory()[1]
         finally:

@@ -10,6 +10,7 @@ from cadastral_map_ocr_system_spark import oracle, synth
 from cadastral_map_ocr_system_spark.schema import DOCS
 from cadastral_map_ocr_system_spark.sources.checkpoint import (
     SimulatedFailure,
+    bucket_of,
     read_extracted,
     run_extraction,
 )
@@ -68,6 +69,27 @@ def test_resume_idempotent(spark, tmp_path):
     assert totals["o"] == N_DOCS  # one output row per doc
     # E3 tiling lineage: skew docs (media://big payloads) were tiled
     assert totals["t"] > 0
+
+    # per-bucket input stats equal a direct aggregate over the input,
+    # for the buckets committed before the crash and after the resume
+    want = {
+        r["bucket"]: (r["n_docs"], r["n_spans"], r["doc_id_min"], r["doc_id_max"])
+        for r in docs.groupBy(bucket_of(F.col("doc_id"), 8).alias("bucket"))
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size("spans")).alias("n_spans"),
+            F.min("doc_id").alias("doc_id_min"),
+            F.max("doc_id").alias("doc_id_max"),
+        )
+        .collect()
+    }
+    lineage = {
+        r["partition_id"]: (
+            r["n_docs"], r["n_spans"], r["doc_id_min"], r["doc_id_max"]
+        )
+        for r in ck2.collect()
+    }
+    assert lineage == want
 
 
 def test_rerun_after_success_is_noop(spark, tmp_path):

@@ -2,13 +2,14 @@
 tiled and untiled segmentation must produce IDENTICAL region lists for
 payloads whose components respect the containment contract (max
 component dimension <= TILE_SIZE - TILE_STRIDE - 2*margin), and the
-coverage-skip must be counted. Tiling engages only above MAX_UNTILED
+empty-tile skip must be counted. Tiling engages only above MAX_UNTILED
 (it is a per-task memory bound, not a speed-up)."""
 
 from __future__ import annotations
 
 import numpy as np
 
+from cadastral_map_ocr_system_spark.operators import mediapath
 from cadastral_map_ocr_system_spark.operators.mediapath import (
     MAX_UNTILED,
     TILE_SIZE,
@@ -37,16 +38,17 @@ def test_tiled_equals_untiled_on_huge_payloads():
         assert extract_regions_tiled(grid) == extract_regions(grid)
 
 
-def test_tiled_equals_untiled_when_forced_on_big_payloads():
-    """max_untiled=0 forces tiling on the 240x320 skew payloads too —
+def test_tiled_equals_untiled_when_forced_on_big_payloads(monkeypatch):
+    """MAX_UNTILED=0 forces tiling on the 240x320 skew payloads too —
     equality must hold at any threshold."""
+    monkeypatch.setattr(mediapath, "MAX_UNTILED", 0)
     for i in range(15):
         grid = decode_payload(media_payload(f"media://big/doc-{i:012d}/0"))
-        assert extract_regions_tiled(grid, max_untiled=0) == extract_regions(grid)
+        assert extract_regions_tiled(grid) == extract_regions(grid)
         # with opening on, too (the golden-path configuration)
-        assert extract_regions_tiled(
-            grid, max_untiled=0, open_mask=True
-        ) == extract_regions(grid, open_mask=True)
+        assert extract_regions_tiled(grid, open_mask=True) == extract_regions(
+            grid, open_mask=True
+        )
 
 
 def test_big_payloads_take_single_pass_by_default():
@@ -57,26 +59,18 @@ def test_big_payloads_take_single_pass_by_default():
     assert stats == {"n_tiles": 1, "n_tiles_skipped": 0}
 
 
-def test_tiling_skip_counted():
-    """A mostly-empty canvas with one far-corner region: empty tiles are
-    skipped (lossless at min_coverage=0) and counted."""
+def test_tiling_skip_counted(monkeypatch):
+    """A mostly-empty canvas with one far-corner region: tiles with no
+    foreground pixel are skipped (lossless) and counted."""
+    monkeypatch.setattr(mediapath, "MAX_UNTILED", 0)
     g = np.zeros((512, 512), dtype=np.uint8)
     g[500:508, 500:512] = FILL  # area 96 >= MIN_AREA, token-less
     stats: dict = {}
-    regs = extract_regions_tiled(g, stats=stats, max_untiled=0)
+    regs = extract_regions_tiled(g, stats=stats)
     assert [(r["ymin"], r["xmin"]) for r in regs] == [(500, 500)]
     assert stats["n_tiles"] == 9  # 3x3 grid: starts 0,192,384
     assert 0 < stats["n_tiles_skipped"] < stats["n_tiles"]
     assert regs == extract_regions(g)
-
-
-def test_lossy_coverage_threshold_skips_sparse_tiles():
-    g = np.zeros((512, 512), dtype=np.uint8)
-    g[10:18, 10:22] = FILL  # ~0.15% of a 256x256 tile
-    stats: dict = {}
-    regs = extract_regions_tiled(g, min_coverage=0.10, stats=stats, max_untiled=0)
-    assert regs == []  # reference's 10% heuristic is lossy by design
-    assert stats["n_tiles_skipped"] == stats["n_tiles"]
 
 
 def test_oversized_component_triggers_untiled_fallback():
