@@ -20,8 +20,28 @@ from pyspark.sql import functions as F
 
 from . import corpus_dedup
 
-#: KMeans iteration cap of the IVF quantizer and of every PQ subspace
+#: the search rule of every top-k entry point: vec_ids below N_QUERIES
+#: are the queries, each gets its TOP_K nearest neighbours
+N_QUERIES = 10
+TOP_K = 5
+
+#: sign-pattern width of the LSH bucket key, and the cosine from which
+#: two vectors in one bucket are near duplicates
+N_DIMS = 8
+NEAR_DUP_THRESHOLD = 0.2
+
+#: KMeans iteration cap and seed of the IVF quantizer and of every PQ
+#: subspace (subspace s trains with KMEANS_SEED + s)
 KMEANS_MAX_ITER = 10
+KMEANS_SEED = 7
+
+#: IVF coarse-quantizer size and the buckets each query probes
+N_CLUSTERS = 8
+N_PROBE = 2
+
+#: PQ subspaces per vector and codes per subspace
+PQ_M = 8
+PQ_N_CODES = 16
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -36,6 +56,29 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b))
 
 
+def _queries(emb: DataFrame, *extra: Column) -> DataFrame:
+    """(query_id, q, *extra): the query side of every search, the
+    vectors with vec_id < N_QUERIES."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"), *extra
+    )
+
+
+def _rank(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """(query_id, vec_id, score, rank): the k best rows per query by
+    (score desc, vec_id asc) — one row_number window."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("vec_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "vec_id", score_col, F.col("rank").cast("int").alias("rank")
+        )
+    )
+
+
 def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     """Two-phase per-query top-k (VERDICT r5 "What's wrong" #1).
 
@@ -46,7 +89,7 @@ def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     spark_partition_id()) — the partial aggregation completes map-side
     because every group lives in exactly one input partition, so the
     exchange carries <= partitions x queries x k rows); phase 2 is the
-    original row_number window over that bounded set. Both phases use
+    `_rank` over that bounded set. Both phases use
     the same total order (score desc, vec_id asc; the struct sorts
     ascending by (score, -vec_id) and is reversed, and double NaN
     orders greater-than-everything on both paths), so any global
@@ -66,31 +109,18 @@ def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
         F.col("e.vec_id").alias("vec_id"),
         F.col("e.s").alias(score_col),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_col).desc(), F.col("vec_id")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", score_col, F.col("rank").cast("int").alias("rank")
-        )
-    )
+    return _rank(pruned, score_col, k)
 
 
-def brute_force_topk(
-    emb: DataFrame, n_queries: int = 10, k: int = 5
-) -> DataFrame:
-    """Exact cosine top-k: the first n_queries vec_ids (by id) probe the
+def brute_force_topk(emb: DataFrame) -> DataFrame:
+    """Exact cosine top-k: the first N_QUERIES vec_ids (by id) probe the
     whole corpus. Query side is broadcast — never a shuffle of the big
     side. Per-side norms are computed ONCE (corpus row / broadcast
     query row) instead of per pair, so each pair pays one dot-product
     fold, not three; cos = dot/sqrt(qn2*en2) multiplies the identical
     values in the identical order as the inline form."""
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        _dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
+    queries = _queries(
+        emb, _dot(F.col("embedding"), F.col("embedding")).alias("qn2")
     )
     corpus = emb.select(
         "vec_id", "embedding", _dot(F.col("embedding"), F.col("embedding")).alias("en2")
@@ -107,40 +137,34 @@ def brute_force_topk(
             6,
         ).alias("cos_sim"),
     )
-    return _topk_per_query(scored, "cos_sim", k)
+    return _topk_per_query(scored, "cos_sim", TOP_K)
 
 
-def sign_bucket(vec: Column, n_dims: int = 8) -> Column:
-    """LSH bucket key: sign pattern of the first n_dims components."""
+def sign_bucket(vec: Column) -> Column:
+    """LSH bucket key: sign pattern of the first N_DIMS components."""
     signs = [
         F.when(F.element_at(vec, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_dims)
+        for i in range(N_DIMS)
     ]
     return F.concat(*signs)
 
 
-def lsh_bucketed_topk(
-    emb: DataFrame, n_queries: int = 10, k: int = 5, n_dims: int = 8
-) -> DataFrame:
+def lsh_bucketed_topk(emb: DataFrame) -> DataFrame:
     """Approximate top-k: compare only within the query's sign bucket.
 
     Kept the round-5 shape DELIBERATELY after measuring the round-6
     variants: a corpus-side norm precompute pays one fold for EVERY
-    row, but the bucket join scores only ~corpus/2^n_dims of them, so
+    row, but the bucket join scores only ~corpus/2^N_DIMS of them, so
     inline per-pair cosine does strictly less fold work here (the
     opposite trade from brute_force_topk, where every row is scored
-    n_queries times); and the explicit two-phase top-k was a net cost
+    N_QUERIES times); and the explicit two-phase top-k was a net cost
     because the window input is already bucket-pruned and Spark's
     partial-mode WindowGroupLimit bounds the exchange (VERDICT r5
     marked this entry point optional)."""
     with_bucket = emb.select(
-        "vec_id", "embedding", sign_bucket(F.col("embedding"), n_dims).alias("bucket")
+        "vec_id", "embedding", sign_bucket(F.col("embedding")).alias("bucket")
     )
-    queries = with_bucket.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        F.col("bucket").alias("qbucket"),
-    )
+    queries = _queries(with_bucket, F.col("bucket").alias("qbucket"))
     pairs = with_bucket.join(
         F.broadcast(queries),
         (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
@@ -150,20 +174,11 @@ def lsh_bucketed_topk(
         "vec_id",
         F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank(scored, "cos_sim", TOP_K)
 
 
-def ivf_assignments(
-    emb: DataFrame, n_clusters: int = 8, seed: int = 7
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: distributed KMeans (pyspark.ml) over the
+def ivf_assignments(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer: distributed KMeans (N_CLUSTERS) over the
     corpus. Returns (assignments(vec_id, bucket), centroids(bucket,
     centroid array<double>)) — materialize these once, then any engine
     can run the probe/rank search deterministically (the training is
@@ -175,7 +190,7 @@ def ivf_assignments(
     vecs = emb.select(
         "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_clusters, seed=seed, maxIter=KMEANS_MAX_ITER).fit(vecs)
+    model = KMeans(k=N_CLUSTERS, seed=KMEANS_SEED, maxIter=KMEANS_MAX_ITER).fit(vecs)
     assigned = model.transform(vecs).select(
         "vec_id", F.col("prediction").alias("bucket")
     )
@@ -187,22 +202,15 @@ def ivf_assignments(
 
 
 def ivf_topk_from_index(
-    emb: DataFrame,
-    assignments: DataFrame,
-    centroids: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_probe: int = 2,
+    emb: DataFrame, assignments: DataFrame, centroids: DataFrame
 ) -> DataFrame:
     """IVF search over a materialized index: each query ranks the
-    centroids by cosine, probes its n_probe nearest buckets, and runs
+    centroids by cosine, probes its N_PROBE nearest buckets, and runs
     exact cosine top-k within them. Centroids and queries broadcast;
     the corpus joins on its bucket key — the IVF scale shape (scan
-    fraction ~ n_probe / n_clusters)."""
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        _dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
+    fraction ~ N_PROBE / N_CLUSTERS)."""
+    queries = _queries(
+        emb, _dot(F.col("embedding"), F.col("embedding")).alias("qn2")
     )
     qc = queries.crossJoin(F.broadcast(centroids)).select(
         "query_id",
@@ -214,7 +222,7 @@ def ivf_topk_from_index(
     wq = Window.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("bucket"))
     probes = (
         qc.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
+        .filter(F.col("crank") <= N_PROBE)
         .select("query_id", "q", "qn2", "bucket")
     )
     # assignments are (vec_id, bucket) — narrow; broadcast them so the
@@ -237,15 +245,15 @@ def ivf_topk_from_index(
             6,
         ).alias("cos_sim"),
     )
-    return _topk_per_query(scored, "cos_sim", k)
+    return _topk_per_query(scored, "cos_sim", TOP_K)
 
 
-def _sign_buckets(emb: DataFrame, n_dims: int) -> DataFrame:
+def _sign_buckets(emb: DataFrame) -> DataFrame:
     """(bucket, members): sign-bucketed vectors with members as the
     sorted array of (vec_id, embedding) structs — shared by the
     near-dup pair generator and its cap ledger."""
     with_bucket = emb.select(
-        "vec_id", "embedding", sign_bucket(F.col("embedding"), n_dims).alias("bucket")
+        "vec_id", "embedding", sign_bucket(F.col("embedding")).alias("bucket")
     )
     return with_bucket.groupBy("bucket").agg(
         F.array_sort(
@@ -254,11 +262,9 @@ def _sign_buckets(emb: DataFrame, n_dims: int) -> DataFrame:
     )
 
 
-def embedding_near_dups(
-    emb: DataFrame, threshold: float = 0.95, n_dims: int = 8
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, bucket-blocked by the
-    sign-pattern key.
+def embedding_near_dups(emb: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (cosine >=
+    NEAR_DUP_THRESHOLD), bucket-blocked by the sign-pattern key.
 
     Pair generation is a groupBy(bucket) + in-bucket capped array
     expansion — NOT a bucket self-join. A self-join hash-matches every
@@ -271,7 +277,7 @@ def embedding_near_dups(
     min vec_id (linear, connectivity preserved — same guard as
     corpus_dedup; see its module docstring); audit with
     `embedding_bucket_caps`, empty unless the cap engaged."""
-    buckets = _sign_buckets(emb, n_dims)
+    buckets = _sign_buckets(emb)
     capped = corpus_dedup._capped_pairs("members", corpus_dedup.DEFAULT_MAX_BUCKET)
     pairs = (
         buckets.filter(F.size("members") >= 2)
@@ -284,34 +290,29 @@ def embedding_near_dups(
             ).alias("cos_sim"),
         )
     )
-    return pairs.filter(F.col("cos_sim") >= threshold)
+    return pairs.filter(F.col("cos_sim") >= NEAR_DUP_THRESHOLD)
 
 
-def embedding_bucket_caps(emb: DataFrame, n_dims: int = 8) -> DataFrame:
+def embedding_bucket_caps(emb: DataFrame) -> DataFrame:
     """No-silent-caps ledger for `embedding_near_dups`: one row per
     sign bucket the star-pair cap touched, with suppressed-pair
     counts."""
     return corpus_dedup._cap_report(
-        _sign_buckets(emb, n_dims), "members", corpus_dedup.DEFAULT_MAX_BUCKET
+        _sign_buckets(emb), "members", corpus_dedup.DEFAULT_MAX_BUCKET
     )
 
 
 # ------------------------------------------------------ product quantization
-def pq_train(
-    emb: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 7,
-) -> tuple[DataFrame, DataFrame]:
+def pq_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebooks + codes (Jegou, Douze & Schmid,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
-    split each d-dim vector into m contiguous subspaces,
-    KMeans(n_codes) per subspace (pyspark.ml, distributed), encode
-    every vector as its m nearest sub-centroid ids.
+    split each d-dim vector into PQ_M contiguous subspaces,
+    KMeans(PQ_N_CODES) per subspace (pyspark.ml, distributed), encode
+    every vector as its PQ_M nearest sub-centroid ids.
 
     Returns (codebooks(subspace, code, centroid array<double>),
-    codes(vec_id, codes array<int>[m])). The codes table is the
-    compressed corpus — m bytes/vector at n_codes<=256 instead of 4d —
+    codes(vec_id, codes array<int>[PQ_M])). The codes table is the
+    compressed corpus — PQ_M bytes/vector at PQ_N_CODES<=256 instead of 4d —
     and, like ivf_assignments, is materialized ONCE; any engine can
     then run the ADC search below deterministically."""
     from functools import reduce
@@ -320,6 +321,7 @@ def pq_train(
     from pyspark.ml.functions import array_to_vector
 
     spark = emb.sparkSession
+    m = PQ_M
     d = len(emb.select("embedding").first()[0])
     if d % m != 0:
         # no-silent-caps convention (ADVICE r5): truncating the tail
@@ -337,7 +339,9 @@ def pq_train(
                 F.slice(F.col("embedding").cast("array<double>"), s * sub + 1, sub)
             ).alias("features"),
         )
-        model = KMeans(k=n_codes, seed=seed + s, maxIter=KMEANS_MAX_ITER).fit(vecs)
+        model = KMeans(
+            k=PQ_N_CODES, seed=KMEANS_SEED + s, maxIter=KMEANS_MAX_ITER
+        ).fit(vecs)
         cb_rows += [
             (s, i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())
@@ -360,14 +364,13 @@ def pq_topk_from_index(
     emb: DataFrame,
     codebooks: DataFrame,
     codes: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
+    k: int = TOP_K,
 ) -> DataFrame:
     """Asymmetric-distance PQ search over a materialized index:
     approximate cosine(query, vector) with the vector replaced by its
     concatenated sub-centroids, computed as per-query LOOKUP TABLES.
 
-    The 100 TB shape: each query precomputes one m x n_codes table of
+    The 100 TB shape: each query precomputes one PQ_M x PQ_N_CODES table of
     sub-dot-products (tiny, built from the broadcast codebook), the
     codes scan is the ONLY pass over the corpus, and scoring is a
     narrow zip_with/element_at fold per row — no join on the corpus
@@ -375,13 +378,11 @@ def pq_topk_from_index(
     fixed subspace order, so the SQL oracle reproduces them
     bit-for-bit (list_reduce over an ORDER BY subspace list)."""
     # one tiny collect instead of a distinct job + a first job: the
-    # codebook is m x n_codes rows by construction
+    # codebook is PQ_M x PQ_N_CODES rows by construction
     cb_meta = codebooks.select("subspace", F.size("centroid").alias("w")).collect()
     m = len({r["subspace"] for r in cb_meta})
     sub = cb_meta[0]["w"]
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
+    queries = _queries(emb)
     qd = queries.crossJoin(F.broadcast(codebooks)).select(
         "query_id",
         "q",
@@ -431,7 +432,7 @@ def pq_topk_from_index(
     # the reconstruction norm depends only on the row's codes, not on
     # the query: fold it ONCE per corpus row (before the per-query
     # expansion) instead of once per (row, query) pair — halves the
-    # lookup-table fold work for n_queries >= 2 with bit-identical
+    # lookup-table fold work for N_QUERIES >= 2 with bit-identical
     # sums (same values, same fold order)
     with_norm = codes.crossJoin(F.broadcast(norm_row)).select(
         "vec_id", "codes", lut(F.col("norm_tables")).alias("cnorm2")
@@ -456,25 +457,21 @@ def pq_refined_topk(
     emb: DataFrame,
     codebooks: DataFrame,
     codes: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
     refine: int = 4,
 ) -> DataFrame:
     """PQ search with an exact re-rank (the production shape): the ADC
-    pass shortlists refine*k candidates per query from the COMPRESSED
+    pass shortlists refine*TOP_K candidates per query from the COMPRESSED
     corpus, then only those rows' full vectors are fetched (an equi-
     join on vec_id — selective, pushdown-friendly) and re-scored with
     exact cosine. Recall approaches brute force while the full-vector
-    reads stay O(n_queries * refine * k) instead of O(corpus)."""
-    # the shortlist is O(n_queries * refine * k) rows — BROADCAST it so
-    # the full-vector fetch streams the corpus through a broadcast-hash
-    # join instead of shuffling it by vec_id
-    shortlist = pq_topk_from_index(
-        emb, codebooks, codes, n_queries=n_queries, k=refine * k
-    ).select("query_id", "vec_id")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
+    reads stay O(N_QUERIES * refine * TOP_K) instead of O(corpus)."""
+    # the shortlist is O(N_QUERIES * refine * TOP_K) rows — BROADCAST it
+    # so the full-vector fetch streams the corpus through a
+    # broadcast-hash join instead of shuffling it by vec_id
+    shortlist = pq_topk_from_index(emb, codebooks, codes, k=refine * TOP_K).select(
+        "query_id", "vec_id"
     )
+    queries = _queries(emb)
     fetched = F.broadcast(shortlist).join(emb, "vec_id").join(
         F.broadcast(queries), "query_id"
     )
@@ -485,13 +482,4 @@ def pq_refined_topk(
     )
     # the input is already the shortlist (bounded), so a single
     # row_number window is the right shape here — no partial phase
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank")
-        )
-    )
+    return _rank(scored, "cos_sim", TOP_K)

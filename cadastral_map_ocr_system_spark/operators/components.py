@@ -182,13 +182,7 @@ def _cluster_stages(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         reps.select("fingerprint", "rep"), "fingerprint"
     ).select("doc_id", "rep")
     edges = corpus_dedup.lsh_jaccard_pairs(
-        reps.select(F.col("rep").alias("doc_id"), "text"),
-        k=corpus_dedup.K,
-        threshold=corpus_dedup.THRESHOLD,
-        n_hashes=corpus_dedup.N_HASHES,
-        bands=corpus_dedup.BANDS,
-        max_bucket=corpus_dedup.DEFAULT_MAX_BUCKET,
-        pre_exact_dedup=False,
+        reps.select(F.col("rep").alias("doc_id"), "text"), pre_exact_dedup=False
     )
     return reps, doc_rep, edges
 
@@ -213,7 +207,7 @@ def dedup_clusters(df: DataFrame) -> DataFrame:
     Composition (each stage is the already-scale-audited path):
       1. exact fingerprint groups -> every doc's min-doc_id
          representative (map-side-partial groupBy, corpus_dedup);
-      2. LSH-gated exact Jaccard >= threshold over the representatives
+      2. LSH-gated exact Jaccard >= THRESHOLD over the representatives
          (capped buckets, star fallback) -> near-dup edges;
       3. alternating-algorithm connected components over the edges;
       4. docs rejoin through their representative; representatives in

@@ -71,15 +71,21 @@ from .textstats import TOKEN_SPLIT_RE, fingerprint, fingerprints
 #: never expand quadratically inside one task.
 DEFAULT_MAX_BUCKET = 64
 
-#: the near-dup rule of the duplicate-cluster pipeline and the dedup
-#: index: word K-gram shingles, N_HASHES minhashes in BANDS bands, exact
-#: Jaccard >= THRESHOLD. One set of values, so an index and every batch
-#: probed against it band alike. components and dedup_index read them
-#: at call time; the defaults of the lsh_* functions bind at import.
+#: the near-dup rule of every LSH entry point, the duplicate-cluster
+#: pipeline and the dedup index: word K-gram shingles, N_HASHES
+#: minhashes in BANDS bands, exact Jaccard >= THRESHOLD. One set of
+#: values, so an index and every batch probed against it band alike.
+#: Read at call time (tests monkeypatch them).
 K = 3
 N_HASHES = 16
 BANDS = 4
 THRESHOLD = 0.05
+
+#: SimHash fingerprint width, and the shingle width of the
+#: decontamination rule (long n-grams: a shared 8-gram is evidence of
+#: copying, a shared 3-gram is not)
+SIMHASH_BITS = 32
+CONTAMINATION_K = 8
 
 
 def _pairs_expr(ids: str) -> str:
@@ -220,10 +226,8 @@ def shingle_rows(df: DataFrame, k: int = 3) -> DataFrame:
 
 
 # ------------------------------------------------------ n-gram Jaccard
-def _jaccard_over_pair_sets(
-    pairs: DataFrame, docs: DataFrame, k: int, threshold: float
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard): exact word k-gram Jaccard >= threshold
+def _jaccard_over_pair_sets(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard): exact word K-gram Jaccard >= THRESHOLD
     for given (doc_a, doc_b) pairs over per-document shingle SETS
     (array form) of `docs`. The one Jaccard verify: the LSH path and
     the incremental index both call it, and both hand it a candidate
@@ -239,7 +243,7 @@ def _jaccard_over_pair_sets(
     AQE's exchange reuse does not fully dedup — so the set table is
     built over all of `docs`, where the construction is one narrow
     pass.)"""
-    sets_ = shingle_sets(docs, k)
+    sets_ = shingle_sets(docs, K)
     a = sets_.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
     )
@@ -260,22 +264,15 @@ def _jaccard_over_pair_sets(
                 6,
             ).alias("jaccard"),
         )
-        .filter((F.col("n_common") >= 1) & (F.col("jaccard") >= threshold))
+        .filter((F.col("n_common") >= 1) & (F.col("jaccard") >= THRESHOLD))
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def lsh_jaccard_pairs(
-    df: DataFrame,
-    k: int = K,
-    threshold: float = THRESHOLD,
-    n_hashes: int = N_HASHES,
-    bands: int = BANDS,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    pre_exact_dedup: bool = True,
-) -> DataFrame:
-    """The corpus-scale near-dup detector: exact word k-gram Jaccard,
-    computed ONLY for MinHash-LSH candidate pairs. Candidate count is
+def lsh_jaccard_pairs(df: DataFrame, pre_exact_dedup: bool = True) -> DataFrame:
+    """The corpus-scale near-dup detector: exact word K-gram Jaccard >=
+    THRESHOLD, computed ONLY for MinHash-LSH candidate pairs (capped at
+    DEFAULT_MAX_BUCKET). Candidate count is
     ~linear in the number of near-dup clusters, so the exact-verify join
     touches a vanishing fraction of the corpus — this is the plan that
     survives 100 TB (the reference's similarity dedup is all-pairs
@@ -288,26 +285,23 @@ def lsh_jaccard_pairs(
     the corpus is never shuffled on shingle text."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
     cand = lsh_candidate_pairs(
-        docs, n_hashes=n_hashes, bands=bands, k=k,
-        max_bucket=max_bucket, pre_exact_dedup=False,
+        docs, max_bucket=DEFAULT_MAX_BUCKET, pre_exact_dedup=False
     )
-    return _jaccard_over_pair_sets(cand, docs, k, threshold)
+    return _jaccard_over_pair_sets(cand, docs)
 
 
 # -------------------------------------------------------- MinHash + LSH
-def minhash_sig_cols(
-    df: DataFrame, n_hashes: int = N_HASHES, k: int = K
-) -> DataFrame:
-    """(doc_id, h0..h{n-1}): the fused minhash signature — one
-    groupBy(doc_id) with n_hashes MIN aggregates over exploded shingle
+def minhash_sig_cols(df: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{N_HASHES-1}): the fused minhash signature — one
+    groupBy(doc_id) with N_HASHES MIN aggregates over exploded shingle
     rows. The per-seed md5s run in whole-stage-codegen'd projection and
     collapse map-side via partial aggregation, so the exchange carries
-    one narrow row per document. (An array-native variant — n_hashes
+    one narrow row per document. (An array-native variant — N_HASHES
     array_min(transform(md5)) folds per row — was measured 2.6x SLOWER
     at sf1: higher-order-function lambdas evaluate interpreted, and
     16 x shingles md5 calls dominate this operator; keeping them in
     codegen beats saving the already-narrow exchange.)"""
-    sh = shingle_rows(df, k)
+    sh = shingle_rows(df, K)
     # two per-task micro-optimizations, both value-identical (verified
     # exceptAll == 0 on the bench corpus; guide §1.2 per-task work):
     #   - the "seed|" prefix is constant-folded into one literal
@@ -319,40 +313,38 @@ def minhash_sig_cols(
     #     hex+lower per doc restores the exact oracle string.
     # expressions are built as SQL strings (one py4j roundtrip each)
     # rather than nested Column calls (~6 roundtrips each): DataFrame
-    # CONSTRUCTION time is part of every timed run, and the n_hashes
+    # CONSTRUCTION time is part of every timed run, and the N_HASHES
     # generated aggregates made it material (guide §1.2; measured on
     # the bench corpus).
     mins = [
         F.expr(
             f"lower(hex(min(unhex(md5(concat('{s}|', shingle)))))) AS h{s}"
         )
-        for s in range(n_hashes)
+        for s in range(N_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*mins)
 
 
-def band_hash_structs(n_hashes: int, bands: int):
-    """array<struct<band, band_hash>> over signature columns h0..hN —
-    row-local banding. Built as one SQL string (see minhash_sig_cols on
-    construction cost)."""
-    rpb = n_hashes // bands
+def band_hash_structs():
+    """array<struct<band, band_hash>> over signature columns
+    h0..h{N_HASHES-1}, BANDS bands — row-local banding. Built as one
+    SQL string (see minhash_sig_cols on construction cost)."""
+    rpb = N_HASHES // BANDS
     entries = ", ".join(
         "named_struct('band', {b}, 'band_hash', md5(concat_ws(',', {cols})))".format(
             b=b, cols=", ".join(f"h{b * rpb + j}" for j in range(rpb))
         )
-        for b in range(bands)
+        for b in range(BANDS)
     )
     return F.expr(f"array({entries})")
 
 
-def lsh_postings(
-    df: DataFrame, n_hashes: int = N_HASHES, bands: int = BANDS, k: int = K
-) -> DataFrame:
+def lsh_postings(df: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash): one banded-LSH posting row per
     document and band — the form the dedup index stores and probes."""
-    sig = minhash_sig_cols(df, n_hashes=n_hashes, k=k)
+    sig = minhash_sig_cols(df)
     return sig.select(
-        "doc_id", F.explode(band_hash_structs(n_hashes, bands)).alias("bb")
+        "doc_id", F.explode(band_hash_structs()).alias("bb")
     ).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
     )
@@ -379,20 +371,17 @@ def _bucket_pairs(buckets: DataFrame, max_bucket: int) -> DataFrame:
 
 def lsh_candidate_pairs(
     df: DataFrame,
-    n_hashes: int = N_HASHES,
-    bands: int = BANDS,
-    k: int = K,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     pre_exact_dedup: bool = True,
 ) -> DataFrame:
     """Banded LSH: docs agreeing on all rows of any band become a
     candidate pair. Returns distinct (doc_a, doc_b), doc_a < doc_b.
 
-    Plan shape (what survives 100 TB): the n_hashes per-seed minima are
-    FUSED into one groupBy(doc_id) with n_hashes MIN aggregates — the
+    Plan shape (what survives 100 TB): the N_HASHES per-seed minima are
+    FUSED into one groupBy(doc_id) with N_HASHES MIN aggregates — the
     per-seed md5s are computed map-side and partially aggregated before
     the exchange, so the only data shuffled is one row per document
-    (vs. exploding a (doc_id, seed) row per shingle-seed pair: ~n_hashes
+    (vs. exploding a (doc_id, seed) row per shingle-seed pair: ~N_HASHES
     x shingle-count rows). Band hashes are then row-local expressions,
     and pair generation is one groupBy(band, band_hash) + in-bucket
     array expansion — no self-join, nothing persisted (module
@@ -409,14 +398,11 @@ def lsh_candidate_pairs(
     Values are the md5(seed|shingle) minima and band-hash
     concatenation that the DuckDB oracle reproduces independently."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    return _bucket_pairs(lsh_buckets(lsh_postings(docs, n_hashes, bands, k)), max_bucket)
+    return _bucket_pairs(lsh_buckets(lsh_postings(docs)), max_bucket)
 
 
 def lsh_capped_buckets(
     df: DataFrame,
-    n_hashes: int = N_HASHES,
-    bands: int = BANDS,
-    k: int = K,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     pre_exact_dedup: bool = True,
 ) -> DataFrame:
@@ -424,14 +410,12 @@ def lsh_capped_buckets(
     counts — run (and log/persist) alongside `lsh_candidate_pairs` at
     scale so the cap is never silent."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    return _cap_report(
-        lsh_buckets(lsh_postings(docs, n_hashes, bands, k)), "ids", max_bucket
-    )
+    return _cap_report(lsh_buckets(lsh_postings(docs)), "ids", max_bucket)
 
 
 # -------------------------------------------------------------- SimHash
-def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
-    """Per-document SimHash fingerprint from token md5s.
+def simhash(df: DataFrame) -> DataFrame:
+    """Per-document SIMHASH_BITS-bit SimHash fingerprint from token md5s.
 
     bit_i(doc) = 1 iff sum over tokens of (bit_i(md5(tok)) ? +1 : -1)
     is positive. Integer arithmetic only — deterministic everywhere.
@@ -442,7 +426,7 @@ def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
     )
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     toks = toks.select("doc_id", h.alias("h"))
-    # the 2*bits generated aggregate/select expressions are built as
+    # the 2*SIMHASH_BITS generated aggregate/select expressions are built as
     # SQL strings: the nested-Column form cost ~0.5s of py4j
     # roundtrips per DataFrame CONSTRUCTION — comparable to this
     # operator's entire execution (guide §1.2; values identical).
@@ -450,11 +434,12 @@ def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
         F.expr(
             f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}"
         )
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = toks.groupBy("doc_id").agg(*bit_sums)
     sig = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN {2 ** i} ELSE 0 END)" for i in range(bits)
+        f"(CASE WHEN b{i} > 0 THEN {2 ** i} ELSE 0 END)"
+        for i in range(SIMHASH_BITS)
     )
     return agg.select(
         "doc_id", F.expr(f"CAST(0 + {sig} AS BIGINT) AS simhash")
@@ -563,12 +548,10 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def contamination_report(
-    corpus: DataFrame, eval_docs: DataFrame, k: int = 8
-) -> DataFrame:
+def contamination_report(corpus: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C rule family:
     flag training documents sharing long n-grams with an evaluation
-    set): count, per corpus document, its distinct word k-gram
+    set): count, per corpus document, its distinct word CONTAMINATION_K-gram
     shingles that also occur anywhere in `eval_docs`.
 
     The 100 TB shape is asymmetric by nature — eval sets are tiny, the
@@ -580,9 +563,9 @@ def contamination_report(
     Returns (doc_id, n_eval_shingle_hits, contaminated) for every
     corpus document, hit or not.
     """
-    ev = shingle_rows(eval_docs, k).select("shingle").distinct()
+    ev = shingle_rows(eval_docs, CONTAMINATION_K).select("shingle").distinct()
     hits = (
-        shingle_rows(corpus, k)  # rows unique per (doc, shingle)
+        shingle_rows(corpus, CONTAMINATION_K)  # rows unique per (doc, shingle)
         .join(F.broadcast(ev), "shingle")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"))

@@ -69,10 +69,6 @@ from .corpus_dedup import (
 from .textstats import fingerprints
 
 
-def _postings(docs: DataFrame) -> DataFrame:
-    return lsh_postings(docs, corpus_dedup.N_HASHES, corpus_dedup.BANDS, corpus_dedup.K)
-
-
 def _probe(spark: SparkSession, index_path: str, new_docs: DataFrame) -> DataFrame:
     """(fingerprint, rep, text, old_rep): the batch's exact-rep
     aggregate probed against fp_index. A known fingerprint carries its
@@ -100,7 +96,7 @@ def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     reps, doc_rep, edges = _cluster_stages(docs)
     edges = edges.select("doc_a", "doc_b")
     clusters = _rejoin_clusters(doc_rep, edges)
-    band_index = _postings(reps.select(F.col("rep").alias("doc_id"), "text"))
+    band_index = lsh_postings(reps.select(F.col("rep").alias("doc_id"), "text"))
     # edges/clusters must be computed BEFORE overwriting (lazy plans);
     # a fresh build writes to a fresh dir, so plain writes suffice
     reps.select("fingerprint", "rep").write.mode("overwrite").parquet(
@@ -160,7 +156,7 @@ def incremental_dedup(
     # --- stage 2: LSH candidates (new x old via index, new x new) --
     # materialized once: three consumers (old-probe, new-new buckets,
     # the index append), and the batch side is small by definition
-    new_bands = _postings(new_survivors).localCheckpoint(eager=True)
+    new_bands = lsh_postings(new_survivors).localCheckpoint(eager=True)
     cand_old = (
         F.broadcast(new_bands.withColumnRenamed("doc_id", "doc_b"))
         .join(
@@ -180,10 +176,7 @@ def incremental_dedup(
         candidates.select(F.col("doc_a").alias("doc_id")).distinct(), "doc_id"
     ).select("doc_id", "text")
     new_edges = _jaccard_over_pair_sets(
-        candidates,
-        old_cand_docs.union(new_survivors),
-        corpus_dedup.K,
-        corpus_dedup.THRESHOLD,
+        candidates, old_cand_docs.union(new_survivors)
     ).select("doc_a", "doc_b")
 
     # --- stage 4: components over the verified-edge graph ----------
@@ -237,7 +230,7 @@ def incremental_capped_buckets(
     docstring)."""
     new_survivors = _new_survivors(_probe(spark, index_path, new_docs))
     return _cap_report(
-        lsh_buckets(_postings(new_survivors)), "ids", corpus_dedup.DEFAULT_MAX_BUCKET
+        lsh_buckets(lsh_postings(new_survivors)), "ids", corpus_dedup.DEFAULT_MAX_BUCKET
     )
 
 

@@ -22,8 +22,11 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import py_iou
 
-# per-category IoU thresholds (validate_detection.py:110-117)
-DEFAULT_THRESHOLDS = {"water": 0.3, "terrain": 0.2, "transport": 0.25}
+#: per-category IoU thresholds of the categories the pipeline emits:
+#: numbers ('survey') take the reference's terrain 0.2 and place names
+#: ('place') its water 0.3 (validate_detection.py:110-117); any other
+#: category falls back to FALLBACK_THRESHOLD
+IOU_THRESHOLDS = {"survey": 0.2, "place": 0.3}
 FALLBACK_THRESHOLD = 0.25
 
 MATCH_SCHEMA = (
@@ -32,19 +35,14 @@ MATCH_SCHEMA = (
 )
 
 
-def greedy_iou_match(
-    detections: DataFrame,
-    ground_truth: DataFrame,
-    thresholds: dict[str, float] | None = None,
-) -> DataFrame:
-    """Match detections to GT per (doc_id, offset, category).
+def greedy_iou_match(detections: DataFrame, ground_truth: DataFrame) -> DataFrame:
+    """Match detections to GT per (doc_id, offset, category), with
+    IoU above the category's IOU_THRESHOLDS entry.
 
     Input columns (both): doc_id, offset, category, idx, x, y, w, h
     [detections also: conf]. Output: one row per detection (outcome
     tp/fp) and per unmatched GT box (outcome fn).
     """
-    th = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
-
     # Defensive re-alias: if detections and ground_truth derive from one
     # plan (e.g. gt = det.drop(...)), both sides share attribute IDs and
     # Spark's cogroup attribute-deduplication can strip the right side's
@@ -77,7 +75,7 @@ def greedy_iou_match(
                 int(r.idx): (r.x, r.y, r.w, r.h) for r in g.itertuples(index=False)
             }
             unmatched = set(gt_boxes)
-            t = th.get(cat, FALLBACK_THRESHOLD)
+            t = IOU_THRESHOLDS.get(cat, FALLBACK_THRESHOLD)
             for r in d.itertuples(index=False):
                 best, best_iou = None, t
                 for gi in sorted(unmatched):

@@ -14,13 +14,13 @@ from __future__ import annotations
 
 import pandas as pd
 
-DEFAULT_IOU_THRESHOLD = 0.3  # detect.py:1421-1424
+#: a box whose IoU with a kept box exceeds this is dropped
+#: (detect.py:1421-1424)
+IOU_THRESHOLD = 0.3
 
 
 def py_nms(
-    boxes: list[tuple[float, float, float, float]],
-    confs: list[float],
-    threshold: float = DEFAULT_IOU_THRESHOLD,
+    boxes: list[tuple[float, float, float, float]], confs: list[float]
 ) -> list[int]:
     """Indices of kept boxes (xywh), greedy by conf desc; ties broken by
     box geometry (x, y, w, h) — a total order over the values themselves,
@@ -30,13 +30,14 @@ def py_nms(
     order = sorted(range(len(boxes)), key=lambda i: (-confs[i], boxes[i]))
     kept: list[int] = []
     for i in order:
-        if all(py_iou(boxes[i], boxes[j]) <= threshold for j in kept):
+        if all(py_iou(boxes[i], boxes[j]) <= IOU_THRESHOLD for j in kept):
             kept.append(i)
     return sorted(kept)
 
 
-def nms_boxes(df, group_cols=("doc_id", "offset"), threshold: float = DEFAULT_IOU_THRESHOLD):
-    """DataFrame NMS: rows (group..., x, y, w, h, conf, ...) -> survivors.
+def nms_boxes(df):
+    """DataFrame NMS: rows (doc_id, offset, x, y, w, h, conf, ...) ->
+    survivors.
 
     One group per payload; group payloads are bounded by one image's
     detections, so the grouped map never holds more than that.
@@ -45,7 +46,7 @@ def nms_boxes(df, group_cols=("doc_id", "offset"), threshold: float = DEFAULT_IO
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
         boxes = list(zip(pdf["x"], pdf["y"], pdf["w"], pdf["h"]))
-        keep = py_nms(boxes, list(pdf["conf"]), threshold)
+        keep = py_nms(boxes, list(pdf["conf"]))
         return pdf.iloc[keep]
 
-    return df.groupBy(*group_cols).applyInPandas(_one, schema=schema)
+    return df.groupBy("doc_id", "offset").applyInPandas(_one, schema=schema)

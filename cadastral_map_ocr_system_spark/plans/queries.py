@@ -418,7 +418,7 @@ def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents", spread=True)
     ev = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return corpus_dedup.contamination_report(corpus, ev, k=8)
+    return corpus_dedup.contamination_report(corpus, ev)
 
 
 SQL_DECONTAMINATE = r"""
@@ -633,9 +633,7 @@ def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     # no spread: the heavy shingle+md5 work runs AFTER the survivor
     # groupBy exchange (already parallel); spreading only parallelizes
     # the cheap fingerprint map side and was measured a net cost
-    return corpus_dedup.lsh_jaccard_pairs(
-        load(spark, sf, "documents"), k=3, threshold=0.05, n_hashes=16, bands=4
-    )
+    return corpus_dedup.lsh_jaccard_pairs(load(spark, sf, "documents"))
 
 
 # the minhash/banding pipeline + capped candidate generation shared by
@@ -689,9 +687,7 @@ WHERE n_common / (sa.n + sb.n - n_common) >= 0.05
 
 def q_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # no spread: same rationale as q_ngram_jaccard
-    return corpus_dedup.lsh_candidate_pairs(
-        load(spark, sf, "documents"), n_hashes=16, bands=4, k=3
-    )
+    return corpus_dedup.lsh_candidate_pairs(load(spark, sf, "documents"))
 
 
 SQL_MINHASH_LSH = f"""
@@ -768,7 +764,7 @@ FROM bsize WHERE n > {_CAP_MAX_BUCKET}
 
 
 def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    return corpus_dedup.simhash(load(spark, sf, "documents", spread=True), bits=32)
+    return corpus_dedup.simhash(load(spark, sf, "documents", spread=True))
 
 
 _B = 32
@@ -1178,7 +1174,7 @@ def _cos_sql(a: str, b: str) -> str:
 
 
 def q_ann_brute_force(spark: SparkSession, sf: str) -> DataFrame:
-    return ann.brute_force_topk(load(spark, sf, "embeddings", spread=True), n_queries=10, k=5)
+    return ann.brute_force_topk(load(spark, sf, "embeddings", spread=True))
 
 
 SQL_ANN_BRUTE = f"""
@@ -1201,9 +1197,7 @@ _BUCKET_SQL = " || ".join(
 def q_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # no spread: in-bucket scoring touches ~1/2^8 of the pairs, so the
     # compute does not amortize an extra exchange (measured +0.33 s)
-    return ann.lsh_bucketed_topk(
-        load(spark, sf, "embeddings"), n_queries=10, k=5, n_dims=8
-    )
+    return ann.lsh_bucketed_topk(load(spark, sf, "embeddings"))
 
 
 SQL_ANN_LSH = f"""
@@ -1229,18 +1223,13 @@ def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.ann import ivf_assignments, ivf_topk_from_index
 
     emb = load(spark, sf, "embeddings", spread=True)
-    assigned, centroids = ivf_assignments(emb, n_clusters=8, seed=7)
+    assigned, centroids = ivf_assignments(emb)
     a_path = f"{_MATERIALIZE_DIR}/ivf_assignments.parquet"
     c_path = f"{_MATERIALIZE_DIR}/ivf_centroids.parquet"
     assigned.write.mode("overwrite").parquet(a_path)
     centroids.write.mode("overwrite").parquet(c_path)
     return ivf_topk_from_index(
-        emb,
-        spark.read.parquet(a_path),
-        spark.read.parquet(c_path),
-        n_queries=10,
-        k=5,
-        n_probe=2,
+        emb, spark.read.parquet(a_path), spark.read.parquet(c_path)
     )
 
 
@@ -1282,17 +1271,13 @@ def q_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.ann import pq_topk_from_index, pq_train
 
     emb = load(spark, sf, "embeddings", spread=True)
-    codebooks, codes = pq_train(emb, m=8, n_codes=16, seed=7)
+    codebooks, codes = pq_train(emb)
     cb_path = f"{_MATERIALIZE_DIR}/pq_codebooks.parquet"
     co_path = f"{_MATERIALIZE_DIR}/pq_codes.parquet"
     codebooks.write.mode("overwrite").parquet(cb_path)
     codes.write.mode("overwrite").parquet(co_path)
     return pq_topk_from_index(
-        emb,
-        spark.read.parquet(cb_path),
-        spark.read.parquet(co_path),
-        n_queries=10,
-        k=5,
+        emb, spark.read.parquet(cb_path), spark.read.parquet(co_path)
     )
 
 
@@ -1336,9 +1321,7 @@ def q_pq_refined(spark: SparkSession, sf: str) -> DataFrame:
     Recall vs brute force jumps from 0.24 (pure ADC on these
     unclustered fixtures) to 0.70 while full-vector reads stay
     O(queries x shortlist), not O(corpus)."""
-    from ..operators.ann import pq_refined_topk
-
-    from ..operators.ann import pq_train
+    from ..operators.ann import pq_refined_topk, pq_train
 
     emb = load(spark, sf, "embeddings", spread=True)
     # retrains + rewrites unconditionally (like q_ann_ivf): a cached
@@ -1346,16 +1329,11 @@ def q_pq_refined(spark: SparkSession, sf: str) -> DataFrame:
     # same process, and the training is cheap next to a silent mismatch
     cb_path = f"{_MATERIALIZE_DIR}/pq_codebooks.parquet"
     co_path = f"{_MATERIALIZE_DIR}/pq_codes.parquet"
-    codebooks, codes = pq_train(emb, m=8, n_codes=16, seed=7)
+    codebooks, codes = pq_train(emb)
     codebooks.write.mode("overwrite").parquet(cb_path)
     codes.write.mode("overwrite").parquet(co_path)
     return pq_refined_topk(
-        emb,
-        spark.read.parquet(cb_path),
-        spark.read.parquet(co_path),
-        n_queries=10,
-        k=5,
-        refine=8,
+        emb, spark.read.parquet(cb_path), spark.read.parquet(co_path), refine=8
     )
 
 
@@ -1408,7 +1386,7 @@ def q_kmeans_clusters(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.ann import cosine, ivf_assignments
 
     emb = load(spark, sf, "embeddings", spread=True)
-    assigned, centroids = ivf_assignments(emb, n_clusters=8, seed=7)
+    assigned, centroids = ivf_assignments(emb)
     a_path = f"{_MATERIALIZE_DIR}/kmeans_assignments.parquet"
     c_path = f"{_MATERIALIZE_DIR}/kmeans_centroids.parquet"
     assigned.write.mode("overwrite").parquet(a_path)
@@ -1450,9 +1428,7 @@ FROM j GROUP BY bucket
 def q_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     # no spread: the sign-bucket groupBy redistributes immediately and
     # the map side is one sign pattern per row (measured +0.44 s)
-    return ann.embedding_near_dups(
-        load(spark, sf, "embeddings"), threshold=0.2, n_dims=8
-    )
+    return ann.embedding_near_dups(load(spark, sf, "embeddings"))
 
 
 # bsize mirrors the max_bucket star-pair cap (same guard as the LSH
@@ -1945,7 +1921,7 @@ GROUP BY color
 """
 
 
-_EVAL_N_DOCS, _EVAL_THRESHOLDS = 200, {"survey": 0.2, "place": 0.3}
+_EVAL_N_DOCS = 200
 
 
 def _eval_fixture(spark: SparkSession):
@@ -1965,7 +1941,7 @@ def _eval_fixture(spark: SparkSession):
     boxes are dropped (-> FPs) and ~12% duplicated far away (-> FNs),
     so tp/fp/fn are all non-trivial and precision < 1."""
     from .. import oracle, synth
-    from ..operators.evaluation import greedy_iou_match
+    from ..operators.evaluation import IOU_THRESHOLDS, greedy_iou_match
     from ..operators.mediapath import media_detections
     from .pipeline import explode_spans
 
@@ -1991,7 +1967,7 @@ def _eval_fixture(spark: SparkSession):
                 )
     gt_rows = synth.perturb_gt(det_rows)
     oracle_matches = oracle.greedy_match(
-        [r for r in det_rows if r["idx"] % 2 == 0], gt_rows, _EVAL_THRESHOLDS
+        [r for r in det_rows if r["idx"] % 2 == 0], gt_rows, IOU_THRESHOLDS
     )
 
     # Spark side: live pipeline detections x the same GT table (S5
@@ -2016,7 +1992,7 @@ def _eval_fixture(spark: SparkSession):
         schema="doc_id string, offset int, category string, idx int, "
                "x double, y double, w double, h double",
     )
-    matches = greedy_iou_match(det, gt, thresholds=_EVAL_THRESHOLDS)
+    matches = greedy_iou_match(det, gt)
     return matches, oracle_matches
 
 
@@ -2061,7 +2037,7 @@ def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
                         skew_frac=_EXTRACT_SKEW).write.mode(
         "overwrite"
     ).parquet(in_path)
-    q = stream_extract(spark, in_path, out_path, ck_path, trigger_once=True)
+    q = stream_extract(spark, in_path, out_path, ck_path)
     q.awaitTermination()
     return _flat_spans(spark.read.parquet(out_path))
 
@@ -2382,7 +2358,7 @@ def q_nms_suppress(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
 
     from .. import oracle
-    from ..operators.nms import nms_boxes
+    from ..operators.nms import IOU_THRESHOLD, nms_boxes
 
     rows = []
     for g in range(40):
@@ -2404,7 +2380,7 @@ def q_nms_suppress(spark: SparkSession, sf: str) -> DataFrame:
          ("x", _pa.float64()), ("y", _pa.float64()), ("w", _pa.float64()),
          ("h", _pa.float64()), ("conf", _pa.float64())]
     )
-    survivors = oracle.nms_rows(rows, threshold=0.3)
+    survivors = oracle.nms_rows(rows, threshold=IOU_THRESHOLD)
     assert len(survivors) < len(rows)  # fixture must actually overlap
     _write_oracle_parquet(survivors, schema, f"{_MATERIALIZE_DIR}/nms_oracle.parquet")
 
@@ -2414,7 +2390,7 @@ def q_nms_suppress(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id string, offset int, x double, y double, w double, "
         "h double, conf double",
     )
-    return nms_boxes(df, group_cols=("doc_id", "offset"), threshold=0.3)
+    return nms_boxes(df)
 
 
 SQL_NMS_SUPPRESS = f"""

@@ -47,10 +47,7 @@ def get_spark(
         # side parallelizes instead of packing into one task.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "8m")
         # InferFiltersFromGenerate copies the generator's child
         # expression into a pre-Generate filter; predicate pushdown

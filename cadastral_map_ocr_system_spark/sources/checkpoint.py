@@ -51,11 +51,16 @@ def bucket_of(doc_id_col, n_buckets: int):
 def committed_partitions(
     spark: SparkSession, checkpoint_path: str, run_id: str
 ) -> DataFrame:
-    """Distinct committed (partition_id) rows for run_id (empty if none)."""
+    """Distinct committed (partition_id) rows for run_id (empty if none).
+
+    Read with the declared schema, never inferred: a driver killed
+    inside the first lineage append leaves only `_temporary/`, which
+    has no schema to infer but is an empty committed set."""
     if not os.path.exists(checkpoint_path):
         return spark.createDataFrame([], "partition_id int")
     return (
-        spark.read.parquet(checkpoint_path)
+        spark.read.schema(CHECKPOINT)
+        .parquet(checkpoint_path)
         .filter(F.col("run_id") == run_id)
         .select("partition_id")
         .distinct()

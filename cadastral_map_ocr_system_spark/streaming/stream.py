@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import extract
+from ..schema import DOCS
 
 
 def write_epoch(batch_df: DataFrame, epoch_id: int, output_path: str) -> None:
@@ -39,31 +40,23 @@ def stream_extract(
     input_path: str,
     output_path: str,
     stream_checkpoint: str,
-    trigger_once: bool = True,
 ):
-    """Tail a parquet docs directory and extract each micro-batch.
-
-    trigger_once=True drains what is present and stops (test mode);
-    False runs continuously.
-    """
-    docs_stream = (
-        spark.readStream.schema(
-            "doc_id string, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>"
-        )
-        .parquet(input_path)
-    )
+    """Extract every docs file present in a parquet directory (read
+    with schema.DOCS), one micro-batch at a time through `write_epoch`,
+    then stop (availableNow). Files that arrive later are picked up by
+    the next call on the same stream_checkpoint; returns the
+    StreamingQuery."""
+    docs_stream = spark.readStream.schema(DOCS).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         write_epoch(batch_df, epoch_id, output_path)
 
-    writer = (
+    return (
         docs_stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", stream_checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 EVENTS_STREAM_SCHEMA = (

@@ -82,16 +82,17 @@ def test_exact_dedup_survivors(spark):
     assert surv == [1, 3]  # whitespace-normalized dup collapses to min id
 
 
-def test_minhash_lsh_finds_near_dups(spark):
+def test_minhash_lsh_finds_near_dups(spark, monkeypatch):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
     near = base + "lambda mu"
     far = "one two three four five six seven eight nine ten " * 4
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "doc_id long, text string"
     )
+    monkeypatch.setattr(corpus_dedup, "BANDS", 8)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in corpus_dedup.lsh_candidate_pairs(df, n_hashes=16, bands=8).collect()
+        for r in corpus_dedup.lsh_candidate_pairs(df).collect()
     }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
@@ -198,10 +199,10 @@ def test_embedding_near_dups_degenerate_cluster_capped(spark, monkeypatch):
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(3000)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 64)
-    pairs = ann.embedding_near_dups(df, threshold=0.2, n_dims=8).collect()
+    pairs = ann.embedding_near_dups(df).collect()
     assert 0 < len(pairs) <= 2999  # star, not ~4.5M full pairs
     assert all(r["vec_a"] == 0 for r in pairs)  # star around min vec_id
-    ledger = ann.embedding_bucket_caps(df, n_dims=8).collect()
+    ledger = ann.embedding_bucket_caps(df).collect()
     assert ledger and ledger[0]["bucket_size"] == 3000
     assert ledger[0]["pairs_suppressed"] == 3000 * 2999 // 2 - 2999
 
@@ -215,13 +216,13 @@ def test_embedding_near_dups_cap_no_loss_on_normal_corpus(spark, monkeypatch):
     monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 64)
     capped = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in ann.embedding_near_dups(emb, threshold=0.2).collect()
+        for r in ann.embedding_near_dups(emb).collect()
     }
     assert not ann.embedding_bucket_caps(emb).collect()
     monkeypatch.setattr(corpus_dedup, "DEFAULT_MAX_BUCKET", 1 << 30)
     uncapped = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
-        for r in ann.embedding_near_dups(emb, threshold=0.2).collect()
+        for r in ann.embedding_near_dups(emb).collect()
     }
     assert capped == uncapped and capped
 
@@ -243,9 +244,7 @@ def test_streaming_wrapper(spark, tmp_path):
     docs_py = synth.synth_docs_pylist(20, seed=11)
     inp = str(tmp_path / "in")
     spark.createDataFrame(docs_py, schema=DOCS).write.parquet(inp)
-    q = stream_extract(
-        spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"), trigger_once=True
-    )
+    q = stream_extract(spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == 20
@@ -271,12 +270,13 @@ def test_streaming_epoch_replay_is_idempotent(spark, tmp_path):
     assert got.filter("epoch_id = 0").count() == 12
 
 
-def test_ivf_topk_exact_on_separated_clusters(spark):
+def test_ivf_topk_exact_on_separated_clusters(spark, monkeypatch):
     """IVF with a KMeans quantizer recovers the exact brute-force
     neighbours when clusters are well separated (every true neighbour
     shares the query's cluster, so probing it suffices)."""
     import random
 
+    from cadastral_map_ocr_system_spark.operators import ann
     from cadastral_map_ocr_system_spark.operators.ann import (
         brute_force_topk,
         ivf_assignments,
@@ -290,27 +290,30 @@ def test_ivf_topk_exact_on_separated_clusters(spark):
         c = centers[i % 3]
         rows.append((i, [v + rng.uniform(-0.5, 0.5) for v in c]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    assigned, centroids = ivf_assignments(emb, n_clusters=3)
+    for name, value in (
+        ("N_CLUSTERS", 3), ("N_QUERIES", 6), ("TOP_K", 4), ("N_PROBE", 1)
+    ):
+        monkeypatch.setattr(ann, name, value)
+    assigned, centroids = ivf_assignments(emb)
     got = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk_from_index(
-            emb, assigned, centroids, n_queries=6, k=4, n_probe=1
-        ).collect()
+        for r in ivf_topk_from_index(emb, assigned, centroids).collect()
     }
     want = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in brute_force_topk(emb, n_queries=6, k=4).collect()
+        for r in brute_force_topk(emb).collect()
     }
     assert got == want
 
 
-def test_pq_recall_on_separated_clusters(spark):
+def test_pq_recall_on_separated_clusters(spark, monkeypatch):
     """PQ ADC search recovers the exact brute-force neighbours when
     the data is clustered (each sub-quantizer's centroids align with
     the cluster structure, so the compressed-domain ranking preserves
     the true order)."""
     import random
 
+    from cadastral_map_ocr_system_spark.operators import ann
     from cadastral_map_ocr_system_spark.operators.ann import (
         brute_force_topk,
         pq_topk_from_index,
@@ -326,8 +329,12 @@ def test_pq_recall_on_separated_clusters(spark):
         for i in range(120)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    codebooks, codes = pq_train(emb, m=4, n_codes=8)
-    got = pq_topk_from_index(emb, codebooks, codes, n_queries=6, k=4).collect()
+    for name, value in (
+        ("PQ_M", 4), ("PQ_N_CODES", 8), ("N_QUERIES", 6), ("TOP_K", 4)
+    ):
+        monkeypatch.setattr(ann, name, value)
+    codebooks, codes = pq_train(emb)
+    got = pq_topk_from_index(emb, codebooks, codes, k=4).collect()
     # quantization collapses intra-cluster distances (every member of a
     # tight cluster shares the same codes, ranking degenerates to the
     # deterministic vec_id tie-break), so exact-neighbour overlap is
@@ -338,7 +345,7 @@ def test_pq_recall_on_separated_clusters(spark):
         assert r["vec_id"] % 4 == r["query_id"] % 4, dict(r.asDict())
     # and brute force agrees on the cluster property, so the two
     # searches scan the same neighbourhood
-    for r in brute_force_topk(emb, n_queries=6, k=4).collect():
+    for r in brute_force_topk(emb).collect():
         assert r["vec_id"] % 4 == r["query_id"] % 4
 
 

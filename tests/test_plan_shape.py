@@ -123,7 +123,9 @@ def test_pq_search_plan_scans_codes_once_no_join(spark, monkeypatch):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     monkeypatch.setattr(ann, "KMEANS_MAX_ITER", 2)
-    codebooks, codes = pq_train(emb, m=4, n_codes=4)
+    monkeypatch.setattr(ann, "PQ_M", 4)
+    monkeypatch.setattr(ann, "PQ_N_CODES", 4)
+    codebooks, codes = pq_train(emb)
     plan = _plan(spark, pq_topk_from_index(emb, codebooks, codes))
     for join in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert join not in plan, join
@@ -166,9 +168,11 @@ def test_ann_topk_partial_below_window(spark, monkeypatch):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     monkeypatch.setattr(ann, "KMEANS_MAX_ITER", 2)
+    monkeypatch.setattr(ann, "PQ_M", 4)
+    monkeypatch.setattr(ann, "PQ_N_CODES", 4)
     for df in (
         brute_force_topk(emb),
-        pq_topk_from_index(emb, *pq_train(emb, m=4, n_codes=4)),
+        pq_topk_from_index(emb, *pq_train(emb)),
     ):
         plan = _plan(spark, df)
         assert "SPARK_PARTITION_ID" in plan, plan
@@ -332,9 +336,10 @@ def test_nation_revenue_keyed_spread_shares_exchange(spark):
     assert n_exchange == 2, plan
 
 
-def test_keyed_spread_gates_on_table_size(spark, tmp_path):
+def test_keyed_spread_gates_on_table_size(spark, tmp_path, monkeypatch):
     """keyed_spread must repartition below the size cap and be a
     strict no-op above it (the production-scale behavior)."""
+    from cadastral_map_ocr_system_spark.sources import tables
     from cadastral_map_ocr_system_spark.sources.tables import keyed_spread
 
     path = str(tmp_path / "t.parquet")
@@ -342,12 +347,9 @@ def test_keyed_spread_gates_on_table_size(spark, tmp_path):
     df = spark.read.parquet(path)
     spread = keyed_spread(df, path, "k")
     assert "RepartitionByExpression" in spread._jdf.queryExecution().logical().toString()
-    spark.conf.set("spark_graft.scan.spread_max_bytes", "1")
-    try:
-        gated = keyed_spread(df, path, "k")
-        assert gated is df  # no-op above the cap
-    finally:
-        spark.conf.unset("spark_graft.scan.spread_max_bytes")
+    monkeypatch.setattr(tables, "SPREAD_MAX_BYTES", 1)
+    gated = keyed_spread(df, path, "k")
+    assert gated is df  # no-op above the cap
 
 
 def test_span_dedup_plan_reassembles_from_positions_not_text(spark):

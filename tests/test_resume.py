@@ -105,6 +105,33 @@ def test_rerun_after_success_is_noop(spark, tmp_path):
     assert _collect(read_extracted(spark, out)) == before
 
 
+def test_resume_after_crash_inside_first_lineage_commit(spark, tmp_path):
+    """A driver killed inside the FIRST lineage append leaves the
+    checkpoint directory holding only `_temporary/` (no part file, so
+    no schema to infer). That is an empty committed set: the next run
+    must extract and commit every bucket once, not fail to read it."""
+    import os
+
+    docs_py = synth.synth_docs_pylist(40, seed=3)
+    docs = spark.createDataFrame(docs_py, schema=DOCS)
+    out = str(tmp_path / "extracted")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(os.path.join(ckpt, "_temporary", "0"))
+
+    run_extraction(spark, docs, out, ckpt, run_id="r1", n_buckets=4)
+
+    non_empty = {
+        r["bucket"]
+        for r in docs.select(bucket_of(F.col("doc_id"), 4).alias("bucket"))
+        .distinct()
+        .collect()
+    }
+    per_part = spark.read.parquet(ckpt).groupBy("partition_id").count().collect()
+    assert {r["partition_id"] for r in per_part} == non_empty
+    assert all(r["count"] == 1 for r in per_part)
+    assert _collect(read_extracted(spark, out)) == oracle.extract_corpus(docs_py)
+
+
 def test_resume_after_torn_partition_write(spark, tmp_path):
     """Crash-injection under a TORN WRITE (VERDICT r4 next-round #4):
     the crash leaves partial parquet part files inside an UNCOMMITTED
