@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import TOKEN_SPLIT_RE, fingerprint, fingerprints
+from .textstats import fingerprint, fingerprints, tokens
 
 
 #: in-bucket cap of the LSH and embedding candidate generators.
@@ -196,7 +196,7 @@ def shingle_sets(df: DataFrame, k: int = 3) -> DataFrame:
     O(tokens^2) per document (measured 10x+ on the bench corpus).
     """
     t = df.select(
-        "doc_id", F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE).alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     toks = F.col("toks")
     n = F.size(toks)
@@ -422,7 +422,7 @@ def simhash(df: DataFrame) -> DataFrame:
     """
     toks = df.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE)).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     toks = toks.select("doc_id", h.alias("h"))
@@ -486,7 +486,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     """
     w = SPAN_WINDOW_TOKENS
     toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE).alias("tokens")
+        "doc_id", tokens().alias("tokens")
     )
     with_chunks = toks.select(
         "doc_id",

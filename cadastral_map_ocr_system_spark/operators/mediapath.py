@@ -650,18 +650,18 @@ class RowChunks:
             full.append(pa.RecordBatch.from_pylist(chunk, schema=self.schema))
         return full
 
+    def map(self, batch: pa.RecordBatch, fn: Callable) -> list[pa.RecordBatch]:
+        """The per-item loop: buffer fn(*row) for each row of the batch's
+        columns, in order; return every chunk that is now full."""
+        full = []
+        for row in zip(*(col.to_pylist() for col in batch.columns)):
+            full += self.add(fn(*row))
+        return full
+
     def flush(self) -> list[pa.RecordBatch]:
         """Return the partial last chunk, if any, and empty the buffer."""
         rest, self.rows = self.rows, []
         return [pa.RecordBatch.from_pylist(rest, schema=self.schema)] if rest else []
-
-
-def _payload_keys(batch: pa.RecordBatch):
-    return zip(
-        batch.column("doc_id").to_pylist(),
-        batch.column("offset").to_pylist(),
-        batch.column("media_ref").to_pylist(),
-    )
 
 
 def payload_batches(
@@ -669,13 +669,12 @@ def payload_batches(
     fn: Callable[..., list[dict]],
     schema: pa.Schema,
 ) -> Iterator[pa.RecordBatch]:
-    """The per-item mapInArrow loop: fn(*row) over the batch's columns,
-    in order, returns one item's output rows, emitted as `schema`
+    """A per-item mapInArrow body: fn(*row) over each batch's columns
+    (RowChunks.map) returns one item's output rows, emitted as `schema`
     batches of at most OUTPUT_CHUNK_ROWS rows."""
     out = RowChunks(schema)
     for batch in batches:
-        for row in zip(*(col.to_pylist() for col in batch.columns)):
-            yield from out.add(fn(*row))
+        yield from out.map(batch, fn)
     yield from out.flush()
 
 
@@ -1005,6 +1004,18 @@ def span_batches(
     import pyarrow.compute as pc
 
     tile_stats: dict = {}
+
+    def media_rows(doc_id, offset, ref):
+        # a media span whose regions are all rejected must still keep
+        # its document alive through the re-zip (same null-kind
+        # sentinel mechanism as the empty-text path); rezip drops the
+        # sentinel from the spans array.
+        return extract_media_records(doc_id, offset, ref, stats=tile_stats) or [
+            {"doc_id": doc_id, "offset": offset, "region_idx": 0, "token_idx": 0,
+             "kind": None, "text": None, "media_ref": None, "conf": None,
+             "cx": 0.0, "cy": 0.0, "is_number": False}
+        ]
+
     out = RowChunks(DETECTIONS_ARROW)
     for batch in batches:
         kind = batch.column("kind")
@@ -1035,23 +1046,8 @@ def span_batches(
             for start in range(0, n, OUTPUT_CHUNK_ROWS):
                 yield rows.slice(start, OUTPUT_CHUNK_ROWS)
         # ---- media rows: per-payload extraction
-        for doc_id, offset, ref in _payload_keys(batch.filter(media_mask)):
-            recs = extract_media_records(doc_id, offset, ref, stats=tile_stats)
-            if not recs:
-                # a media span whose regions are all rejected must still
-                # keep its document alive through the re-zip (same
-                # null-kind sentinel mechanism as the empty-text path);
-                # rezip drops the sentinel from the spans array.
-                recs = [
-                    {
-                        "doc_id": doc_id, "offset": offset,
-                        "region_idx": 0, "token_idx": 0,
-                        "kind": None, "text": None, "media_ref": None,
-                        "conf": None, "cx": 0.0, "cy": 0.0,
-                        "is_number": False,
-                    }
-                ]
-            yield from out.add(recs)
+        media = batch.filter(media_mask).select(["doc_id", "offset", "media_ref"])
+        yield from out.map(media, media_rows)
     yield from out.flush()
     if tile_metrics_dir is not None:
         write_tile_metrics(tile_metrics_dir, tile_stats)

@@ -20,17 +20,16 @@ STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on"]
 TOKEN_SPLIT_RE = r"\s+"
 
 
-def with_tokens(df: DataFrame) -> DataFrame:
-    """Adds a `tokens` array column (whitespace tokenization of `text`)."""
-    return df.withColumn(
-        "tokens", F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)
-    )
+def tokens() -> Column:
+    """The whitespace tokenization of `text`, lowercased: the one
+    tokenizer of every text operator."""
+    return F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)
 
 
 def token_counts(df: DataFrame) -> DataFrame:
     """Per-document token/char counts (BPE-ish subword estimate included:
     ceil(chars/4) mirrors the common ~4-chars-per-token rule)."""
-    t = with_tokens(df)
+    t = df.withColumn("tokens", tokens())
     return t.select(
         "doc_id",
         F.size("tokens").alias("n_tokens"),
@@ -47,7 +46,7 @@ def quality_scores(df: DataFrame) -> DataFrame:
     alpha_ratio:    fraction of chars that are letters or spaces.
     All rounded to 6 dp so results are comparable across engines.
     """
-    t = with_tokens(df)
+    t = df.withColumn("tokens", tokens())
     n_tokens = F.size("tokens")
     n_stop = F.size(F.filter("tokens", lambda x: x.isin(STOPWORDS)))
     # sum(length(tok)) == length of the separator-less join: one
@@ -116,7 +115,7 @@ def repetition_scores(df: DataFrame) -> DataFrame:
 
     Returns (doc_id, n_tokens, dup_token_ratio, top_bigram_frac).
     """
-    t = with_tokens(df).select("doc_id", "tokens")
+    t = df.withColumn("tokens", tokens()).select("doc_id", "tokens")
     n = F.size("tokens")
     base = t.select(
         "doc_id",

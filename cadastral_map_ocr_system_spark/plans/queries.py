@@ -527,7 +527,7 @@ def q_field_classify(spark: SparkSession, sf: str) -> DataFrame:
     the answer needs)."""
     docs = load(spark, sf, "documents", spread=True)
     toks = docs.select(
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
+        F.explode(textstats.tokens()).alias("tok")
     )
     per_tok = toks.groupBy("tok").agg(F.count("*").alias("c"))
     cls = (
@@ -2012,14 +2012,47 @@ def _write_oracle_matches(oracle_matches: list[dict]) -> None:
 _STREAM_N_DOCS, _STREAM_SEED = 150, 7
 
 
+def _stream_dirs(name: str) -> tuple[str, str, str]:
+    """Fresh (input, output, checkpoint) dirs of one streaming query, so
+    every invocation drains from scratch."""
+    dirs = tuple(f"{_MATERIALIZE_DIR}/{name}_{d}" for d in ("in", "out", "ck"))
+    for d in dirs:
+        _shutil.rmtree(d, ignore_errors=True)
+    return dirs
+
+
+def _drain_with_sentinels(spark: SparkSession, sf: str, name: str, start) -> DataFrame:
+    """Three availableNow drains of `start(spark, in, out, ck)` over one
+    checkpoint: the events table, then after each of the first two
+    drains one far-future sentinel event (10 hours past the last real
+    one) whose watermark finalizes the real state. Returns the sink."""
+    in_path, out_path, ck_path = _stream_dirs(name)
+    ev = load(spark, sf, "events")
+    ev.write.parquet(in_path)
+    sentinel = ev.select(F.max("ts").alias("m")).select(
+        F.lit(-1).cast("long").alias("event_id"),
+        (F.col("m") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit("__sentinel__").alias("event_type"),
+        F.lit(0.0).alias("value"),
+        F.lit(None).cast("string").alias("props"),
+    )
+    for drain in range(3):
+        start(spark, in_path, out_path, ck_path).awaitTermination()
+        if drain < 2:
+            sentinel.write.mode("append").parquet(in_path)
+    return spark.read.parquet(out_path)
+
+
 def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
     """§2.9 Structured Streaming: readStream over a docs parquet dir ->
-    foreachBatch extract -> exactly-once epoch-partitioned sink, drained
+    foreachBatch run_extraction per epoch -> exactly-once sink, drained
     with availableNow; the sink contents (read back from disk, exploded
     flat) verify against the INDEPENDENT oracle's golden span sequences
     for the same corpus — upgrading streaming from unit-only to the
     full value-hash gate."""
     from .. import oracle, synth
+    from ..sources.checkpoint import read_extracted
     from ..streaming.stream import stream_extract
 
     golden = oracle.extract_corpus(
@@ -2028,18 +2061,11 @@ def q_stream_extract(spark: SparkSession, sf: str) -> DataFrame:
     )
     _write_flat_golden(golden, f"{_MATERIALIZE_DIR}/stream_oracle.parquet")
 
-    in_path = f"{_MATERIALIZE_DIR}/stream_in_parquet"
-    out_path = f"{_MATERIALIZE_DIR}/stream_out_parquet"
-    ck_path = f"{_MATERIALIZE_DIR}/stream_ck"
-    for d in (out_path, ck_path):  # fresh drain every invocation
-        _shutil.rmtree(d, ignore_errors=True)
+    in_path, out_path, ck_path = _stream_dirs("stream")
     synth.synth_docs_df(spark, _STREAM_N_DOCS, seed=_STREAM_SEED,
-                        skew_frac=_EXTRACT_SKEW).write.mode(
-        "overwrite"
-    ).parquet(in_path)
-    q = stream_extract(spark, in_path, out_path, ck_path)
-    q.awaitTermination()
-    return _flat_spans(spark.read.parquet(out_path))
+                        skew_frac=_EXTRACT_SKEW).write.parquet(in_path)
+    stream_extract(spark, in_path, out_path, ck_path).awaitTermination()
+    return _flat_spans(read_extracted(spark, out_path))
 
 
 SQL_STREAM_EXTRACT = f"""
@@ -2071,27 +2097,7 @@ def q_stream_windows(spark: SparkSession, sf: str) -> DataFrame:
     answer on a bounded prefix."""
     from ..streaming.stream import stream_windowed_counts
 
-    in_path = f"{_MATERIALIZE_DIR}/streamwin_in"
-    out_path = f"{_MATERIALIZE_DIR}/streamwin_out"
-    ck_path = f"{_MATERIALIZE_DIR}/streamwin_ck"
-    for d in (in_path, out_path, ck_path):
-        _shutil.rmtree(d, ignore_errors=True)
-    ev = load(spark, sf, "events")
-    ev.write.parquet(in_path)
-    sentinel = ev.select(F.max("ts").alias("m")).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.col("m") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("__sentinel__").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    for _drain in range(3):
-        q = stream_windowed_counts(spark, in_path, out_path, ck_path)
-        q.awaitTermination()
-        if _drain < 2:
-            sentinel.write.mode("append").parquet(in_path)
-    return spark.read.parquet(out_path)
+    return _drain_with_sentinels(spark, sf, "streamwin", stream_windowed_counts)
 
 
 SQL_STREAM_WINDOWS = """
@@ -2115,27 +2121,7 @@ def q_stream_sessions(spark: SparkSession, sf: str) -> DataFrame:
     implementations of the same 30-minute contract."""
     from ..streaming.stream import stream_sessionize
 
-    in_path = f"{_MATERIALIZE_DIR}/streamsess_in"
-    out_path = f"{_MATERIALIZE_DIR}/streamsess_out"
-    ck_path = f"{_MATERIALIZE_DIR}/streamsess_ck"
-    for d in (in_path, out_path, ck_path):
-        _shutil.rmtree(d, ignore_errors=True)
-    ev = load(spark, sf, "events")
-    ev.write.parquet(in_path)
-    sentinel = ev.select(F.max("ts").alias("m")).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.col("m") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("__sentinel__").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    for _drain in range(3):
-        q = stream_sessionize(spark, in_path, out_path, ck_path)
-        q.awaitTermination()
-        if _drain < 2:
-            sentinel.write.mode("append").parquet(in_path)
-    return spark.read.parquet(out_path)
+    return _drain_with_sentinels(spark, sf, "streamsess", stream_sessionize)
 
 
 SQL_STREAM_SESSIONS = """
@@ -2168,14 +2154,9 @@ def q_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     self-join on DuckDB."""
     from ..streaming.stream import stream_interval_join
 
-    in_path = f"{_MATERIALIZE_DIR}/streamjoin_in"
-    out_path = f"{_MATERIALIZE_DIR}/streamjoin_out"
-    ck_path = f"{_MATERIALIZE_DIR}/streamjoin_ck"
-    for d in (in_path, out_path, ck_path):
-        _shutil.rmtree(d, ignore_errors=True)
+    in_path, out_path, ck_path = _stream_dirs("streamjoin")
     load(spark, sf, "events").write.parquet(in_path)
-    q = stream_interval_join(spark, in_path, out_path, ck_path)
-    q.awaitTermination()
+    stream_interval_join(spark, in_path, out_path, ck_path).awaitTermination()
     return spark.read.parquet(out_path)
 
 
@@ -2203,18 +2184,13 @@ def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     check rather than rows-only."""
     from ..streaming.stream import stream_dedup
 
-    in_path = f"{_MATERIALIZE_DIR}/streamdedup_in"
-    out_path = f"{_MATERIALIZE_DIR}/streamdedup_out"
-    ck_path = f"{_MATERIALIZE_DIR}/streamdedup_ck"
-    for d in (in_path, out_path, ck_path):
-        _shutil.rmtree(d, ignore_errors=True)
+    in_path, out_path, ck_path = _stream_dirs("streamdedup")
     ev = load(spark, sf, "events")
     ev.write.parquet(in_path)
     ev.write.mode("append").parquet(in_path)
-    for _drain in range(2):
-        q = stream_dedup(spark, in_path, out_path, ck_path)
-        q.awaitTermination()
-        if _drain == 0:
+    for drain in range(2):
+        stream_dedup(spark, in_path, out_path, ck_path).awaitTermination()
+        if drain == 0:
             recent = ev.crossJoin(
                 ev.select((F.max("ts") - F.expr("INTERVAL 30 MINUTES")).alias("cut"))
             ).filter(F.col("ts") >= F.col("cut")).drop("cut")

@@ -19,14 +19,16 @@ Design (SURVEY.md §4.5, FIXTURES.md §3):
     has many commit points.
 
 The checkpoint table is parquet here (Iceberg-shaped schema; see
-sources/tables.py on the format choice).
+sources/tables.py on the format choice). The streaming sink
+(streaming/stream.write_epoch) commits each micro-batch through
+run_extraction, so batch and streaming share this one crash contract.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 import time
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,10 +55,14 @@ def committed_partitions(
 ) -> DataFrame:
     """Distinct committed (partition_id) rows for run_id (empty if none).
 
-    Read with the declared schema, never inferred: a driver killed
-    inside the first lineage append leaves only `_temporary/`, which
-    has no schema to infer but is an empty committed set."""
-    if not os.path.exists(checkpoint_path):
+    Read through Spark (any Hadoop URI) with the declared schema, never
+    inferred: a driver killed inside the first lineage append leaves
+    only `_temporary/`, which has no schema to infer but is an empty
+    committed set. A missing path is empty too; it is checked through
+    Hadoop first because reading it would log a stack trace."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_path)
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
         return spark.createDataFrame([], "partition_id int")
     return (
         spark.read.schema(CHECKPOINT)
@@ -82,7 +88,17 @@ def run_extraction(
     Safe to re-run with the same run_id after any crash: committed
     buckets are never read again; partially written buckets are
     overwritten whole.
+
+    Both paths may be Hadoop URIs, but the tile-metric files go to
+    `{checkpoint_path}_tiles` through the per-attempt channel
+    (mediapath.write_tile_metrics), which is POSIX-only: a checkpoint
+    URI with a scheme other than `file:` is a ValueError, raised first.
     """
+    url = urlparse(f"{checkpoint_path}_tiles")
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"checkpoint {checkpoint_path!r}: the per-attempt "
+                         "metric channel is POSIX-only (a path or file: URI)")
+    tiles_root = url.path if url.scheme else f"{checkpoint_path}_tiles"
     # resume correctness REQUIRES dynamic partition overwrite: with the
     # static default, the per-group overwrite below would wipe every
     # previously committed bucket while the checkpoint table still marks
@@ -121,7 +137,7 @@ def run_extraction(
         # dir per commit group), MAX-deduped per (stage, partition) at
         # read (Spark accumulators would over-count on task
         # retries/speculation)
-        tile_metrics_dir = f"{checkpoint_path}_tiles/{run_id}/g{group[0]}"
+        tile_metrics_dir = f"{tiles_root}/{run_id}/g{group[0]}"
         # crash-resume correctness for the metrics channel: a prior
         # attempt of this UNCOMMITTED group may have left metric files
         # behind, and the new SparkContext assigns different stage IDs —

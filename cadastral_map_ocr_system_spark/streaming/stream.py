@@ -1,12 +1,11 @@
 """Structured Streaming wrapper: readStream(docs) -> extract -> sink.
 
-Uses foreachBatch so the exact batch plan (plans/pipeline.extract) runs
-per micro-batch — one code path for batch and streaming, which is the
-only way to keep span-sequence equality guarantees identical in both
-modes. Exactly-once at the sink comes from the micro-batch epoch id +
-idempotent partition overwrite: output is partitioned by epoch_id and
-each epoch dynamically overwrites ONLY its own partition, so a replayed
-micro-batch rewrites rather than duplicates.
+Uses foreachBatch so each micro-batch is one resumable batch run
+(sources/checkpoint.run_extraction) — one extraction plan and one crash
+contract for batch and streaming. Exactly-once at the sink is the
+batch run's: a replayed epoch that already committed is skipped by its
+lineage row, and a torn one is redone whole under dynamic partition
+overwrite of its own epoch directory.
 """
 
 from __future__ import annotations
@@ -14,24 +13,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import extract
 from ..schema import DOCS
+from ..sources.checkpoint import run_extraction
 
 
 def write_epoch(batch_df: DataFrame, epoch_id: int, output_path: str) -> None:
-    """Exactly-once micro-batch sink: extract the batch and overwrite
-    ONLY this epoch's partition (dynamic mode). A retried epoch after a
-    crash between sink write and offset commit REPLACES its own
-    partition instead of appending duplicates — idempotent under
-    replay (unit-pinned in tests/test_operators.py)."""
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        extract(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .partitionBy("epoch_id")
-        .parquet(output_path)
+    """Exactly-once micro-batch sink: the epoch is one run_extraction run
+    (one bucket) into `output_path/epoch_id=N/`, its lineage in
+    `output_path/_epochs/N/lineage`, which Spark skips when reading
+    output_path (unit-pinned in tests/test_operators.py)."""
+    run_extraction(
+        batch_df.sparkSession,
+        batch_df,
+        f"{output_path}/epoch_id={epoch_id}",
+        f"{output_path}/_epochs/{epoch_id}/lineage",
+        run_id=f"epoch-{epoch_id}",
+        n_buckets=1,
+        buckets_per_commit=1,
     )
 
 
@@ -46,13 +44,12 @@ def stream_extract(
     then stop (availableNow). Files that arrive later are picked up by
     the next call on the same stream_checkpoint; returns the
     StreamingQuery."""
-    docs_stream = spark.readStream.schema(DOCS).parquet(input_path)
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        write_epoch(batch_df, epoch_id, output_path)
-
     return (
-        docs_stream.writeStream.foreachBatch(process_batch)
+        spark.readStream.schema(DOCS)
+        .parquet(input_path)
+        .writeStream.foreachBatch(
+            lambda batch_df, epoch_id: write_epoch(batch_df, epoch_id, output_path)
+        )
         .option("checkpointLocation", stream_checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -52,7 +52,6 @@ TEST_ONLY_FUNCTIONS = {
     "operators/ann.py:embedding_bucket_caps": "cap ledger of embedding_near_dups",
     # codec and reader API
     "functions/png.py:encode_png_gray": "codec API, gray twin of encode_png_rgb",
-    "sources/checkpoint.py:read_extracted": "reader of run_extraction's output",
 }
 
 # options that no caller outside tests sets

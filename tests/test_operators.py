@@ -251,23 +251,55 @@ def test_streaming_wrapper(spark, tmp_path):
 
 
 def test_streaming_epoch_replay_is_idempotent(spark, tmp_path):
-    """Exactly-once under micro-batch replay: writing the same epoch
-    twice (the crash-between-sink-and-offset-commit case) must leave a
-    single copy; a different epoch appends its own partition."""
+    """Exactly-once under micro-batch replay: an epoch is one
+    run_extraction run, so writing the same epoch twice (the
+    crash-between-sink-and-offset-commit case) leaves its data files
+    and its one lineage row untouched, and that row carries the counts
+    run_extraction records for the same docs. A torn, uncommitted
+    epoch is replaced whole; a different epoch writes its own
+    partition."""
+    import os
+
     from cadastral_map_ocr_system_spark import synth
     from cadastral_map_ocr_system_spark.schema import DOCS
+    from cadastral_map_ocr_system_spark.sources.checkpoint import run_extraction
     from cadastral_map_ocr_system_spark.streaming.stream import write_epoch
+
+    def data_files(epoch_dir):
+        return {
+            (root, f, os.stat(os.path.join(root, f)).st_mtime_ns)
+            for root, _, files in os.walk(epoch_dir)
+            for f in files
+        }
 
     docs = spark.createDataFrame(synth.synth_docs_pylist(12, seed=5), schema=DOCS)
     out = str(tmp_path / "out")
     write_epoch(docs, 0, out)
-    write_epoch(docs, 0, out)  # replayed epoch: overwrites, not appends
+    before = data_files(f"{out}/epoch_id=0")
+    write_epoch(docs, 0, out)  # replayed epoch: skipped by its lineage row
+    assert data_files(f"{out}/epoch_id=0") == before
     got = spark.read.parquet(out)
     assert got.count() == 12
+
+    lineage = spark.read.parquet(f"{out}/_epochs/0/lineage").collect()
+    assert len(lineage) == 1
+    run_extraction(spark, docs, str(tmp_path / "batch"), str(tmp_path / "batch_ck"),
+                   run_id="batch", n_buckets=1)
+    (want,) = spark.read.parquet(str(tmp_path / "batch_ck")).collect()
+    counts = ("n_docs", "n_spans", "n_output_rows", "n_regions", "n_tiles",
+              "n_tiles_skipped", "doc_id_min", "doc_id_max")
+    assert [lineage[0][c] for c in counts] == [want[c] for c in counts]
+
+    # a torn epoch 1: a part file planted in its bucket, no lineage row
+    torn_dir = f"{out}/epoch_id=1/bucket=0"
+    spark.createDataFrame(
+        [{"doc_id": "TORN-GARBAGE", "spans": []}], schema=DOCS
+    ).write.parquet(torn_dir)
     write_epoch(docs.limit(3), 1, out)  # new epoch: its own partition
     got = spark.read.parquet(out)
     assert got.count() == 15
     assert got.filter("epoch_id = 0").count() == 12
+    assert got.filter("doc_id = 'TORN-GARBAGE'").count() == 0
 
 
 def test_ivf_topk_exact_on_separated_clusters(spark, monkeypatch):

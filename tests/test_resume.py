@@ -280,3 +280,104 @@ def test_tile_metrics_carry_every_counter(spark, tmp_path):
         lambda _: write_tile_metrics(d, stats)
     )
     assert read_tile_metrics(d) == {**stats, "max_attempt": 0}
+
+
+def test_resume_over_file_uris(spark, tmp_path):
+    """Resume works on a Hadoop URI, not only a plain path: the
+    committed set is read through Spark, so a second run over file://
+    paths skips every committed bucket, and the tile-metric files land
+    at the URI's local path, not in a relative `file:` dir under the
+    working directory. A scheme the POSIX metric channel cannot write
+    fails before any job runs."""
+    import os
+
+    docs = spark.createDataFrame(synth.synth_docs_pylist(40, seed=3), schema=DOCS)
+    out = (tmp_path / "extracted").as_uri()
+    ckpt = (tmp_path / "checkpoint").as_uri()
+    stray = os.path.join(os.getcwd(), "file:")
+    for _ in range(2):
+        run_extraction(spark, docs, out, ckpt, run_id="r1", n_buckets=4)
+
+    per_part = spark.read.parquet(ckpt).groupBy("partition_id").count().collect()
+    assert len(per_part) == 4
+    assert all(r["count"] == 1 for r in per_part)
+    assert os.path.isdir(tmp_path / "checkpoint_tiles" / "r1")
+    assert not os.path.exists(stray)
+
+    with pytest.raises(ValueError, match="POSIX-only"):
+        run_extraction(spark, docs, out, "hdfs://namenode/ckpt", run_id="r1")
+
+
+# A session of its own: local[2,2] lets every task fail once and retry.
+# The wrapper is defined in __main__, so cloudpickle ships it by value
+# inside span_detections' closure; the engine itself is unchanged.
+FORCED_RETRY_SCRIPT = """
+import json, os, sys
+from pyspark import TaskContext
+from cadastral_map_ocr_system_spark import synth
+from cadastral_map_ocr_system_spark.operators import mediapath
+from cadastral_map_ocr_system_spark.schema import DOCS
+from cadastral_map_ocr_system_spark.session import get_spark
+from cadastral_map_ocr_system_spark.sources.checkpoint import (
+    read_extracted, run_extraction,
+)
+
+span_batches = mediapath.span_batches
+
+
+def fail_first_attempt(*args, **kwargs):
+    yield from span_batches(*args, **kwargs)
+    if TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("forced failure of a first task attempt")
+
+
+def run(base, stage):
+    mediapath.span_batches = stage
+    run_extraction(spark, docs, f"{base}/out", f"{base}/ckpt", run_id="r",
+                   n_buckets=2, buckets_per_commit=2)
+    (group,) = os.listdir(f"{base}/ckpt_tiles/r")
+    rows = read_extracted(spark, f"{base}/out").collect()
+    return {
+        "tiles": mediapath.read_tile_metrics(f"{base}/ckpt_tiles/r/{group}"),
+        "rows": sorted(json.dumps(r.asDict(recursive=True)) for r in rows),
+    }
+
+
+spark = get_spark(app_name="forced-retry", master="local[2,2]")
+docs = spark.createDataFrame(
+    synth.synth_docs_pylist(40, seed=21, skew_frac=0.1), schema=DOCS
+)
+base = sys.argv[1]
+print(json.dumps({
+    "clean": run(f"{base}/clean", span_batches),
+    "retried": run(f"{base}/retried", fail_first_attempt),
+}))
+spark.stop()
+"""
+
+
+def test_forced_task_retry_keeps_counts_exact(tmp_path):
+    """Every span-stage task fails after its first attempt's body ran
+    (and wrote its metric file); the retried run's tile metrics and
+    output rows equal a run with no retry."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_DRIVER_MEMORY": "2g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", FORCED_RETRY_SCRIPT, str(tmp_path)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    clean, retried = got["clean"], got["retried"]
+    assert clean["tiles"]["n_tiles"] > 0
+    assert clean["tiles"].pop("max_attempt") == 0
+    assert retried["tiles"].pop("max_attempt") == 1  # the retry happened
+    assert retried["tiles"] == clean["tiles"]
+    assert len(clean["rows"]) == 40
+    assert retried["rows"] == clean["rows"]
