@@ -6,34 +6,43 @@ per cluster (the reference resolves this within a document by greedy
 scan order, OCR/src/detect.py:504-575 — across a corpus the same
 decision needs a connected-components pass over the near-dup graph).
 
-`connected_components` is the alternating large-star / small-star
+`connected_components` scales up when the graph fits and out when it
+does not. A graph of at most LOCAL_CC_MAX_EDGES edges (the dedup
+graphs of the fixtures and benchmarks are far smaller) is read to the
+driver in one bounded Arrow read and labeled there by the NumPy
+min-label kernel the pixel labeling uses (`mediapath._min_label`).
+Above that gate runs the alternating large-star / small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", ACM SoCC 2014): O(log^2 n) rounds, each round two
-groupBy+join passes. Two properties make it THE shape that survives
-100 TB:
+Beyond", ACM SoCC 2014): O(log^2 n) rounds, each round two window-min
+passes. Two properties make it THE shape that survives 100 TB:
 
   - no adjacency materialization: each round touches edges as rows
-    (groupBy-MIN + equi-join back), never collect_set — a component of
-    10^8 members never becomes an array in one task (the degenerate-
-    bucket hazard corpus_dedup caps; here it cannot arise at all);
+    (a window MIN over the rows of each node), never collect_set — a
+    component of 10^8 members never becomes an array in one task (the
+    degenerate-bucket hazard corpus_dedup caps; here it cannot arise);
   - monotone contraction toward min-labels: each round strictly lowers
     the potential, and at the fixed point the edge set IS the answer —
     a star from every component's min node to its members.
 
-Driver loop notes: lineage is cut every round with
-localCheckpoint(eager=True) (plan depth would otherwise double per
-round and overwhelm the optimizer long before the data is the
-problem), and the fixed point is detected by an exact signature
-(edge count + sum of xxhash64(u, v)) — two scalar aggregates, no
-subtract/anti-join of the full edge set.
+Driver loop notes: lineage is cut every round with a lazy
+localCheckpoint (plan depth would otherwise double per round and
+overwhelm the optimizer long before the data is the problem), and the
+fixed point is detected by an exact signature (edge count + sum of
+xxhash64(u, v)) — two scalar aggregates, no subtract/anti-join of the
+full edge set.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from . import corpus_dedup
+from .mediapath import _min_label
 from .textstats import fingerprints
 
 
@@ -114,6 +123,33 @@ def _signature(edges: DataFrame) -> tuple:
 MAX_CC_ROUNDS = 25
 
 
+#: edge count up to which connected_components labels the graph on the
+#: driver instead of running the star loop. It bounds the one driver
+#: read, LOCAL_CC_MAX_EDGES + 1 rows: at 2^20 edges BIGINT ids are 17 MB
+#: of Arrow and the labeling peaks near 0.1 GB of NumPy arrays on top;
+#: short string ids take 0.25 GB and ~5 s (measured on a 4-core host)
+LOCAL_CC_MAX_EDGES = 1 << 20
+
+
+def _label_on_driver(e: DataFrame, t: pa.Table) -> DataFrame:
+    """(node, component) of the (u, v) edge frame `e`, whose rows `t`
+    holds, labeled in the driver process: np.unique indexes the nodes
+    in id order, so the min-index label of `_min_label` is the min node
+    id. The result is a local relation built from an Arrow table (even
+    when empty), which plans as a LocalTableScan and starts no Python
+    worker; a list-built frame plans as a Scan ExistingRDD that does."""
+    # u != v as Spark evaluates it: self-loops and null ends drop out
+    t = t.filter(pc.not_equal(t["u"], t["v"]))
+    ids = pa.chunked_array(t["u"].chunks + t["v"].chunks, t["u"].type)
+    nodes, idx = np.unique(ids.to_numpy(zero_copy_only=False), return_inverse=True)
+    label = _min_label(len(nodes), idx[: t.num_rows], idx[t.num_rows :])
+    nodes = pa.array(nodes, ids.type)
+    out = pa.table({"node": nodes, "component": nodes.take(label)})
+    t_id = e.schema["u"].dataType
+    schema = StructType([StructField("node", t_id), StructField("component", t_id)])
+    return e.sparkSession.createDataFrame(out, schema)
+
+
 def connected_components(
     edges: DataFrame, assume_distinct: bool = False
 ) -> DataFrame:
@@ -121,6 +157,12 @@ def connected_components(
     doc_b rows), where component is the minimum node id reachable from
     it. Works for any orderable id type (the fixtures use BIGINT
     doc_ids).
+
+    A graph of at most LOCAL_CC_MAX_EDGES edges is labeled on the
+    driver (`_label_on_driver`): the read that checks the gate is its
+    only Spark job, besides the adaptive stage jobs of the plan that
+    computes the edges. Above the gate the edges stay distributed and
+    the loop below runs.
 
     Alternating large-star/small-star until the edge set is a fixed
     point — at which point every edge runs from a component's min node
@@ -135,12 +177,11 @@ def connected_components(
     here would require a second full pass over a node frame this
     operator does not have.
     """
-    # lazy localCheckpoint + the signature aggregate = ONE job per
-    # round: the signature action is the first computation of the
-    # checkpointed plan, so it materializes the cut lineage as a side
-    # effect (eager=True ran a separate materialization job first —
-    # 2 jobs/round of pure scheduling overhead on a loop whose data is
-    # tiny long before its round count is)
+    # lazy localCheckpoint: the first action over the checkpointed plan
+    # materializes the cut lineage as a side effect (eager=True ran a
+    # separate materialization job first). The gate's bounded read is
+    # that action for the input edges, and each round's signature
+    # aggregate for the round's output.
     # assume_distinct: callers whose edge frame is distinct loop-free
     # by construction (e.g. LSH-gated jaccard pairs: one row per
     # candidate pair, doc_a < doc_b) skip the initial canonicalization
@@ -150,6 +191,10 @@ def connected_components(
     if not assume_distinct:
         e = e.filter(F.col("u") != F.col("v")).distinct()
     e = e.localCheckpoint(eager=False)
+    t = e.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
+    if t.num_rows <= LOCAL_CC_MAX_EDGES:
+        return _label_on_driver(e, t)
+    del t
     sig = _signature(e)
     for _ in range(MAX_CC_ROUNDS):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
@@ -209,7 +254,8 @@ def dedup_clusters(df: DataFrame) -> DataFrame:
          representative (map-side-partial groupBy, corpus_dedup);
       2. LSH-gated exact Jaccard >= THRESHOLD over the representatives
          (capped buckets, star fallback) -> near-dup edges;
-      3. alternating-algorithm connected components over the edges;
+      3. connected components over the edges (on the driver up to
+         LOCAL_CC_MAX_EDGES edges, else the alternating algorithm);
       4. docs rejoin through their representative; representatives in
          no edge keep themselves as cluster (singletons).
 
@@ -222,9 +268,9 @@ def dedup_clusters(df: DataFrame) -> DataFrame:
     # one fingerprint aggregation (reps) feeds both the survivor texts
     # of the edge branch and the rep map of the rejoin, yet it runs
     # twice per call: the edge branch runs inside connected_components'
-    # lazily checkpointed jobs, so the final job's executed plan holds
-    # no ReusedExchange and aggregates again for the rep map (checked
-    # at sf0.01, local[3])
+    # gate read, behind a lineage cut, and the final plan (the rep map
+    # joined to CC's LocalTableScan) aggregates once more for the rep
+    # map, with no exchange it could reuse (checked at sf0.01, local[3])
     _, doc_rep, edges = _cluster_stages(df)
     return _rejoin_clusters(doc_rep, edges)
 

@@ -105,24 +105,17 @@ class Components:
         return mask
 
 
-def _label_runs(y: np.ndarray, x0: np.ndarray, x1: np.ndarray, w: int) -> np.ndarray:
-    """Per-run label: the smallest run index in its 4-connected component.
+def _min_label(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Per-node label: the smallest node index in its connected
+    component of the undirected graph on nodes 0..n-1 with edges
+    (a[i], b[i]).
 
-    Runs on adjacent rows are joined iff their columns overlap. The
-    overlapping runs of the previous row form one index range per run,
-    found by two binary searches over raster keys row*(w+2)+x. Roots
-    are merged by hooking the larger root under the smaller, then
-    pointer-jumping to a fixpoint. Hooking roots converges in a few
-    rounds even on combs and spirals, where propagating minimum labels
-    along edges needs as many rounds as the longest path has runs."""
-    n = len(y)
-    stride = w + 2
-    key = y * stride
-    lo = np.searchsorted(key + x1, key - stride + x0, side="right")
-    hi = np.searchsorted(key + x0, key - stride + x1, side="left")
-    deg = np.maximum(hi - lo, 0)
-    b = np.repeat(np.arange(n), deg)
-    a = np.repeat(lo - np.cumsum(deg) + deg, deg) + np.arange(len(b))
+    Roots are merged by hooking the larger root under the smaller,
+    then pointer-jumping to a fixpoint. Hooking roots converges in a
+    few rounds even on combs and spirals, where propagating minimum
+    labels along edges needs as many rounds as the longest path has
+    nodes. The one min-label kernel for pixel runs (`_label_runs`) and
+    duplicate graphs (`components.connected_components`)."""
     parent = np.arange(n)
     while len(a):
         ra, rb = parent[a], parent[b]
@@ -137,6 +130,23 @@ def _label_runs(y: np.ndarray, x0: np.ndarray, x1: np.ndarray, w: int) -> np.nda
                 break
             parent = jumped
     return parent
+
+
+def _label_runs(y: np.ndarray, x0: np.ndarray, x1: np.ndarray, w: int) -> np.ndarray:
+    """Per-run label: the smallest run index in its 4-connected component.
+
+    Runs on adjacent rows are joined iff their columns overlap. The
+    overlapping runs of the previous row form one index range per run,
+    found by two binary searches over raster keys row*(w+2)+x."""
+    n = len(y)
+    stride = w + 2
+    key = y * stride
+    lo = np.searchsorted(key + x1, key - stride + x0, side="right")
+    hi = np.searchsorted(key + x0, key - stride + x1, side="left")
+    deg = np.maximum(hi - lo, 0)
+    b = np.repeat(np.arange(n), deg)
+    a = np.repeat(lo - np.cumsum(deg) + deg, deg) + np.arange(len(b))
+    return _min_label(n, a, b)
 
 
 def _components(grid: np.ndarray, mask: np.ndarray | None = None) -> Components:

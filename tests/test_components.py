@@ -1,11 +1,12 @@
-"""Connected components (alternating large-star/small-star) and
-duplicate-cluster resolution."""
+"""Connected components (driver labeling under the edge gate, the
+alternating large-star/small-star loop above it) and duplicate-cluster
+resolution."""
 
 from __future__ import annotations
 
-import random
-
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from cadastral_map_ocr_system_spark.operators import components, corpus_dedup
 from cadastral_map_ocr_system_spark.operators.components import (
@@ -15,10 +16,13 @@ from cadastral_map_ocr_system_spark.operators.components import (
 )
 
 
+def _labels(out):
+    return {r["node"]: r["component"] for r in out.collect()}
+
+
 def _cc(spark, edges):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = connected_components(df)
-    return {r["node"]: r["component"] for r in out.collect()}
+    return _labels(connected_components(df))
 
 
 def _reference_components(edges):
@@ -47,7 +51,9 @@ def test_two_components_and_star_shape(spark):
 def test_long_chain_converges_in_log_rounds(spark, monkeypatch):
     # a 200-node path is the adversarial diameter case; the alternating
     # algorithm must contract it in O(log^2 n) rounds, far under the
-    # guard — a linear-propagation bug would blow a 12-round cap
+    # guard — a linear-propagation bug would blow a 12-round cap. The
+    # edge gate is 0 so the loop, not the driver labeling, runs.
+    monkeypatch.setattr(components, "LOCAL_CC_MAX_EDGES", 0)
     monkeypatch.setattr(components, "MAX_CC_ROUNDS", 12)
     n = 200
     got = _cc(spark, [(i, i + 1) for i in range(n)])
@@ -71,6 +77,7 @@ def test_string_node_ids(spark):
 
 
 def test_max_iters_guard_raises(spark, monkeypatch):
+    monkeypatch.setattr(components, "LOCAL_CC_MAX_EDGES", 0)
     monkeypatch.setattr(components, "MAX_CC_ROUNDS", 1)
     df = spark.createDataFrame([(i, i + 1) for i in range(200)],
                                "doc_a long, doc_b long")
@@ -78,15 +85,63 @@ def test_max_iters_guard_raises(spark, monkeypatch):
         connected_components(df)
 
 
-def test_random_graphs_match_union_find(spark):
-    rng = random.Random(17)
-    for trial in range(3):
-        n = 60
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(40 + 20 * trial)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        assert _cc(spark, edges) == _reference_components(edges)
+_IDS = {
+    "long": st.integers(-3, 40),
+    # one non-ASCII letter: Spark orders strings by UTF-8 bytes, Python
+    # and NumPy by code points, which agree
+    "string": st.text(alphabet="abxyzé", max_size=2),
+}
+
+
+@st.composite
+def _graphs(draw):
+    """(id type, edges): random edge lists with self-loops, repeated
+    edges and reversed repeats, the empty list included."""
+    kind = draw(st.sampled_from(sorted(_IDS)))
+    ids = _IDS[kind]
+    edges = draw(st.lists(st.tuples(ids, ids), max_size=30))
+    if edges:
+        again = draw(st.lists(st.sampled_from(edges), max_size=10))
+        edges += [(b, a) if i % 2 else (a, b) for i, (a, b) in enumerate(again)]
+    return kind, edges
+
+
+@settings(max_examples=10, deadline=None)
+@example(("long", []))
+@example(("string", []))
+@example(("long", [(5, 5), (1, 2), (2, 1), (1, 2), (3, 3)]))
+@given(_graphs())
+def test_random_graphs_match_union_find(spark, graph):
+    """The driver labeling, the star loop (edge gate patched to 0) and
+    a union-find agree on every graph."""
+    kind, edges = graph
+    df = spark.createDataFrame(edges, f"doc_a {kind}, doc_b {kind}")
+    want = _reference_components([(a, b) for a, b in edges if a != b])
+    gated = _labels(connected_components(df))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "LOCAL_CC_MAX_EDGES", 0)
+        loop = _labels(connected_components(df))
+    assert gated == loop == want
+
+
+def test_gated_labels_are_a_worker_free_local_relation(spark):
+    """Under the gate the labels come back as a LocalTableScan built
+    from an Arrow table, empty or not (a list-built frame would plan as
+    a Scan ExistingRDD and start a Python worker), and the call runs at
+    most 2 Spark jobs: the input's distinct and the bounded edge read."""
+    sc = spark.sparkContext
+    for i, rows in enumerate(([(1, 2), (2, 3), (10, 11)], [])):
+        edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+        group = f"gated-cc-{i}"
+        sc.setJobGroup(group, "gated connected_components")
+        try:
+            out = connected_components(edges)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+        assert _labels(out) == _reference_components(rows)
 
 
 @pytest.fixture(scope="module")
