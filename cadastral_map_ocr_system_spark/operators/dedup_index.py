@@ -4,12 +4,11 @@ At 100 TB the dedup pipeline's real operating mode is incremental: a
 daily ingest batch must be deduped against the corpus WITHOUT
 re-shingling 100 TB (the reference recomputes per run over one
 document, OCR/src/detect.py:504-575; a corpus-scale engine cannot).
-The index persists four small-relative-to-corpus tables:
+The index persists three tables:
 
   fp_index    (fingerprint, rep)      one row per distinct content
   band_index  (doc_id, band, band_hash) BANDS rows per survivor —
               the LSH postings the next batch probes
-  edges       (doc_a, doc_b)          Jaccard-verified near-dup edges
   clusters    (doc_id, cluster)       current assignment, every doc
 
 The build persists the frames components.dedup_clusters computes, and
@@ -20,19 +19,22 @@ all with corpus_dedup's constants (K, N_HASHES, BANDS, THRESHOLD,
 DEFAULT_MAX_BUCKET) — so a batch always bands like its index.
 
 Per increment the engine scans ONLY the new batch (plus a selective
-semi-join fetch of the few old candidate docs' texts for the Jaccard
-verify — predicate-pushdown territory, not a corpus scan), probes the
-band index with the SMALL side broadcast, and re-runs connected
-components over the verified-edge graph (near-dup edges only — orders
-of magnitude smaller than the corpus).
+semi-join fetch of the old candidate docs' texts for the Jaccard
+verify), probes the band index with the SMALL side broadcast, and runs
+connected components over the batch's OWN verified edges: `clusters`
+is the old graph contracted to each component's min id, so mapping
+the old ids a batch touches to their cluster gives the components of
+old + new edges with the same labels (new ids exceed old ones, so new
+docs never relabel). Increments APPEND to fp_index / band_index,
+which `compact_dedup_index` vacuums; the clusters map is rewritten
+whole. An `edges` directory left by an older build is ignored.
 
-Maintenance at scale: increments APPEND to fp_index / band_index /
-edges, so after many batches those directories accumulate small part
-files (never duplicate rows — the fp_index probe and monotone ingest
-see to that). `compact_dedup_index` is the vacuum: read -> repartition to
-right-sized files -> crash-safe directory swap (OPTIMIZE under a real
-Iceberg catalog). Correctness never depends on running it — it only
-bounds the file-listing and task-granularity cost of the next probe.
+CRASH CONTRACT (test-pinned): an increment appends band_index, swaps
+in the new clusters (`_swap_in`, repaired at the next start), then
+appends fp_index. A crash before the swap leaves the index as it was
+(the postings it added only add pairs that verify and CC absorb), so
+the retry is exact. After the swap and before the fp_index append,
+the retry raises the monotone-ingest ValueError; rebuild then.
 
 EXACTNESS CONTRACT (test- and oracle-pinned): given monotone ingest
 (every new doc_id greater than all indexed ones) and no LSH bucket
@@ -43,7 +45,7 @@ deterministic md5 LSH candidates, same Jaccard gate, same transitive
 closure. The registry query's oracle is literally the full-recompute
 SQL. When a bucket DOES cross the cap mid-life, full recompute would
 star-pair the whole bucket while the index retains the finer old
-edges — clusters can only be equal-or-finer-connected, never wrong
+clusters — clusters can only be equal-or-finer-connected, never wrong
 pairs; rebuild the index (build_dedup_index) to re-canonicalize.
 """
 
@@ -88,22 +90,30 @@ def _new_survivors(probed: DataFrame) -> DataFrame:
     )
 
 
+def _to_cluster(df: DataFrame, col: str, old_clusters: DataFrame) -> DataFrame:
+    """`df` with every indexed doc id in `col` replaced by its stored
+    cluster; ids the index does not hold (new docs, nulls) pass
+    through."""
+    return (
+        df.join(old_clusters.withColumnRenamed("doc_id", col), col, "left")
+        .withColumn(col, F.coalesce(F.col("cluster"), F.col(col)))
+        .drop("cluster")
+    )
+
+
 def build_dedup_index(docs: DataFrame, index_path: str) -> None:
-    """Full build: dedup the corpus from scratch and persist the four
+    """Full build: dedup the corpus from scratch and persist the three
     index tables — the frames `components.dedup_clusters` computes.
     This is the bootstrap (and the re-canonicalization path if the cap
     caveat in the module docstring is ever hit)."""
     reps, doc_rep, edges = _cluster_stages(docs)
-    edges = edges.select("doc_a", "doc_b")
-    clusters = _rejoin_clusters(doc_rep, edges)
+    clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b"))
     band_index = lsh_postings(reps.select(F.col("rep").alias("doc_id"), "text"))
-    # edges/clusters must be computed BEFORE overwriting (lazy plans);
     # a fresh build writes to a fresh dir, so plain writes suffice
     reps.select("fingerprint", "rep").write.mode("overwrite").parquet(
         f"{index_path}/fp_index"
     )
     band_index.write.mode("overwrite").parquet(f"{index_path}/band_index")
-    edges.write.mode("overwrite").parquet(f"{index_path}/edges")
     clusters.write.mode("overwrite").parquet(f"{index_path}/clusters")
 
 
@@ -120,17 +130,17 @@ def incremental_dedup(
     Cost model per batch (the 100 TB property): one scan of the new
     batch, a broadcast probe of the band index with the new side
     small, a semi-join fetch of only the candidate old docs' texts,
-    and connected components over the near-dup EDGE graph — never a
-    scan or re-shingle of the old corpus. `old_docs` is used solely
-    for the selective candidate-text fetch.
+    and connected components over the batch's own verified edges —
+    never a scan or re-shingle of the old corpus. `old_docs` is used
+    solely for the selective candidate-text fetch.
 
     Requires monotone ingest: every new doc_id must exceed every
-    indexed doc_id (asserted), so stored reps stay min and stored
-    edges stay canonically ordered.
+    indexed doc_id (asserted), so stored reps and clusters stay min.
     """
+    clusters_dir = f"{index_path}/clusters"
+    _repair_torn_compact(clusters_dir)
     band_index = spark.read.parquet(f"{index_path}/band_index")
-    old_edges = spark.read.parquet(f"{index_path}/edges")
-    old_clusters = spark.read.parquet(f"{index_path}/clusters")
+    old_clusters = spark.read.parquet(clusters_dir)
 
     max_old = old_clusters.agg(F.max("doc_id")).first()[0]
     min_new = new_docs.agg(F.min("doc_id")).first()[0]
@@ -143,8 +153,11 @@ def incremental_dedup(
     # --- stage 1: exact dedup against the index -------------------
     # in-batch exact groups first (map-side-collapsible), then probe
     # the fingerprint index: a known fingerprint inherits its stored
-    # rep; an unknown one makes its batch-min doc the new survivor
-    probed = _probe(spark, index_path, new_docs)
+    # rep's cluster; an unknown one makes its batch-min doc the new
+    # survivor. Materialized once for every later stage and the append
+    probed = _to_cluster(
+        _probe(spark, index_path, new_docs), "old_rep", old_clusters
+    ).localCheckpoint(eager=True)
     new_survivors = _new_survivors(probed)
     new_doc_rep = fingerprints(new_docs).join(
         probed.select(
@@ -179,40 +192,26 @@ def incremental_dedup(
         candidates, old_cand_docs.union(new_survivors)
     ).select("doc_a", "doc_b")
 
-    # --- stage 4: components over the verified-edge graph ----------
-    # re-appended edges from a crash retry are legal, hence distinct()
-    all_edges = old_edges.union(new_edges).distinct()
-    # old docs' stored cluster is their component's min id, which is a
-    # graph NODE (or an untouched singleton rep) — rejoining through
-    # it lands on the merged component
+    # --- stage 4: components over the batch's edges ----------------
+    # doc_b is always a new survivor; an old doc_a becomes its stored
+    # cluster (the contracted old graph), which merges old clusters a
+    # batch bridges. Edges into one old cluster collapse, so distinct()
+    batch_edges = _to_cluster(new_edges, "doc_a", old_clusters).distinct()
     all_doc_rep = old_clusters.select(
         "doc_id", F.col("cluster").alias("rep")
     ).union(new_doc_rep)
-    updated = _rejoin_clusters(all_doc_rep, all_edges)
+    # materialized BEFORE any write touches the index: its plan reads
+    # clusters and band_index, both of which the fold below changes
+    updated = _rejoin_clusters(all_doc_rep, batch_edges).localCheckpoint(eager=True)
 
     # --- fold the batch into the index ------------------------------
-    # every derived frame's plan reads the live index files, so ALL of
-    # them are eagerly materialized (localCheckpoint) BEFORE any write
-    # touches the index — otherwise an append lands in a directory a
-    # later plan re-lists, silently changing its input mid-update
-    new_fp = (
-        probed.filter(F.col("old_rep").isNull())
-        .select("fingerprint", "rep")
-        .localCheckpoint(eager=True)
-    )
-    new_edges = new_edges.localCheckpoint(eager=True)
-    updated = updated.localCheckpoint(eager=True)
-
-    # fp_index is appended LAST (ADVICE r5 medium): the fp probe is
-    # what makes a retried batch see its docs as already indexed, so
-    # if a crash interleaves these non-atomic appends, the retry must
-    # re-process the batch rather than silently skip its band postings
-    # and edges. Re-appended band/edge rows from such a retry are
-    # harmless — every consumer runs distinct() over them — and the
-    # clusters overwrite is idempotent.
+    # fp_index is appended LAST: the fp probe is what makes a retried
+    # batch see its docs as already indexed, so a crash before it must
+    # leave the batch to be re-processed (module docstring's crash
+    # contract)
     new_bands.write.mode("append").parquet(f"{index_path}/band_index")
-    new_edges.write.mode("append").parquet(f"{index_path}/edges")
-    updated.write.mode("overwrite").parquet(f"{index_path}/clusters")
+    _swap_in(updated, clusters_dir)
+    new_fp = probed.filter(F.col("old_rep").isNull()).select("fingerprint", "rep")
     new_fp.write.mode("append").parquet(f"{index_path}/fp_index")
     return updated
 
@@ -238,13 +237,13 @@ def incremental_capped_buckets(
 # are ~50 bytes so this lands near the 128 MB lakehouse sweet spot
 _COMPACT_ROWS_PER_FILE = 2_000_000
 
-_APPEND_TABLES = ("fp_index", "band_index", "edges")
+_APPEND_TABLES = ("fp_index", "band_index")
 
 
 def _repair_torn_compact(table_dir: str) -> None:
-    """Make a table directory readable again after a compaction crash.
+    """Make a table directory readable again after a crash in `_swap_in`.
 
-    The swap below passes through exactly two non-live states:
+    `_swap_in` passes through exactly two non-live states:
       1. `.compact` written, live intact      -> drop `.compact`
       2. live renamed to `.old`, `.compact`
          complete, live missing               -> promote `.compact`
@@ -261,21 +260,25 @@ def _repair_torn_compact(table_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
-    """Vacuum the three append-grown index tables (fp_index,
-    band_index, edges): rewrite each as ceil(rows / _COMPACT_ROWS_PER_FILE)
-    right-sized parquet files, swapping directories crash-safely
-    (write `.compact` -> rename live to `.old` -> promote -> drop
-    `.old`; `_repair_torn_compact` recovers every intermediate state,
-    exercised by tests/test_dedup_index.py).
+def _swap_in(df: DataFrame, live: str) -> None:
+    """Replace table directory `live` by `df`'s rows: write `.compact`
+    -> rename live to `.old` -> promote -> drop `.old`. A plain
+    overwrite deletes `live` before its job runs, so a failed job would
+    leave no table; `_repair_torn_compact` recovers every state here."""
+    tmp, old = live + ".compact", live + ".old"
+    df.write.mode("overwrite").parquet(tmp)
+    os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old)
 
-    Run it on the cadence a lakehouse OPTIMIZE would run — after every
-    N increments — purely to bound file-listing and task-granularity
-    cost of the next batch's probe; results are byte-identical with or
-    without it (the registry's dedup_incremental query compacts
-    mid-run and still hashes against the full-recompute oracle).
-    band_index is repartitioned BY (band, band_hash) so a compacted
-    probe join reads co-clustered postings. Returns a per-table
+
+def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
+    """Vacuum the append-grown index tables (_APPEND_TABLES): rewrite
+    each as ceil(rows / _COMPACT_ROWS_PER_FILE) parquet files with the
+    crash-safe `_swap_in`, band_index repartitioned BY (band,
+    band_hash) so the next probe reads co-clustered postings. Run it on
+    an OPTIMIZE cadence; results are identical with or without it (the
+    dedup_incremental query compacts mid-run). Returns a per-table
     {files_before, files_after, rows} report (no silent maintenance).
     """
     report: dict[str, dict] = {}
@@ -290,11 +293,7 @@ def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
             out = df.repartition(n_files, "band", "band_hash")
         else:
             out = df.repartition(n_files)
-        tmp, old = live + ".compact", live + ".old"
-        out.write.mode("overwrite").parquet(tmp)
-        os.rename(live, old)
-        os.rename(tmp, live)
-        shutil.rmtree(old)
+        _swap_in(out, live)
         report[table] = {
             "files_before": files_before,
             "files_after": len(glob.glob(os.path.join(live, "*.parquet"))),

@@ -846,10 +846,10 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental dedup exactness: build the persisted index on the
     first 60% of documents (by doc_id), fold the remaining 40% in as
     an ingest batch (broadcast band-index probe + selective candidate
-    fetch + CC over the edge graph — never a re-shingle of the indexed
-    corpus), and return the updated full cluster map. The index is
-    COMPACTED between build and probe (the OPTIMIZE-cadence vacuum),
-    so this hash also pins that compaction is result-invisible. The
+    fetch + CC over the batch's own edges — never a re-shingle of the
+    indexed corpus), and return the updated full cluster map. The
+    index is COMPACTED between build and probe (the OPTIMIZE-cadence
+    vacuum), so this hash also pins that compaction is invisible. The
     oracle is a FULL RECOMPUTE over all documents — incremental must
     equal it exactly (operators/dedup_index.py exactness contract)."""
     from ..operators.dedup_index import (

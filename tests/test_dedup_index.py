@@ -3,6 +3,8 @@ recompute (the exactness contract in operators/dedup_index.py)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cadastral_map_ocr_system_spark.operators import corpus_dedup
@@ -223,3 +225,72 @@ def test_monotone_violation_raises(spark, tmp_path):
             spark, idx, _mk(spark, [(3, "whatever text here")]),
             _mk(spark, rows[:8]),
         )
+
+
+def test_interrupted_clusters_swap_keeps_index_and_retry_is_exact(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose clusters swap fails after the `.compact` write
+    leaves the stored clusters rows as they were; the retried batch
+    equals the full recompute although band_index already holds the
+    failed attempt's postings."""
+    from cadastral_map_ocr_system_spark.operators import dedup_index
+
+    rows = corpus_rows()
+    old, new = _mk(spark, rows[:8]), _mk(spark, rows[8:])
+    idx = str(tmp_path / "idx")
+    build_dedup_index(old, idx)
+    clusters_before = sorted(map(tuple, spark.read.parquet(f"{idx}/clusters").collect()))
+    n_bands_before = spark.read.parquet(f"{idx}/band_index").count()
+
+    def crash(src, dst):
+        raise OSError("crash between the .compact write and its promotion")
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup_index.os, "rename", crash)
+        with pytest.raises(OSError, match="crash between"):
+            incremental_dedup(spark, idx, new, old)
+    assert sorted(
+        map(tuple, spark.read.parquet(f"{idx}/clusters").collect())
+    ) == clusters_before
+    assert spark.read.parquet(f"{idx}/band_index").count() > n_bands_before
+
+    got = _clusters(incremental_dedup(spark, idx, new, old))
+    assert got == _clusters(dedup_clusters(_mk(spark, rows)))
+    assert _clusters(spark.read.parquet(f"{idx}/clusters")) == got
+
+
+def test_batch_graph_holds_only_the_batch_edges(spark, tmp_path, monkeypatch):
+    """Connected components of a second increment run over that
+    batch's verified edges alone, old ends mapped to their stored
+    cluster: no edge of the build or the first increment. An `edges`
+    table left by an older build is neither read nor compacted."""
+    from cadastral_map_ocr_system_spark.operators import dedup_index
+    from cadastral_map_ocr_system_spark.operators.components import _cluster_stages
+
+    seen = []
+
+    def spy(doc_rep, edges):
+        seen.append(sorted(map(tuple, edges.collect())))
+        return real(doc_rep, edges)
+
+    real = dedup_index._rejoin_clusters
+    rows = corpus_rows()
+    extra = [(200, f"{BODY_B} tail200"), (210, rows[8][1])]
+    old = _mk(spark, rows[:8])
+    idx = str(tmp_path / "idx")
+    build_dedup_index(old, idx)
+    legacy = _cluster_stages(old)[2].select("doc_a", "doc_b")
+    legacy.write.parquet(f"{idx}/edges")
+    legacy_files = sorted(os.listdir(f"{idx}/edges"))
+
+    monkeypatch.setattr(dedup_index, "_rejoin_clusters", spy)
+    incremental_dedup(spark, idx, _mk(spark, rows[8:]), old)
+    got = _clusters(incremental_dedup(spark, idx, _mk(spark, extra), _mk(spark, rows)))
+    assert got == _clusters(dedup_clusters(_mk(spark, rows + extra)))
+    # family B (10, 11, 12) is stored as cluster 10; doc 210 is an
+    # exact dup and adds no edge
+    assert seen[1] == [(10, 200)]
+
+    dedup_index.compact_dedup_index(spark, idx)
+    assert sorted(os.listdir(f"{idx}/edges")) == legacy_files

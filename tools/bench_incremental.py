@@ -1,9 +1,12 @@
 """Incremental-dedup cost probe at the 10x corpus: fold a 10% ingest
 batch into a prebuilt index and compare against a full recompute over
 the combined corpus — the number that justifies the index's existence.
+`incremental_jobs` counts the Spark jobs the batch runs (its job group
+in the status tracker).
 
 Also verifies exactness on the spot: the incremental cluster map must
-equal the full-recompute map row for row.
+equal the full-recompute map row for row. The index lives in a temp
+dir that is removed on exit.
 
 Usage: python tools/bench_incremental.py [/tmp/sf1]
 """
@@ -12,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -22,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from bench_extra import min_noop_seconds
     from cadastral_map_ocr_system_spark.operators.components import dedup_clusters
     from cadastral_map_ocr_system_spark.operators.dedup_index import (
         build_dedup_index,
@@ -32,6 +37,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     spark = get_spark(app_name="bench_incremental", master=f"local[{cpus}]")
+    sc = spark.sparkContext
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cut = docs.approxQuantile("doc_id", [0.9], 0.0)[0]
     old = docs.filter(F.col("doc_id") <= cut)
@@ -39,47 +45,50 @@ def main() -> None:
     n_old, n_new = old.count(), new.count()
 
     idx = tempfile.mkdtemp(prefix="dedup_idx_")
-    t0 = time.perf_counter()
-    build_dedup_index(old, idx)
-    build_sec = time.perf_counter() - t0
+    try:
+        t0 = time.perf_counter()
+        build_dedup_index(old, idx)
+        build_sec = time.perf_counter() - t0
 
-    t0 = time.perf_counter()
-    updated = incremental_dedup(spark, idx, new, old)
-    incremental_sec = time.perf_counter() - t0
+        sc.setJobGroup("incremental", "incremental_dedup batch")
+        t0 = time.perf_counter()
+        updated = incremental_dedup(spark, idx, new, old)
+        incremental_sec = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        incremental_jobs = len(sc.statusTracker().getJobIdsForGroup("incremental"))
 
-    t0 = time.perf_counter()
-    full = dedup_clusters(docs)
-    full.write.format("noop").mode("overwrite").save()
-    full_sec = time.perf_counter() - t0
-
-    mismatches = (
-        updated.withColumnRenamed("cluster", "c_inc")
-        .join(full.withColumnRenamed("cluster", "c_full"), "doc_id", "full")
-        .filter(
-            F.col("c_inc").isNull()
-            | F.col("c_full").isNull()
-            | (F.col("c_inc") != F.col("c_full"))
+        full_sec = min_noop_seconds(lambda: dedup_clusters(docs), 1)
+        full = dedup_clusters(docs)
+        mismatches = (
+            updated.withColumnRenamed("cluster", "c_inc")
+            .join(full.withColumnRenamed("cluster", "c_full"), "doc_id", "full")
+            .filter(
+                F.col("c_inc").isNull()
+                | F.col("c_full").isNull()
+                | (F.col("c_inc") != F.col("c_full"))
+            )
+            .count()
         )
-        .count()
-    )
-
-    print(
-        json.dumps(
-            {
-                "metric": "incremental_vs_full_dedup",
-                "sf_dir": sf_dir,
-                "n_indexed": n_old,
-                "n_batch": n_new,
-                "build_index_sec": round(build_sec, 3),
-                "incremental_batch_sec": round(incremental_sec, 3),
-                "full_recompute_sec": round(full_sec, 3),
-                "speedup_vs_full": round(full_sec / incremental_sec, 2),
-                "cluster_mismatches": mismatches,
-                "cpus": cpus,
-            }
+        print(
+            json.dumps(
+                {
+                    "metric": "incremental_vs_full_dedup",
+                    "sf_dir": sf_dir,
+                    "n_indexed": n_old,
+                    "n_batch": n_new,
+                    "build_index_sec": round(build_sec, 3),
+                    "incremental_batch_sec": round(incremental_sec, 3),
+                    "incremental_jobs": incremental_jobs,
+                    "full_recompute_sec": round(full_sec, 3),
+                    "speedup_vs_full": round(full_sec / incremental_sec, 2),
+                    "cluster_mismatches": mismatches,
+                    "cpus": cpus,
+                }
+            )
         )
-    )
-    spark.stop()
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+        spark.stop()
 
 
 if __name__ == "__main__":
