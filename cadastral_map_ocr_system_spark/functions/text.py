@@ -61,8 +61,10 @@ def strip_boilerplate(col: Column) -> Column:
     Per-line rule over the tag-stripped line: keep when
     word_count >= MIN_CONTENT_WORDS and link_density <= MAX_LINK_DENSITY,
     where link_density = (chars of anchor text) / (chars of stripped
-    line). Kept lines are joined with a single space. Runs entirely in
-    whole-stage codegen — no Python in the text hot path.
+    line). Kept lines are joined with a single space. Built-in JVM
+    expressions — no Python in the text hot path — but not all
+    codegen: the per-line rule's lambdas (transform, filter, aggregate)
+    are CodegenFallback expressions in Spark 4.1 and run interpreted.
     """
     no_script = F.regexp_replace(F.regexp_replace(col, SCRIPT_RE, ""), STYLE_RE, "")
     lines = F.split(no_script, r"\n")

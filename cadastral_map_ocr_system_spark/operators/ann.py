@@ -278,7 +278,9 @@ def embedding_near_dups(emb: DataFrame) -> DataFrame:
     corpus_dedup; see its module docstring); audit with
     `embedding_bucket_caps`, empty unless the cap engaged."""
     buckets = _sign_buckets(emb)
-    capped = corpus_dedup._capped_pairs("members", corpus_dedup.DEFAULT_MAX_BUCKET)
+    capped = F.expr(
+        corpus_dedup._capped_pairs("members", corpus_dedup.DEFAULT_MAX_BUCKET)
+    )
     pairs = (
         buckets.filter(F.size("members") >= 2)
         .select(F.explode(capped).alias("p"))

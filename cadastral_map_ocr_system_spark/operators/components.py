@@ -187,9 +187,9 @@ def connected_components(
     # candidate pair, doc_a < doc_b) skip the initial canonicalization
     # exchange — the loop's invariants only need the INPUT edge set to
     # be a set, which such callers already guarantee.
-    e = edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    e = edges.selectExpr("doc_a AS u", "doc_b AS v")
     if not assume_distinct:
-        e = e.filter(F.col("u") != F.col("v")).distinct()
+        e = e.filter("u != v").distinct()
     e = e.localCheckpoint(eager=False)
     t = e.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
     if t.num_rows <= LOCAL_CC_MAX_EDGES:
@@ -211,25 +211,41 @@ def connected_components(
     return members.union(centers).distinct()
 
 
-def _cluster_stages(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(reps, doc_rep, edges): the stages of the duplicate-cluster
-    pipeline that `dedup_clusters` resolves and `build_dedup_index`
-    persists.
+def _cluster_stages(
+    df: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(reps, doc_rep, postings, edges): the stages of the
+    duplicate-cluster pipeline that `dedup_clusters` resolves and
+    `build_dedup_index` persists.
 
-      reps     (fingerprint, rep, text) — one row per distinct
-               content, rep = min doc_id of its exact-duplicate group
-      doc_rep  (doc_id, rep) for every input document
-      edges    (doc_a, doc_b, jaccard) — LSH-gated exact Jaccard >=
-               THRESHOLD between reps (capped buckets, star fallback)
+      reps      (fingerprint, rep, text) — one row per distinct
+                content, rep = min doc_id of its exact-duplicate group
+      doc_rep   (doc_id, rep) for every input document
+      postings  (doc_id, band, band_hash) — the reps' LSH postings
+      edges     (doc_a, doc_b, jaccard) — LSH-gated exact Jaccard >=
+                THRESHOLD between reps (capped buckets, star fallback)
+
+    reps, the reps' shingle sets and their postings are lazily
+    local-checkpointed: the edge branch (run for connected_components'
+    gate read) computes each once and stores its rows. The rep map
+    then reads the reps instead of aggregating every document's text
+    again, the Jaccard verify reads the sets the MinHash stage built,
+    and a band_index write reads the postings. Spark's context cleaner
+    frees the blocks once the frames are garbage-collected; cache()
+    would pin them for the session.
     """
-    reps = corpus_dedup._exact_reps(df)
-    doc_rep = fingerprints(df).join(
-        reps.select("fingerprint", "rep"), "fingerprint"
-    ).select("doc_id", "rep")
-    edges = corpus_dedup.lsh_jaccard_pairs(
-        reps.select(F.col("rep").alias("doc_id"), "text"), pre_exact_dedup=False
+    reps = corpus_dedup._exact_reps(df).localCheckpoint(eager=False)
+    sets = corpus_dedup.shingle_sets(
+        reps.selectExpr("rep AS doc_id", "text"), corpus_dedup.K
+    ).localCheckpoint(eager=False)
+    postings = corpus_dedup.lsh_postings(sets).localCheckpoint(eager=False)
+    doc_rep = (
+        fingerprints(df)
+        .join(reps.selectExpr("fingerprint", "rep"), "fingerprint")
+        .selectExpr("doc_id", "rep")
     )
-    return reps, doc_rep, edges
+    edges = corpus_dedup._verified_pairs(postings, sets)
+    return reps, doc_rep, postings, edges
 
 
 def _rejoin_clusters(doc_rep: DataFrame, edges: DataFrame) -> DataFrame:
@@ -238,9 +254,8 @@ def _rejoin_clusters(doc_rep: DataFrame, edges: DataFrame) -> DataFrame:
     doc_b rows, no duplicates); a rep in no edge is its own cluster
     (singletons never appear in the edge graph)."""
     comp = connected_components(edges, assume_distinct=True)
-    return doc_rep.join(comp, doc_rep.rep == comp.node, "left").select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("rep")).alias("cluster"),
+    return doc_rep.join(comp, F.expr("rep = node"), "left").selectExpr(
+        "doc_id", "coalesce(component, rep) AS cluster"
     )
 
 
@@ -265,13 +280,10 @@ def dedup_clusters(df: DataFrame) -> DataFrame:
     the cap changes candidate PAIR sets but never the CLUSTERS, which
     is why capping is safe for dedup (module docstring there).
     """
-    # one fingerprint aggregation (reps) feeds both the survivor texts
-    # of the edge branch and the rep map of the rejoin, yet it runs
-    # twice per call: the edge branch runs inside connected_components'
-    # gate read, behind a lineage cut, and the final plan (the rep map
-    # joined to CC's LocalTableScan) aggregates once more for the rep
-    # map, with no exchange it could reuse (checked at sf0.01, local[3])
-    _, doc_rep, edges = _cluster_stages(df)
+    # the exact-rep aggregate runs once per call: the edge branch
+    # fills its checkpoint, and the final plan (the rep map joined to
+    # CC's LocalTableScan) reads it (_cluster_stages)
+    _, doc_rep, _, edges = _cluster_stages(df)
     return _rejoin_clusters(doc_rep, edges)
 
 

@@ -20,7 +20,18 @@ band postings (`lsh_postings`) and their buckets (`lsh_buckets`), the
 capped in-bucket pair expansion (`_bucket_pairs`) and the exact
 Jaccard verify (`_jaccard_over_pair_sets`). The near-dup parameters
 are the module constants K, N_HASHES, BANDS, THRESHOLD and
-DEFAULT_MAX_BUCKET.
+DEFAULT_MAX_BUCKET. The LSH stages take per-document shingle SETS
+(`shingle_sets`), so one set table feeds both the MinHash signatures
+and the Jaccard verify. The cluster pipeline
+(components._cluster_stages) runs the exact-rep aggregate, the
+shingling and the MinHash once per call: all three are lazily
+local-checkpointed, so the LSH branch materializes them and the rep
+map, the Jaccard verify and the index's band_index write read those
+rows.
+
+Projections are SQL text, one `selectExpr`/`F.expr` parse each:
+DataFrame construction is part of every call, and each nested Column
+call is a py4j round trip (see minhash_sig_cols).
 
 All hashing is md5-based so any engine reproduces results bit-for-bit
 (cross-engine oracle checks; at cluster scale xxhash64 is a drop-in
@@ -59,7 +70,7 @@ both ON by default in the scale entry points:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import fingerprint, fingerprints, tokens
@@ -111,11 +122,11 @@ def _star_expr(ids: str) -> str:
     )
 
 
-def _capped_pairs(ids: str, max_bucket: int) -> Column:
-    """Full i<j expansion for buckets within the cap, star pairs above
-    it. CaseWhen evaluates lazily, so the quadratic branch is never
-    executed for an over-cap bucket. `ids` is a column NAME."""
-    return F.expr(
+def _capped_pairs(ids: str, max_bucket: int) -> str:
+    """SQL for: full i<j expansion for buckets within the cap, star
+    pairs above it. CaseWhen evaluates lazily, so the quadratic branch
+    is never executed for an over-cap bucket. `ids` is a column NAME."""
+    return (
         f"CASE WHEN size({ids}) <= {max_bucket} THEN {_pairs_expr(ids)} "
         f"ELSE {_star_expr(ids)} END"
     )
@@ -164,13 +175,10 @@ def _exact_reps(df: DataFrame) -> DataFrame:
     shuffled. Struct MIN orders by leading field, so this is exactly
     min-by-doc_id (doc_id is unique)."""
     return (
-        df.groupBy(fingerprint().alias("fingerprint"))
-        .agg(F.min(F.struct("doc_id", "text")).alias("s"))
-        .select(
-            "fingerprint",
-            F.col("s.doc_id").alias("rep"),
-            F.col("s.text").alias("text"),
-        )
+        df.selectExpr(f"{fingerprint()} AS fingerprint", "doc_id", "text")
+        .groupBy("fingerprint")
+        .agg(F.expr("min(struct(doc_id, text)) AS s"))
+        .selectExpr("fingerprint", "s.doc_id AS rep", "s.text AS text")
     )
 
 
@@ -178,7 +186,7 @@ def exact_dedup_survivor_docs(df: DataFrame) -> DataFrame:
     """(doc_id, text) of the min-doc_id representative of every
     exact-duplicate group — the mandatory stage-0 of the near-dup
     detectors below."""
-    return _exact_reps(df).select(F.col("rep").alias("doc_id"), "text")
+    return _exact_reps(df).selectExpr("rep AS doc_id", "text")
 
 
 # ----------------------------------------------------------- shingles
@@ -195,44 +203,37 @@ def shingle_sets(df: DataFrame, k: int = 3) -> DataFrame:
     re-tokenize the document for every element of every shingle —
     O(tokens^2) per document (measured 10x+ on the bench corpus).
     """
-    t = df.select(
-        "doc_id", tokens().alias("toks")
+    words = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(k))
+    shingles = (
+        f"CASE WHEN size(toks) >= {k} THEN transform(sequence(0, size(toks) - {k}), "
+        f"i -> concat_ws(' ', {words})) ELSE CAST(array() AS array<string>) END"
     )
-    toks = F.col("toks")
-    n = F.size(toks)
-    shingles = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return t.select("doc_id", F.array_distinct(shingles).alias("shingles"))
+    return df.selectExpr("doc_id", f"{tokens()} AS toks").selectExpr(
+        "doc_id", f"array_distinct({shingles}) AS shingles"
+    )
 
 
-def shingle_rows(df: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct word k-gram shingles per document, one row each.
+def shingle_rows(sets: DataFrame) -> DataFrame:
+    """(doc_id, shingle): the shingle sets `sets` (shingle_sets), one
+    row per distinct shingle of a document.
 
     No distinct(): array_distinct already dedups within the document,
     so exploded (doc_id, shingle) rows are unique by construction and
     a corpus-wide distinct would be a pure-waste shuffle of the
     largest intermediate in the pipeline.
     """
-    return shingle_sets(df, k).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
+    return sets.selectExpr("doc_id", "explode(shingles) AS shingle")
 
 
 # ------------------------------------------------------ n-gram Jaccard
-def _jaccard_over_pair_sets(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+def _jaccard_over_pair_sets(pairs: DataFrame, sets: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard): exact word K-gram Jaccard >= THRESHOLD
-    for given (doc_a, doc_b) pairs over per-document shingle SETS
-    (array form) of `docs`. The one Jaccard verify: the LSH path and
-    the incremental index both call it, and both hand it a candidate
-    pair list that is small by construction (LSH-gated + capped), so
-    the pair list is broadcast against the set table twice. The
+    for given (doc_a, doc_b) pairs over the per-document shingle SETS
+    `sets` (shingle_sets(docs, K)). The one Jaccard verify: the LSH
+    path and the incremental index both call it, and both hand it a
+    candidate pair list that is small by construction (LSH-gated +
+    capped), so the pair list is broadcast against the set table
+    twice. The
     corpus-sized text is never shuffled and never self-joined on
     shingle text, and the intersection is one row-local
     array_intersect. n_common = |intersect| because the sets are
@@ -240,31 +241,21 @@ def _jaccard_over_pair_sets(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     n_common >= 1 filter. (A candidate-members semi-join that builds
     shingle arrays only for paired docs was measured SLOWER — the
     members broadcast re-evaluates the whole candidate subtree, which
-    AQE's exchange reuse does not fully dedup — so the set table is
-    built over all of `docs`, where the construction is one narrow
-    pass.)"""
-    sets_ = shingle_sets(docs, K)
-    a = sets_.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
-    )
-    b = sets_.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb")
-    )
-    n_common = F.size(F.array_intersect("sa", "sb"))
+    AQE's exchange reuse does not fully dedup — so the set table
+    covers all docs, where the construction is one narrow pass.)"""
+    a = sets.selectExpr("doc_id AS doc_a", "shingles AS sa")
+    b = sets.selectExpr("doc_id AS doc_b", "shingles AS sb")
+    n_common = "size(array_intersect(sa, sb))"
     with_a = a.join(F.broadcast(pairs), "doc_a")
     return (
         b.join(F.broadcast(with_a), "doc_b")
-        .select(
+        .selectExpr(
             "doc_a",
             "doc_b",
-            n_common.alias("n_common"),
-            F.round(
-                n_common
-                / (F.size("sa") + F.size("sb") - n_common),
-                6,
-            ).alias("jaccard"),
+            f"{n_common} AS n_common",
+            f"round({n_common} / (size(sa) + size(sb) - {n_common}), 6) AS jaccard",
         )
-        .filter((F.col("n_common") >= 1) & (F.col("jaccard") >= THRESHOLD))
+        .filter(f"n_common >= 1 AND jaccard >= {float(THRESHOLD)!r}D")
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -284,24 +275,31 @@ def lsh_jaccard_pairs(df: DataFrame, pre_exact_dedup: bool = True) -> DataFrame:
     SETS with the candidate list broadcast (_jaccard_over_pair_sets):
     the corpus is never shuffled on shingle text."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    cand = lsh_candidate_pairs(
-        docs, max_bucket=DEFAULT_MAX_BUCKET, pre_exact_dedup=False
-    )
-    return _jaccard_over_pair_sets(cand, docs)
+    sets = shingle_sets(docs, K)
+    return _verified_pairs(lsh_postings(sets), sets)
+
+
+def _verified_pairs(postings: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the Jaccard-verified pairs of the capped
+    LSH buckets of `postings`, the band postings of the shingle sets
+    `sets`."""
+    cand = _bucket_pairs(lsh_buckets(postings), DEFAULT_MAX_BUCKET)
+    return _jaccard_over_pair_sets(cand, sets)
 
 
 # -------------------------------------------------------- MinHash + LSH
-def minhash_sig_cols(df: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{N_HASHES-1}): the fused minhash signature — one
-    groupBy(doc_id) with N_HASHES MIN aggregates over exploded shingle
-    rows. The per-seed md5s run in whole-stage-codegen'd projection and
-    collapse map-side via partial aggregation, so the exchange carries
-    one narrow row per document. (An array-native variant — N_HASHES
+def minhash_sig_cols(sets: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{N_HASHES-1}): the fused minhash signature of the
+    shingle sets `sets` (shingle_sets(docs, K)) — one groupBy(doc_id)
+    with N_HASHES MIN aggregates over the exploded shingle rows. The
+    per-seed md5s run in whole-stage-codegen'd projection and collapse
+    map-side via partial aggregation, so the exchange carries one
+    narrow row per document. (An array-native variant — N_HASHES
     array_min(transform(md5)) folds per row — was measured 2.6x SLOWER
     at sf1: higher-order-function lambdas evaluate interpreted, and
     16 x shingles md5 calls dominate this operator; keeping them in
     codegen beats saving the already-narrow exchange.)"""
-    sh = shingle_rows(df, K)
+    sh = shingle_rows(sets)
     # two per-task micro-optimizations, both value-identical (verified
     # exceptAll == 0 on the bench corpus; guide §1.2 per-task work):
     #   - the "seed|" prefix is constant-folded into one literal
@@ -325,10 +323,10 @@ def minhash_sig_cols(df: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*mins)
 
 
-def band_hash_structs():
-    """array<struct<band, band_hash>> over signature columns
-    h0..h{N_HASHES-1}, BANDS bands — row-local banding. Built as one
-    SQL string (see minhash_sig_cols on construction cost)."""
+def band_hash_structs() -> str:
+    """SQL for: array<struct<band, band_hash>> over signature columns
+    h0..h{N_HASHES-1}, BANDS bands — row-local banding (see
+    minhash_sig_cols on construction cost)."""
     rpb = N_HASHES // BANDS
     entries = ", ".join(
         "named_struct('band', {b}, 'band_hash', md5(concat_ws(',', {cols})))".format(
@@ -336,17 +334,15 @@ def band_hash_structs():
         )
         for b in range(BANDS)
     )
-    return F.expr(f"array({entries})")
+    return f"array({entries})"
 
 
-def lsh_postings(df: DataFrame) -> DataFrame:
+def lsh_postings(sets: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash): one banded-LSH posting row per
-    document and band — the form the dedup index stores and probes."""
-    sig = minhash_sig_cols(df)
-    return sig.select(
-        "doc_id", F.explode(band_hash_structs()).alias("bb")
-    ).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
+    document of the shingle sets `sets` (shingle_sets(docs, K)) and
+    band — the form the dedup index stores and probes."""
+    return minhash_sig_cols(sets).selectExpr(
+        "doc_id", f"inline({band_hash_structs()})"
     )
 
 
@@ -354,7 +350,7 @@ def lsh_buckets(postings: DataFrame) -> DataFrame:
     """(band, band_hash, ids): posting rows grouped into buckets, ids
     sorted — the frame the candidate generators and cap reports read."""
     return postings.groupBy("band", "band_hash").agg(
-        F.array_sort(F.collect_set("doc_id")).alias("ids")
+        F.expr("array_sort(collect_set(doc_id)) AS ids")
     )
 
 
@@ -362,9 +358,8 @@ def _bucket_pairs(buckets: DataFrame, max_bucket: int) -> DataFrame:
     """Distinct (doc_a, doc_b), doc_a < doc_b: every in-bucket pair,
     star pairs for buckets over `max_bucket`."""
     return (
-        buckets.filter(F.size("ids") >= 2)
-        .select(F.explode(_capped_pairs("ids", max_bucket)).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        buckets.filter("size(ids) >= 2")
+        .selectExpr(f"inline({_capped_pairs('ids', max_bucket)}) AS (doc_a, doc_b)")
         .distinct()
     )
 
@@ -398,7 +393,8 @@ def lsh_candidate_pairs(
     Values are the md5(seed|shingle) minima and band-hash
     concatenation that the DuckDB oracle reproduces independently."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    return _bucket_pairs(lsh_buckets(lsh_postings(docs)), max_bucket)
+    postings = lsh_postings(shingle_sets(docs, K))
+    return _bucket_pairs(lsh_buckets(postings), max_bucket)
 
 
 def lsh_capped_buckets(
@@ -410,7 +406,9 @@ def lsh_capped_buckets(
     counts — run (and log/persist) alongside `lsh_candidate_pairs` at
     scale so the cap is never silent."""
     docs = exact_dedup_survivor_docs(df) if pre_exact_dedup else df
-    return _cap_report(lsh_buckets(lsh_postings(docs)), "ids", max_bucket)
+    return _cap_report(
+        lsh_buckets(lsh_postings(shingle_sets(docs, K))), "ids", max_bucket
+    )
 
 
 # -------------------------------------------------------------- SimHash
@@ -420,10 +418,7 @@ def simhash(df: DataFrame) -> DataFrame:
     bit_i(doc) = 1 iff sum over tokens of (bit_i(md5(tok)) ? +1 : -1)
     is positive. Integer arithmetic only — deterministic everywhere.
     """
-    toks = df.select(
-        "doc_id",
-        F.explode(tokens()).alias("tok"),
-    )
+    toks = df.selectExpr("doc_id", f"explode({tokens()}) AS tok")
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     toks = toks.select("doc_id", h.alias("h"))
     # the 2*SIMHASH_BITS generated aggregate/select expressions are built as
@@ -485,9 +480,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     whose every span is dropped keeps its row with clean_text = ''.
     """
     w = SPAN_WINDOW_TOKENS
-    toks = docs.select(
-        "doc_id", tokens().alias("tokens")
-    )
+    toks = docs.selectExpr("doc_id", f"{tokens()} AS tokens")
     with_chunks = toks.select(
         "doc_id",
         F.transform(
@@ -563,9 +556,14 @@ def contamination_report(corpus: DataFrame, eval_docs: DataFrame) -> DataFrame:
     Returns (doc_id, n_eval_shingle_hits, contaminated) for every
     corpus document, hit or not.
     """
-    ev = shingle_rows(eval_docs, CONTAMINATION_K).select("shingle").distinct()
+    ev = (
+        shingle_rows(shingle_sets(eval_docs, CONTAMINATION_K))
+        .select("shingle")
+        .distinct()
+    )
     hits = (
-        shingle_rows(corpus, CONTAMINATION_K)  # rows unique per (doc, shingle)
+        # rows unique per (doc, shingle)
+        shingle_rows(shingle_sets(corpus, CONTAMINATION_K))
         .join(F.broadcast(ev), "shingle")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"))

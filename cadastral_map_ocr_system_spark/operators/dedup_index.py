@@ -61,12 +61,14 @@ from pyspark.sql import functions as F
 from . import corpus_dedup
 from .components import _cluster_stages, _rejoin_clusters
 from .corpus_dedup import (
+    K,
     _bucket_pairs,
     _cap_report,
     _exact_reps,
     _jaccard_over_pair_sets,
     lsh_buckets,
     lsh_postings,
+    shingle_sets,
 )
 from .textstats import fingerprints
 
@@ -106,14 +108,14 @@ def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     index tables — the frames `components.dedup_clusters` computes.
     This is the bootstrap (and the re-canonicalization path if the cap
     caveat in the module docstring is ever hit)."""
-    reps, doc_rep, edges = _cluster_stages(docs)
+    reps, doc_rep, postings, edges = _cluster_stages(docs)
     clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b"))
-    band_index = lsh_postings(reps.select(F.col("rep").alias("doc_id"), "text"))
-    # a fresh build writes to a fresh dir, so plain writes suffice
+    # a fresh build writes to a fresh dir, so plain writes suffice;
+    # the gate read above has materialized reps and postings
     reps.select("fingerprint", "rep").write.mode("overwrite").parquet(
         f"{index_path}/fp_index"
     )
-    band_index.write.mode("overwrite").parquet(f"{index_path}/band_index")
+    postings.write.mode("overwrite").parquet(f"{index_path}/band_index")
     clusters.write.mode("overwrite").parquet(f"{index_path}/clusters")
 
 
@@ -142,14 +144,6 @@ def incremental_dedup(
     band_index = spark.read.parquet(f"{index_path}/band_index")
     old_clusters = spark.read.parquet(clusters_dir)
 
-    max_old = old_clusters.agg(F.max("doc_id")).first()[0]
-    min_new = new_docs.agg(F.min("doc_id")).first()[0]
-    if max_old is not None and min_new is not None and min_new <= max_old:
-        raise ValueError(
-            f"monotone-ingest violation: new doc_id {min_new} <= indexed "
-            f"max {max_old} — rebuild with build_dedup_index instead"
-        )
-
     # --- stage 1: exact dedup against the index -------------------
     # in-batch exact groups first (map-side-collapsible), then probe
     # the fingerprint index: a known fingerprint inherits its stored
@@ -158,6 +152,23 @@ def incremental_dedup(
     probed = _to_cluster(
         _probe(spark, index_path, new_docs), "old_rep", old_clusters
     ).localCheckpoint(eager=True)
+
+    # both bounds in one aggregate, before anything is written; the
+    # batch's min doc_id is its min exact rep, so the batch is not
+    # scanned again
+    max_old, min_new = (
+        old_clusters.selectExpr("doc_id AS id", "true AS old")
+        .union(probed.selectExpr("rep AS id", "false AS old"))
+        .selectExpr(
+            "max(CASE WHEN old THEN id END)", "min(CASE WHEN NOT old THEN id END)"
+        )
+        .first()
+    )
+    if max_old is not None and min_new is not None and min_new <= max_old:
+        raise ValueError(
+            f"monotone-ingest violation: new doc_id {min_new} <= indexed "
+            f"max {max_old} — rebuild with build_dedup_index instead"
+        )
     new_survivors = _new_survivors(probed)
     new_doc_rep = fingerprints(new_docs).join(
         probed.select(
@@ -169,7 +180,9 @@ def incremental_dedup(
     # --- stage 2: LSH candidates (new x old via index, new x new) --
     # materialized once: three consumers (old-probe, new-new buckets,
     # the index append), and the batch side is small by definition
-    new_bands = lsh_postings(new_survivors).localCheckpoint(eager=True)
+    new_bands = lsh_postings(shingle_sets(new_survivors, K)).localCheckpoint(
+        eager=True
+    )
     cand_old = (
         F.broadcast(new_bands.withColumnRenamed("doc_id", "doc_b"))
         .join(
@@ -189,7 +202,7 @@ def incremental_dedup(
         candidates.select(F.col("doc_a").alias("doc_id")).distinct(), "doc_id"
     ).select("doc_id", "text")
     new_edges = _jaccard_over_pair_sets(
-        candidates, old_cand_docs.union(new_survivors)
+        candidates, shingle_sets(old_cand_docs.union(new_survivors), K)
     ).select("doc_a", "doc_b")
 
     # --- stage 4: components over the batch's edges ----------------
@@ -229,7 +242,9 @@ def incremental_capped_buckets(
     docstring)."""
     new_survivors = _new_survivors(_probe(spark, index_path, new_docs))
     return _cap_report(
-        lsh_buckets(lsh_postings(new_survivors)), "ids", corpus_dedup.DEFAULT_MAX_BUCKET
+        lsh_buckets(lsh_postings(shingle_sets(new_survivors, K))),
+        "ids",
+        corpus_dedup.DEFAULT_MAX_BUCKET,
     )
 
 

@@ -2,16 +2,22 @@
 
 Language-ID (stopword-hit heuristic), quality scoring (length /
 punctuation / stopword ratios), token counting, and document
-fingerprinting — all pure built-in column expressions (JVM-side,
-whole-stage codegen; no Python in the hot path). These generalize the
-reference's text-vs-noise scoring (confidence/length gates at
-OCR/src/detect.py:366-368, keyword classifier at
+fingerprinting — all built-in JVM expressions, no Python in the hot
+path (the higher-order-function lambdas — the stopword filter, the
+bigram fold — run interpreted; the rest is whole-stage codegen). These
+generalize the reference's text-vs-noise scoring (confidence/length
+gates at OCR/src/detect.py:366-368, keyword classifier at
 OCR/src/comprehensive_detector.py:127-142) to corpus scale.
+
+The dedup path's projections (`tokens`, `fingerprint`, `token_counts`,
+`quality_scores`) are SQL text parsed by one `selectExpr`/`F.expr`
+call each: every nested Column call is a py4j round trip, and DataFrame
+construction is part of every call's wall time.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Fixed stopword list for the heuristic scorers (ASCII, lowercase).
@@ -20,21 +26,29 @@ STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on"]
 TOKEN_SPLIT_RE = r"\s+"
 
 
-def tokens() -> Column:
-    """The whitespace tokenization of `text`, lowercased: the one
-    tokenizer of every text operator."""
-    return F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)
+def _sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal: backslashes and quotes are
+    escaped, since the parser unescapes them (`'\\s+'` would reach the
+    regex engine as `s+`)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def tokens() -> str:
+    """SQL text of the whitespace tokenization of `text`, lowercased:
+    the one tokenizer of every text operator. `trim` strips spaces
+    only, so a leading or trailing tab or newline yields an empty
+    token."""
+    return f"split(trim(lower(text)), {_sql_str(TOKEN_SPLIT_RE)})"
 
 
 def token_counts(df: DataFrame) -> DataFrame:
     """Per-document token/char counts (BPE-ish subword estimate included:
     ceil(chars/4) mirrors the common ~4-chars-per-token rule)."""
-    t = df.withColumn("tokens", tokens())
-    return t.select(
+    return df.selectExpr(
         "doc_id",
-        F.size("tokens").alias("n_tokens"),
-        F.length("text").alias("n_chars_actual"),
-        F.ceil(F.length("text") / 4).cast("long").alias("n_subwords_est"),
+        f"size({tokens()}) AS n_tokens",
+        "length(text) AS n_chars_actual",
+        "CAST(ceil(length(text) / 4) AS BIGINT) AS n_subwords_est",
     )
 
 
@@ -46,33 +60,25 @@ def quality_scores(df: DataFrame) -> DataFrame:
     alpha_ratio:    fraction of chars that are letters or spaces.
     All rounded to 6 dp so results are comparable across engines.
     """
-    t = df.withColumn("tokens", tokens())
-    n_tokens = F.size("tokens")
-    n_stop = F.size(F.filter("tokens", lambda x: x.isin(STOPWORDS)))
+    stop = ", ".join(_sql_str(w) for w in STOPWORDS)
+    alpha = "ABCDEFGHIJKLMNOPQRSTUVWXYZ" "abcdefghijklmnopqrstuvwxyz" " "
+    # the tokens are projected once, then read by three expressions.
     # sum(length(tok)) == length of the separator-less join: one
-    # builtin concat instead of an interpreted per-element fold
-    token_chars = F.length(F.array_join("tokens", ""))
+    # builtin concat instead of an interpreted per-element fold.
     # count of [A-Za-z ] chars == total length minus the length after
     # deleting exactly those 53 chars: translate is a per-char table
     # lookup, ~3x faster than regexp_replace building the filtered
     # string (measured 2.1 s -> 0.7 s at sf1); same count for every
     # input because both enumerate the identical ASCII set
-    _alpha = (
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ" "abcdefghijklmnopqrstuvwxyz" " "
-    )
-    alpha_chars = F.length("text") - F.length(
-        F.translate(F.col("text"), _alpha, "")
-    )
-    return t.select(
+    return df.selectExpr("doc_id", "text", f"{tokens()} AS tokens").selectExpr(
         "doc_id",
-        n_tokens.alias("n_tokens"),
-        F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 6).alias("stopword_ratio"),
-        F.round(token_chars / F.greatest(n_tokens, F.lit(1)), 6).alias(
-            "avg_token_len"
-        ),
-        F.round(alpha_chars / F.greatest(F.length("text"), F.lit(1)), 6).alias(
-            "alpha_ratio"
-        ),
+        "size(tokens) AS n_tokens",
+        f"round(size(filter(tokens, x -> x IN ({stop}))) "
+        "/ greatest(size(tokens), 1), 6) AS stopword_ratio",
+        "round(length(array_join(tokens, '')) / greatest(size(tokens), 1), 6)"
+        " AS avg_token_len",
+        f"round((length(text) - length(translate(text, {_sql_str(alpha)}, '')))"
+        " / greatest(length(text), 1), 6) AS alpha_ratio",
     )
 
 
@@ -115,7 +121,7 @@ def repetition_scores(df: DataFrame) -> DataFrame:
 
     Returns (doc_id, n_tokens, dup_token_ratio, top_bigram_frac).
     """
-    t = df.withColumn("tokens", tokens()).select("doc_id", "tokens")
+    t = df.selectExpr("doc_id", f"{tokens()} AS tokens")
     n = F.size("tokens")
     base = t.select(
         "doc_id",
@@ -193,14 +199,13 @@ def redact_pii(df: DataFrame) -> DataFrame:
     return df.select("doc_id", cur.alias("clean_text"), *exprs)
 
 
-def fingerprint() -> Column:
-    """Stable content fingerprint of the `text` column: md5 of the
-    whitespace-normalized, lowercased text (md5 so any engine
-    reproduces it bit-for-bit). The one exact-duplicate key."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE, " ")
-    return F.md5(norm)
+def fingerprint() -> str:
+    """SQL text of the stable content fingerprint of the `text` column:
+    md5 of the whitespace-normalized, lowercased text (md5 so any
+    engine reproduces it bit-for-bit). The one exact-duplicate key."""
+    return f"md5(regexp_replace(trim(lower(text)), {_sql_str(TOKEN_SPLIT_RE)}, ' '))"
 
 
 def fingerprints(df: DataFrame) -> DataFrame:
     """(doc_id, fingerprint) for every document."""
-    return df.select("doc_id", fingerprint().alias("fingerprint"))
+    return df.selectExpr("doc_id", f"{fingerprint()} AS fingerprint")

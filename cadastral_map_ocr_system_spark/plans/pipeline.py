@@ -6,7 +6,8 @@ re-expressed as one lazy DataFrame graph — SURVEY.md §3).
          ── mapInArrow span stage                [media extract + dedup;
                                                   text/sentinel columnar
                                                   passthrough]
-         ── strip_boilerplate on text rows       [whole-stage codegen]
+         ── strip_boilerplate on text rows       [JVM exprs; line-rule
+                                                  lambdas interpreted]
          ── groupBy(doc_id) re-zip               [1 shuffle]
          ── extracted(doc_id, spans[(kind,text,media_ref,order)])
 
@@ -20,8 +21,10 @@ tests/test_plan_shape.py):
     are dropped inside the re-zip transform — no corpus-wide join to
     re-attach them.
   - Text cleanup is built-in column expressions AFTER the Arrow stage,
-    so it stays inside codegen; the Arrow stage passes text through
-    columnar (no per-row Python on the text path).
+    so it runs in the JVM: the regexes in codegen, the per-line rule's
+    array lambdas interpreted (Spark's transform/filter/aggregate are
+    CodegenFallback); the Arrow stage passes text through columnar (no
+    per-row Python on the text path).
 """
 
 from __future__ import annotations

@@ -526,9 +526,7 @@ def q_field_classify(spark: SparkSession, sf: str) -> DataFrame:
     (guide §1.2 step 2: make the per-task work proportional to what
     the answer needs)."""
     docs = load(spark, sf, "documents", spread=True)
-    toks = docs.select(
-        F.explode(textstats.tokens()).alias("tok")
-    )
+    toks = docs.selectExpr(f"explode({textstats.tokens()}) AS tok")
     per_tok = toks.groupBy("tok").agg(F.count("*").alias("c"))
     cls = (
         F.when(

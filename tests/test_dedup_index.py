@@ -280,7 +280,7 @@ def test_batch_graph_holds_only_the_batch_edges(spark, tmp_path, monkeypatch):
     old = _mk(spark, rows[:8])
     idx = str(tmp_path / "idx")
     build_dedup_index(old, idx)
-    legacy = _cluster_stages(old)[2].select("doc_a", "doc_b")
+    legacy = _cluster_stages(old)[3].select("doc_a", "doc_b")
     legacy.write.parquet(f"{idx}/edges")
     legacy_files = sorted(os.listdir(f"{idx}/edges"))
 

@@ -236,6 +236,66 @@ def test_lang_id_flags_stopword_text(spark):
     assert pred == {1: "en", 2: "other"}
 
 
+def test_sql_text_rules_on_whitespace_and_quotes(spark):
+    """tokens(), fingerprint(), quality_scores and token_counts are SQL
+    text with the split regex, stopwords and alphabet embedded as SQL
+    literals: tabs, CR/LF, space runs, blanks that `trim` keeps or
+    strips, empty and null text, and a quote and a backslash in the
+    text pin the values (Spark's `trim` strips spaces only)."""
+    import hashlib
+
+    rows = [
+        (1, "Alpha\tBeta"),
+        (2, "one\r\ntwo"),
+        (3, "a   b  c"),
+        (4, "  the lead  "),
+        (5, "\tx y\n"),
+        (6, ""),
+        (7, None),
+        (8, "it's a \\s test"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["t"], r["f"])
+        for r in df.selectExpr(
+            "doc_id", f"{textstats.tokens()} AS t", f"{textstats.fingerprint()} AS f"
+        ).collect()
+    }
+    toks = {
+        1: ["alpha", "beta"],
+        2: ["one", "two"],
+        3: ["a", "b", "c"],
+        4: ["the", "lead"],
+        5: ["", "x", "y", ""],
+        6: [""],
+        7: None,
+        8: ["it's", "a", "\\s", "test"],
+    }
+    norm = {1: "alpha beta", 2: "one two", 3: "a b c", 4: "the lead",
+            5: " x y ", 6: "", 8: "it's a \\s test"}
+    fps = {k: hashlib.md5(v.encode()).hexdigest() for k, v in norm.items()}
+    assert got == {k: (toks[k], fps.get(k)) for k in toks}
+
+    quality = {
+        r["doc_id"]: tuple(r)[1:] for r in textstats.quality_scores(df).collect()
+    }
+    assert quality == {
+        1: (2, 0.0, 4.5, 0.9),
+        2: (2, 0.0, 3.0, 0.75),
+        3: (3, 0.333333, 1.0, 1.0),
+        4: (2, 0.5, 3.5, 1.0),
+        5: (4, 0.0, 0.5, 0.6),
+        6: (1, 0.0, 0.0, 0.0),
+        7: (None, None, None, None),
+        8: (4, 0.25, 2.75, 0.857143),
+    }
+    counts = {r["doc_id"]: tuple(r)[1:] for r in textstats.token_counts(df).collect()}
+    assert counts == {
+        1: (2, 10, 3), 2: (2, 8, 2), 3: (3, 8, 2), 4: (2, 12, 3),
+        5: (4, 5, 2), 6: (1, 0, 0), 7: (None, None, None), 8: (4, 14, 4),
+    }
+
+
 def test_streaming_wrapper(spark, tmp_path):
     from cadastral_map_ocr_system_spark import synth
     from cadastral_map_ocr_system_spark.schema import DOCS

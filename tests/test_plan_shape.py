@@ -75,6 +75,20 @@ def test_minhash_lsh_plan_no_self_join(spark):
     assert n_exchanges == 4, plan
 
 
+def test_dedup_clusters_final_plan_reads_the_rep_checkpoint(spark):
+    """The exact-rep aggregate, a shuffle of every document's text, runs
+    once per dedup_clusters call: inside connected_components' gate
+    read, which materializes its lazy checkpoint. The executed final
+    plan's rep map reads that checkpoint and aggregates no text."""
+    from cadastral_map_ocr_system_spark.operators.components import dedup_clusters
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = dedup_clusters(docs)
+    assert len(out.collect()) == docs.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "min(struct(doc_id" not in plan, plan
+
+
 def test_cc_star_rounds_one_exchange_per_window(spark):
     """Each connected-components star round must stay the window-min
     shape: large-star exactly ONE exchange (the window) and no join;

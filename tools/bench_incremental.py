@@ -1,8 +1,9 @@
 """Incremental-dedup cost probe at the 10x corpus: fold a 10% ingest
 batch into a prebuilt index and compare against a full recompute over
 the combined corpus — the number that justifies the index's existence.
-`incremental_jobs` counts the Spark jobs the batch runs (its job group
-in the status tracker).
+`incremental_jobs` counts the Spark jobs the batch runs and `build_jobs`
+those of the full index build over the other 90% (each its job group in
+the status tracker).
 
 Also verifies exactness on the spot: the incremental cluster map must
 equal the full-recompute map row for row. The index lives in a temp
@@ -46,6 +47,7 @@ def main() -> None:
 
     idx = tempfile.mkdtemp(prefix="dedup_idx_")
     try:
+        sc.setJobGroup("build", "build_dedup_index")
         t0 = time.perf_counter()
         build_dedup_index(old, idx)
         build_sec = time.perf_counter() - t0
@@ -55,6 +57,7 @@ def main() -> None:
         updated = incremental_dedup(spark, idx, new, old)
         incremental_sec = time.perf_counter() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup("build"))
         incremental_jobs = len(sc.statusTracker().getJobIdsForGroup("incremental"))
 
         full_sec = min_noop_seconds(lambda: dedup_clusters(docs), 1)
@@ -77,6 +80,7 @@ def main() -> None:
                     "n_indexed": n_old,
                     "n_batch": n_new,
                     "build_index_sec": round(build_sec, 3),
+                    "build_jobs": build_jobs,
                     "incremental_batch_sec": round(incremental_sec, 3),
                     "incremental_jobs": incremental_jobs,
                     "full_recompute_sec": round(full_sec, 3),
