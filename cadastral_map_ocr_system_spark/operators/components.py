@@ -24,12 +24,11 @@ passes. Two properties make it THE shape that survives 100 TB:
     the potential, and at the fixed point the edge set IS the answer —
     a star from every component's min node to its members.
 
-Driver loop notes: lineage is cut every round with a lazy
-localCheckpoint (plan depth would otherwise double per round and
-overwhelm the optimizer long before the data is the problem), and the
-fixed point is detected by an exact signature (edge count + sum of
-xxhash64(u, v)) — two scalar aggregates, no subtract/anti-join of the
-full edge set.
+Driver loop notes: lineage is cut every round with localCheckpoint
+(plan depth would otherwise double per round; under AQE the call runs
+the round's shuffle map stages at once), and the fixed point is
+detected by an exact signature (edge count + sum of xxhash64(u, v)) —
+two scalar aggregates, no subtract/anti-join of the full edge set.
 """
 
 from __future__ import annotations
@@ -177,11 +176,11 @@ def connected_components(
     here would require a second full pass over a node frame this
     operator does not have.
     """
-    # lazy localCheckpoint: the first action over the checkpointed plan
-    # materializes the cut lineage as a side effect (eager=True ran a
-    # separate materialization job first). The gate's bounded read is
-    # that action for the input edges, and each round's signature
-    # aggregate for the round's output.
+    # localCheckpoint(eager=False) is not lazy under AQE: the call runs
+    # every shuffle map stage of the plan, serially in the driver
+    # thread; only the last stage waits for the first action, which
+    # stores the rows (eager=True adds a count job). That action is the
+    # gate's read here, and each round's signature aggregate.
     # assume_distinct: callers whose edge frame is distinct loop-free
     # by construction (e.g. LSH-gated jaccard pairs: one row per
     # candidate pair, doc_a < doc_b) skip the initial canonicalization
@@ -225,9 +224,10 @@ def _cluster_stages(
       edges     (doc_a, doc_b, jaccard) — LSH-gated exact Jaccard >=
                 THRESHOLD between reps (capped buckets, star fallback)
 
-    reps, the reps' shingle sets and their postings are lazily
-    local-checkpointed: the edge branch (run for connected_components'
-    gate read) computes each once and stores its rows. The rep map
+    reps, the reps' shingle sets and their postings are checkpointed
+    (eager=False: under AQE the call runs their shuffle map stages);
+    the edge branch, run for connected_components' gate read, stores
+    their rows, so each is computed once. The rep map
     then reads the reps instead of aggregating every document's text
     again, the Jaccard verify reads the sets the MinHash stage built,
     and a band_index write reads the postings. Spark's context cleaner

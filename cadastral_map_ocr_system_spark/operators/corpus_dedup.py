@@ -24,10 +24,10 @@ DEFAULT_MAX_BUCKET. The LSH stages take per-document shingle SETS
 (`shingle_sets`), so one set table feeds both the MinHash signatures
 and the Jaccard verify. The cluster pipeline
 (components._cluster_stages) runs the exact-rep aggregate, the
-shingling and the MinHash once per call: all three are lazily
-local-checkpointed, so the LSH branch materializes them and the rep
-map, the Jaccard verify and the index's band_index write read those
-rows.
+shingling and the MinHash once per call: all three are checkpointed
+(eager=False, which under AQE runs their shuffle map stages at the
+call), the LSH branch stores their rows, and the rep map, the Jaccard
+verify and the index's band_index write read those rows.
 
 Projections are SQL text, one `selectExpr`/`F.expr` parse each:
 DataFrame construction is part of every call, and each nested Column

@@ -11,6 +11,10 @@ The index persists three tables:
               the LSH postings the next batch probes
   clusters    (doc_id, cluster)       current assignment, every doc
 
+Each table is partitioned by an int `batch`; the append-only `ledger`
+(_LEDGER) holds one row per committed batch. Readers see
+fp_index / band_index from the latest row's `base` on and its clusters.
+
 The build persists the frames components.dedup_clusters computes, and
 an increment runs the same corpus_dedup stages on the batch: the
 exact-rep aggregate (probed against fp_index), the band postings and
@@ -25,16 +29,16 @@ connected components over the batch's OWN verified edges: `clusters`
 is the old graph contracted to each component's min id, so mapping
 the old ids a batch touches to their cluster gives the components of
 old + new edges with the same labels (new ids exceed old ones, so new
-docs never relabel). Increments APPEND to fp_index / band_index,
-which `compact_dedup_index` vacuums; the clusters map is rewritten
-whole. An `edges` directory left by an older build is ignored.
+docs never relabel). Increments add fp_index / band_index partitions,
+which `compact_dedup_index` folds into one; the clusters map is
+written whole. An `edges` directory left by an older build is ignored.
 
-CRASH CONTRACT (test-pinned): an increment appends band_index, swaps
-in the new clusters (`_swap_in`, repaired at the next start), then
-appends fp_index. A crash before the swap leaves the index as it was
-(the postings it added only add pairs that verify and CC absorb), so
-the retry is exact. After the swap and before the fp_index append,
-the retry raises the monotone-ingest ValueError; rebuild then.
+CRASH CONTRACT (test-pinned; run_extraction's): build, increment and
+compaction each write the next batch's partitions (dynamic overwrite),
+append its ledger row, then delete what no reader sees. A crash before
+the append leaves nothing visible, and the retry redoes the batch; an
+increment whose doc_id range equals the latest row's is committed
+already and returns its clusters without writing.
 
 EXACTNESS CONTRACT (test- and oracle-pinned): given monotone ingest
 (every new doc_id greater than all indexed ones) and no LSH bucket
@@ -51,13 +55,10 @@ pairs; rebuild the index (build_dedup_index) to re-canonicalize.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.checkpoint import hadoop_path, read_ledger
 from . import corpus_dedup
 from .components import _cluster_stages, _rejoin_clusters
 from .corpus_dedup import (
@@ -72,13 +73,83 @@ from .corpus_dedup import (
 )
 from .textstats import fingerprints
 
+# fp_index and band_index gain rows every batch and are read from the
+# ledger's base on; clusters is read from its latest batch only
+_SCHEMAS = {
+    "fp_index": "fingerprint string, rep bigint, batch int",
+    "band_index": "doc_id bigint, band int, band_hash string, batch int",
+    "clusters": "doc_id bigint, cluster bigint, batch int",
+}
+_APPEND_TABLES = ("fp_index", "band_index")
+_LEDGER = (
+    "batch int, base int, doc_id_min bigint, doc_id_max bigint, committed_at timestamp"
+)
+_NO_COMMIT = {"batch": -1, "base": 0, "doc_id_min": None, "doc_id_max": None}
 
-def _probe(spark: SparkSession, index_path: str, new_docs: DataFrame) -> DataFrame:
+
+def _last_commit(spark: SparkSession, index_path: str) -> dict:
+    """The ledger's latest row (committed_at dropped); _NO_COMMIT before
+    the first build, which makes nothing visible."""
+    ledger = read_ledger(spark, f"{index_path}/ledger", _LEDGER)
+    rows = [r.asDict() for r in ledger.drop("committed_at").collect()]
+    return max(rows, key=lambda r: r["batch"], default=_NO_COMMIT)
+
+
+def _committed(table: str, last: dict) -> range:
+    """The batches of `table` that ledger row `last` commits."""
+    first = last["base"] if table in _APPEND_TABLES else last["batch"]
+    return range(first, last["batch"] + 1)
+
+
+def _visible(
+    spark: SparkSession, index_path: str, table: str, last: dict
+) -> DataFrame:
+    """`table`'s committed rows; the declared schema spares an inference job."""
+    b = _committed(table, last)
+    df = spark.read.schema(_SCHEMAS[table]).parquet(f"{index_path}/{table}")
+    return df.filter(f"batch >= {b.start} AND batch < {b.stop}").drop("batch")
+
+
+def _write(df: DataFrame, index_path: str, table: str, batch: int) -> None:
+    """Replace partition `batch` of `table` by `df`'s rows; the per-write
+    dynamic overwrite leaves every other partition as it is."""
+    df.selectExpr("*", f"{batch} AS batch").write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("batch").parquet(f"{index_path}/{table}")
+
+
+def _commit(spark: SparkSession, index_path: str, row: dict) -> None:
+    """Append ledger row `row`, after every partition of its batch: a
+    one-row local relation, no Python worker."""
+    spark.sql(
+        "SELECT CAST(:batch AS INT) AS batch, CAST(:base AS INT) AS base, "
+        "CAST(:doc_id_min AS BIGINT) AS doc_id_min, "
+        "CAST(:doc_id_max AS BIGINT) AS doc_id_max, "
+        "current_timestamp() AS committed_at",
+        args=row,
+    ).write.mode("append").parquet(f"{index_path}/ledger")
+
+
+def _sweep(spark: SparkSession, index_path: str, last: dict) -> None:
+    """Delete every partition no reader of ledger row `last` sees: the
+    batches a commit superseded and those of an uncommitted attempt.
+    Each write runs it first too, since a partition a crashed attempt
+    wrote and its retry leaves empty would become visible at the
+    commit. Idempotent: a crash inside it leaves garbage the next sweep
+    deletes."""
+    for table in _SCHEMAS:
+        fs, parts = hadoop_path(spark, f"{index_path}/{table}/batch=*")
+        for st in fs.globStatus(parts):
+            batch = int(st.getPath().getName()[len("batch=") :])
+            if batch not in _committed(table, last):
+                fs.delete(st.getPath(), True)
+
+
+def _probe(fp_index: DataFrame, new_docs: DataFrame) -> DataFrame:
     """(fingerprint, rep, text, old_rep): the batch's exact-rep
     aggregate probed against fp_index. A known fingerprint carries its
     stored rep as old_rep; where old_rep is null the content is new
     and its batch rep is a new survivor."""
-    fp_index = spark.read.parquet(f"{index_path}/fp_index")
     return _exact_reps(new_docs).join(
         fp_index.select("fingerprint", F.col("rep").alias("old_rep")),
         "fingerprint",
@@ -105,18 +176,28 @@ def _to_cluster(df: DataFrame, col: str, old_clusters: DataFrame) -> DataFrame:
 
 def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     """Full build: dedup the corpus from scratch and persist the three
-    index tables — the frames `components.dedup_clusters` computes.
-    This is the bootstrap (and the re-canonicalization path if the cap
-    caveat in the module docstring is ever hit)."""
+    index tables — the frames `components.dedup_clusters` computes —
+    as the next batch, which becomes the base of every reader. This is
+    the bootstrap (and the re-canonicalization path if the cap caveat
+    in the module docstring is ever hit)."""
+    spark = docs.sparkSession
+    last = _last_commit(spark, index_path)
+    batch = last["batch"] + 1
+    _sweep(spark, index_path, last)
     reps, doc_rep, postings, edges = _cluster_stages(docs)
-    clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b"))
-    # a fresh build writes to a fresh dir, so plain writes suffice;
-    # the gate read above has materialized reps and postings
-    reps.select("fingerprint", "rep").write.mode("overwrite").parquet(
-        f"{index_path}/fp_index"
+    # the corpus' doc_id range comes with the clusters write: every
+    # doc has one clusters row
+    span = Observation()
+    clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b")).observe(
+        span, F.min("doc_id").alias("doc_id_min"), F.max("doc_id").alias("doc_id_max")
     )
-    postings.write.mode("overwrite").parquet(f"{index_path}/band_index")
-    clusters.write.mode("overwrite").parquet(f"{index_path}/clusters")
+    # the gate read above has materialized reps and postings
+    _write(reps.select("fingerprint", "rep"), index_path, "fp_index", batch)
+    _write(postings, index_path, "band_index", batch)
+    _write(clusters, index_path, "clusters", batch)
+    row = {"batch": batch, "base": batch, **span.get}
+    _commit(spark, index_path, row)
+    _sweep(spark, index_path, row)
 
 
 def incremental_dedup(
@@ -138,37 +219,36 @@ def incremental_dedup(
 
     Requires monotone ingest: every new doc_id must exceed every
     indexed doc_id (asserted), so stored reps and clusters stay min.
+    A batch whose doc_id range equals the latest committed row's is
+    that batch retried: it returns the committed map and writes
+    nothing.
     """
-    clusters_dir = f"{index_path}/clusters"
-    _repair_torn_compact(clusters_dir)
-    band_index = spark.read.parquet(f"{index_path}/band_index")
-    old_clusters = spark.read.parquet(clusters_dir)
+    last = _last_commit(spark, index_path)
+    old_clusters = _visible(spark, index_path, "clusters", last)
+    # the batch's bounds in one aggregate, before anything is computed
+    # or written; the indexed maximum comes from the ledger
+    lo, hi = new_docs.selectExpr("min(doc_id)", "max(doc_id)").first()
+    if lo is None or (lo, hi) == (last["doc_id_min"], last["doc_id_max"]):
+        return old_clusters
+    if last["doc_id_max"] is not None and lo <= last["doc_id_max"]:
+        raise ValueError(
+            f"monotone-ingest violation: new doc_id {lo} <= indexed "
+            f"max {last['doc_id_max']} — rebuild with build_dedup_index instead"
+        )
+    batch = last["batch"] + 1
+    _sweep(spark, index_path, last)
+    band_index = _visible(spark, index_path, "band_index", last)
 
     # --- stage 1: exact dedup against the index -------------------
     # in-batch exact groups first (map-side-collapsible), then probe
     # the fingerprint index: a known fingerprint inherits its stored
     # rep's cluster; an unknown one makes its batch-min doc the new
-    # survivor. Materialized once for every later stage and the append
+    # survivor. Materialized once for every later stage and the write
     probed = _to_cluster(
-        _probe(spark, index_path, new_docs), "old_rep", old_clusters
+        _probe(_visible(spark, index_path, "fp_index", last), new_docs),
+        "old_rep",
+        old_clusters,
     ).localCheckpoint(eager=True)
-
-    # both bounds in one aggregate, before anything is written; the
-    # batch's min doc_id is its min exact rep, so the batch is not
-    # scanned again
-    max_old, min_new = (
-        old_clusters.selectExpr("doc_id AS id", "true AS old")
-        .union(probed.selectExpr("rep AS id", "false AS old"))
-        .selectExpr(
-            "max(CASE WHEN old THEN id END)", "min(CASE WHEN NOT old THEN id END)"
-        )
-        .first()
-    )
-    if max_old is not None and min_new is not None and min_new <= max_old:
-        raise ValueError(
-            f"monotone-ingest violation: new doc_id {min_new} <= indexed "
-            f"max {max_old} — rebuild with build_dedup_index instead"
-        )
     new_survivors = _new_survivors(probed)
     new_doc_rep = fingerprints(new_docs).join(
         probed.select(
@@ -213,19 +293,18 @@ def incremental_dedup(
     all_doc_rep = old_clusters.select(
         "doc_id", F.col("cluster").alias("rep")
     ).union(new_doc_rep)
-    # materialized BEFORE any write touches the index: its plan reads
-    # clusters and band_index, both of which the fold below changes
+    # materialized: it is returned, and its plan reads the clusters
+    # partition the commit's sweep deletes
     updated = _rejoin_clusters(all_doc_rep, batch_edges).localCheckpoint(eager=True)
 
-    # --- fold the batch into the index ------------------------------
-    # fp_index is appended LAST: the fp probe is what makes a retried
-    # batch see its docs as already indexed, so a crash before it must
-    # leave the batch to be re-processed (module docstring's crash
-    # contract)
-    new_bands.write.mode("append").parquet(f"{index_path}/band_index")
-    _swap_in(updated, clusters_dir)
+    # --- commit the batch ---------------------------------------------
     new_fp = probed.filter(F.col("old_rep").isNull()).select("fingerprint", "rep")
-    new_fp.write.mode("append").parquet(f"{index_path}/fp_index")
+    _write(new_bands, index_path, "band_index", batch)
+    _write(updated, index_path, "clusters", batch)
+    _write(new_fp, index_path, "fp_index", batch)
+    row = {"batch": batch, "base": last["base"], "doc_id_min": lo, "doc_id_max": hi}
+    _commit(spark, index_path, row)
+    _sweep(spark, index_path, row)
     return updated
 
 
@@ -240,7 +319,9 @@ def incremental_capped_buckets(
     time. A non-empty ledger is also the signal that the exactness
     contract's no-cap-crossing precondition needs checking (module
     docstring)."""
-    new_survivors = _new_survivors(_probe(spark, index_path, new_docs))
+    last = _last_commit(spark, index_path)
+    fp_index = _visible(spark, index_path, "fp_index", last)
+    new_survivors = _new_survivors(_probe(fp_index, new_docs))
     return _cap_report(
         lsh_buckets(lsh_postings(shingle_sets(new_survivors, K))),
         "ids",
@@ -252,66 +333,45 @@ def incremental_capped_buckets(
 # are ~50 bytes so this lands near the 128 MB lakehouse sweet spot
 _COMPACT_ROWS_PER_FILE = 2_000_000
 
-_APPEND_TABLES = ("fp_index", "band_index")
 
-
-def _repair_torn_compact(table_dir: str) -> None:
-    """Make a table directory readable again after a crash in `_swap_in`.
-
-    `_swap_in` passes through exactly two non-live states:
-      1. `.compact` written, live intact      -> drop `.compact`
-      2. live renamed to `.old`, `.compact`
-         complete, live missing               -> promote `.compact`
-    A complete `.compact` always carries _SUCCESS (Spark commits it);
-    anything else is a partial write and is discarded.
-    """
-    tmp, old = table_dir + ".compact", table_dir + ".old"
-    if not os.path.exists(table_dir):
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, table_dir)
-        elif os.path.exists(old):
-            os.rename(old, table_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _swap_in(df: DataFrame, live: str) -> None:
-    """Replace table directory `live` by `df`'s rows: write `.compact`
-    -> rename live to `.old` -> promote -> drop `.old`. A plain
-    overwrite deletes `live` before its job runs, so a failed job would
-    leave no table; `_repair_torn_compact` recovers every state here."""
-    tmp, old = live + ".compact", live + ".old"
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+def _n_files(spark: SparkSession, index_path: str, table: str, last: dict) -> int:
+    """Parquet files of the partitions of `table` that `last` commits."""
+    n = 0
+    for b in _committed(table, last):
+        fs, files = hadoop_path(spark, f"{index_path}/{table}/batch={b}/*.parquet")
+        n += len(fs.globStatus(files))
+    return n
 
 
 def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
-    """Vacuum the append-grown index tables (_APPEND_TABLES): rewrite
-    each as ceil(rows / _COMPACT_ROWS_PER_FILE) parquet files with the
-    crash-safe `_swap_in`, band_index repartitioned BY (band,
-    band_hash) so the next probe reads co-clustered postings. Run it on
-    an OPTIMIZE cadence; results are identical with or without it (the
-    dedup_incremental query compacts mid-run). Returns a per-table
-    {files_before, files_after, rows} report (no silent maintenance).
-    """
+    """Vacuum the index: rewrite the visible rows of every table into
+    the next batch, which becomes the base of every reader, as
+    ceil(rows / _COMPACT_ROWS_PER_FILE) parquet files; band_index is
+    repartitioned BY (band, band_hash) so the next probe reads
+    co-clustered postings. Run it on an OPTIMIZE cadence; results are
+    identical with or without it (the dedup_incremental query compacts
+    mid-run). Returns a per-table {files_before, files_after, rows}
+    report (no silent maintenance)."""
+    last = _last_commit(spark, index_path)
+    batch = last["batch"] + 1
+    _sweep(spark, index_path, last)
+    # the last ingest's doc_id range is kept: its retry stays a no-op
+    row = {**last, "batch": batch, "base": batch}
     report: dict[str, dict] = {}
-    for table in _APPEND_TABLES:
-        live = f"{index_path}/{table}"
-        _repair_torn_compact(live)
-        files_before = len(glob.glob(os.path.join(live, "*.parquet")))
-        df = spark.read.parquet(live)
+    for table in _SCHEMAS:
+        df = _visible(spark, index_path, table, last)
         n_rows = df.count()
         n_files = max(1, -(-n_rows // _COMPACT_ROWS_PER_FILE))
         if table == "band_index":
             out = df.repartition(n_files, "band", "band_hash")
         else:
             out = df.repartition(n_files)
-        _swap_in(out, live)
+        _write(out, index_path, table, batch)
         report[table] = {
-            "files_before": files_before,
-            "files_after": len(glob.glob(os.path.join(live, "*.parquet"))),
+            "files_before": _n_files(spark, index_path, table, last),
+            "files_after": _n_files(spark, index_path, table, row),
             "rows": n_rows,
         }
+    _commit(spark, index_path, row)
+    _sweep(spark, index_path, row)
     return report

@@ -28,22 +28,6 @@ DOCS = T.StructType(
     ]
 )
 
-# --------------------------------------------------------------- output
-SPAN_OUT = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("order", T.IntegerType()),  # dense 0..n-1 per doc
-    ]
-)
-EXTRACTED = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_OUT)),
-    ]
-)
-
 # ---------------------------------------------------- checkpoint/lineage
 # Per-partition lineage + metrics rows (north_rule: resumable with
 # per-partition lineage; FIXTURES.md §3).

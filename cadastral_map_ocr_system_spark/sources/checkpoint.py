@@ -22,6 +22,9 @@ The checkpoint table is parquet here (Iceberg-shaped schema; see
 sources/tables.py on the format choice). The streaming sink
 (streaming/stream.write_epoch) commits each micro-batch through
 run_extraction, so batch and streaming share this one crash contract.
+The persisted dedup index (operators/dedup_index.py) shares it too:
+each batch overwrites its own partitions, then appends its ledger row,
+and both ledgers are read by `read_ledger`.
 """
 
 from __future__ import annotations
@@ -50,27 +53,24 @@ def bucket_of(doc_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
 
 
-def committed_partitions(
-    spark: SparkSession, checkpoint_path: str, run_id: str
-) -> DataFrame:
-    """Distinct committed (partition_id) rows for run_id (empty if none).
-
-    Read through Spark (any Hadoop URI) with the declared schema, never
-    inferred: a driver killed inside the first lineage append leaves
-    only `_temporary/`, which has no schema to infer but is an empty
-    committed set. A missing path is empty too; it is checked through
-    Hadoop first because reading it would log a stack trace."""
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of `path`, any Hadoop URI."""
     sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_path)
-    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
-        return spark.createDataFrame([], "partition_id int")
-    return (
-        spark.read.schema(CHECKPOINT)
-        .parquet(checkpoint_path)
-        .filter(F.col("run_id") == run_id)
-        .select("partition_id")
-        .distinct()
-    )
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def read_ledger(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The rows of the append-only ledger at `path`, read with the
+    declared `schema` (StructType or DDL), never inferred: a driver
+    killed inside the first append leaves only `_temporary/`, an empty
+    ledger with no schema to infer. A missing path is empty too,
+    checked through Hadoop first because reading it would log a stack
+    trace."""
+    fs, p = hadoop_path(spark, path)
+    if not fs.exists(p):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def run_extraction(
@@ -99,13 +99,6 @@ def run_extraction(
         raise ValueError(f"checkpoint {checkpoint_path!r}: the per-attempt "
                          "metric channel is POSIX-only (a path or file: URI)")
     tiles_root = url.path if url.scheme else f"{checkpoint_path}_tiles"
-    # resume correctness REQUIRES dynamic partition overwrite: with the
-    # static default, the per-group overwrite below would wipe every
-    # previously committed bucket while the checkpoint table still marks
-    # them committed. Set it here so sessions not built via get_spark()
-    # are safe too.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     docs_b = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
 
     # one input-stats job per call: every non-empty bucket's lineage
@@ -121,9 +114,12 @@ def run_extraction(
         )
         .collect()
     }
+    ledger = read_ledger(spark, checkpoint_path, CHECKPOINT)
     committed = {
         r["partition_id"]
-        for r in committed_partitions(spark, checkpoint_path, run_id).collect()
+        for r in ledger.filter(F.col("run_id") == run_id)
+        .select("partition_id")
+        .collect()
     }
     pending_buckets = sorted(set(in_stats) - committed)
 
@@ -149,8 +145,13 @@ def run_extraction(
         result = extract(
             sub.drop("bucket"), tile_metrics_dir=tile_metrics_dir
         ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        # dynamic partition overwrite: replaces exactly these buckets
-        result.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+        # resume correctness REQUIRES dynamic partition overwrite: it
+        # replaces exactly these buckets, where a static overwrite would
+        # wipe every bucket the checkpoint table marks committed. A
+        # per-write option, so it holds under any session setting
+        result.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(output_path)
 
         out_stats = {
             r["bucket"]: r

@@ -4,6 +4,7 @@ recompute (the exactness contract in operators/dedup_index.py)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -142,24 +143,26 @@ def test_compact_shrinks_files_and_preserves_tables(spark, tmp_path):
         compact_dedup_index,
     )
 
+    def rows_of(t):
+        df = spark.read.parquet(f"{idx}/{t}").drop("batch")
+        return sorted(map(tuple, df.collect()))
+
     rows = corpus_rows()
     extra = [(200, f"{BODY_B} tail200"), (210, rows[8][1])]
     idx = str(tmp_path / "idx")
     build_dedup_index(_mk(spark, rows[:8]), idx)
     incremental_dedup(spark, idx, _mk(spark, rows[8:]), _mk(spark, rows[:8]))
-    before = {
-        t: sorted(
-            map(tuple, spark.read.parquet(f"{idx}/{t}").collect())
-        )
-        for t in _APPEND_TABLES
-    }
+    before = {t: rows_of(t) for t in _APPEND_TABLES}
     n_before = {
-        t: len(_g.glob(f"{idx}/{t}/*.parquet")) for t in _APPEND_TABLES
+        t: len(_g.glob(f"{idx}/{t}/batch=*/*.parquet")) for t in _APPEND_TABLES
     }
     report = compact_dedup_index(spark, idx)
     for t in _APPEND_TABLES:
-        after = sorted(map(tuple, spark.read.parquet(f"{idx}/{t}").collect()))
-        assert after == before[t], t
+        assert rows_of(t) == before[t], t
+        # the compaction's own batch is the only partition left
+        assert [n for n in os.listdir(f"{idx}/{t}") if n.startswith("batch=")] == [
+            "batch=2"
+        ], t
         assert report[t]["files_before"] == n_before[t]
         assert report[t]["files_after"] == 1  # tiny tables -> 1 file
         assert report[t]["files_after"] < n_before[t]
@@ -172,48 +175,116 @@ def test_compact_shrinks_files_and_preserves_tables(spark, tmp_path):
     assert got == want
 
 
-def test_compact_torn_swap_recovery(spark, tmp_path):
-    """Crash-safety of the directory swap: every intermediate state a
-    crash can leave (stale .compact beside a live dir; live renamed
-    away with a COMPLETE .compact; live renamed away with only a
-    PARTIAL .compact but .old present) must repair to a readable,
-    row-identical table on the next compaction."""
-    import os
-    import shutil
+# a near-dup of family B and an exact dup of doc 100
+EXTRA = [(200, f"{BODY_B} tail200"), (210, corpus_rows()[8][1])]
 
+
+@pytest.fixture(scope="module")
+def full_maps(spark):
+    """The full-recompute cluster maps of corpus_rows() and of
+    corpus_rows() + EXTRA."""
+    rows = corpus_rows()
+    return (
+        _clusters(dedup_clusters(_mk(spark, rows))),
+        _clusters(dedup_clusters(_mk(spark, rows + EXTRA))),
+    )
+
+
+class Crash(RuntimeError):
+    pass
+
+
+@pytest.fixture(scope="module")
+def indexes(spark, tmp_path_factory):
+    """Index directories to copy: corpus_rows() below 100 built, and
+    the rest folded in as one increment."""
+    rows = corpus_rows()
+    root = tmp_path_factory.mktemp("indexes")
+    build_dedup_index(_mk(spark, rows[:8]), str(root / "built"))
+    shutil.copytree(root / "built", root / "increment")
+    incremental_dedup(
+        spark, str(root / "increment"), _mk(spark, rows[8:]), _mk(spark, rows[:8])
+    )
+    return root
+
+
+@pytest.mark.parametrize("point", ["band_index", "clusters", "fp_index", "ledger", "cleanup"])
+@pytest.mark.parametrize("op", ["increment", "compact"])
+def test_crash_after_each_write_then_retry_is_exact(
+    spark, tmp_path, monkeypatch, indexes, full_maps, op, point
+):
+    """A crash right after one write of an increment or a compaction
+    (a table's partition, the ledger append, or the sweep of the
+    partitions it superseded): the retry equals the full recompute,
+    and so does the next batch folded in after it."""
+    from cadastral_map_ocr_system_spark.operators import dedup_index
+
+    rows = corpus_rows()
+    old, new = _mk(spark, rows[:8]), _mk(spark, rows[8:])
+    idx = str(tmp_path / "idx")
+    shutil.copytree(indexes / ("built" if op == "increment" else "increment"), idx)
+    committed = []
+
+    def crash_after(real, hit):
+        def wrapped(*args):
+            real(*args)
+            if hit(*args):
+                raise Crash(point)
+
+        return wrapped
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup_index, "_write", crash_after(
+            dedup_index._write, lambda df, path, table, batch: table == point
+        ))
+        m.setattr(dedup_index, "_commit", crash_after(
+            dedup_index._commit, lambda *a: committed.append(a) or point == "ledger"
+        ))
+        m.setattr(dedup_index, "_sweep", crash_after(
+            dedup_index._sweep, lambda *a: point == "cleanup" and bool(committed)
+        ))
+        with pytest.raises(Crash):
+            if op == "increment":
+                incremental_dedup(spark, idx, new, old)
+            else:
+                dedup_index.compact_dedup_index(spark, idx)
+    if op == "compact":
+        dedup_index.compact_dedup_index(spark, idx)
+    # after a compaction this is the committed batch again: its map
+    assert _clusters(incremental_dedup(spark, idx, new, old)) == full_maps[0]
+    got = incremental_dedup(spark, idx, _mk(spark, EXTRA), _mk(spark, rows))
+    assert _clusters(got) == full_maps[1]
+
+
+def test_retry_of_a_committed_batch_writes_nothing(spark, tmp_path, indexes, full_maps):
+    rows = corpus_rows()
+    idx = str(tmp_path / "idx")
+    shutil.copytree(indexes / "increment", idx)
+
+    def files():
+        return {p: p.stat().st_mtime_ns for p in tmp_path.rglob("*")}
+
+    before = files()
+    got = incremental_dedup(spark, idx, _mk(spark, rows[8:]), _mk(spark, rows[:8]))
+    assert _clusters(got) == full_maps[0]
+    assert files() == before
+
+
+def test_index_at_a_file_uri(spark, tmp_path, full_maps):
+    """Build, increment, compaction and a second increment over a
+    file: URI: every write and delete goes through Hadoop paths."""
     from cadastral_map_ocr_system_spark.operators.dedup_index import (
         compact_dedup_index,
     )
 
     rows = corpus_rows()
-    idx = str(tmp_path / "idx")
+    idx = (tmp_path / "idx").as_uri()
+    assert idx.startswith("file:")
     build_dedup_index(_mk(spark, rows[:8]), idx)
     incremental_dedup(spark, idx, _mk(spark, rows[8:]), _mk(spark, rows[:8]))
-    want = sorted(
-        map(tuple, spark.read.parquet(f"{idx}/fp_index").collect())
-    )
-    live = f"{idx}/fp_index"
-
-    # state 1: crash after writing .compact, live intact
-    shutil.copytree(live, live + ".compact")
     compact_dedup_index(spark, idx)
-    assert not os.path.exists(live + ".compact")
-
-    # state 2: crash between the two renames — live gone, .compact
-    # complete (_SUCCESS present)
-    os.rename(live, live + ".compact")
-    compact_dedup_index(spark, idx)
-    assert sorted(map(tuple, spark.read.parquet(live).collect())) == want
-
-    # state 3: live renamed to .old, .compact only partially written
-    # (no _SUCCESS) — must restore .old, discard the partial
-    os.rename(live, live + ".old")
-    os.makedirs(live + ".compact")
-    with open(f"{live}.compact/part-00000.parquet", "wb") as f:
-        f.write(b"torn")
-    compact_dedup_index(spark, idx)
-    assert sorted(map(tuple, spark.read.parquet(live).collect())) == want
-    assert not os.path.exists(live + ".old")
+    got = incremental_dedup(spark, idx, _mk(spark, EXTRA), _mk(spark, rows))
+    assert _clusters(got) == full_maps[1]
 
 
 def test_monotone_violation_raises(spark, tmp_path):
@@ -225,39 +296,6 @@ def test_monotone_violation_raises(spark, tmp_path):
             spark, idx, _mk(spark, [(3, "whatever text here")]),
             _mk(spark, rows[:8]),
         )
-
-
-def test_interrupted_clusters_swap_keeps_index_and_retry_is_exact(
-    spark, tmp_path, monkeypatch
-):
-    """A batch whose clusters swap fails after the `.compact` write
-    leaves the stored clusters rows as they were; the retried batch
-    equals the full recompute although band_index already holds the
-    failed attempt's postings."""
-    from cadastral_map_ocr_system_spark.operators import dedup_index
-
-    rows = corpus_rows()
-    old, new = _mk(spark, rows[:8]), _mk(spark, rows[8:])
-    idx = str(tmp_path / "idx")
-    build_dedup_index(old, idx)
-    clusters_before = sorted(map(tuple, spark.read.parquet(f"{idx}/clusters").collect()))
-    n_bands_before = spark.read.parquet(f"{idx}/band_index").count()
-
-    def crash(src, dst):
-        raise OSError("crash between the .compact write and its promotion")
-
-    with monkeypatch.context() as m:
-        m.setattr(dedup_index.os, "rename", crash)
-        with pytest.raises(OSError, match="crash between"):
-            incremental_dedup(spark, idx, new, old)
-    assert sorted(
-        map(tuple, spark.read.parquet(f"{idx}/clusters").collect())
-    ) == clusters_before
-    assert spark.read.parquet(f"{idx}/band_index").count() > n_bands_before
-
-    got = _clusters(incremental_dedup(spark, idx, new, old))
-    assert got == _clusters(dedup_clusters(_mk(spark, rows)))
-    assert _clusters(spark.read.parquet(f"{idx}/clusters")) == got
 
 
 def test_batch_graph_holds_only_the_batch_edges(spark, tmp_path, monkeypatch):
@@ -294,3 +332,40 @@ def test_batch_graph_holds_only_the_batch_edges(spark, tmp_path, monkeypatch):
 
     dedup_index.compact_dedup_index(spark, idx)
     assert sorted(os.listdir(f"{idx}/edges")) == legacy_files
+
+
+def test_commits_hold_under_a_static_overwrite_session(spark, tmp_path, full_maps):
+    """Both ledgers' writers set dynamic partition overwrite per write,
+    not in the session: under a STATIC session a resumed run_extraction
+    keeps its committed buckets, and a batch folded into the index
+    keeps the partitions of earlier batches."""
+    from cadastral_map_ocr_system_spark import synth
+    from cadastral_map_ocr_system_spark.schema import DOCS
+    from cadastral_map_ocr_system_spark.sources.checkpoint import (
+        SimulatedFailure,
+        run_extraction,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        docs = spark.createDataFrame(synth.synth_docs_pylist(16, seed=3), schema=DOCS)
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        kw = dict(run_id="r", n_buckets=4, buckets_per_commit=2)
+        with pytest.raises(SimulatedFailure):
+            run_extraction(spark, docs, out, ckpt, fail_after_commits=1, **kw)
+        run_extraction(spark, docs, out, ckpt, **kw)
+        assert sorted(r["doc_id"] for r in spark.read.parquet(out).collect()) == sorted(
+            r["doc_id"] for r in docs.collect()
+        )
+
+        rows = corpus_rows()
+        idx = str(tmp_path / "idx")
+        build_dedup_index(_mk(spark, rows[:8]), idx)
+        incremental_dedup(spark, idx, _mk(spark, rows[8:]), _mk(spark, rows[:8]))
+        # the next batch finds the build's postings and fingerprints
+        got = incremental_dedup(spark, idx, _mk(spark, EXTRA), _mk(spark, rows))
+        assert _clusters(got) == full_maps[1]
+    finally:
+        spark.conf.set(key, saved)
