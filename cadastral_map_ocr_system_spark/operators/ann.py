@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
 from . import corpus_dedup
 
 #: the search rule of every top-k entry point: vec_ids below N_QUERIES
@@ -194,10 +195,9 @@ def ivf_assignments(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     assigned = model.transform(vecs).select(
         "vec_id", F.col("prediction").alias("bucket")
     )
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "bucket int, centroid array<double>",
-    )
+    centers = model.clusterCenters()
+    rows = [{"bucket": i, "centroid": c.tolist()} for i, c in enumerate(centers)]
+    centroids = local_frame(spark, rows, "bucket int, centroid array<double>")
     return assigned, centroids
 
 
@@ -345,7 +345,7 @@ def pq_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
             k=PQ_N_CODES, seed=KMEANS_SEED + s, maxIter=KMEANS_MAX_ITER
         ).fit(vecs)
         cb_rows += [
-            (s, i, [float(x) for x in c])
+            {"subspace": s, "code": i, "centroid": c.tolist()}
             for i, c in enumerate(model.clusterCenters())
         ]
         per_sub.append(
@@ -353,8 +353,8 @@ def pq_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
                 "vec_id", F.col("prediction").cast("int").alias(f"c{s}")
             )
         )
-    codebooks = spark.createDataFrame(
-        cb_rows, "subspace int, code int, centroid array<double>"
+    codebooks = local_frame(
+        spark, cb_rows, "subspace int, code int, centroid array<double>"
     )
     codes = reduce(lambda a, b: a.join(b, "vec_id"), per_sub).select(
         "vec_id", F.array(*[f"c{s}" for s in range(m)]).alias("codes")

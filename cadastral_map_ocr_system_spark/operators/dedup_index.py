@@ -33,12 +33,12 @@ docs never relabel). Increments add fp_index / band_index partitions,
 which `compact_dedup_index` folds into one; the clusters map is
 written whole. An `edges` directory left by an older build is ignored.
 
-CRASH CONTRACT (test-pinned; run_extraction's): build, increment and
-compaction each write the next batch's partitions (dynamic overwrite),
-append its ledger row, then delete what no reader sees. A crash before
-the append leaves nothing visible, and the retry redoes the batch; an
-increment whose doc_id range equals the latest row's is committed
-already and returns its clusters without writing.
+CRASH CONTRACT (test-pinned; run_extraction's, through its helpers):
+build, increment and compaction each write the next batch's partitions
+(`overwrite_partitions`), append its ledger row (`append_ledger`), then
+delete what no reader sees. A crash before the append leaves nothing
+visible, and the retry redoes the batch; an increment whose doc_id
+range equals the latest row's returns the committed map, writing nothing.
 
 EXACTNESS CONTRACT (test- and oracle-pinned): given monotone ingest
 (every new doc_id greater than all indexed ones) and no LSH bucket
@@ -58,7 +58,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.checkpoint import hadoop_path, read_ledger
+from ..sources.checkpoint import (
+    append_ledger,
+    hadoop_path,
+    overwrite_partitions,
+    read_ledger,
+)
 from . import corpus_dedup
 from .components import _cluster_stages, _rejoin_clusters
 from .corpus_dedup import (
@@ -111,23 +116,10 @@ def _visible(
 
 
 def _write(df: DataFrame, index_path: str, table: str, batch: int) -> None:
-    """Replace partition `batch` of `table` by `df`'s rows; the per-write
-    dynamic overwrite leaves every other partition as it is."""
-    df.selectExpr("*", f"{batch} AS batch").write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch").parquet(f"{index_path}/{table}")
-
-
-def _commit(spark: SparkSession, index_path: str, row: dict) -> None:
-    """Append ledger row `row`, after every partition of its batch: a
-    one-row local relation, no Python worker."""
-    spark.sql(
-        "SELECT CAST(:batch AS INT) AS batch, CAST(:base AS INT) AS base, "
-        "CAST(:doc_id_min AS BIGINT) AS doc_id_min, "
-        "CAST(:doc_id_max AS BIGINT) AS doc_id_max, "
-        "current_timestamp() AS committed_at",
-        args=row,
-    ).write.mode("append").parquet(f"{index_path}/ledger")
+    """Replace partition `batch` of `table` by `df`'s rows."""
+    overwrite_partitions(
+        df.selectExpr("*", f"{batch} AS batch"), f"{index_path}/{table}", "batch"
+    )
 
 
 def _sweep(spark: SparkSession, index_path: str, last: dict) -> None:
@@ -196,7 +188,7 @@ def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     _write(postings, index_path, "band_index", batch)
     _write(clusters, index_path, "clusters", batch)
     row = {"batch": batch, "base": batch, **span.get}
-    _commit(spark, index_path, row)
+    append_ledger(spark, f"{index_path}/ledger", [row], _LEDGER)
     _sweep(spark, index_path, row)
 
 
@@ -303,7 +295,7 @@ def incremental_dedup(
     _write(updated, index_path, "clusters", batch)
     _write(new_fp, index_path, "fp_index", batch)
     row = {"batch": batch, "base": last["base"], "doc_id_min": lo, "doc_id_max": hi}
-    _commit(spark, index_path, row)
+    append_ledger(spark, f"{index_path}/ledger", [row], _LEDGER)
     _sweep(spark, index_path, row)
     return updated
 
@@ -372,6 +364,6 @@ def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
             "files_after": _n_files(spark, index_path, table, row),
             "rows": n_rows,
         }
-    _commit(spark, index_path, row)
+    append_ledger(spark, f"{index_path}/ledger", [row], _LEDGER)
     _sweep(spark, index_path, row)
     return report

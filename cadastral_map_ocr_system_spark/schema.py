@@ -8,7 +8,9 @@ stage — schema-on-write, no inference.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # ---------------------------------------------------------------- input
 # Canonical input table (BASELINE.json input_hint): one row per document,
@@ -77,3 +79,14 @@ DETECTIONS_ARROW = pa.schema(
         pa.field("is_number", pa.bool_()),
     ]
 )
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema) -> DataFrame:
+    """`rows` (dicts by field name, a missing key is NULL) as a frame of
+    the declared `schema` (StructType or DDL) built from an Arrow table:
+    a LocalTableScan, no Python worker. A list would plan as a Scan
+    ExistingRDD."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

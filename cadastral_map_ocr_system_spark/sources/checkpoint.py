@@ -22,9 +22,9 @@ The checkpoint table is parquet here (Iceberg-shaped schema; see
 sources/tables.py on the format choice). The streaming sink
 (streaming/stream.write_epoch) commits each micro-batch through
 run_extraction, so batch and streaming share this one crash contract.
-The persisted dedup index (operators/dedup_index.py) shares it too:
-each batch overwrites its own partitions, then appends its ledger row,
-and both ledgers are read by `read_ledger`.
+The persisted dedup index (operators/dedup_index.py) shares its code:
+both write partitions through `overwrite_partitions`, then commit
+through `append_ledger`, and both ledgers are read by `read_ledger`.
 """
 
 from __future__ import annotations
@@ -35,14 +35,10 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..operators.mediapath import read_tile_metrics
 from ..plans.pipeline import extract
-from ..schema import CHECKPOINT
-
-# the lineage row a commit writes: every CHECKPOINT column except the
-# last, committed_at, which Spark stamps at write time
-LINEAGE = T.StructType(CHECKPOINT.fields[:-1])
+from ..schema import CHECKPOINT, local_frame
 
 
 class SimulatedFailure(RuntimeError):
@@ -69,8 +65,26 @@ def read_ledger(spark: SparkSession, path: str, schema) -> DataFrame:
     trace."""
     fs, p = hadoop_path(spark, path)
     if not fs.exists(p):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(path)
+
+
+def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
+    """Replace the partitions (column `by`) of the parquet table at
+    `path` that `df`'s rows fall in. Resume REQUIRES the dynamic
+    overwrite: a static one would wipe every partition the ledger marks
+    committed. Per-write, so it holds under any session setting."""
+    w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    w.partitionBy(by).parquet(path)
+
+
+def append_ledger(spark: SparkSession, path: str, rows: list[dict], schema) -> None:
+    """Append `rows` to the ledger at `path` as one part file, after the
+    partitions they commit. Rows hold every field of the declared
+    `schema` but committed_at: one current_timestamp() stamps them all."""
+    df = local_frame(spark, rows, schema)
+    df = df.withColumn("committed_at", F.current_timestamp()).coalesce(1)
+    df.write.mode("append").parquet(path)
 
 
 def run_extraction(
@@ -104,11 +118,11 @@ def run_extraction(
     # one input-stats job per call: every non-empty bucket's lineage
     # inputs (an empty bucket gets no row)
     in_stats = {
-        r["bucket"]: r
+        r["bucket"]: r.asDict()
         for r in docs_b.groupBy("bucket")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(F.size("spans")).alias("n_spans"),
+            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_spans"),
             F.min("doc_id").alias("doc_id_min"),
             F.max("doc_id").alias("doc_id_max"),
         )
@@ -123,10 +137,7 @@ def run_extraction(
     }
     pending_buckets = sorted(set(in_stats) - committed)
 
-    from ..operators.mediapath import read_tile_metrics
-
-    commits_done = 0
-    for lo in range(0, len(pending_buckets), buckets_per_commit):
+    for done, lo in enumerate(range(0, len(pending_buckets), buckets_per_commit), 1):
         group = pending_buckets[lo : lo + buckets_per_commit]
         t0 = time.perf_counter()
         # E3 tiling lineage: RETRY-EXACT per-attempt metric files (one
@@ -145,29 +156,21 @@ def run_extraction(
         result = extract(
             sub.drop("bucket"), tile_metrics_dir=tile_metrics_dir
         ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        # resume correctness REQUIRES dynamic partition overwrite: it
-        # replaces exactly these buckets, where a static overwrite would
-        # wipe every bucket the checkpoint table marks committed. A
-        # per-write option, so it holds under any session setting
-        result.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(output_path)
+        overwrite_partitions(result, output_path, "bucket")
 
         out_stats = {
-            r["bucket"]: r
+            r["bucket"]: r.asDict()
             for r in spark.read.parquet(output_path)
             .filter(F.col("bucket").isin(group))
             .groupBy("bucket")
             .agg(
                 F.count("*").alias("n_output_rows"),
-                F.sum(F.size("spans")).alias("n_regions"),
+                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_regions"),
             )
             .collect()
         }
         wall_ms = int((time.perf_counter() - t0) * 1000)
         tiles = read_tile_metrics(tile_metrics_dir)
-        n_tiles_group = tiles["n_tiles"]
-        n_skips_group = tiles["n_tiles_skipped"]
 
         # Tiling counts are commit-group-grain (one metrics dir per
         # group) and are stored on the group's FIRST bucket row only,
@@ -178,29 +181,21 @@ def run_extraction(
         # the reader keeps one attempt per partition.
         lineage = [
             {
+                **in_stats[b],
+                **out_stats.get(b, {"n_regions": 0, "n_output_rows": 0}),
                 "run_id": run_id,
-                "partition_id": int(b),
-                "doc_id_min": in_stats[b]["doc_id_min"],
-                "doc_id_max": in_stats[b]["doc_id_max"],
-                "n_docs": int(in_stats[b]["n_docs"]),
-                "n_spans": int(in_stats[b]["n_spans"] or 0),
-                "n_regions": int(out_stats[b]["n_regions"] or 0) if b in out_stats else 0,
-                "n_output_rows": int(out_stats[b]["n_output_rows"]) if b in out_stats else 0,
-                "n_tiles": int(n_tiles_group) if b == group[0] else 0,
-                "n_tiles_skipped": int(n_skips_group) if b == group[0] else 0,
+                "partition_id": b,
+                "n_tiles": tiles["n_tiles"] if b == group[0] else 0,
+                "n_tiles_skipped": tiles["n_tiles_skipped"] if b == group[0] else 0,
                 "wall_ms": wall_ms,
-                "attempt": int(tiles["max_attempt"]) + 1,
+                "attempt": tiles["max_attempt"] + 1,
             }
             for b in group
         ]
-        lineage_df = spark.createDataFrame(
-            lineage, schema=LINEAGE
-        ).withColumn("committed_at", F.current_timestamp())
-        lineage_df.write.mode("append").parquet(checkpoint_path)
-        commits_done += 1
-        if fail_after_commits is not None and commits_done >= fail_after_commits:
+        append_ledger(spark, checkpoint_path, lineage, CHECKPOINT)
+        if fail_after_commits is not None and done >= fail_after_commits:
             raise SimulatedFailure(
-                f"simulated crash after {commits_done} commit(s); "
+                f"simulated crash after {done} commit(s); "
                 f"{len(pending_buckets) - lo - len(group)} buckets left"
             )
 

@@ -237,8 +237,8 @@ def test_crash_after_each_write_then_retry_is_exact(
         m.setattr(dedup_index, "_write", crash_after(
             dedup_index._write, lambda df, path, table, batch: table == point
         ))
-        m.setattr(dedup_index, "_commit", crash_after(
-            dedup_index._commit, lambda *a: committed.append(a) or point == "ledger"
+        m.setattr(dedup_index, "append_ledger", crash_after(
+            dedup_index.append_ledger, lambda *a: committed.append(a) or point == "ledger"
         ))
         m.setattr(dedup_index, "_sweep", crash_after(
             dedup_index._sweep, lambda *a: point == "cleanup" and bool(committed)
@@ -369,3 +369,69 @@ def test_commits_hold_under_a_static_overwrite_session(spark, tmp_path, full_map
         assert _clusters(got) == full_maps[1]
     finally:
         spark.conf.set(key, saved)
+
+
+def _plans_during(spark, run) -> list[str]:
+    """The physical plans of the SQL executions `run()` starts, from
+    the status store (every write and every action has one)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        return store.executionsList()  # ascending execution id
+
+    ex = executions()
+    last = ex.apply(ex.size() - 1).executionId() if ex.size() else -1
+    run()
+    ex, plans = executions(), []
+    for i in reversed(range(ex.size())):
+        if ex.apply(i).executionId() <= last:
+            break
+        plans.append(ex.apply(i).physicalPlanDescription())
+    return plans
+
+
+def _rows_per_part_file(spark, ledger: str) -> list[tuple[int, int]]:
+    """(rows, distinct committed_at) of each part file of `ledger`."""
+    from pyspark.sql import functions as F
+
+    per_file = spark.read.parquet(ledger).groupBy(F.input_file_name()).agg(
+        F.count("*").alias("n"), F.countDistinct("committed_at").alias("ts")
+    )
+    return sorted((r["n"], r["ts"]) for r in per_file.collect())
+
+
+def test_commits_are_worker_free_one_file_appends(spark, tmp_path, indexes):
+    """Both ledgers commit through one Arrow-built local relation: no
+    plan of a run_extraction run, nor the ledger append of an index
+    batch, scans an ExistingRDD (what a list-built frame plans as, with
+    a Python worker), and each append is one part file whose rows share
+    one committed_at. The index's own data plans do scan ExistingRDDs:
+    its localCheckpoint cuts plan that way."""
+    from cadastral_map_ocr_system_spark import synth
+    from cadastral_map_ocr_system_spark.schema import DOCS
+    from cadastral_map_ocr_system_spark.sources.checkpoint import run_extraction
+
+    src = str(tmp_path / "docs")
+    docs_py = synth.synth_docs_pylist(16, seed=3)
+    spark.createDataFrame(docs_py, schema=DOCS).write.parquet(src)
+    docs = spark.read.parquet(src)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    plans = _plans_during(spark, lambda: run_extraction(
+        spark, docs, out, ckpt, run_id="r", n_buckets=4, buckets_per_commit=3
+    ))
+    assert plans and not [p for p in plans if "ExistingRDD" in p]
+    # buckets 0-3 commit in two groups of 3 and 1: two one-file appends
+    assert _rows_per_part_file(spark, ckpt) == [(1, 1), (3, 1)]
+
+    rows = corpus_rows()
+    idx = str(tmp_path / "idx")
+    shutil.copytree(indexes / "built", idx)
+    plans = _plans_during(spark, lambda: incremental_dedup(
+        spark, idx, _mk(spark, rows[8:]), _mk(spark, rows[:8])
+    ))
+    appends = [p for p in plans if f"[path={idx}/ledger]" in p]
+    assert len(appends) == 1, plans
+    assert "LocalTableScan" in appends[0] and "ExistingRDD" not in appends[0]
+    assert _rows_per_part_file(spark, f"{idx}/ledger") == [(1, 1), (1, 1)]
