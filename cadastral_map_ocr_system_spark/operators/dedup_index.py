@@ -55,7 +55,7 @@ pairs; rebuild the index (build_dedup_index) to re-canonicalize.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.checkpoint import (
@@ -90,6 +90,8 @@ _LEDGER = (
     "batch int, base int, doc_id_min bigint, doc_id_max bigint, committed_at timestamp"
 )
 _NO_COMMIT = {"batch": -1, "base": 0, "doc_id_min": None, "doc_id_max": None}
+# a batch's doc_id range, as its ledger row records it
+_BOUNDS = ("min(doc_id) AS doc_id_min", "max(doc_id) AS doc_id_max")
 
 
 def _last_commit(spark: SparkSession, index_path: str) -> dict:
@@ -115,11 +117,10 @@ def _visible(
     return df.filter(f"batch >= {b.start} AND batch < {b.stop}").drop("batch")
 
 
-def _write(df: DataFrame, index_path: str, table: str, batch: int) -> None:
-    """Replace partition `batch` of `table` by `df`'s rows."""
-    overwrite_partitions(
-        df.selectExpr("*", f"{batch} AS batch"), f"{index_path}/{table}", "batch"
-    )
+def _write(df: DataFrame, index_path: str, table: str, batch: int, *stats) -> dict:
+    """Replace partition `batch` of `table` by `df`'s rows; returns `stats`."""
+    df = df.selectExpr("*", f"{batch} AS batch")
+    return overwrite_partitions(df, f"{index_path}/{table}", "batch", *stats)
 
 
 def _sweep(spark: SparkSession, index_path: str, last: dict) -> None:
@@ -177,17 +178,14 @@ def build_dedup_index(docs: DataFrame, index_path: str) -> None:
     batch = last["batch"] + 1
     _sweep(spark, index_path, last)
     reps, doc_rep, postings, edges = _cluster_stages(docs)
-    # the corpus' doc_id range comes with the clusters write: every
-    # doc has one clusters row
-    span = Observation()
-    clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b")).observe(
-        span, F.min("doc_id").alias("doc_id_min"), F.max("doc_id").alias("doc_id_max")
-    )
+    clusters = _rejoin_clusters(doc_rep, edges.select("doc_a", "doc_b"))
     # the gate read above has materialized reps and postings
     _write(reps.select("fingerprint", "rep"), index_path, "fp_index", batch)
     _write(postings, index_path, "band_index", batch)
-    _write(clusters, index_path, "clusters", batch)
-    row = {"batch": batch, "base": batch, **span.get}
+    # the corpus' doc_id range comes with the clusters write: every
+    # doc has one clusters row
+    bounds = _write(clusters, index_path, "clusters", batch, *_BOUNDS)
+    row = {"batch": batch, "base": batch, **bounds}
     append_ledger(spark, f"{index_path}/ledger", [row], _LEDGER)
     _sweep(spark, index_path, row)
 
@@ -219,7 +217,7 @@ def incremental_dedup(
     old_clusters = _visible(spark, index_path, "clusters", last)
     # the batch's bounds in one aggregate, before anything is computed
     # or written; the indexed maximum comes from the ledger
-    lo, hi = new_docs.selectExpr("min(doc_id)", "max(doc_id)").first()
+    lo, hi = new_docs.selectExpr(*_BOUNDS).first()
     if lo is None or (lo, hi) == (last["doc_id_min"], last["doc_id_max"]):
         return old_clusters
     if last["doc_id_max"] is not None and lo <= last["doc_id_max"]:

@@ -3,6 +3,8 @@
 Local-mode knobs mirror what a 1000-executor deployment would set
 cluster-wide: AQE on (skew splits + partition coalescing), Arrow
 enabled end-to-end, shuffle partitions sized to the parallelism.
+The partition overwrite mode stays Spark's static default; the commit
+writes set dynamic mode per write (checkpoint.overwrite_partitions).
 """
 
 from __future__ import annotations
@@ -65,8 +67,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        # idempotent partition-grain re-writes for resume (sources/checkpoint.py)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )

@@ -12,11 +12,12 @@ Design (SURVEY.md §4.5, FIXTURES.md §3):
   - output is written partitioned by bucket with dynamic partition
     overwrite, so re-running a half-written bucket REPLACES it (no
     duplicate rows possible);
-  - the lineage row for a bucket is appended only AFTER its data
+  - the lineage row for a bucket (its output counts are observed by
+    the write, never read back) is appended only AFTER its data
     commit; a crash between the two leaves the bucket uncommitted and
     it is simply redone (idempotent by the overwrite above);
   - buckets are processed in groups (buckets_per_commit) so a long run
-    has many commit points.
+    has many commit points, 4 Spark jobs each.
 
 The checkpoint table is parquet here (Iceberg-shaped schema; see
 sources/tables.py on the format choice). The streaming sink
@@ -33,7 +34,7 @@ import shutil
 import time
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mediapath import read_tile_metrics
@@ -69,13 +70,21 @@ def read_ledger(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
+def overwrite_partitions(df: DataFrame, path: str, by: str, *stats: str) -> dict:
     """Replace the partitions (column `by`) of the parquet table at
     `path` that `df`'s rows fall in. Resume REQUIRES the dynamic
     overwrite: a static one would wipe every partition the ledger marks
-    committed. Per-write, so it holds under any session setting."""
+    committed. Per-write, so it holds under any session setting.
+    Returns `stats` (SQL-text aggregates) over the rows written, {} for
+    none: the Observation sits after the write's last exchange, in the
+    result stage, whose task accumulators Spark merges once per
+    partition, so a task retry or speculative copy cannot double-count."""
+    obs = Observation()
+    if stats:
+        df = df.observe(obs, *map(F.expr, stats))
     w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     w.partitionBy(by).parquet(path)
+    return obs.get if stats else {}
 
 
 def append_ledger(spark: SparkSession, path: str, rows: list[dict], schema) -> None:
@@ -140,49 +149,39 @@ def run_extraction(
     for done, lo in enumerate(range(0, len(pending_buckets), buckets_per_commit), 1):
         group = pending_buckets[lo : lo + buckets_per_commit]
         t0 = time.perf_counter()
-        # E3 tiling lineage: RETRY-EXACT per-attempt metric files (one
-        # dir per commit group), MAX-deduped per (stage, partition) at
-        # read (Spark accumulators would over-count on task
-        # retries/speculation)
+        # E3 tiling lineage: per-attempt metric files (one dir per
+        # group), MAX-deduped per (stage, partition) at read; the span
+        # stage is a shuffle-map stage, whose accumulators a retry would
+        # over-count. A crashed attempt's files would survive that dedup
+        # (a new SparkContext assigns new stage IDs), so each
+        # (re-)processing of a group starts from an empty dir.
         tile_metrics_dir = f"{tiles_root}/{run_id}/g{group[0]}"
-        # crash-resume correctness for the metrics channel: a prior
-        # attempt of this UNCOMMITTED group may have left metric files
-        # behind, and the new SparkContext assigns different stage IDs —
-        # the per-(stage, partition) MAX-dedup would then double-count.
-        # Each (re-)processing of a group starts from an empty dir.
         shutil.rmtree(tile_metrics_dir, ignore_errors=True)
         sub = docs_b.filter(F.col("bucket").isin(group))
 
         result = extract(
             sub.drop("bucket"), tile_metrics_dir=tile_metrics_dir
         ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        overwrite_partitions(result, output_path, "bucket")
-
-        out_stats = {
-            r["bucket"]: r.asDict()
-            for r in spark.read.parquet(output_path)
-            .filter(F.col("bucket").isin(group))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_output_rows"),
-                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_regions"),
+        out_stats = overwrite_partitions(result, output_path, "bucket", *(
+            s
+            for b in group
+            for s in (
+                f"count_if(bucket = {b}) AS n_output_rows_{b}",
+                f"coalesce(sum(if(bucket = {b}, size(spans), 0)), 0) AS n_regions_{b}",
             )
-            .collect()
-        }
+        ))
         wall_ms = int((time.perf_counter() - t0) * 1000)
         tiles = read_tile_metrics(tile_metrics_dir)
 
-        # Tiling counts are commit-group-grain (one metrics dir per
-        # group) and are stored on the group's FIRST bucket row only,
-        # so SUM(n_tiles) over the checkpoint table equals the run
-        # total instead of overstating by buckets_per_commit. They are
-        # EXACT under task retries/speculation: each task attempt
-        # writes its own (stage, partition, attempt) metric file and
-        # the reader keeps one attempt per partition.
+        # Tiling counts are commit-group-grain and stored on the group's
+        # FIRST bucket row only, so SUM(n_tiles) over the checkpoint
+        # table equals the run total instead of overstating by
+        # buckets_per_commit.
         lineage = [
             {
                 **in_stats[b],
-                **out_stats.get(b, {"n_regions": 0, "n_output_rows": 0}),
+                "n_output_rows": out_stats[f"n_output_rows_{b}"],
+                "n_regions": out_stats[f"n_regions_{b}"],
                 "run_id": run_id,
                 "partition_id": b,
                 "n_tiles": tiles["n_tiles"] if b == group[0] else 0,

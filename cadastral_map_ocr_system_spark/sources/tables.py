@@ -2,8 +2,9 @@
 
 The engine's canonical catalog format is Iceberg (north_rule); this
 sandbox has no Iceberg runtime jar, so the same call sites read/write
-parquet directories with dynamic partition overwrite — which preserves
-the property the design needs (idempotent partition-grain rewrite).
+parquet directories; commits set dynamic partition overwrite per write
+(checkpoint.overwrite_partitions), which preserves the property the
+design needs (idempotent partition-grain rewrite).
 Swapping in Iceberg is a format string change, not a plan change.
 """
 

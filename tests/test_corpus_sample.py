@@ -145,3 +145,21 @@ def test_write_training_shards_layout_and_roundtrip(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     )
     assert again == got
+    # a re-export at another budget replaces the export whole: no shard
+    # of the earlier layout survives
+    write_training_shards(docs, path, budget_tokens=1200, n_writers=4)
+    new_assign = {
+        r["doc_id"]: (int(r["writer"]), int(r["shard_seq"]))
+        for r in pack_shards(docs, 1200, n_writers=4).collect()
+    }
+    back = sorted(
+        (r["doc_id"], r["text"], int(r["writer"]), int(r["shard_seq"]))
+        for r in spark.read.parquet(path).collect()
+    )
+    assert back == sorted((i, t, *new_assign[i]) for i, t, _l in rows)
+    dirs = {
+        (w, s)
+        for w in os.listdir(path) if w.startswith("writer=")
+        for s in os.listdir(os.path.join(path, w)) if s.startswith("shard_seq=")
+    }
+    assert dirs == {(f"writer={w}", f"shard_seq={s}") for w, s in new_assign.values()}

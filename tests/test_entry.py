@@ -66,13 +66,14 @@ def test_iit_sinks(spark, tmp_path):
 
 def test_session_config_source(spark):
     """S3 config source: the engine's standard confs are applied to the
-    live session (AQE + skew handling on, Arrow on, dynamic partition
-    overwrite for resume, UTC, bounded Arrow batches)."""
+    live session (AQE + skew handling on, Arrow on, UTC, bounded Arrow
+    batches). The partition overwrite mode stays Spark's static
+    default: the writes that need dynamic overwrite set it per write."""
     conf = spark.conf
     assert conf.get("spark.sql.adaptive.enabled") == "true"
     assert conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
-    assert conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+    assert conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")) == 4096
     assert int(conf.get("spark.sql.shuffle.partitions")) >= 8

@@ -362,6 +362,40 @@ def test_streaming_epoch_replay_is_idempotent(spark, tmp_path):
     assert got.filter("doc_id = 'TORN-GARBAGE'").count() == 0
 
 
+def test_run_extraction_jobs_per_commit_group(spark, tmp_path):
+    """A commit group's output stats come from its write, not from a
+    read-back of the output: a one-bucket run (a streamed epoch's
+    shape) runs at most 6 Spark jobs, and each further commit group
+    adds at most 4 (the extraction's exchanges, the write and the
+    lineage append)."""
+    from cadastral_map_ocr_system_spark import synth
+    from cadastral_map_ocr_system_spark.schema import DOCS
+    from cadastral_map_ocr_system_spark.sources.checkpoint import run_extraction
+
+    src = str(tmp_path / "docs")
+    docs_py = synth.synth_docs_pylist(40, seed=3)
+    spark.createDataFrame(docs_py, schema=DOCS).write.parquet(src)
+    docs = spark.read.parquet(src)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(n_buckets):
+        group = f"commit-groups-{n_buckets}"
+        sc.setJobGroup(group, "run_extraction")
+        try:
+            run_extraction(spark, docs, f"{tmp_path}/{group}", f"{tmp_path}/{group}-ck",
+                           run_id="r", n_buckets=n_buckets, buckets_per_commit=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        assert spark.read.parquet(f"{tmp_path}/{group}-ck").count() == n_buckets
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = jobs(1)
+    assert one <= 6
+    assert jobs(4) <= one + 3 * 4
+
+
 def test_ivf_topk_exact_on_separated_clusters(spark, monkeypatch):
     """IVF with a KMeans quantizer recovers the exact brute-force
     neighbours when clusters are well separated (every true neighbour

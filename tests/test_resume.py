@@ -337,9 +337,12 @@ def run(base, stage):
                    n_buckets=2, buckets_per_commit=2)
     (group,) = os.listdir(f"{base}/ckpt_tiles/r")
     rows = read_extracted(spark, f"{base}/out").collect()
+    ckpt = spark.read.parquet(f"{base}/ckpt")
+    lineage = ckpt.drop("committed_at", "wall_ms", "attempt").collect()
     return {
         "tiles": mediapath.read_tile_metrics(f"{base}/ckpt_tiles/r/{group}"),
         "rows": sorted(json.dumps(r.asDict(recursive=True)) for r in rows),
+        "lineage": sorted(json.dumps(r.asDict()) for r in lineage),
     }
 
 
@@ -358,8 +361,9 @@ spark.stop()
 
 def test_forced_task_retry_keeps_counts_exact(tmp_path):
     """Every span-stage task fails after its first attempt's body ran
-    (and wrote its metric file); the retried run's tile metrics and
-    output rows equal a run with no retry."""
+    (and wrote its metric file); the retried run's tile metrics, output
+    rows and lineage rows equal a run with no retry. The span stage is
+    a shuffle-map stage before the write's observed result stage."""
     import json
     import os
     import subprocess
@@ -381,3 +385,5 @@ def test_forced_task_retry_keeps_counts_exact(tmp_path):
     assert retried["tiles"] == clean["tiles"]
     assert len(clean["rows"]) == 40
     assert retried["rows"] == clean["rows"]
+    assert len(clean["lineage"]) == 2
+    assert retried["lineage"] == clean["lineage"]

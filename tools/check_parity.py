@@ -41,6 +41,10 @@ def main() -> int:
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 1
     spark = get_spark(master="local[8]", app_name="parity")
     con = duckdb.connect()
     for t in TPCH_TABLES:
